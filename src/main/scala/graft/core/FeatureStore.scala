@@ -238,8 +238,11 @@ final class FeatureStore(val spark: SparkSession, val catalog: MetadataCatalog) 
     */
   def readFeatureView(
       name: String, version: String,
-      asOfTableVersion: Option[Long] = None): DataFrame = {
-    val rec = getFeatureView(name, version)
+      asOfTableVersion: Option[Long] = None): DataFrame =
+    readRecord(getFeatureView(name, version), asOfTableVersion)
+
+  private def readRecord(rec: FeatureViewRecord,
+      asOfTableVersion: Option[Long] = None): DataFrame =
     rec.physicalPath match {
       case Some(p) =>
         rec.fv.refresh.flatMap(_.maintenance) match {
@@ -260,10 +263,9 @@ final class FeatureStore(val spark: SparkSession, val catalog: MetadataCatalog) 
         }
       case None =>
         require(asOfTableVersion.isEmpty,
-          s"$name$$$version is a static feature view — no materialized history to time-travel")
+          s"${rec.logicalId} is a static feature view — no materialized history to time-travel")
         spark.sql(rec.fv.query)
     }
-  }
 
   /** Time-range read of a materialized FV with manifest-level segment
     * skipping ([[graft.storage.VersionedTable.readRange]]): segments whose
@@ -488,13 +490,17 @@ final class FeatureStore(val spark: SparkSession, val catalog: MetadataCatalog) 
       save: Boolean = true,
       description: String = ""): DataFrame = {
     val recs = features.map { case (n, v) => getFeatureView(n, v) }
+    // Each FV is resolved to its DataFrame once, and that frame serves the
+    // collision check and the join: a managed FV's read resolves its
+    // manifest and segment schemas, so reading it per use repeats that work.
+    val fvDfs = recs.map(rec => rec.logicalId -> readRecord(rec)).toMap
     // Column-collision policy (SURVEY §2.B18): the reference is silent when
     // two FVs emit the same feature name — we fail fast instead of silently
     // shadowing one of them.
     val spineCols = spine.columns.map(_.toLowerCase).toSet
     recs.foldLeft(spineCols) { (seen, rec) =>
       val keysAndTs = (rec.fv.joinKeys ++ rec.fv.timestampCol.toSeq).map(_.toLowerCase).toSet
-      val payload = readFeatureView(rec.fv.name, rec.version).columns
+      val payload = fvDfs(rec.logicalId).columns
         .map(_.toLowerCase).filterNot(keysAndTs.contains)
       val clash = payload.filter(seen.contains)
       require(clash.isEmpty,
@@ -531,7 +537,7 @@ final class FeatureStore(val spark: SparkSession, val catalog: MetadataCatalog) 
       (group.head.fv.timestampCol, spineTimestampCol) match {
         case (Some(_), Some(sts)) =>
           val parts = group.toSeq.map { rec =>
-            val fvDf = readFeatureView(rec.fv.name, rec.version)
+            val fvDf = fvDfs(rec.logicalId)
             val fts = rec.fv.timestampCol.get.toLowerCase
             val payload = fvDf.columns
               .filterNot(c => keys.contains(c.toLowerCase) || c.toLowerCase == fts).toSeq
@@ -554,7 +560,7 @@ final class FeatureStore(val spark: SparkSession, val catalog: MetadataCatalog) 
           AsOfJoin.joinAsOfMulti(acc, parts, keys, sts, hotKeyCacheKey = cacheKey)
         case _ =>
           val rec = group.head
-          val fvDf = readFeatureView(rec.fv.name, rec.version)
+          val fvDf = fvDfs(rec.logicalId)
           val payload = fvDf.columns.filterNot(c => keys.contains(c.toLowerCase))
           // A non-timestamped FV with several rows per key tuple has no
           // point-in-time order to pick by; dropDuplicates would keep an

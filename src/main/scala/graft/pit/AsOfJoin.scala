@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * Spark has no built-in as-of join, so we provide two strategies behind one
   * API:
   *
-  *  - **union-window** (default, the scale path): tag feature rows (side=0)
+  *  - **union-window** (the scale path; the default salted-window below
+  *    reduces to it when no key is hot): tag feature rows (side=0)
   *    and spine rows (side=1), union on (keys, ts), then a single
   *    `Window.partitionBy(keys).orderBy(ts, side)` running `last(pkt,
   *    ignoreNulls=true)` over ONE struct holding the whole feature payload
@@ -63,11 +64,13 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *    threshold get bucket 0 everywhere and reproduce the union-window
   *    plan bit-for-bit. Costs one extra pass over the union (the
   *    detection agg, EAGER: it runs a sampled Spark job when the plan is
-  *    BUILT, not when it is executed), so the bare default stays
-  *    union-window; `auto` and explicit `salted-window` opt into the
-  *    detection cost. Use them when a key-frequency profile (e.g.
-  *    HeavyHittersAgg) shows skew and no `maxStaleness` horizon bounds
-  *    hot-key history.
+  *    BUILT, not when it is executed). This is the DEFAULT strategy:
+  *    `method = "default"` resolves through the session conf
+  *    `graft.asof.method`, which falls back to `salted-window`, so a
+  *    default-path plan build runs one detection job per hot-key memo
+  *    miss, unless the stats short-circuit proves the inputs too small to
+  *    hold a hot key. Pin `graft.asof.method=union-window` for a lazy,
+  *    job-free plan build on corpora known to be skew-free.
   *
   * Ties *within* the feature side (same key, same ts) are broken
   * deterministically on EVERY strategy by preferring the greater value of
@@ -389,7 +392,9 @@ object AsOfJoin {
     * the first batch's verdict is safe: salting any key is always correct,
     * and a missed borderline key leaves the pre-existing unsalted plan
     * (a micro-batch spine is bounded by the trigger interval anyway).
-    * Conf knobs are folded into the key so a retuned threshold is a miss.
+    * Every conf knob detection reads, the stats short-circuit's
+    * `minBytesPerRow` included, is folded into the key so a retuned knob
+    * is a miss.
     * Bounded: access-order LRU capped at 256 entries — eviction drops the
     * coldest verdict only, so a long-running serving session's actively
     * reused hot entries survive cache churn (an all-or-nothing clear
@@ -434,7 +439,8 @@ object AsOfJoin {
     cacheKey match {
       case Some(k0) =>
         val conf = unioned.sparkSession.conf
-        val k = k0 + "|" + Seq("buckets", "hotKeyThreshold", "sampleRate", "maxHotKeys")
+        val k = k0 + "|" + Seq("buckets", "hotKeyThreshold", "sampleRate", "maxHotKeys",
+            "minBytesPerRow")
           .map(s => conf.get(s"graft.asof.salt.$s", "")).mkString(",")
         val hit = hotKeyCache.get(k)
         if (hit != null) rebuild(hit)
@@ -699,10 +705,11 @@ object AsOfJoin {
     * sampled detection job (eager, once per call) and the bucket-summary
     * pass (lazy, pruned to hot-key feature rows by an inner broadcast
     * join). At scale that trade — two extra cheap passes for never
-    * serializing a hot key in one task — is the right one; the bare
-    * default remains union-window so plan construction stays lazy and
-    * job-free, while `auto` and `salted-window` accept the eager
-    * detection job as their documented cost. Bucket boundaries
+    * serializing a hot key in one task — is the right one, so this is
+    * the default strategy (see `resolveMethod`): a default-path plan
+    * build runs the eager detection job once per hot-key memo miss, and
+    * only `graft.asof.method=union-window` keeps plan construction lazy
+    * and job-free. Bucket boundaries
     * come from `percentile_approx` over a monotone numeric image of the
     * event time (`cast double`; a type with no such image degrades to
     * bucket 0 = the unsalted plan, still correct). AQE cannot split window

@@ -8,6 +8,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Transactional table layout for managed feature views — the minimal
   * Delta-shaped commit protocol the reference gets from Snowflake's dynamic
@@ -82,6 +83,21 @@ import org.apache.spark.sql.functions._
   * Scale note: the manifest is O(#segments) driver-side JSON; data files are
   * only ever written once and never renamed, the object-store-safe choice
   * (S3 rename = copy).
+  *
+  * '''Read-side contract: one schema inference per segment.''' A committed
+  * segment is written once into a uniquely named dir and never changes, so
+  * its Parquet schema is too. Every segment read goes through
+  * `readSegment`, which infers the schema on the first read of a dir
+  * (one Spark job) and afterwards reads with that schema supplied (no
+  * job); an N-segment upsert table would otherwise pay N inference jobs
+  * on every read. The memo is keyed by the segment's absolute dir plus the
+  * session confs that change what inference returns for the same files
+  * (`InferenceConfs`), so a retuned session misses instead of reading a
+  * stale type. It is a bounded access-order LRU (`SchemaMemoCap`
+  * entries). Legacy plain-parquet dirs (no manifest) are mutable and are
+  * never memoized. [[vacuum]] evicts the entries of the segments it
+  * deletes; a read of a deleted segment still fails at plan time, because
+  * Spark resolves the path even when the schema is given.
   */
 object VersionedTable {
   private val ManifestName = "_MANIFEST.json"
@@ -381,6 +397,48 @@ object VersionedTable {
   private def segDir(path: String, name: String): String =
     Paths.get(path, name).toString
 
+  /** Session confs that change the schema Parquet inference returns for the
+    * same files (string vs binary, timestamp flavours, nanos as long,
+    * partition-value types); folded into the schema memo key.
+    */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  /** Inferred schema per committed segment dir (see the object scaladoc).
+    * Access-order LRU: eviction drops the coldest segment only, and costs
+    * one inference job on its next read.
+    */
+  private val SchemaMemoCap = 1024
+  private type SchemaKey = (String, Seq[String])
+  private val schemaMemo: java.util.Map[SchemaKey, StructType] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[SchemaKey, StructType](64, 0.75f, /* accessOrder = */ true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
+          size() > SchemaMemoCap
+      })
+
+  private def absDir(path: String, seg: String): String =
+    Paths.get(path, seg).toAbsolutePath.normalize.toString
+
+  /** Read one committed segment, inferring its schema only on the first read
+    * of the dir under the current inference confs.
+    */
+  private def readSegment(spark: SparkSession, path: String, seg: String): DataFrame = {
+    val dir = segDir(path, seg)
+    val key = (absDir(path, seg), InferenceConfs.map(c => spark.conf.getOption(c).getOrElse("")))
+    Option(schemaMemo.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir)
+      case None =>
+        val df = spark.read.parquet(dir)
+        schemaMemo.put(key, df.schema)
+        df
+    }
+  }
+
   /** Committed merged view of the table. Plain union for overwrite/append
     * tables; for keyed (upsert) tables, latest-segment-wins per key — the
     * merge-on-read side of the upsert commit. `asOfVersion` reads the table
@@ -393,7 +451,8 @@ object VersionedTable {
       case None => readManifest(path)
     }) match {
     case None =>
-      spark.read.parquet(path) // legacy plain-parquet table
+      // legacy plain-parquet table: mutable, so its schema is never memoized
+      spark.read.parquet(path)
     case Some(m) =>
       require(m.segments.nonEmpty, s"empty manifest at $path")
       val SegCol = "__graft_seg"
@@ -402,10 +461,10 @@ object VersionedTable {
       def union(dfs: Seq[DataFrame]): DataFrame =
         dfs.reduce(_.unionByName(_, allowMissingColumns = true))
       if (m.keys.isEmpty || m.segments.size == 1) {
-        union(m.segments.map(s => spark.read.parquet(segDir(path, s))))
+        union(m.segments.map(s => readSegment(spark, path, s)))
       } else {
         val tagged = m.segments.zipWithIndex.map { case (s, i) =>
-          spark.read.parquet(segDir(path, s)).withColumn(SegCol, lit(i))
+          readSegment(spark, path, s).withColumn(SegCol, lit(i))
         }
         // latest-segment-wins as a hash max_by aggregation, not a
         // partitioned row_number sort (r17, guide §2.2): same one shuffle
@@ -461,7 +520,7 @@ object VersionedTable {
     if (deltaSegs.isEmpty)
       return newView.limit(0).withColumn("_change_type", lit(""))
     val touched = deltaSegs
-      .map(s => spark.read.parquet(segDir(path, s)).select(keys.map(col): _*))
+      .map(s => readSegment(spark, path, s).select(keys.map(col): _*))
       .reduce(_.unionByName(_)).distinct()
     def pruned(v: DataFrame) = v.join(touched, keys, "left_semi")
     val o = pruned(oldView).select(keys.map(col) :+
@@ -640,7 +699,7 @@ object VersionedTable {
       val merged = read(spark, path).filter(keep)
       val seg = newSegName(v)
       merged.write.parquet(segDir(path, seg))
-      val st = SegStats.of(spark.read.parquet(segDir(path, seg)), statsCol)
+      val st = SegStats.of(readSegment(spark, path, seg), statsCol)
       commitManifest(path, Some(m.version),
         Manifest(v, "upsert", m.keys, Seq(seg), m.batchId, st.map(seg -> _).toMap))
       vacuum(path)
@@ -657,13 +716,13 @@ object VersionedTable {
           dropped += 1
           (segs, stats) // whole segment expires — manifest edit only
         case _ => // straddling, or no usable stats: rewrite filtered
-          val remaining = spark.read.parquet(segDir(path, s)).filter(keep)
+          val remaining = readSegment(spark, path, s).filter(keep)
           if (remaining.isEmpty) { dropped += 1; (segs, stats) }
           else {
             rewritten += 1
             val ns = newSegName(v)
             remaining.write.parquet(segDir(path, ns))
-            val nst = SegStats.of(spark.read.parquet(segDir(path, ns)), statsCol)
+            val nst = SegStats.of(readSegment(spark, path, ns), statsCol)
             (segs :+ ns, stats ++ nst.map(ns -> _))
           }
       }
@@ -674,7 +733,7 @@ object VersionedTable {
       if (newSegs.nonEmpty) (newSegs, newStats)
       else {
         val ns = newSegName(v)
-        spark.read.parquet(segDir(path, m.segments.head)).limit(0)
+        readSegment(spark, path, m.segments.head).limit(0)
           .write.parquet(segDir(path, ns))
         (Seq(ns), Map.empty[String, SegStats])
       }
@@ -704,7 +763,7 @@ object VersionedTable {
     val (kept, _) = segmentsInRange(path, statsCol, loMicros, hiMicros)
     val base =
       if (kept.isEmpty) read(spark, path).limit(0) // all segments disjoint
-      else kept.map(s => spark.read.parquet(segDir(path, s)))
+      else kept.map(s => readSegment(spark, path, s))
         .reduce(_.unionByName(_, allowMissingColumns = true))
     base.filter(unix_micros(col(statsCol)).between(loMicros, hiMicros))
   }
@@ -838,6 +897,8 @@ object VersionedTable {
             idx <= horizon
           }
         victims.foreach(f => deleteRecursively(f.toPath))
+        val gone = victims.map(f => absDir(path, f.getName)).toSet
+        schemaMemo.keySet.removeIf(k => gone.contains(k._1))
         // expire snapshot manifests past the same horizon — their segments
         // are (or may be) gone, so time travel to them is over anyway
         Option(dir.listFiles()).getOrElse(Array.empty)

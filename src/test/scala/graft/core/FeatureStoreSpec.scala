@@ -174,6 +174,69 @@ class FeatureStoreSpec extends SparkSpec {
       "served rows must equal the batch dataset over the same spine")
   }
 
+  /** Three managed timestamped FVs sharing the user key (one salted as-of
+    * group) plus one managed plain FV, with hot-key detection forced to run
+    * (threshold 1, full-rate sample) on a cold hot-key memo. */
+  private def withDatasetFvs(body: (FeatureStore, org.apache.spark.sql.DataFrame,
+      Seq[(String, String)]) => Unit): Unit = {
+    val fs = freshStore(); prep(fs)
+    def managed(name: String, query: String, ts: Option[String]) =
+      fs.registerFeatureView(FeatureView(name, Seq(Entity("user", Seq("user_id"))), query, ts,
+        refresh = Some(RefreshConfig("1 minute"))), "1")
+    def byType(t: String, f: String) =
+      s"SELECT user_id, ts, max(value) AS $f FROM ev_src WHERE event_type='$t' GROUP BY user_id, ts"
+    managed("fv_views", byType("view", "f_view"), Some("ts"))
+    managed("fv_clicks", byType("click", "f_click"), Some("ts"))
+    managed("fv_errors", byType("error", "f_error"), Some("ts"))
+    managed("fv_totals", "SELECT user_id, count(*) AS f_total FROM ev_src GROUP BY user_id", None)
+    val spine = Tables.events(spark, sfDir).filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts"), col("value").as("label"))
+    val c = spark.conf
+    c.set("graft.asof.salt.hotKeyThreshold", "1")
+    c.set("graft.asof.salt.sampleRate", "1.0")
+    graft.pit.AsOfJoin.clearHotKeyCache()
+    try body(fs, spine, Seq("fv_views", "fv_clicks", "fv_errors", "fv_totals").map(_ -> "1"))
+    finally {
+      c.unset("graft.asof.salt.hotKeyThreshold")
+      c.unset("graft.asof.salt.sampleRate")
+      graft.pit.AsOfJoin.clearHotKeyCache()
+    }
+  }
+
+  private def detectionDelta[T](body: => T): (T, Long) = {
+    val before = graft.pit.AsOfJoin.detectionJobs.get()
+    val out = body
+    (out, graft.pit.AsOfJoin.detectionJobs.get() - before)
+  }
+
+  test("generateDataset on an unchanged snapshot builds its plan with 0 jobs once memos are warm") {
+    withDatasetFvs { (fs, spine, features) =>
+      def build() = fs.generateDataset("plan", spine, features, Some("ts"), save = false)
+      val ((first, firstJobs), firstDetections) = detectionDelta(jobsDuring(build()))
+      assert(firstDetections == 1 && firstJobs > 0, "the first build runs hot-key detection")
+      val (again, warmJobs) = jobsDuring(build())
+      assert(warmJobs == 0, s"plan build on an unchanged snapshot submitted $warmJobs job(s)")
+      assert(again.count() == spine.count())
+      assert(again.exceptAll(first).isEmpty && first.exceptAll(again).isEmpty)
+    }
+  }
+
+  test("after a FULL refresh of one FV the next build runs 1 schema job plus detection") {
+    withDatasetFvs { (fs, spine, features) =>
+      def build() = fs.generateDataset("plan", spine, features, Some("ts"), save = false)
+      build()
+      fs.refreshFeatureView("fv_clicks", "1")
+      val ((_, jobs), detections) = detectionDelta(jobsDuring(build()))
+      // the same snapshot with only the hot-key memo cold: detection alone
+      graft.pit.AsOfJoin.clearHotKeyCache()
+      val ((_, detectionOnlyJobs), redetections) = detectionDelta(jobsDuring(build()))
+      assert(detections == 1 && redetections == 1)
+      assert(detectionOnlyJobs > 0)
+      assert(jobs == 1 + detectionOnlyJobs,
+        s"expected 1 schema job + $detectionOnlyJobs detection job(s), got $jobs")
+    }
+  }
+
   test("generateDataset rejects a spine missing the entity keys") {
     val fs = freshStore(); prep(fs)
     fs.registerFeatureView(demoFv(), "1.0")

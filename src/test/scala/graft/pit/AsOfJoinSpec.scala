@@ -442,4 +442,48 @@ class AsOfJoinSpec extends SparkSpec {
     assert(uw == jf && uw.length == 10)
     assert(uw.forall(_.getAs[String]("snap") == "snap10"))
   }
+
+  test("hot-key memo key folds minBytesPerRow: retuning the stats short-circuit is a miss") {
+    // minBytesPerRow decides the stats short-circuit, so a memoized "no hot
+    // keys" verdict from a short-circuited call must not survive retuning it
+    val c = spark.conf
+    // parquet-backed sides carry sizeInBytes but no rowCount, so the
+    // short-circuit takes its bytes-per-row branch (local frames carry a
+    // rowCount and never consult minBytesPerRow)
+    def onDisk(df: org.apache.spark.sql.DataFrame) = {
+      val d = java.nio.file.Files.createTempDirectory("graft_asof_mbpr_").resolve("t").toString
+      df.write.parquet(d)
+      spark.read.parquet(d)
+    }
+    val (sp, feat) = (onDisk(spine), onDisk(features))
+    def salted() = AsOfJoin.joinAsOf(sp, feat, Seq("customer_id"), "event_time",
+      "updated_at", featureCols = Seq("age", "snap"), method = "salted-window",
+      hotKeyCacheKey = Some("asof:minBytesPerRow-spec"))
+    def detections(body: => Unit): Long = {
+      val before = AsOfJoin.detectionJobs.get()
+      body
+      AsOfJoin.detectionJobs.get() - before
+    }
+    val expected = run("union-window").collect().sortBy(_.getInt(0)).toSeq
+    c.set("graft.asof.salt.hotKeyThreshold", "5")
+    c.set("graft.asof.salt.sampleRate", "1.0")
+    AsOfJoin.clearHotKeyCache()
+    try {
+      // a huge per-row floor proves the tiny inputs too small: no job
+      c.set("graft.asof.salt.minBytesPerRow", "1000000000")
+      assert(detections(salted()) == 0)
+      assert(detections(salted()) == 0)
+      // the default floor no longer proves it: same cache key, one job
+      c.set("graft.asof.salt.minBytesPerRow", "2")
+      var out: Seq[org.apache.spark.sql.Row] = Seq.empty
+      assert(detections { out = salted().collect().sortBy(_.getInt(0)).toSeq } == 1)
+      assert(out == expected)
+      assert(detections(salted()) == 0, "the retuned verdict is memoized in turn")
+    } finally {
+      c.unset("graft.asof.salt.hotKeyThreshold")
+      c.unset("graft.asof.salt.sampleRate")
+      c.unset("graft.asof.salt.minBytesPerRow")
+      AsOfJoin.clearHotKeyCache()
+    }
+  }
 }

@@ -659,4 +659,128 @@ class VersionedTableSpec extends SparkSpec {
       .as[(Long, Long, String)].collect().toSet ==
       base.as[(Long, Long, String)].collect().toSet)
   }
+
+  // ---- segment schema memo ------------------------------------------------
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** A read of `dir` with every segment schema already memoized submits no
+    * job and equals the cold read in schema and rows. */
+  private def assertWarmReadJobFree(dir: String): Unit = {
+    val (cold, coldJobs) = jobsDuring(VersionedTable.read(spark, dir))
+    val segs = VersionedTable.readManifest(dir).get.segments.size
+    assert(coldJobs == segs, s"cold read: one inference job per segment ($segs), got $coldJobs")
+    val (warm, warmJobs) = jobsDuring(VersionedTable.read(spark, dir))
+    assert(warmJobs == 0, s"memo-warm read submitted $warmJobs job(s)")
+    assert(warm.schema == cold.schema)
+    assert(sortedRows(warm) == sortedRows(cold))
+  }
+
+  test("schema memo: warm read of a date-partitioned FULL table is job-free and equal") {
+    val dir = tmp()
+    val t0 = java.sql.Timestamp.valueOf("2024-03-01 10:00:00").getTime
+    val rows = (0 until 12).map(i => (i % 4, new java.sql.Timestamp(t0 + i * 43200000L), i * 1.5))
+    VersionedTable.overwrite(dir)(d =>
+      rows.toDF("k", "ts", "f").withColumn("_graft_date", org.apache.spark.sql.functions.to_date($"ts"))
+        .write.partitionBy("_graft_date").parquet(d))
+    assertWarmReadJobFree(dir)
+    assert(VersionedTable.read(spark, dir).columns.toSeq == Seq("k", "ts", "f", "_graft_date"))
+  }
+
+  test("schema memo: warm read of an append table with additive schema evolution") {
+    val dir = tmp()
+    VersionedTable.append(dir)(writeSeg(Seq((1, 10), (2, 20))))
+    VersionedTable.append(dir)(d => Seq((3, 30, "x")).toDF("k", "v", "extra").write.parquet(d))
+    assertWarmReadJobFree(dir)
+    assert(VersionedTable.read(spark, dir).columns.toSet == Set("k", "v", "extra"))
+  }
+
+  test("schema memo: warm read of a 3-segment upsert table merges identically") {
+    val dir = tmp()
+    val cw: (org.apache.spark.sql.DataFrame, String) => Unit = (df, d) => df.write.parquet(d)
+    VersionedTable.overwrite(dir)(writeSeg(Seq((1, 10), (2, 20), (3, 30))))
+    VersionedTable.upsert(spark, dir, Seq("k"), compactWrite = cw)(writeSeg(Seq((2, 21))))
+    VersionedTable.upsert(spark, dir, Seq("k"), compactWrite = cw)(writeSeg(Seq((3, 32), (4, 40))))
+    assert(VersionedTable.readManifest(dir).get.segments.size == 3)
+    assertWarmReadJobFree(dir)
+    assert(VersionedTable.read(spark, dir).as[(Int, Int)].collect().toSet ==
+      Set((1, 10), (2, 21), (3, 32), (4, 40)))
+  }
+
+  test("schema memo: a legacy plain-parquet dir is re-inferred on every read") {
+    val dir = tmp()
+    Seq((1, 10)).toDF("k", "v").write.mode("overwrite").parquet(dir)
+    assert(VersionedTable.read(spark, dir).columns.toSeq == Seq("k", "v"))
+    // the dir gains a file with a new column; without mergeSchema, Spark
+    // infers from the first data file by path, so name it to sort first
+    val staged = tmp() + "/staged"
+    Seq((2, 20, "x")).toDF("k", "v", "extra").coalesce(1).write.parquet(staged)
+    val part = new java.io.File(staged).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, Paths.get(dir, "a-extra.parquet"))
+    val df = VersionedTable.read(spark, dir)
+    assert(df.columns.toSeq == Seq("k", "v", "extra"))
+    assert(df.select("k", "extra").collect()
+      .map(r => (r.getInt(0), Option(r.getString(1)))).toSet == Set((1, None), (2, Some("x"))))
+  }
+
+  test("schema memo: spark.sql.parquet.binaryAsString changes the schema read") {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    val dir = tmp()
+    // binaryAsString only applies to files without a Spark schema in their
+    // footer (Spark-written files pin the type), so write the segment with
+    // the plain parquet writer, as a non-Spark producer would
+    VersionedTable.overwrite(dir) { d =>
+      val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        "message m { required int32 k; required binary b; }")
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(d, "part-00000.parquet")).withType(schema).build()
+      try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+        .newGroup().append("k", 1).append("b", "a"))
+      finally w.close()
+    }
+    val key = "spark.sql.parquet.binaryAsString"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      assert(VersionedTable.read(spark, dir).schema("b").dataType == BinaryType)
+      spark.conf.set(key, "true")
+      val asString = VersionedTable.read(spark, dir)
+      assert(asString.schema("b").dataType == StringType)
+      assert(asString.select("b").head().getString(0) == "a")
+      spark.conf.set(key, "false")
+      assert(VersionedTable.read(spark, dir).schema("b").dataType == BinaryType)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("schema memo: time travel to vacuumed segments still fails loudly") {
+    val dir = tmp()
+    val lo = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val hi = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
+    def seg(k: Int, t: java.sql.Timestamp)(d: String): Unit =
+      Seq((k, t)).toDF("k", "ts").write.parquet(d)
+    VersionedTable.append(dir)(seg(1, lo))                        // v1 [s1]
+    VersionedTable.append(dir)(seg(2, hi))                        // v2 [s1 s2]
+    VersionedTable.append(dir)(seg(3, hi))                        // v3 [s1 s2 s3]
+    val m3 = VersionedTable.readManifest(dir).get
+    assert(VersionedTable.read(spark, dir, Some(3L)).count() == 3) // memo warm
+    // v4 drops s1 (no stats: conservatively rewritten away as empty)
+    VersionedTable.deleteRange(spark, dir, "ts", Long.MinValue, lo.getTime * 1000L)
+    assert(!VersionedTable.readManifest(dir).get.segments.contains(m3.segments.head))
+    // horizon 2: s1 (unreferenced) and snapshots v1, v2 go; snapshot v3,
+    // which still names s1, stays
+    VersionedTable.vacuum(dir, keepGenerations = 2)
+    assert(!Files.exists(Paths.get(dir, m3.segments.head)))
+    intercept[NoSuchElementException](VersionedTable.read(spark, dir, Some(1L)))
+    intercept[org.apache.spark.sql.AnalysisException](VersionedTable.read(spark, dir, Some(3L)))
+    // a segment deleted behind the memo's back (no vacuum eviction) also
+    // fails at plan time: Spark resolves the path even with a schema given
+    VersionedTable.read(spark, dir).count()
+    val live = Paths.get(dir, VersionedTable.readManifest(dir).get.segments.last)
+    Files.walk(live).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    intercept[org.apache.spark.sql.AnalysisException](VersionedTable.read(spark, dir))
+  }
 }
