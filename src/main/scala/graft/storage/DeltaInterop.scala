@@ -467,14 +467,7 @@ object DeltaInterop {
     require(Files.isDirectory(logDir), s"no _delta_log under $deltaDir")
     val target = resolveState(spark, root, logDir, deltaDir, Some(toVersion))
     val current = resolveState(spark, root, logDir, deltaDir)
-    val tip = {
-      val fromCommits = listCommits(logDir).lastOption
-        .map(_.getFileName.toString.dropRight(5).toLong).getOrElse(-1L)
-      val lastCp = logDir.resolve("_last_checkpoint")
-      val fromCp = if (Files.exists(lastCp))
-        mapper.readTree(Files.readAllBytes(lastCp)).get("version").asLong() else -1L
-      math.max(fromCommits, fromCp)
-    }
+    val tip = tipVersion(logDir)
     require(toVersion < tip,
       s"restore target $toVersion is not before the current version $tip")
     val adds = target.active.toSeq.collect {
@@ -1205,15 +1198,6 @@ object DeltaInterop {
     finally s.close()
   }
 
-  /** Append commit `version` to an existing (or fresh) `_delta_log`:
-    * `removes` retire previously-added relative paths, `adds` activate
-    * relative paths whose files must already sit under `deltaDir` (sizes
-    * are read from disk — the log never carries a size the bytes don't
-    * back). `schemaJson` must be given on the FIRST commit (it emits the
-    * protocol + metaData actions) and may be given later to record a
-    * schema change. Versions must be appended contiguously — the same
-    * no-gap rule [[importSnapshot]] enforces on read.
-    */
   /** Compute PROTOCOL.md "Per-file Statistics" JSON for files about to be
     * added: ONE distributed pass over the named parquet files, grouped by
     * `_metadata.file_path`, aggregating numRecords + per-column
@@ -1293,6 +1277,45 @@ object DeltaInterop {
     }.toMap
   }
 
+  /** The latest committed version, -1 for an empty log: the newer of the
+    * last commit JSON and the checkpoint pointer (pre-checkpoint commits
+    * may have been cleaned up — Delta metadata cleanup — so the pointer
+    * anchors contiguity when it is newer).
+    */
+  private def tipVersion(logDir: Path): Long = {
+    val fromCommits = listCommits(logDir).lastOption
+      .map(_.getFileName.toString.dropRight(5).toLong).getOrElse(-1L)
+    val lastCp = logDir.resolve("_last_checkpoint")
+    val fromCp = if (Files.exists(lastCp))
+      mapper.readTree(Files.readAllBytes(lastCp)).get("version").asLong() else -1L
+    math.max(fromCommits, fromCp)
+  }
+
+  /** `version` must be the log's next one: an already-committed version is
+    * a lost race ([[VersionedTable.ConcurrentCommitException]]), a later
+    * one a gap.
+    */
+  private def requireNext(deltaDir: String, logDir: Path, version: Long): Unit = {
+    val expected = tipVersion(logDir) + 1
+    if (version < expected) throw new VersionedTable.ConcurrentCommitException(
+      s"concurrent commit at $deltaDir: version $version is already committed")
+    require(version == expected,
+      s"non-contiguous commit: want version $expected, got $version")
+  }
+
+  /** Append commit `version` to an existing (or fresh) `_delta_log`:
+    * `removes` retire previously-added relative paths, `adds` activate
+    * relative paths whose files must already sit under `deltaDir` (sizes
+    * are read from disk — the log never carries a size the bytes don't
+    * back). `schemaJson` must be given on the FIRST commit (it emits the
+    * protocol + metaData actions) and may be given later to record a
+    * schema change. Versions must be appended contiguously — the same
+    * no-gap rule [[importSnapshot]] enforces on read. The commit file is
+    * published put-if-absent, so of two writers racing on one version
+    * exactly one lands and the other gets a
+    * [[VersionedTable.ConcurrentCommitException]], as does a writer whose
+    * version is already in the log.
+    */
   def writeCommit(
       deltaDir: String, version: Long, adds: Seq[String],
       removes: Seq[String] = Nil, schemaJson: Option[String] = None,
@@ -1307,19 +1330,7 @@ object DeltaInterop {
     val root = Paths.get(deltaDir)
     val logDir = root.resolve("_delta_log")
     Files.createDirectories(logDir)
-    val existing = listCommits(logDir)
-      .map(_.getFileName.toString.dropRight(5).toLong)
-    // pre-checkpoint commits may have been cleaned up (Delta metadata
-    // cleanup): the checkpoint pointer anchors contiguity when it is newer
-    val cpV = {
-      val lastCp = logDir.resolve("_last_checkpoint")
-      if (Files.exists(lastCp))
-        mapper.readTree(Files.readAllBytes(lastCp)).get("version").asLong()
-      else -1L
-    }
-    val expected = (existing.lastOption.getOrElse(-1L) max cpV) + 1
-    require(version == expected,
-      s"non-contiguous commit: want version $expected, got $version")
+    requireNext(deltaDir, logDir, version)
     require(version > 0 || schemaJson.isDefined,
       "the first commit must carry schemaJson (protocol + metaData)")
     require((dvs.keySet -- adds.toSet).isEmpty,
@@ -1434,7 +1445,18 @@ object DeltaInterop {
     }
     val log = actions.result().map(mapper.writeValueAsString)
       .mkString("", "\n", "\n")
-    Files.write(logDir.resolve(f"$version%020d.json"), log.getBytes("UTF-8"))
+    // put-if-absent (PROTOCOL.md: mutual exclusion on N.json): the bytes
+    // are staged, then hard-linked in — atomic, and a racer's commit is
+    // never replaced
+    val tmp = Files.createTempFile(logDir, s".$version.", ".json.tmp")
+    try {
+      Files.write(tmp, log.getBytes("UTF-8"))
+      Files.createLink(logDir.resolve(f"$version%020d.json"), tmp)
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new VersionedTable.ConcurrentCommitException(
+          s"concurrent commit at $deltaDir: another writer committed version $version")
+    } finally Files.deleteIfExists(tmp)
     ()
   }
 
@@ -1639,44 +1661,66 @@ object DeltaInterop {
     *     uses; files whose key ranges are disjoint from the wave are
     *     never OPENED (at 100 TB with time-ordered keys this is almost
     *     every file).
-    *  2. Among survivors, ONE distributed semi-join (source keys
-    *     broadcast — a CDC wave is small by construction) finds the
-    *     files that actually contain matches; survivors without matches
-    *     stay live untouched.
-    *  3. Touched files are rewritten WITHOUT their matched rows in one
-    *     distributed pass (hash repartition on the file index, original
-    *     row order preserved via `_metadata.row_index`; existing
-    *     deletion vectors are applied first, so the rewrite also purges
-    *     them — their rows are dead, not matched). The wave's surviving
-    *     rows (updates + inserts, tombstones dropped) land as NEW files.
-    *  4. One commit retires the touched files and adds the rewritten +
-    *     new ones WITH fresh [[computeAddStats]] statistics, so the next
-    *     merge prunes against this one's output.
+    *  2. MATCH: among survivors, ONE distributed join (source keys
+    *     broadcast — a CDC wave is small by construction) returns every
+    *     matched live row with its file path. The touched files and
+    *     `targetRowsReplaced` derive from those rows, which number the
+    *     matched count (the wave's size when table keys are unique);
+    *     survivors without matches stay live untouched.
+    *  3. WRITE ONCE: the touched files' unmatched rows (existing deletion
+    *     vectors are applied first, so the rewrite also purges them —
+    *     their rows are dead, not matched) and the wave's surviving rows
+    *     (updates + inserts, tombstones dropped) are unioned and
+    *     coalesced to `ceil(bytes / spark.sql.files.maxPartitionBytes)`
+    *     files — the split count Spark's own reader plans for the same
+    *     bytes, from the touched files' sizes plus the new rows at the
+    *     schema's default row size. No shuffle: rows keep scan order. A
+    *     merge never adds one file per touched file: small fragmented
+    *     tables compact as they are merged, and at scale the write keeps
+    *     the scan's parallelism.
+    *  4. One commit retires the touched files and adds the written ones
+    *     (`merge-<version>-<i>-<uuid>.parquet`, zero-row parts dropped) WITH
+    *     fresh [[computeAddStats]] statistics, so the next merge prunes
+    *     against this one's output.
     *
-    * PARTITIONED tables work (round 17): partition values join the
-    * prune as degenerate [v, v] intervals (a wave scoped to one date
-    * partition never opens the others), the match/rewrite scan restores
-    * partition columns from `add.partitionValues` (files don't store
-    * them — the import's restoration join), rewritten files carry their
-    * original partition values, and the wave's rows land via
-    * `partitionBy` with per-file partitionValues parsed back from the
-    * hive-style directory names (NULL included) — so an update may MOVE
-    * a row across partitions: the old row leaves its file, the new one
-    * lands under its new value.
+    * PARTITIONED tables: partition values join the prune as degenerate
+    * [v, v] intervals (a wave scoped to one date partition never opens
+    * the others), the match/rewrite scan restores partition columns from
+    * `add.partitionValues` (files don't store them — the import's
+    * restoration join), and the write routes rows via `partitionBy`, each
+    * file's partitionValues parsed back from its hive-style directory
+    * names (NULL included) — so an update may MOVE a row across
+    * partitions: the old row leaves its file, the new one lands under its
+    * new value.
+    *
+    * CHANGE DATA FEED (PROTOCOL.md "Add CDC File"): when the table
+    * declares delta.enableChangeDataFeed, the commit carries its
+    * row-level changes as `_change_data` parquet + cdc actions — CDF
+    * readers use them INSTEAD of deriving from add/remove. The match
+    * pass's rows are the pre-images (`update_preimage`, or `delete` under
+    * a tombstone); non-tombstone wave rows whose key matched emit
+    * `update_postimage`, the rest `insert`; a tombstone for an absent key
+    * emits nothing (MERGE deleted nothing). No table is re-read: the
+    * change data is one write of O(matched + wave) rows, sized by the
+    * same rule. Partitioned tables refuse before anything is written
+    * (cdc partition routing is out of scope).
     *
     * Contract guards: duplicate source keys refuse (SQL MERGE's
     * nondeterministic-update error), NULL source keys refuse (a NULL
     * never equals anything — the row could neither match nor be keyed),
     * `deleteCol` must be boolean and is consumed (not written).
     * Column-mapped tables refuse with the same rationale as
-    * [[deleteWhere]].
+    * [[deleteWhere]]. Staging directories are deleted before `merge`
+    * returns or throws.
     */
   def merge(
       spark: SparkSession, deltaDir: String, version: Long,
       source: org.apache.spark.sql.DataFrame, keyCols: Seq[String],
       deleteCol: Option[String] = None): MergeReport = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, max, min, regexp_replace, sum, when}
-    import org.apache.spark.sql.types.{BooleanType, DataType, StructType}
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, max, min, not, regexp_replace, sum, when}
+    import org.apache.spark.sql.types.{BooleanType, DataType, StringType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val root = Paths.get(deltaDir)
     val logDir = root.resolve("_delta_log")
@@ -1685,6 +1729,13 @@ object DeltaInterop {
     require(st.cmMode.isEmpty,
       "merge on a column-mapped table is out of scope: keys name logical " +
         "columns but the rewrite scans physical files")
+    val cdf = st.configuration.get("delta.enableChangeDataFeed").contains("true")
+    require(!cdf || st.partCols.isEmpty,
+      "CDF emission for a PARTITIONED table is out of scope — " +
+        "disable delta.enableChangeDataFeed or keep the layout unpartitioned")
+    // a stale version fails here, before its files could replace the
+    // same-named files of the commit that took the version
+    requireNext(deltaDir, logDir, version)
     val schema = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
     val dataSchema = StructType(schema.filterNot(f => st.partCols.contains(f.name)))
     keyCols.foreach(k => require(schema.fieldNames.contains(k),
@@ -1703,11 +1754,12 @@ object DeltaInterop {
         "update replaces the whole row, so the wave must carry every column")
 
     // normalize the wave to the table's column order/types once; persist —
-    // it anchors five small jobs (guards, bounds, match, anti-join, write)
+    // the guard aggregation, the match pass and the writes all read it
     val srcCols = schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name))
     val delFlag = deleteCol.map(d => col(d)).getOrElse(lit(false))
     val src = source.select((srcCols :+ coalesce(delFlag, lit(false))
       .as("__graft_del")).toIndexedSeq: _*).persist()
+    val staged = new java.util.concurrent.ConcurrentLinkedQueue[Path]
     try {
       // ONE action computes the null-key guard, the duplicate-key guard,
       // the wave row/tombstone counts AND the per-key min/max envelope
@@ -1739,10 +1791,9 @@ object DeltaInterop {
 
       // 1. stats prune: the wave's per-key envelope vs each file's bounds
       // (the __mn_/__mx_ fields of the fused aggregation above)
-      val bounds = chk
       val envelope = DataSkipping.And(keyCols.flatMap { k =>
-        Seq(DataSkipping.Ge(k, bounds.getAs[Any](s"__mn_$k")),
-          DataSkipping.Le(k, bounds.getAs[Any](s"__mx_$k")))
+        Seq(DataSkipping.Ge(k, chk.getAs[Any](s"__mn_$k")),
+          DataSkipping.Le(k, chk.getAs[Any](s"__mx_$k")))
       })
       val colType = (c: String) => schema.fields.find(_.name == c).map(_.dataType)
       val (candidates, pruned) = st.active.toSeq.sortBy(_._1).partition {
@@ -1751,12 +1802,13 @@ object DeltaInterop {
             fileStatsOf(af, schema, st.partCols, Map.empty, mapped = false),
             envelope, colType)
       }
+      val located = (rels: Seq[String]) => rels.map(rel =>
+        (root.resolve(diskRel(root, rel, st.active(rel).rawPath)), st.active(rel)))
 
       // masked scan of a file set, partition columns restored from the
       // log's partitionValues (data files don't store them — the
       // import's restoration shape, keyed by full path)
-      def mergeScan(files: Seq[(Path, ActiveFile)]): org.apache.spark.sql.DataFrame = {
-        import scala.jdk.CollectionConverters._
+      def mergeScan(files: Seq[(Path, ActiveFile)]): DataFrame = {
         val base = spark.read.schema(dataSchema)
           .parquet(files.map(_._1.toString): _*)
           .withColumn("__graft_mg_path",
@@ -1766,14 +1818,10 @@ object DeltaInterop {
           if (st.partCols.isEmpty) base
           else {
             val mapRows = files.map { case (p, af) =>
-              org.apache.spark.sql.Row.fromSeq(
-                p.toString +: st.partCols.map(c => af.pv.get(c).flatten.orNull))
+              Row.fromSeq(p.toString +: st.partCols.map(c => af.pv.get(c).flatten.orNull))
             }
-            val mapSchema = StructType(
-              org.apache.spark.sql.types.StructField("__graft_mg_path",
-                org.apache.spark.sql.types.StringType, nullable = false) +:
-              st.partCols.map(c => org.apache.spark.sql.types.StructField(
-                "__graft_pv_" + c, org.apache.spark.sql.types.StringType)))
+            val mapSchema = StructType(StructField("__graft_mg_path", StringType,
+              nullable = false) +: st.partCols.map(c => StructField("__graft_pv_" + c, StringType)))
             val joined = base.join(
               broadcast(spark.createDataFrame(mapRows.asJava, mapSchema)),
               Seq("__graft_mg_path"), "left")
@@ -1784,186 +1832,123 @@ object DeltaInterop {
         applyDeletionVectorsKeyed(spark, root, withParts, files)
       }
 
-      // 2. which candidates actually hold matched keys? one semi-join pass
-      val srcKeys = broadcast(src.select(keyCols.map(col): _*))
-      val candFiles = candidates.map { case (rel, af) =>
-        (root.resolve(diskRel(root, rel, af.rawPath)), af) }
-      val absToRel = candidates.map { case (rel, af) =>
-        root.resolve(diskRel(root, rel, af.rawPath)).toString -> rel }.toMap
-      val (touchedAbs, matchedRows): (Seq[String], Long) =
-        if (candidates.isEmpty) (Nil, 0L)
-        else {
-          val m = mergeScan(candFiles).join(srcKeys, keyCols, "left_semi")
-            .groupBy(col("__graft_mg_path")).agg(count(lit(1)).as("__n"))
-            .collect()
-          (m.map(_.getString(0)).toSeq.sorted, m.map(_.getAs[Long]("__n")).sum)
+      // one write of `df`, coalesced to the split count Spark's reader
+      // plans for `bytes`; returns the written parts in path order, each
+      // with the partition values its hive-style directories encode
+      def writeSized(df: DataFrame, bytes: Long, prefix: String,
+          partCols: Seq[String]): Seq[(Path, Map[String, Option[String]])] = {
+        val split = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+          spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+        val tmp = Files.createTempDirectory(prefix)
+        staged.add(tmp)
+        val w = df.coalesce(math.max(1L, (bytes + split - 1) / split).toInt)
+          .write.mode("overwrite")
+        (if (partCols.isEmpty) w else w.partitionBy(partCols: _*)).parquet(tmp.toString)
+        val parts = {
+          val s0 = Files.walk(tmp)
+          try s0.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+            .toSeq.sortBy(_.toString)
+          finally s0.close()
         }
-      val touchedRels = touchedAbs.map(absToRel)
-
-      // 3a. rewrite touched files without their matched (or DV-dead) rows;
-      // rewritten files keep their original partitionValues
-      val renames = Seq.newBuilder[(String, String)]
-      val removedOnly = Seq.newBuilder[String]
-      // 3a and 3b are independent (disjoint temp dirs and builders; 3a
-      // reads the touched files, 3b the persisted wave) — overlapped via
-      // Par (guide §2.6) so one write's commit tail back-fills the other
-      def rewriteTouched(): Unit = if (touchedRels.nonEmpty) {
-        import scala.jdk.CollectionConverters._
-        val tFiles = touchedRels.map(rel => (root.resolve(
-          diskRel(root, rel, st.active(rel).rawPath)), st.active(rel)))
-        val idxRows = touchedRels.zip(tFiles).zipWithIndex.map { case ((_, (p, _)), i) =>
-          org.apache.spark.sql.Row(p.toString, i) }
-        val idxSchema = StructType(Seq(
-          org.apache.spark.sql.types.StructField("__graft_mg_path",
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("__graft_pidx",
-            org.apache.spark.sql.types.IntegerType, nullable = false)))
-        val tmp = Files.createTempDirectory("graft_merge_")
-        mergeScan(tFiles).join(srcKeys, keyCols, "left_anti")
-          .join(broadcast(spark.createDataFrame(idxRows.asJava, idxSchema)),
-            Seq("__graft_mg_path"))
-          .repartition(touchedRels.size, col("__graft_pidx"))
-          .sortWithinPartitions(col("__graft_pidx"), col("__graft_dv_pos"))
-          .select((dataSchema.fieldNames.map(col) :+ col("__graft_pidx")).toIndexedSeq: _*)
-          .write.mode("overwrite").partitionBy("__graft_pidx").parquet(tmp.toString)
-        touchedRels.zipWithIndex.foreach { case (rel, i) =>
-          val dir = tmp.resolve(s"__graft_pidx=$i")
-          if (!Files.isDirectory(dir)) removedOnly += rel // every row matched
-          else {
-            val part = listParquet(dir) match {
-              case Seq(one) => one
-              case other => throw new IllegalStateException(
-                s"expected one merged part file for $rel, got ${other.size}")
-            }
-            val cleanRel = s"${rel.stripSuffix(".parquet")}-merged-$version.parquet"
-            Files.move(part, root.resolve(cleanRel), StandardCopyOption.REPLACE_EXISTING)
-            renames += ((rel, cleanRel))
-          }
-        }
-      }
-
-      // 3b. the wave's surviving rows (updates + inserts) land as new
-      // files — partitioned tables route rows via partitionBy and the
-      // hive-style directory names parse back into partitionValues
-      val newRows = src.filter(!col("__graft_del")).drop("__graft_del")
-      // survivor count comes from the fused guard aggregation — the old
-      // separate count() was a second full pass over the persisted wave
-      val rowsWritten = waveRows - chk.getAs[Long]("__ndel")
-      val newRels = Seq.newBuilder[String]
-      val newPvs = Map.newBuilder[String, Map[String, Option[String]]]
-      def writeNewRows(): Unit = if (rowsWritten > 0) {
-        val tmp = Files.createTempDirectory("graft_merge_new_")
-        if (st.partCols.isEmpty) {
-          newRows.write.mode("overwrite").parquet(tmp.toString)
-          listParquet(tmp).sortBy(_.getFileName.toString).zipWithIndex.foreach {
-            case (part, i) =>
-              val rel = s"merge-$version-$i.parquet"
-              Files.move(part, root.resolve(rel), StandardCopyOption.REPLACE_EXISTING)
-              newRels += rel
-          }
-        } else {
-          newRows.write.mode("overwrite")
-            .partitionBy(st.partCols: _*).parquet(tmp.toString)
-          import scala.jdk.CollectionConverters._
-          val parts = {
-            val s0 = Files.walk(tmp)
-            try s0.iterator().asScala.filter(p =>
-              p.getFileName.toString.endsWith(".parquet")).toSeq
-              .sortBy(_.toString)
-            finally s0.close()
-          }
-          parts.zipWithIndex.foreach { case (part, i) =>
-            // dir components between tmp and the file are c=v pairs in
-            // partitionBy order, hive-escaped (Spark's escapePathName)
+        parts.map { part =>
+          // dir components between tmp and the file are c=v pairs in
+          // partitionBy order, hive-escaped (Spark's escapePathName)
+          val pv = if (partCols.isEmpty) Map.empty[String, Option[String]] else {
             val relDirs = tmp.relativize(part.getParent)
-            val pv = (0 until relDirs.getNameCount).map { k =>
+            (0 until relDirs.getNameCount).map { k =>
               val seg = relDirs.getName(k).toString
               val eq = seg.indexOf('=')
               require(eq > 0, s"unexpected partition dir segment '$seg'")
-              val c = seg.substring(0, eq)
               val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
                 .unescapePathName(seg.substring(eq + 1))
-              c -> (if (raw == "__HIVE_DEFAULT_PARTITION__") None else Some(raw))
+              seg.substring(0, eq) -> (if (raw == "__HIVE_DEFAULT_PARTITION__") None else Some(raw))
             }.toMap
-            require(pv.keySet == st.partCols.toSet,
-              s"partition dirs $pv do not cover ${st.partCols}")
-            val rel = s"merge-$version-$i.parquet"
-            Files.move(part, root.resolve(rel), StandardCopyOption.REPLACE_EXISTING)
-            newRels += rel
-            newPvs += rel -> pv
           }
+          require(pv.keySet == partCols.toSet, s"partition dirs $pv do not cover $partCols")
+          part -> pv
         }
       }
-      graft.operators.Par.run[Unit](() => rewriteTouched(), () => writeNewRows())
 
-      // 3c. CHANGE DATA FEED (PROTOCOL.md "Add CDC File"): when the table
-      // declares delta.enableChangeDataFeed, the commit must carry its
-      // row-level changes as _change_data parquet + cdc actions — CDF
-      // readers use them INSTEAD of deriving from add/remove. Matched
-      // rows emit update_preimage (table values) + update_postimage
-      // (wave values), tombstoned matches emit delete, unmatched
-      // non-tombstone wave rows emit insert; a tombstone for an absent
-      // key emits nothing (MERGE deleted nothing). One extra scan of the
-      // TOUCHED files only — the files the merge already rewrote — so
-      // CDF costs O(touched + wave), never a table scan. Partitioned
-      // tables refuse (cdc partition routing is out of scope; disable
-      // the flag or use the unpartitioned layout).
-      val cdcRels = Seq.newBuilder[String]
-      if (st.configuration.get("delta.enableChangeDataFeed").contains("true")) {
-        import org.apache.spark.sql.functions.{lit => flit, not, when}
-        require(st.partCols.isEmpty,
-          "CDF emission for a PARTITIONED table is out of scope — " +
-            "disable delta.enableChangeDataFeed or keep the layout unpartitioned")
-        val tFiles2 = touchedRels.map(rel => (root.resolve(
-          diskRel(root, rel, st.active(rel).rawPath)), st.active(rel)))
-        val touchedScan =
-          (if (tFiles2.isEmpty)
-            spark.createDataFrame(spark.sparkContext
-              .emptyRDD[org.apache.spark.sql.Row], schema)
-          else mergeScan(tFiles2)).persist()
-        try {
-          val outCols = schema.fieldNames.map(col)
-          val pre = touchedScan
-            .join(broadcast(src.select((keyCols.map(col) :+ col("__graft_del"))
-              .toIndexedSeq: _*)), keyCols.toSeq, "inner")
-            .select((outCols :+ when(col("__graft_del"), flit("delete"))
-              .otherwise(flit("update_preimage")).as("_change_type")).toIndexedSeq: _*)
-          val tableKeys = touchedScan.select(keyCols.map(col).toIndexedSeq: _*)
-          val post = src.join(tableKeys, keyCols.toSeq, "left_semi")
-            .filter(not(col("__graft_del")))
-            .select((outCols :+ flit("update_postimage").as("_change_type")).toIndexedSeq: _*)
-          val ins = src.filter(not(col("__graft_del")))
-            .join(tableKeys, keyCols.toSeq, "left_anti")
-            .select((outCols :+ flit("insert").as("_change_type")).toIndexedSeq: _*)
-          val changes = pre.unionByName(post).unionByName(ins)
-          val cdcDir = root.resolve("_change_data")
-          Files.createDirectories(cdcDir)
-          val tmpC = Files.createTempDirectory("graft_merge_cdc_")
-          changes.write.mode("overwrite").parquet(tmpC.toString)
-          listParquet(tmpC).sortBy(_.getFileName.toString).zipWithIndex.foreach {
-            case (part, i) =>
-              val rel = s"_change_data/cdc-$version-$i.parquet"
-              Files.move(part, root.resolve(rel), StandardCopyOption.REPLACE_EXISTING)
-              cdcRels += rel
+      // 2. the match pass: every matched live row of the candidates with
+      // its file — under CDF the whole row and its wave row's tombstone
+      // flag, which make the pre-image (an inner join: wave keys are unique)
+      val srcKeys = broadcast(src.select((keyCols :+ "__graft_del").map(col): _*))
+      val candFiles = located(candidates.map(_._1))
+      val absToRel = candFiles.map(_._1.toString).zip(candidates.map(_._1)).toMap
+      val matched =
+        if (candFiles.isEmpty) Array.empty[Row]
+        else mergeScan(candFiles).join(srcKeys, keyCols)
+          .select(("__graft_mg_path" +:
+            (if (cdf) schema.fieldNames.toSeq :+ "__graft_del" else Nil)).map(col): _*)
+          .collect()
+      val touchedRels = matched.map(_.getString(0)).distinct.sorted.map(absToRel).toSeq
+      val touched = located(touchedRels)
+
+      // 3. ONE size-targeted write: the touched files' unmatched rows plus
+      // the wave's surviving rows (updates + inserts). File names carry a
+      // per-merge token: a writer racing this version must never replace
+      // a file the winning commit names
+      val token = java.util.UUID.randomUUID().toString
+      val outCols = schema.fieldNames.map(col).toIndexedSeq
+      val live = src.filter(not(col("__graft_del"))).select(outCols: _*)
+      // survivor count comes from the fused guard aggregation
+      val rowsWritten = waveRows - chk.getAs[Long]("__ndel")
+      val kept = if (touched.isEmpty) Nil
+        else Seq(mergeScan(touched).join(srcKeys, keyCols, "left_anti").select(outCols: _*))
+      def writeData(): (Seq[(String, Map[String, Option[String]])], Map[String, String]) = {
+        val landed = (kept ++ Option.when(rowsWritten > 0)(live)).reduceOption(_ union _)
+          .map(writeSized(_, touched.map(_._2.size).sum + rowsWritten * schema.defaultSize,
+            "graft_merge_", st.partCols))
+          .getOrElse(Nil).zipWithIndex.map { case ((part, pv), i) =>
+            val rel = s"merge-$version-$i-$token.parquet"
+            Files.move(part, root.resolve(rel))
+            rel -> pv
           }
-        } finally { touchedScan.unpersist(); () }
+        (landed, computeAddStats(spark, deltaDir, landed.map(_._1)))
       }
 
-      // 4. one commit: retire touched, add rewritten + new, fresh stats,
-      // partition values carried (original for rewrites, parsed for new)
-      val rn = renames.result()
-      val adds = rn.map(_._2) ++ newRels.result()
-      val pvs: Map[String, Map[String, Option[String]]] =
-        if (st.partCols.isEmpty) Map.empty
-        else rn.map { case (old, clean) => clean -> st.active(old).pv }.toMap ++
-          newPvs.result()
-      writeCommit(deltaDir, version, adds = adds, removes = touchedRels,
-        partitionValues = pvs,
-        stats = computeAddStats(spark, deltaDir, adds),
-        cdcFiles = cdcRels.result())
+      // the change data: pre-images from the match pass, post-images and
+      // inserts from the wave split by the matched keys
+      def writeChanges(): Seq[String] = if (!cdf) Nil else {
+        val pre = spark.createDataFrame(matched.toSeq.map(r => Row.fromSeq(r.toSeq.tail)).asJava,
+          schema.add("__graft_del", BooleanType))
+        val matchedKeys = pre.select(keyCols.map(col) :+ lit(true).as("__graft_m"): _*)
+        val changes = pre
+          .select(outCols :+ when(col("__graft_del"), lit("delete"))
+            .otherwise(lit("update_preimage")).as("_change_type"): _*)
+          .union(live.join(broadcast(matchedKeys), keyCols, "left")
+            .select(outCols :+ when(col("__graft_m"), lit("update_postimage"))
+              .otherwise(lit("insert")).as("_change_type"): _*))
+        val parts = writeSized(changes, (matched.length + waveRows) * schema.defaultSize,
+          "graft_merge_cdc_", Nil)
+        Files.createDirectories(root.resolve("_change_data"))
+        parts.zipWithIndex.map { case ((part, _), i) =>
+          val rel = s"_change_data/cdc-$version-$i-$token.parquet"
+          Files.move(part, root.resolve(rel))
+          rel
+        }
+      }
+      // the two writes are independent (disjoint staging dirs and outputs)
+      // — overlapped via Par so one write's commit tail back-fills the other
+      val ((landed, stats), cdcRels) = graft.operators.Par.run2(writeData _, writeChanges _)
+
+      // 4. one commit: retire touched, add the written files with their
+      // stats; a part the coalesce left empty is dropped, not added
+      val adds = landed.filter { case (rel, _) =>
+        val nonEmpty = mapper.readTree(stats(rel)).get("numRecords").asLong() > 0
+        if (!nonEmpty) Files.delete(root.resolve(rel))
+        nonEmpty
+      }
+      writeCommit(deltaDir, version, adds = adds.map(_._1), removes = touchedRels,
+        partitionValues = if (st.partCols.isEmpty) Map.empty else adds.toMap,
+        stats = adds.map { case (rel, _) => rel -> stats(rel) }.toMap,
+        cdcFiles = cdcRels)
       MergeReport(pruned.size, candidates.size, touchedRels.size,
-        matchedRows, rowsWritten)
-    } finally { src.unpersist(); () }
+        matched.length.toLong, rowsWritten)
+    } finally {
+      src.unpersist()
+      staged.asScala.foreach(VersionedTable.deleteRecursively)
+    }
   }
 
   /** [[applyDeletionVectors]] for scans that already carry

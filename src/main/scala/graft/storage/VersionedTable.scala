@@ -912,7 +912,7 @@ object VersionedTable {
     }
   }
 
-  private def deleteRecursively(p: Path): Unit = {
+  private[storage] def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {
       val s = Files.list(p)
       try s.iterator().asScala.toSeq.foreach(deleteRecursively)

@@ -1,6 +1,7 @@
 package graft.storage
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -782,15 +783,18 @@ class DeltaInteropSpec extends SparkSpec {
     assert(got(11L) == "v11" && got(20L) == "v20", "unmatched rows of the touched file survive")
     assert(Files.readAllBytes(Paths.get(out, "f0.parquet")).toSeq == f0Bytes,
       "pruned file untouched on disk")
-    // the commit retired f1 and added a -merged- successor + new files WITH stats
+    // the commit retired f1 and added ONE file — f1's survivors and the
+    // wave's rows written together — WITH stats
     val c1 = Files.readAllLines(Paths.get(out, "_delta_log", f"${1L}%020d.json"))
       .asScala.filter(_.nonEmpty).map(mapper.readTree(_))
     val rm = c1.flatMap(a => Option(a.get("remove"))).map(_.get("path").asText())
     assert(rm == Seq("f1.parquet"))
     val adds = c1.flatMap(a => Option(a.get("add")))
-    assert(adds.exists(_.get("path").asText().startsWith("f1-merged-1")))
-    assert(adds.forall(a => Option(a.get("stats")).exists(_.isTextual)),
-      "every merged/new file must carry stats so the NEXT merge prunes")
+    assert(adds.size == 1, s"one size-targeted write, not one file per source: $adds")
+    val addStats = mapper.readTree(adds.head.get("stats").asText())
+    assert(addStats.get("minValues").get("id").asLong() == 11L &&
+      addStats.get("maxValues").get("id").asLong() == 20L,
+      s"the next merge prunes on these stats: $addStats")
     // and a second merge prunes against the first's output
     val rep2 = DeltaInterop.merge(spark, out, 2L,
       Seq((25L, "UPD25", false)).toDF("id", "v", "del"), Seq("id"), Some("del"))
@@ -1021,5 +1025,224 @@ class DeltaInteropSpec extends SparkSpec {
     val tipAfter = Files.list(Paths.get(out, "_delta_log")).iterator().asScala
       .count(_.getFileName.toString.endsWith(".json"))
     assert(tipBefore == tipAfter, "failed restore must not commit")
+  }
+
+  /** Every path under `dir` with its size (directories as -1), sorted. */
+  private def tree(dir: String): Seq[(String, Long)] = {
+    val root = Paths.get(dir)
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(_ != root).map(p => root.relativize(p).toString ->
+      (if (Files.isDirectory(p)) -1L else Files.size(p))).toSeq.sorted
+    finally s.close()
+  }
+
+  test("writeCommit: two writers racing one version — exactly one commit lands, the " +
+    "loser gets ConcurrentCommitException, the log holds the winner's bytes (200 trials)") {
+    val schemaJson = Seq((1L, "x")).toDF("id", "v").schema.json
+    val pool = Executors.newFixedThreadPool(2)
+    try (1 to 200).foreach { trial =>
+      val out = tmp("delta_race_")
+      DeltaInterop.writeCommit(out, 0L, adds = Nil, schemaJson = Some(schemaJson))
+      val start = new CountDownLatch(1)
+      // the two commits differ only in their pinned commit time
+      val stamps = Seq(1000L, 2000L)
+      val futures = stamps.map { ts =>
+        pool.submit(new Callable[Option[Throwable]] {
+          def call(): Option[Throwable] = {
+            start.await()
+            try {
+              DeltaInterop.writeCommit(out, 1L, adds = Nil, commitTimestampMs = Some(ts))
+              None
+            } catch { case e: Throwable => Some(e) }
+          }
+        })
+      }
+      start.countDown()
+      val outcomes = stamps.zip(futures.map(_.get(60, TimeUnit.SECONDS)))
+      val winners = outcomes.collect { case (ts, None) => ts }
+      assert(winners.size == 1, s"trial $trial: $outcomes")
+      outcomes.collect { case (_, Some(e)) => e }.foreach(e => assert(
+        e.isInstanceOf[VersionedTable.ConcurrentCommitException], s"trial $trial: loser got $e"))
+      val committed = Files.readAllLines(Paths.get(out, "_delta_log", f"${1L}%020d.json"))
+        .asScala.map(mapper.readTree(_)).flatMap(a => Option(a.get("commitInfo")))
+        .map(_.get("timestamp").asLong())
+      assert(committed == Seq(winners.head), s"trial $trial: the log holds $committed")
+      assert(tree(out).map(_._1) == Seq("_delta_log",
+        "_delta_log/00000000000000000000.json", "_delta_log/00000000000000000001.json"),
+        s"trial $trial: staged commit bytes left behind")
+      VersionedTable.deleteRecursively(Paths.get(out))
+    } finally pool.shutdown()
+  }
+
+  test("two merges racing one version: the loser gets ConcurrentCommitException and " +
+    "the table serves the winner's rows, never the loser's files (10 trials)") {
+    val pool = Executors.newFixedThreadPool(2)
+    try (1 to 10).foreach { trial =>
+      val out = tmp("delta_merge_race_")
+      onePartFile((0L until 20L).map(i => (i, "base")).toDF("id", "v"),
+        Paths.get(out, "f0.parquet"))
+      DeltaInterop.writeCommit(out, 0L, adds = Seq("f0.parquet"),
+        schemaJson = Some(Seq((1L, "x")).toDF("id", "v").schema.json))
+      val start = new CountDownLatch(1)
+      val writers = Seq("A", "B")
+      val futures = writers.map { w =>
+        val wave = (0L until 10L).map(i => (i, w)).toDF("id", "v")
+        pool.submit(new Callable[Option[Throwable]] {
+          def call(): Option[Throwable] = {
+            start.await()
+            try { DeltaInterop.merge(spark, out, 1L, wave, Seq("id")); None }
+            catch { case e: Throwable => Some(e) }
+          }
+        })
+      }
+      start.countDown()
+      val outcomes = writers.zip(futures.map(_.get(120, TimeUnit.SECONDS)))
+      val winners = outcomes.collect { case (w, None) => w }
+      assert(winners.size == 1, s"trial $trial: $outcomes")
+      outcomes.collect { case (_, Some(e)) => e }.foreach(e => assert(
+        e.isInstanceOf[VersionedTable.ConcurrentCommitException], s"trial $trial: loser got $e"))
+      val served = DeltaInterop.importSnapshot(spark, out).filter(col("id") < 10L)
+        .select("v").distinct().as[String].collect().toSeq
+      assert(served == winners, s"trial $trial: winner $winners, table serves $served")
+    } finally pool.shutdown()
+  }
+
+  test("a refused merge writes nothing: CDF on a partitioned table refuses before " +
+    "any data file, change file or commit lands") {
+    val out = tmp("delta_merge_refused_")
+    onePartFile((1L to 10L).map(i => (i, s"v$i")).toDF("id", "v"), Paths.get(out, "pa.parquet"))
+    DeltaInterop.writeCommit(out, 0L, adds = Seq("pa.parquet"),
+      schemaJson = Some(Seq((1L, "x", "p")).toDF("id", "v", "part").schema.json),
+      partitionColumns = Seq("part"),
+      partitionValues = Map("pa.parquet" -> Map("part" -> Some("a"))),
+      configuration = Map("delta.enableChangeDataFeed" -> "true"))
+    val before = tree(out)
+    val e = intercept[IllegalArgumentException](DeltaInterop.merge(spark, out, 1L,
+      Seq((5L, "U5", "a"), (11L, "N11", "b")).toDF("id", "v", "part"), Seq("id")))
+    assert(e.getMessage.contains("PARTITIONED"))
+    assert(tree(out) == before, "table root and _delta_log must be unchanged")
+  }
+
+  test("merge: a wave that empties its touched file retires it and adds no data file") {
+    val out = mergeBase()
+    val wave = (1L to 10L).map(i => (i, "x", true)).toDF("id", "v", "del")
+    val rep = DeltaInterop.merge(spark, out, 1L, wave, Seq("id"), Some("del"))
+    assert(rep.filesRewritten == 1 && rep.targetRowsReplaced == 10 && rep.rowsWritten == 0)
+    val c1 = Files.readAllLines(Paths.get(out, "_delta_log", f"${1L}%020d.json"))
+      .asScala.filter(_.nonEmpty).map(mapper.readTree(_))
+    assert(c1.flatMap(a => Option(a.get("remove"))).map(_.get("path").asText()) ==
+      Seq("f0.parquet"))
+    assert(c1.forall(a => a.get("add") == null), "an empty write is not a data file")
+    assert(!tree(out).exists(_._1.startsWith("merge-")), "nor is it left on disk")
+    assert(DeltaInterop.importSnapshot(spark, out).count() == 20L)
+  }
+
+  test("merge deletes its staging directories, whether it commits or fails") {
+    val tmpRoot = Paths.get(System.getProperty("java.io.tmpdir"))
+    def staging(): Set[String] = {
+      val s = Files.list(tmpRoot)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_merge")).toSet
+      finally s.close()
+    }
+    def cdfTable(): String = {
+      val out = tmp("delta_merge_staging_")
+      onePartFile((1L to 10L).map(i => (i, s"v$i")).toDF("id", "v"), Paths.get(out, "f0.parquet"))
+      DeltaInterop.writeCommit(out, 0L, adds = Seq("f0.parquet"),
+        schemaJson = Some(Seq((1L, "x")).toDF("id", "v").schema.json),
+        configuration = Map("delta.enableChangeDataFeed" -> "true"))
+      out
+    }
+    val wave = Seq((3L, "U3", false), (4L, "x", true), (11L, "N11", false))
+      .toDF("id", "v", "del")
+    val before = staging()
+    DeltaInterop.merge(spark, cdfTable(), 1L, wave, Seq("id"), Some("del"))
+    assert(staging() == before, "a committed merge leaked staging directories")
+    // a regular file where the change-data directory belongs fails the
+    // merge after both writes staged their output
+    val blocked = cdfTable()
+    Files.write(Paths.get(blocked, "_change_data"), Array.emptyByteArray)
+    intercept[java.nio.file.FileAlreadyExistsException](
+      DeltaInterop.merge(spark, blocked, 1L, wave, Seq("id"), Some("del")))
+    assert(staging() == before, "a failed merge leaked staging directories")
+  }
+
+  /** Six waves of updates (some moving a row to another `part`), inserts,
+    * tombstones and one tombstone for an absent key, merged into a 200-row
+    * table; after each wave the snapshot must equal a driver-side model
+    * and, under CDF, the wave's change feed the expected pre/post/insert/
+    * delete rows. Returns each wave's live data-file count and Spark jobs.
+    */
+  private def mergeWaves(partitioned: Boolean): Seq[(Int, Int)] = {
+    val out = tmp("delta_merge_waves_")
+    val rnd = new scala.util.Random(20261017L)
+    def part(): String = s"p${rnd.nextInt(3)}"
+    val model = scala.collection.mutable.Map.empty[Long, (String, String)]
+    (0L until 200L).foreach(i => model(i) = (s"v$i", part()))
+    val schema = Seq((1L, "v", "p")).toDF("id", "v", "part").schema
+    val base = model.toSeq.sortBy(_._1).map { case (i, (v, p)) => (i, v, p) }
+    val adds =
+      if (partitioned) Seq("p0", "p1", "p2").map { p =>
+        onePartFile(base.filter(_._3 == p).map(r => (r._1, r._2)).toDF("id", "v"),
+          Paths.get(out, s"$p.parquet"))
+        s"$p.parquet"
+      }
+      else base.grouped(50).zipWithIndex.map { case (rows, k) =>
+        onePartFile(rows.toDF("id", "v", "part"), Paths.get(out, s"f$k.parquet"))
+        s"f$k.parquet"
+      }.toSeq
+    DeltaInterop.writeCommit(out, 0L, adds = adds, schemaJson = Some(schema.json),
+      partitionColumns = if (partitioned) Seq("part") else Nil,
+      partitionValues = if (partitioned) adds.map(a =>
+        a -> Map("part" -> Some(a.stripSuffix(".parquet")))).toMap else Map.empty,
+      configuration = if (partitioned) Map.empty
+        else Map("delta.enableChangeDataFeed" -> "true"),
+      stats = DeltaInterop.computeAddStats(spark, out, adds))
+    var nextId = 200L
+    (1 to 6).map { n =>
+      val keys = rnd.shuffle(model.keys.toSeq.sorted).take(20)
+      val (upd, del) = keys.splitAt(14)
+      val ins = (0 until 8).map { _ => nextId += 1; nextId }
+      val wave = upd.map(k => (k, s"u$n-$k", part(), false)) ++
+        del.map(k => (k, "x", model(k)._2, true)) ++
+        ins.map(k => (k, s"n$k", part(), false)) :+ ((10000L + n, "x", "p0", true))
+      val expectedFeed = upd.flatMap(k => Seq(
+          ("update_preimage", k, model(k)._1, model(k)._2),
+          ("update_postimage", k, s"u$n-$k", wave.find(_._1 == k).get._3))) ++
+        del.map(k => ("delete", k, model(k)._1, model(k)._2)) ++
+        wave.filter(r => ins.contains(r._1)).map(r => ("insert", r._1, r._2, r._3))
+      wave.foreach { case (k, v, p, d) => if (d) model.remove(k) else model(k) = (v, p) }
+      val (rep, jobs) = jobsDuring(DeltaInterop.merge(spark, out, n.toLong,
+        wave.toDF("id", "v", "part", "del"), Seq("id"), Some("del")))
+      assert(rep.targetRowsReplaced == 20 && rep.rowsWritten == 22, s"wave $n: $rep")
+      val got = DeltaInterop.importSnapshot(spark, out).select("id", "v", "part")
+        .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
+      assert(got == model, s"wave $n: snapshot differs from the model")
+      if (!partitioned) {
+        val feed = DeltaInterop.readChangeFeed(spark, out, n.toLong, n.toLong)
+          .select("_change_type", "id", "v", "part").as[(String, Long, String, String)]
+          .collect().toSet
+        assert(feed == expectedFeed.toSet, s"wave $n: change feed")
+      }
+      (DeltaInterop.liveState(spark, out).files.size, jobs)
+    }
+  }
+
+  test("merge waves, unpartitioned with CDF: snapshot and change feed match the " +
+    "model every wave, the file count never grows, at most 13 jobs per merge") {
+    val waves = mergeWaves(partitioned = false)
+    // the per-touched-file rewrite this replaced grew the table 11 -> 45
+    // files over these waves and ran 22-23 jobs per merge
+    assert(waves.forall(_._1 <= waves.head._1), s"live files per wave: $waves")
+    assert(waves.forall(_._2 <= 13), s"jobs per merge: $waves")
+  }
+
+  test("merge waves, partitioned: snapshot matches the model every wave (rows move " +
+    "across partitions), the file count never grows, at most 13 jobs per merge") {
+    val waves = mergeWaves(partitioned = true)
+    // the per-touched-file rewrite this replaced grew the table 17 -> 76
+    // files over these waves and ran 17-18 jobs per merge
+    assert(waves.forall(_._1 <= waves.head._1), s"live files per wave: $waves")
+    assert(waves.forall(_._2 <= 13), s"jobs per merge: $waves")
   }
 }

@@ -3,6 +3,11 @@
 # bypassing sbt's runner (faster, stdout not swallowed).
 # Usage: tools/run.sh <mainClass> [args...]
 MAIN="$1"; shift
+# the classes of the checkout this script belongs to, wherever it lives, and
+# the jars of the Spark distribution named by SPARK_HOME or else of the one
+# whose spark-submit is on PATH (the rule graftbench/build.py uses)
+CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
+SPARK_HOME="${SPARK_HOME:-$(dirname "$(dirname "$(readlink -f "$(command -v spark-submit)")")")}"
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
@@ -15,5 +20,5 @@ exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-24g}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$CLASSES:$SPARK_HOME/jars/*" \
   "$MAIN" "$@"
