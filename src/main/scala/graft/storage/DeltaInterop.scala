@@ -1445,19 +1445,9 @@ object DeltaInterop {
     }
     val log = actions.result().map(mapper.writeValueAsString)
       .mkString("", "\n", "\n")
-    // put-if-absent (PROTOCOL.md: mutual exclusion on N.json): the bytes
-    // are staged, then hard-linked in — atomic, and a racer's commit is
-    // never replaced
-    val tmp = Files.createTempFile(logDir, s".$version.", ".json.tmp")
-    try {
-      Files.write(tmp, log.getBytes("UTF-8"))
-      Files.createLink(logDir.resolve(f"$version%020d.json"), tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new VersionedTable.ConcurrentCommitException(
-          s"concurrent commit at $deltaDir: another writer committed version $version")
-    } finally Files.deleteIfExists(tmp)
-    ()
+    // put-if-absent (PROTOCOL.md: mutual exclusion on N.json)
+    VersionedTable.publishIfAbsent(logDir, f"$version%020d.json", log.getBytes("UTF-8"),
+      s"concurrent commit at $deltaDir: another writer committed version $version")
   }
 
   /** Row-level DELETE expressed as deletion vectors — the modern Delta

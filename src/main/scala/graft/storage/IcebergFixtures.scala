@@ -126,14 +126,18 @@ object IcebergFixtures {
     case (other, _) => other
   }
 
-  private def moveSinglePart(tmp: Path, dst: Path): Path = {
-    val parts = Files.list(tmp).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-    require(parts.size == 1, s"expected one part file in $tmp, got ${parts.size}")
-    Files.createDirectories(dst.getParent)
-    Files.move(parts.head, dst, StandardCopyOption.REPLACE_EXISTING)
-    dst
-  }
+  /** Write `df` as exactly one parquet file at `dst`, staged under a
+    * temp directory named `prefix…` that is deleted afterwards.
+    */
+  private def writeOnePart(df: DataFrame, prefix: String, dst: Path): Path =
+    VersionedTable.withStagingDir(prefix) { tmp =>
+      df.write.mode("overwrite").parquet(tmp.toString)
+      val parts = Files.list(tmp).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      require(parts.size == 1, s"expected one part file in $tmp, got ${parts.size}")
+      Files.createDirectories(dst.getParent)
+      Files.move(parts.head, dst, StandardCopyOption.REPLACE_EXISTING)
+    }
 
   /** Partition value types that round-trip through a hive dir name — the
     * gate for the one-pass staging below; anything else takes the legacy
@@ -181,46 +185,52 @@ object IcebergFixtures {
     * in one task, `partitionBy` then emits exactly one file per tuple
     * (rows ordered by `sortCols` — the position-delete contract), the
     * TYPED values parse back from the hive dir names, and record counts
-    * come from the written footers driver-side. Returns one
-    * (stagedFile, valueTuple, rowCount) per partition, sorted by the
-    * tuples' string form (the legacy `p$i` naming order). Callers must
-    * gate on [[hiveParseable]] for every partition type.
+    * come from the written footers driver-side. Each file moves into
+    * `dataDir` under `fileName(i, valueTuple)`, `i` its rank in the
+    * tuples' string order (the legacy `p$i` naming order); returns one
+    * (file, valueTuple, rowCount) per partition in that order. Callers
+    * must gate on [[hiveParseable]] for every partition type.
     */
   private def stageOnePass(df: DataFrame, partVals: Seq[(String, DataType)],
-      sortCols: Seq[Column], dropCols: Seq[String]): Seq[(Path, Seq[Any], Long)] = {
-    val names = partVals.map(_._1)
-    val types = partVals.toMap
-    val tmp = Files.createTempDirectory("graft_ice_stage_")
-    df.repartition(names.map(col): _*)
-      .sortWithinPartitions(names.map(col) ++ sortCols: _*)
-      .drop(dropCols: _*)
-      .write.mode("overwrite").partitionBy(names: _*).parquet(tmp.toString)
-    val staged: Seq[(Path, Seq[Any])] = {
-      val s0 = Files.walk(tmp)
-      val parts =
-        try s0.iterator().asScala.filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).toSeq
-        finally s0.close()
-      parts.map { part =>
-        val relDirs = tmp.relativize(part.getParent)
-        val byName = (0 until relDirs.getNameCount).map { k =>
-          val seg = relDirs.getName(k).toString
-          val eq = seg.indexOf('=')
-          require(eq > 0, s"unexpected partition dir segment '$seg'")
-          val c = seg.substring(0, eq)
-          val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(seg.substring(eq + 1))
-          c -> hiveDirValue(raw, types(c))
-        }.toMap
-        require(byName.keySet == names.toSet,
-          s"partition dirs $byName do not cover $names")
-        part -> names.map(byName)
+      sortCols: Seq[Column], dropCols: Seq[String], dataDir: Path)(
+      fileName: (Int, Seq[Any]) => String): Seq[(Path, Seq[Any], Long)] =
+    VersionedTable.withStagingDir("graft_ice_stage_") { tmp =>
+      val names = partVals.map(_._1)
+      val types = partVals.toMap
+      df.repartition(names.map(col): _*)
+        .sortWithinPartitions(names.map(col) ++ sortCols: _*)
+        .drop(dropCols: _*)
+        .write.mode("overwrite").partitionBy(names: _*).parquet(tmp.toString)
+      val staged: Seq[(Path, Seq[Any])] = {
+        val s0 = Files.walk(tmp)
+        val parts =
+          try s0.iterator().asScala.filter(p =>
+            p.getFileName.toString.endsWith(".parquet")).toSeq
+          finally s0.close()
+        parts.map { part =>
+          val relDirs = tmp.relativize(part.getParent)
+          val byName = (0 until relDirs.getNameCount).map { k =>
+            val seg = relDirs.getName(k).toString
+            val eq = seg.indexOf('=')
+            require(eq > 0, s"unexpected partition dir segment '$seg'")
+            val c = seg.substring(0, eq)
+            val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+              .unescapePathName(seg.substring(eq + 1))
+            c -> hiveDirValue(raw, types(c))
+          }.toMap
+          require(byName.keySet == names.toSet,
+            s"partition dirs $byName do not cover $names")
+          part -> names.map(byName)
+        }
       }
+      staged
+        .sortBy(_._2.map(v => if (v == null) "" else v.toString).mkString(" "))
+        .zipWithIndex.map { case ((f, vs), i) =>
+          val dst = Files.move(f, dataDir.resolve(fileName(i, vs)),
+            StandardCopyOption.REPLACE_EXISTING)
+          (dst, vs, footerCount(dst))
+        }
     }
-    staged
-      .sortBy(_._2.map(v => if (v == null) "" else v.toString).mkString(" "))
-      .map { case (f, vs) => (f, vs, footerCount(f)) }
-  }
 
   /** An identity-partitioned v1 table: one data file per distinct value
     * of `partCol` (NULL included) holding every OTHER column — the
@@ -245,20 +255,15 @@ object IcebergFixtures {
     // collapse to 1 (+ driver-side footer counts)
     val files: Seq[(Path, Any, Long)] =
       if (hiveParseable(partType))
-        stageOnePass(df, Seq(partCol -> partType), Nil, Nil).zipWithIndex
-          .map { case ((f, vs, n), i) =>
-            (Files.move(f, dataDir.resolve(s"p$i.parquet"),
-              StandardCopyOption.REPLACE_EXISTING), vs.head, n)
-          }
+        stageOnePass(df, Seq(partCol -> partType), Nil, Nil, dataDir)(
+          (i, _) => s"p$i.parquet").map { case (f, vs, n) => (f, vs.head, n) }
       else {
         val groups: Seq[(Any, Long)] = df.groupBy(col(partCol)).count().collect()
           .map(r => (r.get(0), r.getLong(1))).toSeq
           .sortBy { case (v, _) => if (v == null) "" else v.toString }
         groups.zipWithIndex.map { case ((v, n), i) =>
           val slice = df.filter(col(partCol) <=> lit(v)).drop(partCol).repartition(1)
-          val tmp = Files.createTempDirectory("graft_ice_fix_")
-          slice.write.mode("overwrite").parquet(tmp.toString)
-          (moveSinglePart(tmp, dataDir.resolve(s"p$i.parquet")), v, n)
+          (writeOnePart(slice, "graft_ice_fix_", dataDir.resolve(s"p$i.parquet")), v, n)
         }
       }
 
@@ -318,11 +323,8 @@ object IcebergFixtures {
     // TWO full scans of `tagged` per tuple (slice write + count)
     val files: Seq[(Path, GenericRecord, Long)] =
       if (pvTypes.forall(hiveParseable))
-        stageOnePass(tagged, pvNames.zip(pvTypes), Nil, dropCols).zipWithIndex
-          .map { case ((f, vs, n), i) =>
-            (Files.move(f, dataDir.resolve(s"p$i.parquet"),
-              StandardCopyOption.REPLACE_EXISTING), partRec(vs), n)
-          }
+        stageOnePass(tagged, pvNames.zip(pvTypes), Nil, dropCols, dataDir)(
+          (i, _) => s"p$i.parquet").map { case (f, vs, n) => (f, partRec(vs), n) }
       else {
         val groups: Seq[Seq[Any]] = tagged.select(pvNames.map(col): _*).distinct()
           .collect().map(_.toSeq).toSeq
@@ -332,9 +334,7 @@ object IcebergFixtures {
             .reduce(_ && _)
           val slice = tagged.filter(cond).drop(pvNames: _*).drop(dropCols: _*)
             .repartition(1)
-          val tmp = Files.createTempDirectory("graft_ice_xf_")
-          slice.write.mode("overwrite").parquet(tmp.toString)
-          val f = moveSinglePart(tmp, dataDir.resolve(s"p$i.parquet"))
+          val f = writeOnePart(slice, "graft_ice_xf_", dataDir.resolve(s"p$i.parquet"))
           val n = tagged.filter(cond).count()
           (f, partRec(vs), n)
         }
@@ -347,8 +347,8 @@ object IcebergFixtures {
   }
 
   /** Shared v1 metadata tail: one manifest over `files` (path, partition
-    * record, row count), a one-manifest list, and the v1.metadata.json +
-    * version hint — spec "Table Metadata".
+    * record, row count), a one-manifest list, and the v1.metadata.json
+    * published through [[IcebergInterop.publish]] — spec "Table Metadata".
     */
   private def writeV1Meta(out: Path, schemaJson: String, lastColumnId: Int,
       specJson: String, pStruct: Schema,
@@ -412,23 +412,9 @@ object IcebergFixtures {
     snap.put("manifest-list", manifestListPath.toUri.toString)
     root.putArray("snapshot-log")
     root.putArray("metadata-log")
-    Files.write(metaDir.resolve("v1.metadata.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
-    Files.write(metaDir.resolve("version-hint.text"), "1".getBytes("UTF-8"))
-    ()
+    IcebergInterop.publish(metaDir, 1L, root)
   }
 
-  /** A format-v2 table: `df` split into two data files by
-    * `orderCol % 2`, each written in `orderCol` order (so row position
-    * is the `orderCol` rank within its slice), plus ONE delete manifest.
-    * With `equalityInstead = false` the delete manifest carries a real
-    * position-delete parquet — the spec's `(file_path, pos)` columns —
-    * deleting every row matching `deleteCond`; with `true` it declares
-    * the same file as an EQUALITY delete (`data_file.content=2`) WITHOUT
-    * `equality_ids` — a malformed layout [[IcebergInterop.importSnapshot]]
-    * must refuse by name (well-formed equality deletes are applied; see
-    * [[writeV2EqualityDeletes]]).
-    */
   /** A format-v2 table whose history makes SEQUENCE ordering observable:
     * data file A (`orderCol % 2 = 0` rows) lands at sequence 1, an
     * EQUALITY delete file (one tuple: `eqCol = deletedValue`,
@@ -454,20 +440,17 @@ object IcebergFixtures {
     val seqOf = Map(0 -> 1L, 1 -> 3L)
     val slices: Seq[(Path, Long, Long)] = stageOnePass(
         df.withColumn("__slice", pmod(col(orderCol), lit(2)).cast("int")),
-        Seq("__slice" -> IntegerType), Seq(col(orderCol)), Nil)
+        Seq("__slice" -> IntegerType), Seq(col(orderCol)), Nil, dataDir)(
+        (_, vs) => s"d${vs.head}.parquet")
       .map { case (f, vs, n) =>
-        val par = vs.head.asInstanceOf[java.lang.Integer].intValue()
-        (Files.move(f, dataDir.resolve(s"d$par.parquet"),
-          StandardCopyOption.REPLACE_EXISTING), n, seqOf(par))
+        (f, n, seqOf(vs.head.asInstanceOf[java.lang.Integer].intValue()))
       }
     require(slices.size == 2,
       s"fixture expects both parity slices, got ${slices.size} — empty parity")
-    val delTmp = Files.createTempDirectory("graft_ice_v2edel_")
     val delFile = { // one-tuple equality delete parquet: just the eqCol column
       import spark.implicits._
-      Seq(deletedValue).toDF(eqCol).repartition(1)
-        .write.mode("overwrite").parquet(delTmp.toString)
-      moveSinglePart(delTmp, dataDir.resolve("eqdel0.parquet"))
+      writeOnePart(Seq(deletedValue).toDF(eqCol).repartition(1),
+        "graft_ice_v2edel_", dataDir.resolve("eqdel0.parquet"))
     }
 
     val metaDir = out.resolve("metadata")
@@ -550,9 +533,7 @@ object IcebergFixtures {
     snap.put("manifest-list", manifestListPath.toUri.toString)
     root.putArray("snapshot-log")
     root.putArray("metadata-log")
-    Files.write(metaDir.resolve("v2.metadata.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
-    Files.write(metaDir.resolve("version-hint.text"), "2".getBytes("UTF-8"))
+    IcebergInterop.publish(metaDir, 2L, root)
   }
 
   /** An IDENTITY-partitioned format-v2 table with a GLOBAL position-
@@ -584,21 +565,16 @@ object IcebergFixtures {
     // collect and a delete-count scan — ~2·|partitions|+4 jobs become 2
     val slices: Seq[(Path, Any, Long)] =
       if (hiveParseable(partType))
-        stageOnePass(df, Seq(partCol -> partType), Seq(col(orderCol)), Nil)
-          .zipWithIndex.map { case ((f, vs, n), i) =>
-            (Files.move(f, dataDir.resolve(s"p$i.parquet"),
-              StandardCopyOption.REPLACE_EXISTING), vs.head, n)
-          }
+        stageOnePass(df, Seq(partCol -> partType), Seq(col(orderCol)), Nil, dataDir)(
+          (i, _) => s"p$i.parquet").map { case (f, vs, n) => (f, vs.head, n) }
       else {
         val groups: Seq[Any] = df.select(col(partCol)).distinct().collect()
           .map(_.get(0)).toSeq.sortBy(v => if (v == null) "" else v.toString)
         groups.zipWithIndex.map { case (v, i) =>
           val slice = df.filter(col(partCol) <=> lit(v)).drop(partCol)
             .repartition(1).sortWithinPartitions(orderCol)
-          val tmp = Files.createTempDirectory("graft_ice_pv2_")
-          slice.write.mode("overwrite").parquet(tmp.toString)
-          val n = slice.count()
-          (moveSinglePart(tmp, dataDir.resolve(s"p$i.parquet")), v, n)
+          val f = writeOnePart(slice, "graft_ice_pv2_", dataDir.resolve(s"p$i.parquet"))
+          (f, v, slice.count())
         }
       }
     // position deletes: pos = rank of the row within its partition slice
@@ -614,9 +590,8 @@ object IcebergFixtures {
       .withColumn("pos", row_number().over(w).cast("long") - 1)
       .filter(deleteCond)
       .select(pathExpr.as("file_path"), col("pos"))
-    val delTmp = Files.createTempDirectory("graft_ice_pv2del_")
-    delDf.repartition(1).write.mode("overwrite").parquet(delTmp.toString)
-    val delFile = moveSinglePart(delTmp, dataDir.resolve("del0.parquet"))
+    val delFile = writeOnePart(delDf.repartition(1), "graft_ice_pv2del_",
+      dataDir.resolve("del0.parquet"))
     val nDel = footerCount(delFile)
     require(nDel > 0, "fixture deleteCond matched no rows — pick a real wave")
 
@@ -717,12 +692,20 @@ object IcebergFixtures {
     snap.put("manifest-list", manifestListPath.toUri.toString)
     root.putArray("snapshot-log")
     root.putArray("metadata-log")
-    Files.write(metaDir.resolve("v2.metadata.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
-    Files.write(metaDir.resolve("version-hint.text"), "2".getBytes("UTF-8"))
-    ()
+    IcebergInterop.publish(metaDir, 2L, root)
   }
 
+  /** A format-v2 table: `df` split into two data files by
+    * `orderCol % 2`, each written in `orderCol` order (so row position
+    * is the `orderCol` rank within its slice), plus ONE delete manifest.
+    * With `equalityInstead = false` the delete manifest carries a real
+    * position-delete parquet — the spec's `(file_path, pos)` columns —
+    * deleting every row matching `deleteCond`; with `true` it declares
+    * the same file as an EQUALITY delete (`data_file.content=2`) WITHOUT
+    * `equality_ids` — a malformed layout [[IcebergInterop.importSnapshot]]
+    * must refuse by name (well-formed equality deletes are applied; see
+    * [[writeV2EqualityDeletes]]).
+    */
   def writeV2WithDeletes(
       spark: SparkSession, outDir: String, df: DataFrame, orderCol: String,
       deleteCond: Column, equalityInstead: Boolean = false): Unit = {
@@ -737,11 +720,8 @@ object IcebergFixtures {
     // legacy loop paid a scan + a count per slice and a delete-count scan
     val slices: Seq[(Path, Long)] = stageOnePass(
         df.withColumn("__slice", pmod(col(orderCol), lit(2)).cast("int")),
-        Seq("__slice" -> IntegerType), Seq(col(orderCol)), Nil)
-      .map { case (f, vs, n) =>
-        (Files.move(f, dataDir.resolve(s"d${vs.head}.parquet"),
-          StandardCopyOption.REPLACE_EXISTING), n)
-      }
+        Seq("__slice" -> IntegerType), Seq(col(orderCol)), Nil, dataDir)(
+        (_, vs) => s"d${vs.head}.parquet").map { case (f, _, n) => (f, n) }
     require(slices.size == 2,
       s"fixture expects both parity slices, got ${slices.size} — empty parity")
 
@@ -754,9 +734,8 @@ object IcebergFixtures {
         when(col("__slice") === 0, lit(slices(0)._1.toUri.toString))
           .otherwise(lit(slices(1)._1.toUri.toString)).as("file_path"),
         col("pos"))
-    val delTmp = Files.createTempDirectory("graft_ice_del_")
-    delDf.repartition(1).write.mode("overwrite").parquet(delTmp.toString)
-    val delFile = moveSinglePart(delTmp, dataDir.resolve("del0.parquet"))
+    val delFile = writeOnePart(delDf.repartition(1), "graft_ice_del_",
+      dataDir.resolve("del0.parquet"))
     val nDel = footerCount(delFile)
 
     val metaDir = out.resolve("metadata")
@@ -840,8 +819,6 @@ object IcebergFixtures {
     snap.put("manifest-list", manifestListPath.toUri.toString)
     root.putArray("snapshot-log")
     root.putArray("metadata-log")
-    Files.write(metaDir.resolve("v2.metadata.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
-    Files.write(metaDir.resolve("version-hint.text"), "2".getBytes("UTF-8"))
+    IcebergInterop.publish(metaDir, 2L, root)
   }
 }

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
@@ -46,6 +47,16 @@ import org.apache.spark.sql.types._
   * manifests → data files), (c) the round-trip content checksum in
   * q142, and (d) [[IcebergFixtures]]-synthesized external layouts for
   * the import-only shapes.
+  *
+  * Commits. Every writer publishes `metadata/v<N+1>.metadata.json`
+  * through [[publish]]: a put-if-absent link, the commit point. Of two
+  * writers racing one version exactly one lands and the other gets a
+  * [[VersionedTable.ConcurrentCommitException]]. `version-hint.text` is
+  * advisory: it is rewritten after the link, and readers probe past it
+  * to the newest published version (the HadoopTables rule), so a lost
+  * hint write never loses a commit. Data files and manifests a failed
+  * writer left behind are referenced by no metadata version;
+  * [[removeOrphanFiles]] reclaims the data files.
   *
   * Scale shape mirrors the Delta bridge: keyless tables hard-copy
   * committed segment files (server-side byte copies at object-store
@@ -232,15 +243,11 @@ object IcebergInterop {
           Files.copy(f, dst, StandardCopyOption.REPLACE_EXISTING)
           dst
         }
-      } else {
-        val tmp = Files.createTempDirectory("graft_iceberg_merge_")
+      } else VersionedTable.withStagingDir("graft_iceberg_merge_") { tmp =>
         VersionedTable.read(spark, tablePath)
           .write.mode("overwrite").parquet(tmp.toString)
-        for (f <- listParquet(tmp)) yield {
-          val dst = dataDir.resolve(f.getFileName.toString)
-          Files.move(f, dst, StandardCopyOption.REPLACE_EXISTING)
-          dst
-        }
+        listParquet(tmp).map(f => Files.move(f,
+          dataDir.resolve(f.getFileName.toString), StandardCopyOption.REPLACE_EXISTING))
       }
 
     // per-file record counts: one footer-only read over the exported files
@@ -624,17 +631,9 @@ object IcebergInterop {
     snap.put("manifest-list", manifestListPath.toUri.toString)
     root.putArray("snapshot-log")
     root.putArray("metadata-log")
-    Files.write(metaDir.resolve("v1.metadata.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
-    Files.write(metaDir.resolve("version-hint.text"), "1".getBytes("UTF-8"))
-    ()
+    publish(metaDir, 1L, root)
   }
 
-  /** Distributed parquet-footer row-count probe (executor-side, one
-    * footer read per file — [[footerMissingColumns]]'s sibling): the
-    * record_count a metadata-only conversion must declare without
-    * scanning data pages.
-    */
   /** One column's manifest statistics for a data file, ready to land in
     * the entry's maps: Appendix-D-serialized bounds (None = unknown —
     * e.g. an all-NULL file, a truncation-dropped footer stat, or an
@@ -828,22 +827,69 @@ object IcebergInterop {
       b.upper.map(x => b.fieldId -> (java.nio.ByteBuffer.wrap(x): Any))))
   }
 
+  /** Distributed parquet-footer row-count probe (executor-side, one
+    * footer read per file — [[footerMissingColumns]]'s sibling): the
+    * record_count a metadata-only conversion must declare without
+    * scanning data pages.
+    */
   private def footerRowCounts(
       spark: SparkSession, paths: Seq[String]): Map[String, Long] =
     footerScan(spark, paths, Nil)._1
 
+  // ---- commit ----
+
+  /** Publish `meta` as `metadata/v<version>.metadata.json` — the commit
+    * point, put-if-absent ([[VersionedTable.publishIfAbsent]]): of two
+    * writers racing one version exactly one lands, the other gets a
+    * [[VersionedTable.ConcurrentCommitException]] before it has touched
+    * the table's metadata. Then `version-hint.text` is pointed at it
+    * through a uniquely named temp file and an atomic move. The hint is
+    * advisory ([[readTableMeta]] probes past it), so a failed or
+    * overtaken hint write never fails the published commit.
+    */
+  private[storage] def publish(metaDir: Path, version: Long, meta: JsonNode): Unit = {
+    VersionedTable.publishIfAbsent(metaDir, s"v$version.metadata.json",
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(meta),
+      s"concurrent commit at ${metaDir.getParent}: another writer published " +
+        s"metadata version $version")
+    try {
+      val tmp = Files.createTempFile(metaDir, ".version-hint.", ".tmp")
+      try {
+        Files.write(tmp, version.toString.getBytes("UTF-8"))
+        Files.move(tmp, metaDir.resolve("version-hint.text"),
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      } finally Files.deleteIfExists(tmp)
+    } catch { case _: java.io.IOException => () }
+  }
+
+  /** The one metadata commit of every writer on an existing table:
+    * version `v + 1` is a deep copy of version `v`'s `meta` with `edit`
+    * applied and `last-updated-ms` stamped, published through [[publish]].
+    */
+  private def commit(root: Path, v: Long, meta: JsonNode)(edit: ObjectNode => Unit): Unit = {
+    val next = meta.deepCopy().asInstanceOf[ObjectNode]
+    edit(next)
+    next.put("last-updated-ms", System.currentTimeMillis())
+    publish(root.resolve("metadata"), v + 1, next)
+  }
+
   // ---- import ----
 
-  /** The committed table metadata: (metadata version, parsed JSON). */
+  /** The committed table metadata: (metadata version, parsed JSON). The
+    * version starts at the hint (0 without one) and probes upward while
+    * the next version is published, so a commit whose hint write was
+    * lost is still served.
+    */
   private def readTableMeta(root: Path): (Long, com.fasterxml.jackson.databind.JsonNode) = {
     val metaDir = root.resolve("metadata")
     require(Files.isDirectory(metaDir), s"no metadata/ under $root")
+    def metaFile(n: Long): Path = metaDir.resolve(s"v$n.metadata.json")
     val hint = metaDir.resolve("version-hint.text")
-    require(Files.exists(hint), s"no version-hint.text under $metaDir")
-    val v = new String(Files.readAllBytes(hint), "UTF-8").trim.toLong
-    val metaFile = metaDir.resolve(s"v$v.metadata.json")
-    require(Files.exists(metaFile), s"version hint names $v but $metaFile is missing")
-    val meta = mapper.readTree(Files.readAllBytes(metaFile))
+    var v = if (!Files.exists(hint)) 0L
+      else new String(Files.readAllBytes(hint), "UTF-8").trim.toLong
+    while (Files.exists(metaFile(v + 1))) v += 1
+    require(Files.exists(metaFile(v)), s"no ${metaFile(v).getFileName} under $metaDir")
+    val meta = mapper.readTree(Files.readAllBytes(metaFile(v)))
     val fv = meta.get("format-version").asInt()
     require(fv == 1 || fv == 2, s"unsupported Iceberg format-version $fv")
     (v, meta)
@@ -1497,9 +1543,11 @@ object IcebergInterop {
     * form, always valid), a fresh manifest list, and
     * `v<N+1>.metadata.json` whose snapshot LIST retains every prior
     * snapshot — so [[importSnapshot]]'s `asOfSnapshotId` can time-travel
-    * to any of them. `version-hint.text` flips LAST (tmp + atomic
-    * rename), so a crash mid-append leaves the previous version readable.
-    * Returns the new snapshot id.
+    * to any of them. The metadata publish is the commit point
+    * ([[publish]]): a crash before it leaves the previous version current,
+    * and a writer that loses the version race gets a
+    * [[VersionedTable.ConcurrentCommitException]]. Returns the new
+    * snapshot id.
     */
   def appendSnapshot(
       spark: SparkSession, icebergDir: String, adds: DataFrame,
@@ -1529,13 +1577,12 @@ object IcebergInterop {
 
     // land the new rows as fresh uniquely-named data files
     val dataDir = root.resolve("data")
-    val tmp = Files.createTempDirectory("graft_iceberg_append_")
-    adds.write.mode("overwrite").parquet(tmp.toString)
     val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val newFiles: Seq[Path] = listParquet(tmp).zipWithIndex.map { case (f, i) =>
-      val dst = dataDir.resolve(s"s$stamp-$i-${f.getFileName}")
-      Files.move(f, dst, StandardCopyOption.REPLACE_EXISTING)
-      dst
+    val newFiles: Seq[Path] = VersionedTable.withStagingDir("graft_iceberg_append_") { tmp =>
+      adds.write.mode("overwrite").parquet(tmp.toString)
+      listParquet(tmp).zipWithIndex.map { case (f, i) => Files.move(f,
+        dataDir.resolve(s"s$stamp-$i-${f.getFileName}"), StandardCopyOption.REPLACE_EXISTING)
+      }
     }
     val counts: Map[String, Long] = if (newFiles.isEmpty) Map.empty else {
       import org.apache.spark.sql.functions._
@@ -1599,27 +1646,19 @@ object IcebergInterop {
     writeAvro(manifestListPath, manifestFileSchema, Seq(mf),
       Map("format-version" -> "1"))
 
-    val root2 = meta.deepCopy().asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    root2.put("last-updated-ms", now)
-    root2.put("current-snapshot-id", snapshotId)
-    val snap = root2.withArray("snapshots").addObject()
-    snap.put("snapshot-id", snapshotId)
-    snap.put("parent-snapshot-id", currentSnap)
-    snap.put("timestamp-ms", now)
-    val summary = snap.putObject("summary")
-    summary.put("operation", if (removePaths.isEmpty) "append" else "overwrite")
-    snap.put("manifest-list", manifestListPath.toUri.toString)
-    val log = root2.withArray("snapshot-log").addObject()
-    log.put("snapshot-id", snapshotId)
-    log.put("timestamp-ms", now)
-    Files.write(metaDir.resolve(s"v${v + 1}.metadata.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root2))
-    // version-hint flips LAST via atomic rename: a crash before this line
-    // leaves vN current and every file of vN intact
-    val tmpHint = metaDir.resolve("version-hint.text.tmp")
-    Files.write(tmpHint, s"${v + 1}".getBytes("UTF-8"))
-    Files.move(tmpHint, metaDir.resolve("version-hint.text"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    commit(root, v, meta) { m =>
+      m.put("current-snapshot-id", snapshotId)
+      val snap = m.withArray("snapshots").addObject()
+      snap.put("snapshot-id", snapshotId)
+      snap.put("parent-snapshot-id", currentSnap)
+      snap.put("timestamp-ms", now)
+      val summary = snap.putObject("summary")
+      summary.put("operation", if (removePaths.isEmpty) "append" else "overwrite")
+      snap.put("manifest-list", manifestListPath.toUri.toString)
+      val log = m.withArray("snapshot-log").addObject()
+      log.put("snapshot-id", snapshotId)
+      log.put("timestamp-ms", now)
+    }
     snapshotId
   }
 
@@ -1636,8 +1675,8 @@ object IcebergInterop {
     * value+sequence semantics is the import's job, out of writer scope).
     * Rows already dead under existing position deletes are not
     * re-deleted (anti-join first), so the returned count is NEWLY
-    * deleted rows. The metadata flip is crash-safe: `v<N+1>` lands
-    * fully, the version hint flips LAST via atomic rename.
+    * deleted rows. The commit is the [[appendSnapshot]] one: the
+    * put-if-absent publish of `v<N+1>` ([[publish]]).
     *
     * Scope note: the delete parquet is written by Spark, which cannot
     * annotate the spec's reserved parquet field ids (2147483546/45) —
@@ -1708,12 +1747,12 @@ object IcebergInterop {
         if (n == 0L) return 0L
         val dataDir = root.resolve("data")
         Files.createDirectories(dataDir)
-        val tmp = Files.createTempDirectory("graft_ice_delw_")
-        newPairs.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         val stamp = java.util.UUID.randomUUID().toString.take(8)
-        val delFile = dataDir.resolve(s"delete-$stamp.parquet")
-        Files.move(listParquet(tmp).head, delFile,
-          StandardCopyOption.REPLACE_EXISTING)
+        val delFile = VersionedTable.withStagingDir("graft_ice_delw_") { tmp =>
+          newPairs.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+          Files.move(listParquet(tmp).head, dataDir.resolve(s"delete-$stamp.parquet"),
+            StandardCopyOption.REPLACE_EXISTING)
+        }
 
         // delete manifest at the next sequence number
         val newSeq = lastSeq + 1
@@ -1743,20 +1782,14 @@ object IcebergInterop {
           "partition-spec-id" -> "0", "format-version" -> "2",
           "content" -> "deletes"))
 
-        commitDeleteSnapshot(root, metaDir, meta, v, currentSnap,
-          delManifest, newSeq, snapshotId)
+        commitV2Snapshot(root, meta, v, currentSnap,
+          Seq(ManifestRef(delManifest, 1, 0, 1)), newSeq, snapshotId,
+          delSpecId = 0, addEmptySpec = false, operation = "delete")
         n
       } finally { newPairs.unpersist(); () }
     nDeleted
   }
 
-  /** The shared commit tail of the two delete writers ([[deleteWhere]],
-    * [[deleteWhereEquality]]): a new manifest list carrying every prior
-    * manifest row VERBATIM (in its own schema) plus the new delete
-    * manifest, then `v<N+1>.metadata.json` with the new snapshot and
-    * last-sequence-number, the version hint flipping LAST via atomic
-    * rename (the [[appendSnapshot]] crash-safety contract).
-    */
   /** One new manifest of a v2 commit: its path, manifest-list `content`
     * routing (0 data / 1 deletes), the spec it references, and how many
     * files it adds.
@@ -1764,27 +1797,16 @@ object IcebergInterop {
   private final case class ManifestRef(
       path: Path, content: Int, specId: Int, addedFiles: Int)
 
-  private def commitDeleteSnapshot(
-      root: Path, metaDir: Path,
-      meta: com.fasterxml.jackson.databind.JsonNode, v: Long,
-      currentSnap: Long, delManifest: Path, newSeq: Long,
-      snapshotId: Long, delSpecId: Int = 0,
-      addEmptySpec: Boolean = false): Unit =
-    commitV2Snapshot(root, metaDir, meta, v, currentSnap,
-      Seq(ManifestRef(delManifest, 1, delSpecId, 1)), newSeq, snapshotId,
-      delSpecId, addEmptySpec, "delete")
-
   /** Append one v2 snapshot whose manifest list is the prior list
     * (filtered by `keepPrior` — everything by default; [[rewriteDataFiles]]
     * passes `_ => false` to RETIRE the prior manifests wholesale, the
     * spec's `replace` operation) plus `manifests` (each at `newSeq`),
-    * flip the metadata. Shared by the delete writers, [[upsertCdc]] and
-    * the compactor so no two commit shapes can disagree on the
-    * list/metadata contract.
+    * and [[commit]] it as `v<N+1>` with the new last-sequence-number.
+    * Shared by the delete writers, [[upsertCdc]] and the compactor so no
+    * two commit shapes can disagree on the list/metadata contract.
     */
   private def commitV2Snapshot(
-      root: Path, metaDir: Path,
-      meta: com.fasterxml.jackson.databind.JsonNode, v: Long,
+      root: Path, meta: JsonNode, v: Long,
       currentSnap: Long, manifests: Seq[ManifestRef], newSeq: Long,
       snapshotId: Long, delSpecId: Int,
       addEmptySpec: Boolean, operation: String,
@@ -1815,43 +1837,33 @@ object IcebergInterop {
       putIf("deleted_data_files_count", 0)
       newRow
     }
-    val newListPath = metaDir.resolve(s"snap-$snapshotId-1-graft.avro")
+    val newListPath = root.resolve("metadata").resolve(s"snap-$snapshotId-1-graft.avro")
     writeAvro(newListPath, listSchema, prior ++ newRows,
       Map("format-version" -> "2"))
 
     val now = System.currentTimeMillis()
-    val root2 = meta.deepCopy()
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    root2.put("last-updated-ms", now)
-    root2.put("last-sequence-number", newSeq)
-    root2.put("current-snapshot-id", snapshotId)
-    if (addEmptySpec) {
-      // the global-delete spec entry lands in the SAME commit that first
-      // references it (spec: every manifest's partition_spec_id must name
-      // a spec in the partition-specs list)
-      val sp = root2.withArray("partition-specs").addObject()
-      sp.put("spec-id", delSpecId)
-      sp.putArray("fields")
-      ()
+    commit(root, v, meta) { m =>
+      m.put("last-sequence-number", newSeq)
+      m.put("current-snapshot-id", snapshotId)
+      if (addEmptySpec) {
+        // the global-delete spec entry lands in the SAME commit that first
+        // references it (spec: every manifest's partition_spec_id must name
+        // a spec in the partition-specs list)
+        val sp = m.withArray("partition-specs").addObject()
+        sp.put("spec-id", delSpecId)
+        sp.putArray("fields")
+      }
+      val snap = m.withArray("snapshots").addObject()
+      snap.put("snapshot-id", snapshotId)
+      snap.put("parent-snapshot-id", currentSnap)
+      snap.put("sequence-number", newSeq)
+      snap.put("timestamp-ms", now)
+      snap.putObject("summary").put("operation", operation)
+      snap.put("manifest-list", newListPath.toUri.toString)
+      val log = m.withArray("snapshot-log").addObject()
+      log.put("snapshot-id", snapshotId)
+      log.put("timestamp-ms", now)
     }
-    val snap = root2.withArray("snapshots").addObject()
-    snap.put("snapshot-id", snapshotId)
-    snap.put("parent-snapshot-id", currentSnap)
-    snap.put("sequence-number", newSeq)
-    snap.put("timestamp-ms", now)
-    snap.putObject("summary").put("operation", operation)
-    snap.put("manifest-list", newListPath.toUri.toString)
-    val log = root2.withArray("snapshot-log").addObject()
-    log.put("snapshot-id", snapshotId)
-    log.put("timestamp-ms", now)
-    Files.write(metaDir.resolve(s"v${v + 1}.metadata.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root2))
-    // hint flips LAST via atomic rename (the appendSnapshot contract)
-    val tmpHint = metaDir.resolve("version-hint.text.tmp")
-    Files.write(tmpHint, s"${v + 1}".getBytes("UTF-8"))
-    Files.move(tmpHint, metaDir.resolve("version-hint.text"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    ()
   }
 
   /** EQUALITY-delete WRITE (round 16, VERDICT r15 missing #6) — the
@@ -1935,7 +1947,7 @@ object IcebergInterop {
       if (n == 0L) return 0L
       val dataDir = root.resolve("data")
       Files.createDirectories(dataDir)
-      val tmp = Files.createTempDirectory("graft_ice_eqdel_")
+      val stamp = java.util.UUID.randomUUID().toString.take(8)
       // ADVICE r16: the spec requires delete files be written WITH field
       // ids — real readers (Spark/Trino Iceberg) resolve equality-delete
       // columns by id, not name, so a file without ids may be refused or
@@ -1947,17 +1959,11 @@ object IcebergInterop {
           new org.apache.spark.sql.types.MetadataBuilder()
             .putLong("parquet.field.id", id.toLong).build())
       }.toIndexedSeq: _*)
-      val prevFlag = spark.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-      spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      try withIds.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      finally prevFlag match {
-        case Some(v) => spark.conf.set("spark.sql.parquet.fieldId.write.enabled", v)
-        case None => spark.conf.unset("spark.sql.parquet.fieldId.write.enabled")
+      val delFile = VersionedTable.withStagingDir("graft_ice_eqdel_") { tmp =>
+        withFieldIds(spark)(withIds.coalesce(1).write.mode("overwrite").parquet(tmp.toString))
+        Files.move(listParquet(tmp).head, dataDir.resolve(s"eq-delete-$stamp.parquet"),
+          StandardCopyOption.REPLACE_EXISTING)
       }
-      val stamp = java.util.UUID.randomUUID().toString.take(8)
-      val delFile = dataDir.resolve(s"eq-delete-$stamp.parquet")
-      Files.move(listParquet(tmp).head, delFile,
-        StandardCopyOption.REPLACE_EXISTING)
 
       val newSeq = lastSeq + 1
       val snapshotId = math.abs(
@@ -1985,9 +1991,9 @@ object IcebergInterop {
         "schema" -> schemaJson, "partition-spec" -> "[]",
         "partition-spec-id" -> delSpecId.toString, "format-version" -> "2",
         "content" -> "deletes"))
-      commitDeleteSnapshot(root, metaDir, meta, v, currentSnap,
-        delManifest, newSeq, snapshotId,
-        delSpecId = delSpecId, addEmptySpec = emptySpecId.isEmpty)
+      commitV2Snapshot(root, meta, v, currentSnap,
+        Seq(ManifestRef(delManifest, 1, delSpecId, 1)), newSeq, snapshotId,
+        delSpecId, addEmptySpec = emptySpecId.isEmpty, operation = "delete")
       n
     } finally { tuples.unpersist(); () }
   }
@@ -2143,41 +2149,37 @@ object IcebergInterop {
           col(f.name).as(f.name, new org.apache.spark.sql.types.MetadataBuilder()
             .putLong("parquet.field.id", nameToId(f.name).toLong).build())
         }.toIndexedSeq: _*)
-      val prevFlag = spark.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-      spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      val tmpData = Files.createTempDirectory("graft_ice_cdc_")
-      val tmpDel = Files.createTempDirectory("graft_ice_cdc_del_")
-      try {
-        // the data files and the delete file are independent writes to
-        // disjoint temp dirs (both read the persisted wave) — overlapped
-        // (guide §2.6); both run under the same save/restored field-id
-        // write flag. The delete file lists EVERY wave key (updates and
-        // tombstones): it must kill the previously-live row in both cases.
-        val keyIds = keyCols.map(nameToId)
-        graft.operators.Par.run[Unit](
-          () =>
-            if (partNames.isEmpty)
-              withIds.write.mode("overwrite").parquet(tmpData.toString)
-            else
-              withIds.write.mode("overwrite")
-                .partitionBy(partNames: _*).parquet(tmpData.toString),
-          () => src.select(keyCols.zip(keyIds).map { case (c, id) =>
-            col(c).as(c, new org.apache.spark.sql.types.MetadataBuilder()
-              .putLong("parquet.field.id", id.toLong).build())
-          }.toIndexedSeq: _*).coalesce(1)
-            .write.mode("overwrite").parquet(tmpDel.toString))
-      } finally prevFlag match {
-        case Some(pf) => spark.conf.set("spark.sql.parquet.fieldId.write.enabled", pf)
-        case None => spark.conf.unset("spark.sql.parquet.fieldId.write.enabled")
-      }
-      val staged = stageHiveParquet(tmpData, partNames, dataDir,
-        s"cdc-$stamp", n => tableSchema(n).dataType)
+      val (staged, delFile) =
+        VersionedTable.withStagingDir("graft_ice_cdc_") { tmpData =>
+          VersionedTable.withStagingDir("graft_ice_cdc_del_") { tmpDel =>
+            // the data files and the delete file are independent writes to
+            // disjoint temp dirs (both read the persisted wave) — overlapped
+            // (guide §2.6), both with field ids. The delete file lists EVERY
+            // wave key (updates and tombstones): it must kill the
+            // previously-live row in both cases.
+            val keyIds = keyCols.map(nameToId)
+            withFieldIds(spark)(graft.operators.Par.run[Unit](
+              () =>
+                if (partNames.isEmpty)
+                  withIds.write.mode("overwrite").parquet(tmpData.toString)
+                else
+                  withIds.write.mode("overwrite")
+                    .partitionBy(partNames: _*).parquet(tmpData.toString),
+              () => src.select(keyCols.zip(keyIds).map { case (c, id) =>
+                col(c).as(c, new org.apache.spark.sql.types.MetadataBuilder()
+                  .putLong("parquet.field.id", id.toLong).build())
+              }.toIndexedSeq: _*).coalesce(1)
+                .write.mode("overwrite").parquet(tmpDel.toString)))
+            (stageHiveParquet(tmpData, partNames, dataDir,
+              s"cdc-$stamp", n => tableSchema(n).dataType),
+              Files.move(listParquet(tmpDel).head,
+                dataDir.resolve(s"eq-delete-$stamp.parquet"),
+                StandardCopyOption.REPLACE_EXISTING))
+          }
+        }
       val newFiles = staged.map(_._1)
       val pvByPath: Map[String, Map[String, Any]] =
         staged.map { case (p, pv) => p.toString -> pv }.toMap
-      val delFile = dataDir.resolve(s"eq-delete-$stamp.parquet")
-      Files.move(listParquet(tmpDel).head, delFile,
-        StandardCopyOption.REPLACE_EXISTING)
 
       // per-file record counts + manifest column stats: ONE footer pass
       val (counts, colStats) = footerScan(spark, newFiles.map(_.toString),
@@ -2250,11 +2252,24 @@ object IcebergInterop {
         "partition-spec-id" -> delSpecId.toString,
         "format-version" -> "2", "content" -> "deletes"))
       manifests += ManifestRef(delManifest, 1, delSpecId, 1)
-      commitV2Snapshot(root, metaDir, meta, v, currentSnap,
+      commitV2Snapshot(root, meta, v, currentSnap,
         manifests.result(), newSeq, snapshotId, delSpecId,
         addEmptySpec = emptySpecId.isEmpty, operation = "overwrite")
       CdcReport(deleteTuples, rowsWritten, newFiles.size)
     } finally { src.unpersist(); () }
+  }
+
+  /** Run `write` with parquet field-id writes on (real Iceberg readers
+    * resolve columns by id), restoring the session's setting afterwards.
+    */
+  private def withFieldIds[T](spark: SparkSession)(write: => T): T = {
+    val key = "spark.sql.parquet.fieldId.write.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try write finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
   }
 
   /** What [[rewriteDataFiles]] did, before/after. */
@@ -2359,20 +2374,15 @@ object IcebergInterop {
         col(f.name).as(f.name, new org.apache.spark.sql.types.MetadataBuilder()
           .putLong("parquet.field.id", nameToId(f.name).toLong).build())
       }.toIndexedSeq: _*)
-    val prevFlag = spark.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    val tmpData = Files.createTempDirectory("graft_ice_compact_")
-    try {
-      if (partNames.isEmpty)
-        withIds.write.mode("overwrite").parquet(tmpData.toString)
-      else withIds.write.mode("overwrite")
-        .partitionBy(partNames: _*).parquet(tmpData.toString)
-    } finally prevFlag match {
-      case Some(pf) => spark.conf.set("spark.sql.parquet.fieldId.write.enabled", pf)
-      case None => spark.conf.unset("spark.sql.parquet.fieldId.write.enabled")
+    val staged = VersionedTable.withStagingDir("graft_ice_compact_") { tmpData =>
+      withFieldIds(spark)(
+        if (partNames.isEmpty)
+          withIds.write.mode("overwrite").parquet(tmpData.toString)
+        else withIds.write.mode("overwrite")
+          .partitionBy(partNames: _*).parquet(tmpData.toString))
+      stageHiveParquet(tmpData, partNames, dataDir,
+        s"compact-$stamp", n => tableSchema(n).dataType)
     }
-    val staged = stageHiveParquet(tmpData, partNames, dataDir,
-      s"compact-$stamp", n => tableSchema(n).dataType)
     val newFiles = staged.map(_._1)
     val pvByPath: Map[String, Map[String, Any]] =
       staged.map { case (p, pv) => p.toString -> pv }.toMap
@@ -2418,7 +2428,7 @@ object IcebergInterop {
       "partition-spec" -> mapper.writeValueAsString(defaultSpec.get("fields")),
       "partition-spec-id" -> defaultSpecId.toString,
       "format-version" -> "2", "content" -> "data"))
-    commitV2Snapshot(root, metaDir, meta, v, currentSnap,
+    commitV2Snapshot(root, meta, v, currentSnap,
       Seq(ManifestRef(manifest, 0, defaultSpecId, newFiles.size)),
       newSeq, snapshotId, defaultSpecId,
       addEmptySpec = false, operation = "replace",
@@ -2440,11 +2450,11 @@ object IcebergInterop {
     * `expire_snapshots`): retain the `keepLast` most recent snapshots
     * (snapshot-log order; the current snapshot is always the newest and
     * is always kept), rewrite the table metadata WITHOUT the expired
-    * snapshots/log entries (new `v<N+1>.metadata.json`, version hint
-    * flipped LAST via atomic rename — the appendSnapshot contract), then
-    * reclaim, in this order, (1) expired manifest-list files, (2)
-    * manifests referenced by no retained snapshot, (3) data/delete files
-    * referenced by no retained snapshot's manifests. Files outside the
+    * snapshots/log entries (`v<N+1>.metadata.json`, published
+    * put-if-absent — the appendSnapshot contract), then, only once that
+    * commit has landed, reclaim, in this order, (1) expired manifest-list
+    * files, (2) manifests referenced by no retained snapshot, (3)
+    * data/delete files referenced by no retained snapshot's manifests. Files outside the
     * table root are never touched (a fixture may reference shared
     * inputs). Time travel to an expired id afterwards refuses by name
     * (`snapshot X not in the snapshots list`).
@@ -2462,7 +2472,6 @@ object IcebergInterop {
   def expireSnapshots(icebergDir: String, keepLast: Int): ExpireReport = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val root = Paths.get(icebergDir)
-    val metaDir = root.resolve("metadata")
     val (v, meta) = readTableMeta(root)
     val snaps = meta.get("snapshots").elements().asScala.toSeq
     if (snaps.size <= keepLast)
@@ -2509,26 +2518,20 @@ object IcebergInterop {
       .map(f => resolve(root, f)).toSet
 
     // new metadata: snapshots + snapshot-log filtered to the kept set
-    val root2 = meta.deepCopy()
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val newSnaps = root2.putArray("snapshots")
-    snaps.filter(s => keptIds.contains(s.get("snapshot-id").asLong()))
-      .foreach(newSnaps.add)
-    if (meta.has("snapshot-log")) {
-      val newLog = root2.putArray("snapshot-log")
-      meta.get("snapshot-log").elements().asScala
-        .filter(e => keptIds.contains(e.get("snapshot-id").asLong()))
-        .foreach(newLog.add)
+    commit(root, v, meta) { m =>
+      val newSnaps = m.putArray("snapshots")
+      snaps.filter(s => keptIds.contains(s.get("snapshot-id").asLong()))
+        .foreach(newSnaps.add)
+      if (meta.has("snapshot-log")) {
+        val newLog = m.putArray("snapshot-log")
+        meta.get("snapshot-log").elements().asScala
+          .filter(e => keptIds.contains(e.get("snapshot-id").asLong()))
+          .foreach(newLog.add)
+      }
     }
-    root2.put("last-updated-ms", System.currentTimeMillis())
-    Files.write(metaDir.resolve(s"v${v + 1}.metadata.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root2))
-    val tmpHint = metaDir.resolve("version-hint.text.tmp")
-    Files.write(tmpHint, s"${v + 1}".getBytes("UTF-8"))
-    Files.move(tmpHint, metaDir.resolve("version-hint.text"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
 
-    // reclaim AFTER the flip; only files under the table root
+    // reclaim AFTER the commit lands (a loser threw above, before
+    // deleting anything); only files under the table root
     def inRoot(p: Path): Boolean = p.normalize().startsWith(root.normalize())
     def rm(p: Path): Boolean =
       inRoot(p) && Files.exists(p) && Files.deleteIfExists(p)
@@ -2550,8 +2553,8 @@ object IcebergInterop {
     * the implicit `main` branch, so an explicit 'main' entry refuses —
     * two sources of truth for the same pointer is the drift class the
     * refs map exists to prevent. Returns the pinned snapshot id. The
-    * metadata flip is the appendSnapshot contract: `v<N+1>` lands fully,
-    * the version hint flips LAST via atomic rename.
+    * commit is the appendSnapshot one: the put-if-absent publish of
+    * `v<N+1>` ([[publish]]).
     */
   def createRef(icebergDir: String, name: String, refType: String,
       snapshotId: Option[Long] = None): Long = {
@@ -2562,7 +2565,6 @@ object IcebergInterop {
       "'main' is the implicit current-snapshot-id branch — pointing it " +
         "elsewhere via refs would leave two sources of truth")
     val root = Paths.get(icebergDir)
-    val metaDir = root.resolve("metadata")
     val (v, meta) = readTableMeta(root)
     val known = meta.get("snapshots").elements().asScala
       .map(_.get("snapshot-id").asLong()).toSet
@@ -2572,30 +2574,19 @@ object IcebergInterop {
           s"no current-snapshot-id at $icebergDir and no explicit snapshotId")))
     require(known.contains(target),
       s"snapshot $target not in the snapshots list — a ref must name a live snapshot")
-    val root2 = meta.deepCopy()
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val refs =
-      if (root2.has("refs") && root2.get("refs").isObject)
-        root2.get("refs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      else root2.putObject("refs")
-    require(!refs.has(name),
-      s"ref '$name' already exists — drop it first (silent retarget loses the pin)")
-    val r = refs.putObject(name)
-    r.put("snapshot-id", target)
-    r.put("type", refType)
-    root2.put("last-updated-ms", System.currentTimeMillis())
-    Files.write(metaDir.resolve(s"v${v + 1}.metadata.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root2))
-    val tmpHint = metaDir.resolve("version-hint.text.tmp")
-    Files.write(tmpHint, s"${v + 1}".getBytes("UTF-8"))
-    Files.move(tmpHint, metaDir.resolve("version-hint.text"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    commit(root, v, meta) { m =>
+      val refs =
+        if (m.has("refs") && m.get("refs").isObject) m.get("refs").asInstanceOf[ObjectNode]
+        else m.putObject("refs")
+      require(!refs.has(name),
+        s"ref '$name' already exists — drop it first (silent retarget loses the pin)")
+      val r = refs.putObject(name)
+      r.put("snapshot-id", target)
+      r.put("type", refType)
+    }
     target
   }
 
-  /** Remove a named ref. The snapshot it pinned stays in the snapshots
-    * list — it just loses expiration protection (see [[expireSnapshots]]).
-    */
   /** INCREMENTAL APPEND SCAN — Iceberg's incremental-consumer contract
     * (the `IncrementalAppendScan` API shape): the rows appended by the
     * snapshots AFTER `fromSnapshotId` up to and including
@@ -2743,7 +2734,6 @@ object IcebergInterop {
     import scala.jdk.CollectionConverters._
     require(addColumns.nonEmpty || promote.nonEmpty, "nothing to evolve")
     val root = Paths.get(icebergDir)
-    val metaDir = root.resolve("metadata")
     val (v, meta) = readTableMeta(root)
     val schemaNode =
       if (meta.has("schemas")) {
@@ -2803,22 +2793,14 @@ object IcebergInterop {
       Option(s.get("schema-id")).map(_.asInt()).getOrElse(0)).max + 1
     newSchema.put("schema-id", newSchemaId)
 
-    val root2 = meta.deepCopy()
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val schemasArr = root2.putArray("schemas")
-    priorSchemas.foreach(schemasArr.add)
-    schemasArr.add(newSchema)
-    root2.put("current-schema-id", newSchemaId)
-    root2.put("last-column-id", lastId)
-    if (root2.has("schema"))
-      root2.set[com.fasterxml.jackson.databind.JsonNode]("schema", newSchema)
-    root2.put("last-updated-ms", System.currentTimeMillis())
-    Files.write(metaDir.resolve(s"v${v + 1}.metadata.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root2))
-    val tmpHint = metaDir.resolve("version-hint.text.tmp")
-    Files.write(tmpHint, s"${v + 1}".getBytes("UTF-8"))
-    Files.move(tmpHint, metaDir.resolve("version-hint.text"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    commit(root, v, meta) { m =>
+      val schemasArr = m.putArray("schemas")
+      priorSchemas.foreach(schemasArr.add)
+      schemasArr.add(newSchema)
+      m.put("current-schema-id", newSchemaId)
+      m.put("last-column-id", lastId)
+      if (m.has("schema")) m.set[JsonNode]("schema", newSchema)
+    }
     newSchemaId
   }
 
@@ -2835,7 +2817,6 @@ object IcebergInterop {
     */
   def rollbackTo(icebergDir: String, snapshotId: Long): Unit = {
     val root = Paths.get(icebergDir)
-    val metaDir = root.resolve("metadata")
     val (v, meta) = readTableMeta(root)
     val known = meta.get("snapshots").elements().asScala
       .map(_.get("snapshot-id").asLong()).toSet
@@ -2845,20 +2826,12 @@ object IcebergInterop {
       .map(_.asLong()).getOrElse(-1L)
     require(snapshotId != current,
       s"snapshot $snapshotId is already current — rollback would be a no-op lie")
-    val root2 = meta.deepCopy()
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    root2.put("current-snapshot-id", snapshotId)
-    root2.put("last-updated-ms", System.currentTimeMillis())
-    val log = root2.withArray("snapshot-log").addObject()
-    log.put("snapshot-id", snapshotId)
-    log.put("timestamp-ms", System.currentTimeMillis())
-    Files.write(metaDir.resolve(s"v${v + 1}.metadata.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root2))
-    val tmpHint = metaDir.resolve("version-hint.text.tmp")
-    Files.write(tmpHint, s"${v + 1}".getBytes("UTF-8"))
-    Files.move(tmpHint, metaDir.resolve("version-hint.text"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    ()
+    commit(root, v, meta) { m =>
+      m.put("current-snapshot-id", snapshotId)
+      val log = m.withArray("snapshot-log").addObject()
+      log.put("snapshot-id", snapshotId)
+      log.put("timestamp-ms", System.currentTimeMillis())
+    }
   }
 
   /** Iceberg METADATA TABLES — the `table$snapshots` / `$history` /
@@ -3031,24 +3004,16 @@ object IcebergInterop {
     }
   }
 
+  /** Remove a named ref. The snapshot it pinned stays in the snapshots
+    * list — it just loses expiration protection (see [[expireSnapshots]]).
+    */
   def dropRef(icebergDir: String, name: String): Unit = {
     val root = Paths.get(icebergDir)
-    val metaDir = root.resolve("metadata")
     val (v, meta) = readTableMeta(root)
     val refs = Option(meta.get("refs")).filter(_.isObject)
       .getOrElse(throw new IllegalArgumentException(s"no refs map at $icebergDir"))
     require(refs.has(name), s"ref '$name' does not exist")
-    val root2 = meta.deepCopy()
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    root2.get("refs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      .remove(name)
-    root2.put("last-updated-ms", System.currentTimeMillis())
-    Files.write(metaDir.resolve(s"v${v + 1}.metadata.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root2))
-    val tmpHint = metaDir.resolve("version-hint.text.tmp")
-    Files.write(tmpHint, s"${v + 1}".getBytes("UTF-8"))
-    Files.move(tmpHint, metaDir.resolve("version-hint.text"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    commit(root, v, meta)(_.get("refs").asInstanceOf[ObjectNode].remove(name))
   }
 
   /** The snapshot id a ref name resolves to: `main` is the current

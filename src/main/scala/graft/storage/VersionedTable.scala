@@ -112,6 +112,35 @@ object VersionedTable {
 
   final class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
 
+  /** The put-if-absent publish the Delta and Iceberg bridges commit
+    * through: `bytes` are staged to a uniquely named temp file in `dir`,
+    * then hard-linked in as `name` — atomic, and a file already there is
+    * never replaced. Of two writers racing on one `name` exactly one lands;
+    * the other gets a [[ConcurrentCommitException]] carrying `lost`. The
+    * staged file is deleted either way.
+    */
+  private[storage] def publishIfAbsent(
+      dir: Path, name: String, bytes: Array[Byte], lost: => String): Unit = {
+    val tmp = Files.createTempFile(dir, s".$name.", ".tmp")
+    try {
+      Files.write(tmp, bytes)
+      Files.createLink(dir.resolve(name), tmp)
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new ConcurrentCommitException(lost)
+    } finally Files.deleteIfExists(tmp)
+    ()
+  }
+
+  /** Run `f` over a fresh temp directory named `prefix…` and delete the
+    * directory afterwards, whether `f` returns or throws: the staging
+    * area of writers that move their output into a table.
+    */
+  private[storage] def withStagingDir[T](prefix: String)(f: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try f(dir) finally deleteRecursively(dir)
+  }
+
   /** `batchId`: the streaming micro-batch that produced this commit (−1 for
     * batch writers) — the idempotence key that makes foreachBatch sinks
     * exactly-once: a replayed micro-batch (checkpoint recovery re-runs the

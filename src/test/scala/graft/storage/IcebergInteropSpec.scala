@@ -1,6 +1,7 @@
 package graft.storage
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, ExecutorService, Executors, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -1274,5 +1275,192 @@ class IcebergInteropSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       IcebergInterop.importSnapshot(spark, out, asOfSnapshotId = Some(snapB)))
     intercept[IllegalArgumentException](IcebergInterop.dropRef(out, "exp"))
+  }
+
+  /** Runs the `writers` together on `pool` (a pool of at least as many
+    * threads): each waits, spinning, until all have started, so they leave
+    * the gate within microseconds of each other. Each outcome is None when
+    * the writer returned, Some(error) when it threw.
+    */
+  private def race[K](pool: ExecutorService,
+      writers: Seq[(K, () => Unit)]): Seq[(K, Option[Throwable])] = {
+    val arrived = new java.util.concurrent.atomic.AtomicInteger(0)
+    val futures = writers.map { case (_, write) =>
+      pool.submit(new Callable[Option[Throwable]] {
+        def call(): Option[Throwable] = {
+          arrived.incrementAndGet()
+          while (arrived.get() < writers.size) Thread.onSpinWait()
+          try { write(); None } catch { case e: Throwable => Some(e) }
+        }
+      })
+    }
+    writers.map(_._1).zip(futures.map(_.get(120, TimeUnit.SECONDS)))
+  }
+
+  private def listNames(dir: java.nio.file.Path): Set[String] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+  }
+
+  test("createRef: two writers racing one metadata version — exactly one lands, the " +
+    "loser gets ConcurrentCommitException, the winner's tag resolves (200 trials)") {
+    val table = tmp("ice_race_") + "/t"
+    VersionedTable.append(table)(dir =>
+      Seq((1L, "a")).toDF("id", "v").coalesce(1).write.parquet(dir))
+    val base = tmp("ice_race_base_")
+    IcebergInterop.exportSnapshot(spark, table, base)
+    val snap = IcebergInterop.resolveRef(base, "main")
+    // a long ref history (v2: 2000 tags) makes each writer's read-to-publish
+    // window milliseconds wide, far wider than the skew between the threads
+    val meta = mapper.readTree(Files.readAllBytes(Paths.get(base, "metadata", "v1.metadata.json")))
+    val refs = meta.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].putObject("refs")
+    (1 to 2000).foreach(i => refs.putObject(s"pad-$i").put("snapshot-id", snap).put("type", "tag"))
+    IcebergInterop.publish(Paths.get(base, "metadata"), 2L, meta)
+    val hint = 2L
+    val pool = Executors.newFixedThreadPool(2)
+    val outcomes = try (1 to 200).map { trial =>
+      // refs touch only the metadata: each trial races on a fresh copy of it
+      val out = tmp("ice_race_trial_")
+      Files.createDirectories(Paths.get(out, "metadata"))
+      Seq("version-hint.text", s"v$hint.metadata.json").foreach(n =>
+        Files.copy(Paths.get(base, "metadata", n), Paths.get(out, "metadata", n)))
+      val outcome = race(pool, Seq("tag-a", "tag-b").map(tag =>
+        tag -> (() => { IcebergInterop.createRef(out, tag, "tag"); () })))
+      val winners = outcome.collect { case (tag, None) => tag }
+      val losers = outcome.collect { case (_, Some(e)) => e }
+      val resolved = winners.filter(tag =>
+        scala.util.Try(IcebergInterop.resolveRef(out, tag)).toOption.contains(snap))
+      // both writers return only when one finished before the other read
+      // the table: then both commits must have landed, one version apart
+      val serialized = winners.size == 2 && resolved.size == 2 &&
+        Files.exists(Paths.get(out, "metadata", s"v${hint + 2}.metadata.json"))
+      val problem =
+        if (serialized) None
+        else if (winners.size != 1) Some(s"${winners.size} writers returned: $outcome")
+        else if (!losers.forall(_.isInstanceOf[VersionedTable.ConcurrentCommitException]))
+          Some(s"the loser got $losers")
+        else if (resolved.isEmpty) Some(s"the winner's ${winners.head} does not resolve")
+        else None
+      VersionedTable.deleteRecursively(Paths.get(out))
+      (trial, serialized, problem)
+    } finally pool.shutdown()
+    val failed = outcomes.collect { case (trial, _, Some(p)) => s"trial $trial: $p" }
+    assert(failed.isEmpty,
+      s"${failed.size} of 200 trials broke the contract; first: ${failed.take(3).mkString("; ")}")
+    val raced = outcomes.count(!_._2)
+    info(s"$raced of 200 trials overlapped the two writers")
+    assert(raced >= 100, s"only $raced of 200 trials overlapped the two writers")
+  }
+
+  test("upsertCdc: two waves racing one version — exactly one commits, the table serves " +
+    "exactly the winner's rows, removeOrphanFiles reclaims the loser's files (20 trials)") {
+    val out = tmp("ice_cdc_race_") + "/ice"
+    IcebergFixtures.writeV2WithDeletes(spark, out,
+      (1L to 30L).map(i => (i, s"v$i")).toDF("id", "v"), "id", col("id") % 5 === 0)
+    val model = scala.collection.mutable.Map(
+      (1L to 30L).filter(_ % 5 != 0).map(i => i -> s"v$i"): _*)
+    def served(): Map[Long, String] = IcebergInterop.importSnapshot(spark, out)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toMap
+    val dataDir = Paths.get(out, "data")
+    val pool = Executors.newFixedThreadPool(2)
+    try (1 to 20).foreach { trial =>
+      // disjoint keys: each wave updates its own base row and inserts two
+      val waves = Map(
+        "A" -> Seq(1L, 100L * trial + 1, 100L * trial + 2).map(_ -> s"A$trial"),
+        "B" -> Seq(2L, 100L * trial + 51, 100L * trial + 52).map(_ -> s"B$trial"))
+      val reports = new java.util.concurrent.ConcurrentHashMap[String, IcebergInterop.CdcReport]()
+      val before = listNames(dataDir)
+      val outcomes = race(pool, waves.toSeq.map { case (w, rows) =>
+        val wave = rows.toDF("id", "v")
+        w -> (() => { reports.put(w, IcebergInterop.upsertCdc(spark, out, wave, Seq("id"))); () })
+      })
+      val winners = outcomes.collect { case (w, None) => w }
+      assert(winners.size == 1, s"trial $trial: $outcomes")
+      outcomes.collect { case (_, Some(e)) => e }.foreach(e => assert(
+        e.isInstanceOf[VersionedTable.ConcurrentCommitException], s"trial $trial: loser got $e"))
+      waves(winners.head).foreach { case (k, v) => model(k) = v }
+      assert(served() == model.toMap, s"trial $trial: the table does not serve the winner's rows")
+      val added = listNames(dataDir) -- before
+      val gone = IcebergInterop.removeOrphanFiles(out).map(Paths.get(_).getFileName.toString)
+      // what stays is the winner's data files and its equality-delete file
+      assert(gone.nonEmpty && gone.toSet.subsetOf(added) &&
+        added.size - gone.size == reports.get(winners.head).dataFiles + 1,
+        s"trial $trial: added $added, reclaimed $gone")
+      assert(served() == model.toMap, s"trial $trial: reclaiming orphans changed the table")
+    } finally pool.shutdown()
+  }
+
+  test("Iceberg writers delete their staging directories, whether they commit or lose the race") {
+    val tmpRoot = Paths.get(System.getProperty("java.io.tmpdir"))
+    def staging(): Set[String] = listNames(tmpRoot).filter(_.startsWith("graft_ice"))
+    val before = staging()
+    val out = tmp("ice_staging_") + "/ice"
+    IcebergFixtures.writeV2WithDeletes(spark, out,
+      (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v"), "id", col("id") % 5 === 0)
+    IcebergInterop.upsertCdc(spark, out, Seq((3L, "U3"), (11L, "N11")).toDF("id", "v"), Seq("id"))
+    assert(staging() == before, "a committed upsertCdc leaked staging directories")
+    val pool = Executors.newFixedThreadPool(2)
+    val outcomes = try race(pool, Seq("A", "B").map { w =>
+      val wave = Seq((4L, w)).toDF("id", "v")
+      w -> (() => { IcebergInterop.upsertCdc(spark, out, wave, Seq("id")); () })
+    }) finally pool.shutdown()
+    val refused = outcomes.collect { case (_, Some(e)) => e }
+    assert(refused.size == 1 &&
+      refused.head.isInstanceOf[VersionedTable.ConcurrentCommitException], s"$outcomes")
+    assert(staging() == before, "a refused upsertCdc leaked staging directories")
+  }
+
+  test("crash point: a published metadata version whose hint was never flipped is served") {
+    val table = tmp("ice_hint_") + "/t"
+    VersionedTable.append(table)(dir =>
+      Seq((1L, "a")).toDF("id", "v").coalesce(1).write.parquet(dir))
+    val out = tmp("ice_hint_out_")
+    IcebergInterop.exportSnapshot(spark, table, out)
+    val hint = Paths.get(out, "metadata", "version-hint.text")
+    val hintAtN = Files.readAllBytes(hint)
+    val snapN1 = IcebergInterop.appendSnapshot(spark, out,
+      Seq((2L, "b")).toDF("id", "v").coalesce(1))
+    // v2 is published; the hint still names v1, as after a writer that
+    // died between its publish and its hint move
+    Files.write(hint, hintAtN)
+    assert(new String(Files.readAllBytes(hint), "UTF-8").trim == "1")
+    assert(IcebergInterop.importSnapshot(spark, out).collect().map(_.getLong(0)).toSet ==
+      Set(1L, 2L))
+    assert(IcebergInterop.resolveRef(out, "main") == snapN1)
+    assert(IcebergInterop.metadataTable(spark, out, "snapshots")
+      .select("snapshot_id").as[Long].collect().toSet.contains(snapN1))
+    assert(IcebergInterop.createRef(out, "after-crash", "tag") == snapN1)
+    assert(Files.exists(Paths.get(out, "metadata", "v3.metadata.json")),
+      "the next commit publishes v3")
+    assert(new String(Files.readAllBytes(hint), "UTF-8").trim == "3")
+  }
+
+  test("crash point: data files and manifests staged without a metadata version change " +
+    "nothing; removeOrphanFiles reclaims exactly the staged data files") {
+    val out = tmp("ice_nocommit_") + "/ice"
+    IcebergFixtures.writeV2WithDeletes(spark, out,
+      (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v"), "id", col("id") % 5 === 0)
+    def rows() = IcebergInterop.importSnapshot(spark, out)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val rowsN = rows()
+    val snapN = IcebergInterop.resolveRef(out, "main")
+    val metaN = listNames(Paths.get(out, "metadata")).filter(_.endsWith(".metadata.json"))
+    // a writer that died before its publish: data files in data/, a
+    // manifest in metadata/, no metadata version naming them
+    val staged = Seq("cdc-crashed-0.parquet", "eq-delete-crashed.parquet").map { name =>
+      val t = tmp("ice_nocommit_part_")
+      Seq((100L, "x")).toDF("id", "v").coalesce(1).write.mode("overwrite").parquet(t)
+      val part = listNames(Paths.get(t)).find(_.endsWith(".parquet")).get
+      Files.copy(Paths.get(t, part), Paths.get(out, "data", name))
+      name
+    }
+    Files.copy(Paths.get(out, "metadata", "fixture-m0.avro"),
+      Paths.get(out, "metadata", "cdc-crashed-data-m0.avro"))
+    assert(rows() == rowsN)
+    assert(IcebergInterop.resolveRef(out, "main") == snapN)
+    assert(listNames(Paths.get(out, "metadata")).filter(_.endsWith(".metadata.json")) == metaN)
+    val gone = IcebergInterop.removeOrphanFiles(out).map(Paths.get(_).getFileName.toString)
+    assert(gone.sorted == staged.sorted, s"reclaimed $gone")
+    assert(rows() == rowsN)
   }
 }

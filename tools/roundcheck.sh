@@ -19,8 +19,12 @@ if [ -n "$ROUND" ]; then GATE_JSON="$(pwd)/GATE_r${ROUND}.json"; fi
 
 # xxh64Cte-chain oracles plan at ~30k memory mappings each; the default
 # vm.max_map_count (65530) makes DuckDB's mmap fail intermittently as
-# "bad allocation" with RAM to spare (round 13). Best-effort raise.
-sysctl -w vm.max_map_count=1048576 >/dev/null 2>&1 || true
+# "bad allocation" with RAM to spare (round 13). This script only reads the
+# limit; raising it is the host administrator's call.
+MAX_MAP_COUNT="$(cat /proc/sys/vm/max_map_count 2>/dev/null || echo unknown)"
+if [ "$MAX_MAP_COUNT" = unknown ] || [ "$MAX_MAP_COUNT" -lt 1048576 ]; then
+  echo "warning: vm.max_map_count is $MAX_MAP_COUNT (< 1048576): DuckDB oracles may fail with \"bad allocation\"" >&2
+fi
 
 echo "== compile =="
 sbt -batch compile | tail -1
