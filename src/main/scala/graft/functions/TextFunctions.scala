@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, token counting, quality scoring, language-ID heuristic,
-  * document fingerprinting. All are composed from codegen'd built-in
-  * `org.apache.spark.sql.functions` (no UDFs) so they stay inside
-  * WholeStageCodegen and scale linearly with input — at 100 TB these run
-  * map-side with zero shuffle.
+  * document fingerprinting. They are composed from built-in
+  * `org.apache.spark.sql.functions` plus a few custom expressions in
+  * [[graft.expressions]] (no UDFs): the token count, the token-set
+  * fingerprint and the one-pass gram statistics behind the repetition
+  * and word signals. Each costs time linear in its document — at 100 TB
+  * these run map-side with zero shuffle.
   */
 object TextFunctions {
 
@@ -140,9 +142,8 @@ object TextFunctions {
     * position, duplicates kept (the multiset the repetition signals are
     * defined on); empty for inputs shorter than n (a descending
     * `sequence` would otherwise probe index 0 and throw). Materialize the
-    * result into a column before feeding it to
-    * [[topGramChars]]/[[dupGramChars]]: array-lambda element access gets
-    * no CSE (the `contaminationNgramOverlap` lesson).
+    * result into a column when several signals read it, so the grams are
+    * built once per row.
     */
   def ngrams(tokens: Column, n: Int): Column =
     when(size(tokens) >= n,
@@ -158,15 +159,11 @@ object TextFunctions {
     * fraction" (Rae et al. 2021, Table A1): gram occurrences are weighed
     * by their full length rather than by distinct character positions, so
     * the ratio upper-bounds the paper's position-coverage measure and the
-    * published thresholds act conservatively. Map-side,
-    * O(|distinct| · |grams|) inside the row.
+    * published thresholds act conservatively. Map-side, one linear hash
+    * pass inside the row ([[graft.expressions.GramStatsExpr]]); NULL for
+    * an empty array.
     */
-  def topGramChars(grams: Column): Column = {
-    val d = array_distinct(grams)
-    val maxc = array_max(transform(d, g => size(filter(grams, x => x === g))))
-    val top = array_min(filter(d, g => size(filter(grams, x => x === g)) === maxc))
-    maxc * length(top)
-  }
+  def topGramChars(grams: Column): Column = gramStat(grams, "top")
 
   /** Character mass at positions whose n-gram occurs more than once in
     * the document — the duplicated-gram numerator for the bounded
@@ -174,15 +171,17 @@ object TextFunctions {
     * fraction" (see [[topGramChars]] for the relation to the paper's
     * position-coverage definition).
     */
-  def dupGramChars(grams: Column): Column =
-    aggregate(grams, lit(0), (acc, g) =>
-      acc + when(size(filter(grams, x => x === g)) > 1, length(g)).otherwise(0))
+  def dupGramChars(grams: Column): Column = gramStat(grams, "dup")
 
   /** Total character mass across all n-gram positions — the denominator
     * that makes the repetition signals bounded fractions in [0, 1].
     */
-  def totalGramChars(grams: Column): Column =
-    aggregate(grams, lit(0), (acc, g) => acc + length(g))
+  def totalGramChars(grams: Column): Column = gramStat(grams, "total")
+
+  // one field of the GramStatsExpr kernel, its LONG mass cast to the
+  // signals' int result type (ANSI raises on overflow, legacy wraps)
+  private def gramStat(arr: Column, field: String): Column =
+    graft.expressions.GramStatsExpr.gramStats(arr).getField(field).cast("int")
 
   /** Default English-ish stopword list used by quality scoring. */
   val defaultStopwords: Seq[String] = Seq(
@@ -201,22 +200,35 @@ object TextFunctions {
   val QualityMaxTopWordFrac = 0.2
   val QualityMaxDupWordFrac = 0.85
 
-  /** The keep rule over a MATERIALIZED lowercased token-array column
-    * (materialize first — array-lambda element access gets no CSE, see
-    * [[ngrams]]). Signals are round4-ed before comparison, exactly as
-    * q66 reports them, so `keep` here ≡ q66's `keep` flag.
+  /** Word statistics of a token array, the inputs of the keep rule:
+    * token count `n`, distinct count `nd`, top-word count `maxc` and
+    * total word length `sumLen` (all int) — `n` from `size`, the rest
+    * from ONE linear [[graft.expressions.GramStatsExpr]] pass. Shared by
+    * [[qualityKeep]] and q66's signal report, so the two cannot diverge.
+    */
+  final case class WordStats(n: Column, nd: Column, maxc: Column, sumLen: Column)
+
+  def wordStats(t: Column): WordStats = {
+    val g = graft.expressions.GramStatsExpr.gramStats(t)
+    WordStats(size(t), g.getField("distinct"), g.getField("maxCount"),
+      g.getField("total").cast("int"))
+  }
+
+  /** The keep rule over a lowercased token-array column. Signals are
+    * round4-ed before comparison, exactly as q66 reports them, so `keep`
+    * here ≡ q66's `keep` flag.
     */
   def qualityKeep(t: Column): Column = {
-    val n = size(t)
-    val nd = size(array_distinct(t))
-    val maxc = array_max(transform(array_distinct(t),
-      w => size(filter(t, x => x === w))))
-    val sumLen = aggregate(t, lit(0), (acc, x) => acc + length(x))
+    val WordStats(n, nd, maxc, sumLen) = wordStats(t)
+    // common-subexpression elimination evaluates the ratios eagerly, past
+    // the AND's short circuit: an empty array must divide by NULL, not 0
+    // (it fails the token-count test either way)
+    val d = when(n =!= 0, n)
     n.cast("long") >= QualityMinTokens && n.cast("long") <= QualityMaxTokens &&
-      round4(sumLen.cast("double") / n) >= QualityMinMeanWordLen &&
-      round4(sumLen.cast("double") / n) <= QualityMaxMeanWordLen &&
-      round4(maxc.cast("double") / n) <= QualityMaxTopWordFrac &&
-      round4(lit(1.0) - nd.cast("double") / n) <= QualityMaxDupWordFrac
+      round4(sumLen.cast("double") / d) >= QualityMinMeanWordLen &&
+      round4(sumLen.cast("double") / d) <= QualityMaxMeanWordLen &&
+      round4(maxc.cast("double") / d) <= QualityMaxTopWordFrac &&
+      round4(lit(1.0) - nd.cast("double") / d) <= QualityMaxDupWordFrac
   }
 
   // ---- HTML boilerplate removal (crawl main-text extraction) ----

@@ -669,18 +669,15 @@ object PipelineQueries {
     }),
 
     // Gopher/C4-style repetition & shape quality filters — entirely
-    // map-side (array HOFs per row, zero shuffle; the per-doc mode count
-    // is O(|vocab_doc| * |doc|) inside the row, never a word-level
-    // shuffle, which is what survives 100 TB). Rule evaluated on ROUNDED
-    // fractions so both engines compare identical doubles.
+    // map-side (zero shuffle; the per-doc word statistics are one linear
+    // hash pass inside the row, TextFunctions.wordStats — the same ones
+    // qualityKeep reads — never a word-level shuffle, which is what
+    // survives 100 TB). Rule evaluated on ROUNDED fractions so both
+    // engines compare identical doubles.
     "q66_quality_filters" -> ((s, dir) => {
       val toks = filter(split(lower(col("text")), "\\s+"), x => length(x) > 0)
       val t = col("t")
-      val n = size(t)
-      val nd = size(array_distinct(t))
-      val maxc = array_max(transform(array_distinct(t),
-        w => size(filter(t, x => x === w))))
-      val sumLen = aggregate(t, lit(0), (acc, x) => acc + length(x))
+      val TextFunctions.WordStats(n, nd, maxc, sumLen) = TextFunctions.wordStats(t)
       def r4(c: org.apache.spark.sql.Column) = TextFunctions.round4(c)
       Tables.documents(s, dir)
         .select(col("doc_id"), toks.as("t"))

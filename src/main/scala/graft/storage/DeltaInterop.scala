@@ -75,13 +75,14 @@ object DeltaInterop {
         // materialize the committed view once: keyed segments need the
         // latest-wins merge Delta cannot express, partitioned segments
         // need their directory-encoded columns restored as data
-        val tmp = Files.createTempDirectory("graft_delta_merge_")
-        VersionedTable.read(spark, tablePath)
-          .write.mode("overwrite").parquet(tmp.toString)
-        for (f <- listParquet(tmp)) yield {
-          val dst = out.resolve(f.getFileName.toString)
-          Files.move(f, dst, StandardCopyOption.REPLACE_EXISTING)
-          dst
+        VersionedTable.withStagingDir("graft_delta_merge_") { tmp =>
+          VersionedTable.read(spark, tablePath)
+            .write.mode("overwrite").parquet(tmp.toString)
+          for (f <- listParquet(tmp)) yield {
+            val dst = out.resolve(f.getFileName.toString)
+            Files.move(f, dst, StandardCopyOption.REPLACE_EXISTING)
+            dst
+          }
         }
       }
 
@@ -1597,26 +1598,27 @@ object DeltaInterop {
       org.apache.spark.sql.types.StructField("__graft_pidx",
         org.apache.spark.sql.types.IntegerType, nullable = false)))
     val idxDf = spark.createDataFrame(idxRows.asJava, idxSchema)
-    val tmp = Files.createTempDirectory("graft_dv_purge_")
-    masked.join(broadcast(idxDf), Seq("__graft_dv_path"))
-      .repartition(dvd.size, col("__graft_pidx"))
-      .sortWithinPartitions(col("__graft_pidx"), col("__graft_dv_pos"))
-      .select((schema.fieldNames.map(col) :+ col("__graft_pidx")).toIndexedSeq: _*)
-      .write.mode("overwrite").partitionBy("__graft_pidx").parquet(tmp.toString)
     val renames = Seq.newBuilder[(String, String)]
     val removedOnly = Seq.newBuilder[String]
-    dvd.zipWithIndex.foreach { case ((rel, _), i) =>
-      val dir = tmp.resolve(s"__graft_pidx=$i")
-      if (!Files.isDirectory(dir)) removedOnly += rel // fully-dead file: just retire
-      else {
-        val part = listParquet(dir) match {
-          case Seq(one) => one
-          case other => throw new IllegalStateException(
-            s"expected one purged part file for $rel, got ${other.size}")
+    VersionedTable.withStagingDir("graft_dv_purge_") { tmp =>
+      masked.join(broadcast(idxDf), Seq("__graft_dv_path"))
+        .repartition(dvd.size, col("__graft_pidx"))
+        .sortWithinPartitions(col("__graft_pidx"), col("__graft_dv_pos"))
+        .select((schema.fieldNames.map(col) :+ col("__graft_pidx")).toIndexedSeq: _*)
+        .write.mode("overwrite").partitionBy("__graft_pidx").parquet(tmp.toString)
+      dvd.zipWithIndex.foreach { case ((rel, _), i) =>
+        val dir = tmp.resolve(s"__graft_pidx=$i")
+        if (!Files.isDirectory(dir)) removedOnly += rel // fully-dead file: just retire
+        else {
+          val part = listParquet(dir) match {
+            case Seq(one) => one
+            case other => throw new IllegalStateException(
+              s"expected one purged part file for $rel, got ${other.size}")
+          }
+          val cleanRel = s"${rel.stripSuffix(".parquet")}-purged-$version.parquet"
+          Files.move(part, root.resolve(cleanRel), StandardCopyOption.REPLACE_EXISTING)
+          renames += ((rel, cleanRel))
         }
-        val cleanRel = s"${rel.stripSuffix(".parquet")}-purged-$version.parquet"
-        Files.move(part, root.resolve(cleanRel), StandardCopyOption.REPLACE_EXISTING)
-        renames += ((rel, cleanRel))
       }
     }
     val rn = renames.result()
@@ -2071,15 +2073,16 @@ object DeltaInterop {
       // a checkpoint part is a single parquet FILE: write a 1-part dir,
       // then move the part file onto the spec-mandated name
       import scala.jdk.CollectionConverters._
-      val tmp = Files.createTempDirectory("graft_delta_cp_")
-      spark.createDataFrame(rows.asJava, cpSchema).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val part = listParquet(tmp) match {
-        case Seq(one) => one
-        case other => throw new IllegalStateException(
-          s"expected exactly one checkpoint part file, got ${other.size}")
+      VersionedTable.withStagingDir("graft_delta_cp_") { tmp =>
+        spark.createDataFrame(rows.asJava, cpSchema).coalesce(1)
+          .write.mode("overwrite").parquet(tmp.toString)
+        val part = listParquet(tmp) match {
+          case Seq(one) => one
+          case other => throw new IllegalStateException(
+            s"expected exactly one checkpoint part file, got ${other.size}")
+        }
+        Files.move(part, logDir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
       }
-      Files.move(part, logDir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
       ()
     }
     val ptr = mapper.createObjectNode()
@@ -2089,11 +2092,14 @@ object DeltaInterop {
     // pointer flips LAST via atomic rename — a crash mid-write must leave
     // the PREVIOUS pointer intact (the appendSnapshot/publishIncremental
     // pointer rule; an in-place truncate+write would strand a corrupt
-    // pointer that fails hard on JSON parse)
-    val tmpPtr = logDir.resolve("_last_checkpoint.tmp")
-    Files.write(tmpPtr, (mapper.writeValueAsString(ptr) + "\n").getBytes("UTF-8"))
-    Files.move(tmpPtr, logDir.resolve("_last_checkpoint"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    // pointer that fails hard on JSON parse), staged under a unique name
+    // so two checkpoint writers never move each other's pointer
+    val tmpPtr = Files.createTempFile(logDir, "._last_checkpoint.", ".tmp")
+    try {
+      Files.write(tmpPtr, (mapper.writeValueAsString(ptr) + "\n").getBytes("UTF-8"))
+      Files.move(tmpPtr, logDir.resolve("_last_checkpoint"),
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmpPtr)
     ()
   }
 

@@ -250,23 +250,13 @@ object IcebergInterop {
           dataDir.resolve(f.getFileName.toString), StandardCopyOption.REPLACE_EXISTING))
       }
 
-    // per-file record counts: one footer-only read over the exported files
-    val counts: Map[String, Long] = {
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(dataFiles.map(_.toString): _*)
-        .groupBy(input_file_name().as("f")).count()
-        .collect().map(r => basename(r.getString(0)) -> r.getLong(1)).toMap
-    }
-
+    // per-file record counts and real manifest column stats from ONE
+    // parquet-footer pass (zero data pages) — Iceberg readers (and
+    // importSnapshotWhere) prune on the stats
+    val (counts, stats) = footerScan(spark, dataFiles.map(_.toString),
+      statColumns(schemaJson))
     writeUnpartitionedV1Meta(out, schemaJson, lastColumnId,
-      dataFiles.map(f =>
-        // a zero-row part file yields no input_file_name group — a legal
-        // empty data file, counted as 0 rather than refused
-        (f, counts.getOrElse(f.getFileName.toString, 0L))),
-      // real manifest column stats from the parquet footers (zero data
-      // pages) — Iceberg readers (and importSnapshotWhere) prune on them
-      stats = footerColumnStats(spark, dataFiles.map(_.toString),
-        statColumns(schemaJson)))
+      dataFiles.map(f => (f, counts(f.toString))), stats = stats)
     dataFiles.map(_.toUri.toString)
   }
 
@@ -692,8 +682,9 @@ object IcebergInterop {
     }
   }
 
-  /** Distributed parquet-FOOTER column-stats probe ([[footerRowCounts]]'
-    * stats sibling): per file, per requested top-level column, the
+  /** ONE distributed parquet-FOOTER pass yielding BOTH the per-file row
+    * counts and the per-column manifest stats ([[footerRowCounts]]' stats
+    * sibling): per file, per requested top-level column, the
     * across-row-group min/max (Appendix-D-encoded), null count, and
     * value count — read from footer metadata only, ZERO data pages (the
     * `add_files` contract: a 10^6-file metadata import derives real
@@ -702,18 +693,8 @@ object IcebergInterop {
     * None (scan-conservative); null counts likewise. String bounds use
     * the footer's unsigned-lexicographic binary order — when a writer
     * truncated them they remain VALID bounds (parquet truncation rounds
-    * the max up), which skipping can act on safely.
-    */
-  private def footerColumnStats(
-      spark: SparkSession, paths: Seq[String],
-      cols: Seq[(String, String, Int)]): Map[String, Seq[ColumnBound]] =
-    footerScan(spark, paths, cols)._2
-
-  /** ONE distributed footer pass yielding BOTH the per-file row counts
-    * and the per-column manifest stats (r17: the commit writers ran
-    * [[footerRowCounts]] and [[footerColumnStats]] as two back-to-back
-    * jobs over the same footers — pure per-job latency on the
-    * multi-commit protocol paths, q220/q221/q228/q229).
+    * the max up), which skipping can act on safely. Keyed by the path
+    * strings passed in.
     */
   private def footerScan(
       spark: SparkSession, paths: Seq[String],
@@ -800,17 +781,27 @@ object IcebergInterop {
     * array-of-k/v-record maps. Bounds land only when known; counts
     * always (value_counts from the footer is exact).
     */
-  private def putBounds(df: GenericRecord, bounds: Seq[ColumnBound]): Unit = {
-    if (bounds.isEmpty) return
-    def arraySchemaOf(field: String): Schema =
-      df.getSchema.getField(field).schema().getTypes.asScala
-        .find(_.getType == Schema.Type.ARRAY).get
-    def kv(field: String, pairs: Seq[(Int, Any)]): Unit = {
+  private def putBounds(df: GenericRecord, bounds: Seq[ColumnBound]): Unit =
+    putStatMaps(df,
+      valueCounts = bounds.map(b => b.fieldId -> b.valueCount).toMap,
+      nullCounts = bounds.flatMap(b => b.nullCount.map(b.fieldId -> _)).toMap,
+      lower = bounds.flatMap(b => b.lower.map(b.fieldId -> _)).toMap,
+      upper = bounds.flatMap(b => b.upper.map(b.fieldId -> _)).toMap)
+
+  /** The four stat maps of a data_file record, keyed by field id — also
+    * how a rewritten manifest carries an entry's stats over verbatim
+    * (the [[LiveFile]] maps). Empty maps are left out.
+    */
+  private def putStatMaps(df: GenericRecord, valueCounts: Map[Int, Long],
+      nullCounts: Map[Int, Long], lower: Map[Int, Array[Byte]],
+      upper: Map[Int, Array[Byte]]): Unit = {
+    def kv(field: String, pairs: Map[Int, Any]): Unit = {
       if (pairs.isEmpty) return
-      val arrSchema = arraySchemaOf(field)
+      val arrSchema = df.getSchema.getField(field).schema().getTypes.asScala
+        .find(_.getType == Schema.Type.ARRAY).get
       val recSchema = arrSchema.getElementType
       val arr = new GenericData.Array[GenericRecord](pairs.size, arrSchema)
-      pairs.sortBy(_._1).foreach { case (k, v) =>
+      pairs.toSeq.sortBy(_._1).foreach { case (k, v) =>
         val r = new GenericData.Record(recSchema)
         r.put("key", k); r.put("value", v)
         arr.add(r)
@@ -818,13 +809,10 @@ object IcebergInterop {
       df.put(field, arr)
       ()
     }
-    kv("value_counts", bounds.map(b => b.fieldId -> (b.valueCount: Any)))
-    kv("null_value_counts",
-      bounds.flatMap(b => b.nullCount.map(n => b.fieldId -> (n: Any))))
-    kv("lower_bounds", bounds.flatMap(b =>
-      b.lower.map(x => b.fieldId -> (java.nio.ByteBuffer.wrap(x): Any))))
-    kv("upper_bounds", bounds.flatMap(b =>
-      b.upper.map(x => b.fieldId -> (java.nio.ByteBuffer.wrap(x): Any))))
+    kv("value_counts", valueCounts)
+    kv("null_value_counts", nullCounts)
+    kv("lower_bounds", lower.map { case (k, x) => k -> java.nio.ByteBuffer.wrap(x) })
+    kv("upper_bounds", upper.map { case (k, x) => k -> java.nio.ByteBuffer.wrap(x) })
   }
 
   /** Distributed parquet-footer row-count probe (executor-side, one
@@ -1584,24 +1572,16 @@ object IcebergInterop {
         dataDir.resolve(s"s$stamp-$i-${f.getFileName}"), StandardCopyOption.REPLACE_EXISTING)
       }
     }
-    val counts: Map[String, Long] = if (newFiles.isEmpty) Map.empty else {
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(newFiles.map(_.toString): _*)
-        .groupBy(input_file_name().as("f")).count()
-        .collect().map(r => basename(r.getString(0)) -> r.getLong(1)).toMap
-    }
+    // row counts and column stats of the NEW files from one footer pass;
+    // carried entries keep the counts and bounds their manifest already
+    // holds, so an append costs O(new files), not O(table history)
+    val (counts, colStats) = footerScan(spark, newFiles.map(_.toString),
+      statColumns(schemaJson))
 
     val snapshotId = math.abs(java.util.UUID.randomUUID().getLeastSignificantBits)
     val now = System.currentTimeMillis()
-    // column stats for EVERY entry (carried + new) from the parquet
-    // footers — the rewritten manifest must not silently lose the prior
-    // manifest's skipping power, and footer reads cost metadata only
-    val colStats: Map[String, Seq[ColumnBound]] = footerColumnStats(spark,
-      (carried.map(lf => resolve(root, lf.path).toString) ++
-        newFiles.map(_.toString)),
-      statColumns(schemaJson))
-    def entry(rel: String, size: Long, count: Long, status: Int,
-        absForStats: String): GenericRecord = {
+    def entry(rel: String, size: Long, count: Long, status: Int)(
+        stats: GenericRecord => Unit): GenericRecord = {
       val df = new GenericData.Record(
         manifestEntrySchema.getField("data_file").schema())
       df.put("file_path", rel)
@@ -1611,7 +1591,7 @@ object IcebergInterop {
       df.put("record_count", count)
       df.put("file_size_in_bytes", size)
       df.put("block_size_in_bytes", 64L * 1024 * 1024)
-      putBounds(df, colStats.getOrElse(absForStats, Nil))
+      stats(df)
       val e = new GenericData.Record(manifestEntrySchema)
       e.put("status", status)
       e.put("snapshot_id", snapshotId)
@@ -1619,11 +1599,11 @@ object IcebergInterop {
       e
     }
     val entries =
-      carried.map(lf => entry(lf.path, lf.size, lf.records, 0,
-        resolve(root, lf.path).toString)) ++
+      carried.map(lf => entry(lf.path, lf.size, lf.records, 0)(putStatMaps(_,
+        lf.valueCounts, lf.nullCounts, lf.lowerBounds, lf.upperBounds))) ++
       newFiles.map { f =>
-        entry(f.toUri.toString, Files.size(f),
-          counts.getOrElse(f.getFileName.toString, 0L), 1, f.toString)
+        entry(f.toUri.toString, Files.size(f), counts(f.toString), 1)(
+          putBounds(_, colStats.getOrElse(f.toString, Nil)))
       }
     val manifestPath = metaDir.resolve(s"graft-$snapshotId-m0.avro")
     writeAvro(manifestPath, manifestEntrySchema, entries, Map(
@@ -2261,16 +2241,33 @@ object IcebergInterop {
 
   /** Run `write` with parquet field-id writes on (real Iceberg readers
     * resolve columns by id), restoring the session's setting afterwards.
+    * Reference-counted under one lock: the first writer in saves the
+    * setting and turns the flag on, the last writer out restores it, so
+    * concurrent writers never switch it off under each other.
     */
   private def withFieldIds[T](spark: SparkSession)(write: => T): T = {
     val key = "spark.sql.parquet.fieldId.write.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try write finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
+    fieldIdWriters.synchronized {
+      // the explicit settings, not `getOption`: an unset key reads as its
+      // default, and restoring that would leave the key set
+      val (n, prev) = fieldIdWriters.getOrElse(spark, (0, spark.conf.getAll.get(key)))
+      if (n == 0) spark.conf.set(key, "true")
+      fieldIdWriters(spark) = (n + 1, prev)
+    }
+    try write finally fieldIdWriters.synchronized {
+      val (n, prev) = fieldIdWriters(spark)
+      if (n > 1) fieldIdWriters(spark) = (n - 1, prev)
+      else {
+        fieldIdWriters.remove(spark)
+        prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      }
     }
   }
+
+  // per session: the writers inside withFieldIds, and the flag value the
+  // first of them found — overlapping writers share one save/restore
+  private val fieldIdWriters =
+    scala.collection.mutable.Map.empty[SparkSession, (Int, Option[String])]
 
   /** What [[rewriteDataFiles]] did, before/after. */
   case class CompactionReport(
@@ -3108,9 +3105,6 @@ object IcebergInterop {
     val p = Paths.get(clean)
     if (p.isAbsolute) p else root.resolve(clean)
   }
-
-  private def basename(uri: String): String =
-    uri.substring(uri.lastIndexOf('/') + 1)
 
   private def hasSubdirs(dir: Path): Boolean = {
     val s = Files.list(dir)

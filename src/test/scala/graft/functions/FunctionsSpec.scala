@@ -655,6 +655,167 @@ class FunctionsSpec extends SparkSpec {
     assert(rows.forall(r => r.getLong(4) == 0L || r.getLong(4) == 1L))
   }
 
+  /** The array-lambda spelling the GramStatsExpr kernel replaced — kept
+    * here only as the parity reference.
+    */
+  private object LambdaSignals {
+    private def count(arr: org.apache.spark.sql.Column, g: org.apache.spark.sql.Column) =
+      size(filter(arr, x => x === g))
+    def top(grams: org.apache.spark.sql.Column) = {
+      val d = array_distinct(grams)
+      val maxc = array_max(transform(d, g => count(grams, g)))
+      maxc * length(array_min(filter(d, g => count(grams, g) === maxc)))
+    }
+    def dup(grams: org.apache.spark.sql.Column) =
+      aggregate(grams, lit(0), (acc, g) =>
+        acc + when(count(grams, g) > 1, length(g)).otherwise(0))
+    def total(grams: org.apache.spark.sql.Column) =
+      aggregate(grams, lit(0), (acc, g) => acc + length(g))
+    // divides by NULL rather than 0 on an empty array, as qualityKeep
+    // does: in a projection the repeated ratio is a common subexpression,
+    // evaluated past the AND's short circuit, and 0 raises under ANSI
+    def keep(t: org.apache.spark.sql.Column) = {
+      import TextFunctions._
+      val n = size(t)
+      val nd = size(array_distinct(t))
+      val maxc = array_max(transform(array_distinct(t), w => count(t, w)))
+      val sumLen = total(t)
+      val d = when(n =!= 0, n)
+      n.cast("long") >= QualityMinTokens && n.cast("long") <= QualityMaxTokens &&
+        round4(sumLen.cast("double") / d) >= QualityMinMeanWordLen &&
+        round4(sumLen.cast("double") / d) <= QualityMaxMeanWordLen &&
+        round4(maxc.cast("double") / d) <= QualityMaxTopWordFrac &&
+        round4(lit(1.0) - nd.cast("double") / d) <= QualityMaxDupWordFrac
+    }
+  }
+
+  test("repetition and word signals: the hash kernel equals the array-lambda spelling " +
+    "on 2400 seeded arrays (ties, NULLs, empties, multi-byte, UTF-8 order)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // few short words → heavy count ties; U+FFFD vs U+1F600 is where
+    // UTF-8 byte order and UTF-16 String order disagree
+    val vocab = Seq("a", "b", "ab", "ba", "", "é", "日本", "a b", "\uFFFD", "\uD83D\uDE00",
+      "\uD83D\uDE00x", "\uE000", "zz")
+    val rnd = new scala.util.Random(7)
+    def randomArray(): Seq[String] = rnd.nextInt(20) match {
+      case 0 => null
+      case 1 => Seq.empty
+      case k =>
+        val len = if (k < 10) 1 + rnd.nextInt(6) else 5 + rnd.nextInt(40)
+        val words = vocab.take(1 + rnd.nextInt(vocab.size))
+        val nullP = if (rnd.nextInt(4) == 0) 0.1 else 0.0
+        Seq.fill(len)(if (rnd.nextDouble() < nullP) null else words(rnd.nextInt(words.size)))
+    }
+    val fixed = Seq[Seq[String]](
+      Seq("\uFFFD", "\uD83D\uDE00x"), Seq("\uD83D\uDE00x", "\uFFFD"),
+      Seq(null), Seq(null, null), Seq(null, "a"), Seq("", ""), Seq("a", "b", "b", "a"))
+    val arrays = fixed ++ Seq.fill(2400)(randomArray())
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("g", ArrayType(StringType, containsNull = true))))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(arrays.zipWithIndex.map { case (a, i) => Row(i.toLong, a) }, 4),
+      schema)
+    val pairs = Seq(
+      "top" -> (TextFunctions.topGramChars(col("g")), LambdaSignals.top(col("g"))),
+      "dup" -> (TextFunctions.dupGramChars(col("g")), LambdaSignals.dup(col("g"))),
+      "total" -> (TextFunctions.totalGramChars(col("g")), LambdaSignals.total(col("g"))),
+      "keep" -> (TextFunctions.qualityKeep(col("g")), LambdaSignals.keep(col("g"))))
+    val out = df.select(col("id") +: pairs.flatMap { case (name, (now, ref)) =>
+      Seq(now.as(s"${name}_now"), ref.as(s"${name}_ref")) }: _*)
+    pairs.foreach { case (name, _) =>
+      assert(out.schema(s"${name}_now").dataType == out.schema(s"${name}_ref").dataType, name)
+    }
+    val rows = out.collect()
+    assert(rows.length == arrays.size)
+    pairs.map(_._1).foreach { name =>
+      val bad = rows.filter(r => r.getAs[Any](s"${name}_now") != r.getAs[Any](s"${name}_ref"))
+      assert(bad.isEmpty, s"$name differs on ${bad.take(5).map(r =>
+        (arrays(r.getLong(0).toInt), r.getAs[Any](s"${name}_now"), r.getAs[Any](s"${name}_ref"))
+      ).mkString("; ")}")
+    }
+    // the fixed cases pin each rule by value
+    val byId = rows.map(r => r.getLong(0) -> r).toMap
+    def sig(i: Int) = (byId(i.toLong).getAs[Any]("top_now"), byId(i.toLong).getAs[Any]("dup_now"),
+      byId(i.toLong).getAs[Any]("total_now"))
+    // the tie goes to U+FFFD (1 char), first in UTF-8 byte order; UTF-16
+    // String order would pick the 2-char "😀x"
+    assert(sig(0) == ((1, 0, 3)) && sig(1) == ((1, 0, 3)))
+    assert(sig(2) == ((null, 0, null)) && sig(4) == ((1, 0, null)))
+    assert(sig(5) == ((0, 0, 0)) && sig(6) == ((2, 4, 4)))
+    val empty = arrays.indexWhere(a => a != null && a.isEmpty)
+    val nul = arrays.indexWhere(_ == null)
+    assert(sig(empty) == ((null, 0, 0)) && sig(nul) == ((null, null, null)))
+  }
+
+  /** A document of `n` tokens drawn from `n` words, as one parquet row. */
+  private def docOf(n: Int, seed: Int): org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val dir = java.nio.file.Files.createTempDirectory("graft_gram_doc_").toString
+    Seq((1L, Seq.fill(n)(s"w${rnd.nextInt(n)}").mkString(" "))).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** tokens → n-grams → the four signals, shaped like the benchmark's
+    * corpus pass.
+    */
+  private def signals(docs: org.apache.spark.sql.DataFrame) = {
+    val t = docs.select(col("doc_id"), TextFunctions.tokens(lower(col("text"))).as("t"))
+      .select(col("doc_id"), col("t"),
+        TextFunctions.ngrams(col("t"), 2).as("g2"), TextFunctions.ngrams(col("t"), 3).as("g3"))
+    t.select(col("doc_id"),
+      TextFunctions.qualityKeep(col("t")).as("keep"),
+      (TextFunctions.topGramChars(col("g2")) / TextFunctions.totalGramChars(col("g2"))).as("top2"),
+      (TextFunctions.dupGramChars(col("g3")) / TextFunctions.totalGramChars(col("g3"))).as("dup3"))
+  }
+
+  test("repetition and word signals are linear in the document: doubling N stays under 3x") {
+    def seconds(df: org.apache.spark.sql.DataFrame): Double = {
+      val t0 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    def median3(df: org.apache.spark.sql.DataFrame): Double =
+      Seq.fill(3)(seconds(df)).sorted.apply(1)
+    // grow N until one document's pass takes at least 0.2 s, so the
+    // fixed per-job cost cannot hide the per-token cost
+    var n = 1000
+    var plan = signals(docOf(n, 1))
+    seconds(plan)
+    var tN = median3(plan)
+    while (tN < 0.2 && n < 3200000) {
+      n *= 2
+      plan = signals(docOf(n, 1))
+      seconds(plan)
+      tN = median3(plan)
+    }
+    assert(tN >= 0.2, s"N=$n ran in $tN s")
+    val twice = signals(docOf(2 * n, 2))
+    seconds(twice)
+    val t2N = median3(twice)
+    info(f"N=$n: $tN%.3f s, 2N: $t2N%.3f s, ratio ${t2N / tN}%.2f")
+    assert(t2N / tN < 3.0, s"N=$n: ${tN}s, 2N: ${t2N}s, ratio ${t2N / tN}")
+  }
+
+  test("the benchmark-shaped signals plan compiles the gram kernel (no CodegenFallback)") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    // a file scan and no exchange: the plan is not adaptive, so the
+    // executed plan is the final one
+    val df = signals(docOf(10, 3))
+    val plan = df.queryExecution.executedPlan
+    def holdsKernel(p: org.apache.spark.sql.execution.SparkPlan) =
+      p.expressions.exists(_.exists(_.isInstanceOf[graft.expressions.GramStatsExpr]))
+    val kernels = plan.collect { case w: WholeStageCodegenExec => w.child }
+      .flatMap(_.collect { case p if holdsKernel(p) => p })
+    assert(kernels.nonEmpty, s"no whole-stage-compiled operator holds the kernel:\n$plan")
+    // an operator holding any CodegenFallback expression is left out of
+    // whole-stage codegen, so this also rules out a fallback beside it
+    assert(plan.collect { case p if holdsKernel(p) => p }.size == kernels.size,
+      s"an operator holding the kernel runs outside whole-stage codegen:\n$plan")
+    assert(df.collect().length == 1)
+  }
+
   test("exactSubstrDedup: first occurrence kept, later spans cut, within-doc repeats cut") {
     val docs = Seq(
       (1L, "a b c d e"),         // canonical owner of every shared span

@@ -1245,4 +1245,37 @@ class DeltaInteropSpec extends SparkSpec {
     assert(waves.forall(_._1 <= waves.head._1), s"live files per wave: $waves")
     assert(waves.forall(_._2 <= 13), s"jobs per merge: $waves")
   }
+
+  test("Delta writers delete their staging directories: export, checkpoint and DV purge") {
+    val tmpRoot = Paths.get(System.getProperty("java.io.tmpdir"))
+    val prefixes = Seq("graft_delta_merge_", "graft_delta_cp_", "graft_dv_purge_")
+    def staging(): Set[String] = {
+      val s = Files.list(tmpRoot)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => prefixes.exists(n.startsWith)).toSet
+      finally s.close()
+    }
+    val before = staging()
+    // a keyed table exports through the staged merge write
+    val table = tmp("delta_staging_") + "/t"
+    def w(df: org.apache.spark.sql.DataFrame)(dir: String): Unit =
+      df.coalesce(1).write.parquet(dir)
+    VersionedTable.upsert(spark, table, Seq("id"), compactWrite = (df, dir) => w(df)(dir))(
+      w((1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")))
+    val out = tmp("delta_staging_out_")
+    DeltaInterop.exportSnapshot(spark, table, out)
+    assert(staging() == before, "exportSnapshot leaked its staging directory")
+    DeltaInterop.deleteWhere(spark, out, 1L, col("id") % 3 === 0)
+    DeltaInterop.writeCheckpoint(spark, out, 1L, parts = 2)
+    assert(staging() == before, "writeCheckpoint leaked its staging directories")
+    assert(DeltaInterop.purgeDeletionVectors(spark, out, 2L) == 1)
+    assert(staging() == before, "purgeDeletionVectors leaked its staging directory")
+    val logNames = {
+      val s = Files.list(Paths.get(out, "_delta_log"))
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq finally s.close()
+    }
+    assert(!logNames.exists(_.endsWith(".tmp")), s"pointer temp file left behind: $logNames")
+    assert(DeltaInterop.importSnapshot(spark, out).select("id").as[Long].collect().toSet ==
+      (1L to 20L).filter(_ % 3 != 0).toSet)
+  }
 }

@@ -594,6 +594,61 @@ class IcebergInteropSpec extends SparkSpec {
     assert(e.getMessage.contains("schema"))
   }
 
+  /** The current snapshot's manifest entries: file path → (status,
+    * record count, the four stat maps with bounds as bytes).
+    */
+  private def currentEntries(out: String): Map[String, (Int, Long, Seq[(String, Any)])] = {
+    val metaDir = Paths.get(out, "metadata")
+    val v = new String(Files.readAllBytes(metaDir.resolve("version-hint.text")), "UTF-8").trim
+    val meta = mapper.readTree(Files.readAllBytes(metaDir.resolve(s"v$v.metadata.json")))
+    val cur = meta.get("current-snapshot-id").asLong()
+    val ml = ref(out, meta.get("snapshots").elements().asScala
+      .find(_.get("snapshot-id").asLong() == cur).get.get("manifest-list").asText())
+    def stats(d: GenericRecord): Seq[(String, Any)] =
+      Seq("value_counts", "null_value_counts", "lower_bounds", "upper_bounds").map { f =>
+        f -> Option(d.get(f)).map(_.asInstanceOf[java.util.Collection[GenericRecord]]
+          .asScala.toSeq.map(kv => kv.get("key") -> (kv.get("value") match {
+            case b: java.nio.ByteBuffer =>
+              val dup = b.duplicate(); val a = new Array[Byte](dup.remaining()); dup.get(a)
+              a.toSeq
+            case other => other
+          })))
+      }
+    readAvro(ml)._2.flatMap(m => readAvro(ref(out, m.get("manifest_path").toString))._2)
+      .map { e =>
+        val d = e.get("data_file").asInstanceOf[GenericRecord]
+        d.get("file_path").toString ->
+          ((e.get("status").asInstanceOf[Int], d.get("record_count").asInstanceOf[Long], stats(d)))
+      }.toMap
+  }
+
+  test("appendSnapshot reads only the new files' footers: the 1st and 10th append run the " +
+    "same jobs, carried entries keep their manifest counts and stats byte for byte") {
+    def frame(k: Int) = spark.range(k * 1000L, (k + 1) * 1000L)
+      .select(col("id"), concat(lit("v"), col("id").cast("string")).as("v")).coalesce(1)
+    val table = tmp("ice_append_") + "/t"
+    VersionedTable.append(table)(dir => frame(0).write.parquet(dir))
+    val out = tmp("ice_append_out_")
+    IcebergInterop.exportSnapshot(spark, table, out)
+    val jobs = (1 to 10).map { k =>
+      val prior = currentEntries(out)
+      val (_, n) = jobsDuring(IcebergInterop.appendSnapshot(spark, out, frame(k)))
+      val now = currentEntries(out)
+      prior.foreach { case (path, (_, records, stats)) =>
+        assert(now(path) == ((0, records, stats)), s"append $k changed carried entry $path")
+      }
+      val added = now -- prior.keys
+      assert(added.size == 1 && added.values.forall { case (status, records, stats) =>
+        status == 1 && records == 1000L && stats.forall(_._2 != None)
+      }, s"append $k: $added")
+      n
+    }
+    // the data write and one footer pass over the new file: no schema
+    // inference, no counting aggregation, no footer reads of carried files
+    assert(jobs.forall(_ == 2), s"jobs per append: $jobs")
+    assert(IcebergInterop.importSnapshot(spark, out).count() == 11000L)
+  }
+
   test("identity-partitioned v1 import: partition column restored from manifest metadata, NULL included") {
     // the Hive-migrated shape: data files DO NOT contain the partition
     // column — its only home is the manifest entry partition struct
@@ -1354,40 +1409,56 @@ class IcebergInteropSpec extends SparkSpec {
 
   test("upsertCdc: two waves racing one version — exactly one commits, the table serves " +
     "exactly the winner's rows, removeOrphanFiles reclaims the loser's files (20 trials)") {
-    val out = tmp("ice_cdc_race_") + "/ice"
-    IcebergFixtures.writeV2WithDeletes(spark, out,
-      (1L to 30L).map(i => (i, s"v$i")).toDF("id", "v"), "id", col("id") % 5 === 0)
-    val model = scala.collection.mutable.Map(
-      (1L to 30L).filter(_ % 5 != 0).map(i => i -> s"v$i"): _*)
-    def served(): Map[Long, String] = IcebergInterop.importSnapshot(spark, out)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    val dataDir = Paths.get(out, "data")
-    val pool = Executors.newFixedThreadPool(2)
-    try (1 to 20).foreach { trial =>
-      // disjoint keys: each wave updates its own base row and inserts two
-      val waves = Map(
-        "A" -> Seq(1L, 100L * trial + 1, 100L * trial + 2).map(_ -> s"A$trial"),
-        "B" -> Seq(2L, 100L * trial + 51, 100L * trial + 52).map(_ -> s"B$trial"))
-      val reports = new java.util.concurrent.ConcurrentHashMap[String, IcebergInterop.CdcReport]()
-      val before = listNames(dataDir)
-      val outcomes = race(pool, waves.toSeq.map { case (w, rows) =>
-        val wave = rows.toDF("id", "v")
-        w -> (() => { reports.put(w, IcebergInterop.upsertCdc(spark, out, wave, Seq("id"))); () })
-      })
-      val winners = outcomes.collect { case (w, None) => w }
-      assert(winners.size == 1, s"trial $trial: $outcomes")
-      outcomes.collect { case (_, Some(e)) => e }.foreach(e => assert(
-        e.isInstanceOf[VersionedTable.ConcurrentCommitException], s"trial $trial: loser got $e"))
-      waves(winners.head).foreach { case (k, v) => model(k) = v }
-      assert(served() == model.toMap, s"trial $trial: the table does not serve the winner's rows")
-      val added = listNames(dataDir) -- before
-      val gone = IcebergInterop.removeOrphanFiles(out).map(Paths.get(_).getFileName.toString)
-      // what stays is the winner's data files and its equality-delete file
-      assert(gone.nonEmpty && gone.toSet.subsetOf(added) &&
-        added.size - gone.size == reports.get(winners.head).dataFiles + 1,
-        s"trial $trial: added $added, reclaimed $gone")
-      assert(served() == model.toMap, s"trial $trial: reclaiming orphans changed the table")
-    } finally pool.shutdown()
+    val fieldIdKey = "spark.sql.parquet.fieldId.write.enabled"
+    // (explicitly set?, value read) — an unset key reads as its default
+    def fieldIds(): (Boolean, Option[String]) =
+      (spark.conf.getAll.contains(fieldIdKey), spark.conf.getOption(fieldIdKey))
+    def setFieldIds(v: Option[String]): Unit =
+      v.fold(spark.conf.unset(fieldIdKey))(spark.conf.set(fieldIdKey, _))
+    val original = spark.conf.getAll.get(fieldIdKey)
+    try Seq(None, Some("false")).foreach { setting =>
+      setFieldIds(setting)
+      val confBefore = fieldIds()
+      assert(confBefore._1 == setting.nonEmpty)
+      val out = tmp("ice_cdc_race_") + "/ice"
+      IcebergFixtures.writeV2WithDeletes(spark, out,
+        (1L to 30L).map(i => (i, s"v$i")).toDF("id", "v"), "id", col("id") % 5 === 0)
+      val model = scala.collection.mutable.Map(
+        (1L to 30L).filter(_ % 5 != 0).map(i => i -> s"v$i"): _*)
+      def served(): Map[Long, String] = IcebergInterop.importSnapshot(spark, out)
+        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
+      val dataDir = Paths.get(out, "data")
+      val pool = Executors.newFixedThreadPool(2)
+      try (1 to 20).foreach { trial =>
+        // disjoint keys: each wave updates its own base row and inserts two
+        val waves = Map(
+          "A" -> Seq(1L, 100L * trial + 1, 100L * trial + 2).map(_ -> s"A$trial"),
+          "B" -> Seq(2L, 100L * trial + 51, 100L * trial + 52).map(_ -> s"B$trial"))
+        val reports = new java.util.concurrent.ConcurrentHashMap[String, IcebergInterop.CdcReport]()
+        val before = listNames(dataDir)
+        val outcomes = race(pool, waves.toSeq.map { case (w, rows) =>
+          val wave = rows.toDF("id", "v")
+          w -> (() => { reports.put(w, IcebergInterop.upsertCdc(spark, out, wave, Seq("id"))); () })
+        })
+        // overlapping writers share the field-id flag: the last one out
+        // restores the session's own setting
+        assert(fieldIds() == confBefore,
+          s"trial $trial: the race left $fieldIdKey at ${fieldIds()}, was $confBefore")
+        val winners = outcomes.collect { case (w, None) => w }
+        assert(winners.size == 1, s"trial $trial: $outcomes")
+        outcomes.collect { case (_, Some(e)) => e }.foreach(e => assert(
+          e.isInstanceOf[VersionedTable.ConcurrentCommitException], s"trial $trial: loser got $e"))
+        waves(winners.head).foreach { case (k, v) => model(k) = v }
+        assert(served() == model.toMap, s"trial $trial: the table does not serve the winner's rows")
+        val added = listNames(dataDir) -- before
+        val gone = IcebergInterop.removeOrphanFiles(out).map(Paths.get(_).getFileName.toString)
+        // what stays is the winner's data files and its equality-delete file
+        assert(gone.nonEmpty && gone.toSet.subsetOf(added) &&
+          added.size - gone.size == reports.get(winners.head).dataFiles + 1,
+          s"trial $trial: added $added, reclaimed $gone")
+        assert(served() == model.toMap, s"trial $trial: reclaiming orphans changed the table")
+      } finally pool.shutdown()
+    } finally setFieldIds(original)
   }
 
   test("Iceberg writers delete their staging directories, whether they commit or lose the race") {
