@@ -13,79 +13,62 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * rows with no qualifying feature row keep nulls (left join semantics).
   * Matches DuckDB `ASOF LEFT JOIN` (inclusive bound).
   *
-  * Spark has no built-in as-of join, so we provide two strategies behind one
-  * API:
+  * Spark has no built-in as-of join. There is ONE plan, the union window,
+  * for one feature view and for many; it salts hot keys on its own:
   *
-  *  - **union-window** (the scale path; the default salted-window below
-  *    reduces to it when no key is hot): tag feature rows (side=0)
-  *    and spine rows (side=1), union on (keys, ts), then a single
-  *    `Window.partitionBy(keys).orderBy(ts, side)` running `last(pkt,
-  *    ignoreNulls=true)` over ONE struct holding the whole feature payload
-  *    carries the latest matching ROW (not column-by-column — NULL fields of
-  *    the matched row must stay NULL) onto the next
-  *    spine row. Exactly ONE shuffle of spine+features by join key, no row
-  *    blow-up regardless of fan-in (vs. the non-equi join's O(|spine_k| ×
-  *    |features_k|) intermediate per key). Ordering `side` after `ts` makes
-  *    the bound inclusive (a feature at exactly the spine ts wins). The
-  *    per-partition sort is Tungsten-spillable, so skew never OOMs — but
-  *    note AQE's skew optimization splits skewed *join* partitions, NOT
-  *    window partitions: a hot key's entire history+spine sorts in ONE
-  *    task, which serializes and becomes the wall-clock bound at scale.
-  *    Mitigations: `maxStaleness` prunes history to the staleness horizon
-  *    before the shuffle (a hot key then carries only its in-window rows),
-  *    and a broadcastable feature side can route through join-filter
-  *    (`method = "auto"`), whose skew IS AQE-splittable. `auto`'s
-  *    non-broadcastable branch runs the salted window, so hot keys are
-  *    detected (one sampled job) and split rather than serialized.
+  *  - **union window**: tag each feature view's rows (side=0, one packet
+  *    column per view) and the spine rows (side=1), union on (keys, ts),
+  *    then a single `Window.partitionBy(keys).orderBy(ts, side)` running
+  *    `last(pkt, ignoreNulls=true)` per view carries the latest matching
+  *    ROW (not column-by-column — NULL fields of the matched row must stay
+  *    NULL) onto the next spine row. Exactly ONE shuffle of spine+features
+  *    by join key for N feature views, no row blow-up regardless of fan-in
+  *    (vs. the non-equi join's O(|spine_k| × |features_k|) intermediate per
+  *    key). Ordering `side` after `ts` makes the bound inclusive (a feature
+  *    at exactly the spine ts wins). `maxStaleness` prunes each view's
+  *    history to the staleness horizon before the shuffle.
   *
-  *  - **join-filter**: left join on keys + `fts <= sts`, keep the max `fts`
-  *    per spine row via a window. Simple, but the intermediate join product
-  *    explodes with deep feature history — only sensible when the feature
-  *    side is tiny or broadcastable. Used as a cross-check oracle in tests.
+  *  - **self-selected salting**: AQE's skew optimization splits skewed
+  *    *join* partitions, NOT window partitions, so a hot key's whole
+  *    history+spine would sort in ONE task. An eager per-key count +
+  *    ts-quantile detection job over a seeded sample
+  *    (`graft.asof.salt.sampleRate`, default 1%; map-side combined, one
+  *    small row per sampled distinct key) flags keys whose estimated union
+  *    row count exceeds `graft.asof.salt.hotKeyThreshold` (default 2M; the
+  *    heaviest 1000 at most) and collects their in-key ts-range boundaries
+  *    (model-scale) for literal broadcast. Hot keys' rows are
+  *    range-bucketed by ts into `graft.asof.salt.buckets` (default 16)
+  *    sub-partitions, the carry window runs per `(key, bucket)` — so a hot
+  *    key sorts in `buckets` parallel spillable tasks instead of ONE — and
+  *    a second, tiny window over the (hotKeys × buckets) bucket summaries
+  *    computes each bucket's carry-in (the latest feature packet of all
+  *    earlier buckets), merged with `coalesce(localCarry, carryIn)`.
+  *    Correct because buckets are contiguous ts ranges: a same-bucket match
+  *    is strictly later than any earlier-bucket feature, and same-ts ties
+  *    always share a bucket, so the documented tie-break never crosses
+  *    buckets. No hot key ⇒ the plain union-window plan with zero further
+  *    overhead. Detection is EAGER (a sampled Spark job when the plan is
+  *    BUILT), skipped when Catalyst stats prove the inputs too small to
+  *    hold a hot key, and memoized per caller-supplied snapshot identity.
   *
-  *  - **salted-window**: the hot-key-skew-safe completion of union-window.
-  *    An eager per-key count + ts-quantile detection job over a seeded
-  *    sample (`graft.asof.salt.sampleRate`, default 1%; map-side combined,
-  *    one small row per sampled distinct key) flags keys whose estimated
-  *    union row count exceeds `graft.asof.salt.hotKeyThreshold` (default
-  *    2M; top `graft.asof.salt.maxHotKeys`) and collects their in-key
-  *    ts-range boundaries (model-scale) for literal broadcast — no hot
-  *    keys ⇒ the plain union-window plan with zero further overhead. Hot keys'
-  *    rows are range-bucketed by ts into `graft.asof.salt.buckets`
-  *    (default 16) sub-partitions, the carry window runs per
-  *    `(key, bucket)` — so a hot key sorts in `buckets` parallel spillable
-  *    tasks instead of ONE — and a second, tiny window over the
-  *    (hotKeys × buckets) bucket summaries computes each bucket's
-  *    carry-in (the latest feature packet of all earlier buckets), merged
-  *    with `coalesce(localCarry, carryIn)`. Correct because buckets are
-  *    contiguous ts ranges: a same-bucket match is strictly later than any
-  *    earlier-bucket feature, and same-ts ties always share a bucket, so
-  *    the documented tie-break never crosses buckets. Keys below the
-  *    threshold get bucket 0 everywhere and reproduce the union-window
-  *    plan bit-for-bit. Costs one extra pass over the union (the
-  *    detection agg, EAGER: it runs a sampled Spark job when the plan is
-  *    BUILT, not when it is executed). This is the DEFAULT strategy:
-  *    `method = "default"` resolves through the session conf
-  *    `graft.asof.method`, which falls back to `salted-window`, so a
-  *    default-path plan build runs one detection job per hot-key memo
-  *    miss, unless the stats short-circuit proves the inputs too small to
-  *    hold a hot key. Pin `graft.asof.method=union-window` for a lazy,
-  *    job-free plan build on corpora known to be skew-free.
+  *  - **join-filter** (`joinFilter`, the test reference only): left join
+  *    on keys + `fts <= sts`, keep the max `fts` per spine row via a
+  *    window. Simple, but the intermediate join product explodes with deep
+  *    feature history.
   *
-  * Ties *within* the feature side (same key, same ts) are broken
-  * deterministically on EVERY strategy by preferring the greater value of
-  * the last payload column (a tie-break sort key in the window orderings;
-  * asserted by the randomized equivalence spec). DuckDB ASOF has no
-  * defined tie-break, so oracle fixtures still pre-aggregate features to
-  * unique (key, ts).
+  * Ties *within* a feature view (same key, same ts) are broken
+  * deterministically by preferring the greater value of the last payload
+  * column (a tie-break sort key in the window orderings, the salted
+  * bucket summaries and join-filter; asserted by the randomized
+  * equivalence spec). DuckDB ASOF has no defined tie-break, so oracle
+  * fixtures still pre-aggregate features to unique (key, ts).
   *
-  * **NULL join keys follow SQL equi-join semantics** (= DuckDB ASOF, = the
-  * join-filter strategy's `===` condition): a NULL key never matches, so a
+  * **NULL join keys follow SQL equi-join semantics** (= DuckDB ASOF, =
+  * join-filter's `===` condition): a NULL key never matches, so a
   * NULL-keyed spine row is kept with null features and NULL-keyed feature
-  * history matches nothing. The union-window plan's `Window.partitionBy`
-  * would otherwise GROUP NULL keys together (SQL GROUP BY semantics), so
-  * that strategy explicitly drops NULL-keyed feature rows from the union
-  * to keep the two strategies and the oracle in agreement.
+  * history matches nothing. `Window.partitionBy` would otherwise GROUP NULL
+  * keys together (SQL GROUP BY semantics), so the window plan explicitly
+  * drops NULL-keyed feature rows from the union.
   */
 object AsOfJoin {
 
@@ -100,10 +83,8 @@ object AsOfJoin {
     *                     matched feature row older than `spineTs − ttl` is
     *                     treated as no match (nulls) — the Feast-style
     *                     freshness bound; inclusive at the boundary. Applied
-    *                     after the latest-≤ match, so it never resurrects an
-    *                     older-but-fresher... there is no such row: the
-    *                     latest match is the freshest candidate by
-    *                     definition.
+    *                     after the latest-≤ match, which is the freshest
+    *                     candidate by definition.
     */
   def joinAsOf(
       spine: DataFrame,
@@ -112,63 +93,13 @@ object AsOfJoin {
       spineTs: String,
       featureTs: String,
       featureCols: Seq[String] = Seq.empty,
-      includeFeatureTs: Option[String] = None,
-      method: String = "default",
       maxStaleness: Option[String] = None,
-      prefilterSpineKeys: Boolean = true,
       hotKeyCacheKey: Option[String] = None): DataFrame = {
     val payload =
       if (featureCols.nonEmpty) featureCols
       else features.columns.filterNot(c => joinKeys.contains(c) || c == featureTs).toSeq
-    val features1 =
-      if (prefilterSpineKeys) prefilterBySpineKeys(spine, features, joinKeys) else features
-    joinAsOfDispatch(spine, features1, joinKeys, spineTs, featureTs, payload,
-      includeFeatureTs, resolveMethod(spine, method), maxStaleness, hotKeyCacheKey)
-  }
-
-  /** `"default"` resolves through the session conf `graft.asof.method`,
-    * falling back to salted-window: the skew probe showed the salted plan
-    * is a pure win on hot-key corpora (max-task ratio 0.13-0.20 vs
-    * unsalted) and when no key clears the hot threshold the salted
-    * strategy degrades to the plain union window, so the only default-path
-    * cost is one sampled detection aggregation. Pin
-    * `graft.asof.method=union-window` to skip even that (e.g. many tiny
-    * as-of calls on corpora known to be skew-free). */
-  private def resolveMethod(spine: DataFrame, method: String): String =
-    if (method == "default")
-      spine.sparkSession.conf.get("graft.asof.method", "salted-window")
-    else method
-
-  private def joinAsOfDispatch(
-      spine: DataFrame,
-      features: DataFrame,
-      joinKeys: Seq[String],
-      spineTs: String,
-      featureTs: String,
-      payload: Seq[String],
-      includeFeatureTs: Option[String],
-      method: String,
-      maxStaleness: Option[String],
-      hotKeyCacheKey: Option[String] = None): DataFrame = {
-    method match {
-      case "union-window" => unionWindow(spine, features, joinKeys, spineTs, featureTs, payload, includeFeatureTs, maxStaleness)
-      case "salted-window" => saltedUnionWindow(spine, features, joinKeys, spineTs, featureTs, payload, includeFeatureTs, maxStaleness, hotKeyCacheKey)
-      case "join-filter" => joinFilter(spine, features, joinKeys, spineTs, featureTs, payload, includeFeatureTs, maxStaleness, hint = false)
-      case "auto" =>
-        // Catalyst-stats-based pick: a broadcastable feature side makes the
-        // non-equi join cheap (no shuffle of the spine at all). Otherwise
-        // the single-shuffle window plan wins regardless of history depth —
-        // routed through the SALTED variant, which runs one sampled
-        // detection aggregation and degrades to the plain union window
-        // when no key clears the hot threshold: auto is skew-safe by
-        // construction at the cost of that one detection job.
-        if (isBroadcastable(features))
-          joinFilter(spine, features, joinKeys, spineTs, featureTs, payload, includeFeatureTs, maxStaleness, hint = true)
-        else
-          saltedUnionWindow(spine, features, joinKeys, spineTs, featureTs, payload,
-            includeFeatureTs, maxStaleness, hotKeyCacheKey)
-      case other => throw new IllegalArgumentException(s"unknown as-of method: $other")
-    }
+    joinAsOfMultiTagged(spine, Seq((features, featureTs, payload)), joinKeys, spineTs,
+      maxStaleness, hotKeyCacheKey)
   }
 
   /** Multi-feature-view as-of join in ONE pass: every feature table that
@@ -185,60 +116,58 @@ object AsOfJoin {
       features: Seq[(DataFrame, String, Seq[String])],
       joinKeys: Seq[String],
       spineTs: String,
-      hotKeyCacheKey: Option[String] = None): DataFrame = {
-    if (features.isEmpty) return spine
-    if (features.size == 1) {
-      val (f, fts, payload) = features.head
-      return joinAsOf(spine, f, joinKeys, spineTs, fts, payload,
-        hotKeyCacheKey = hotKeyCacheKey)
-    }
-    // same spine-key semi-join reduction as the single-FV path: every
-    // feature table rides the shared window shuffle, so pruning each one by
-    // the (broadcastable) spine key set shrinks the one big exchange
-    val features0 = features.map { case (f, fts, payload) =>
-      (prefilterBySpineKeys(spine, f, joinKeys), fts, payload)
-    }
-    return joinAsOfMultiTagged(spine, features0, joinKeys, spineTs,
-      salted = resolveMethod(spine, "default") == "salted-window",
-      hotKeyCacheKey = hotKeyCacheKey)
-  }
+      hotKeyCacheKey: Option[String] = None): DataFrame =
+    if (features.isEmpty) spine
+    else joinAsOfMultiTagged(spine, features, joinKeys, spineTs, None, hotKeyCacheKey)
 
-  private def joinAsOfMultiTagged(
+  /** Builds the one window plan behind [[joinAsOf]] and [[joinAsOfMulti]].
+    * With `maxStaleness` set, each view's history is pruned to the
+    * staleness horizon, its packet also carries the feature timestamp, and
+    * a packet older than `spineTs − ttl` is nulled at the finish. */
+  private[pit] def joinAsOfMultiTagged(
       spine: DataFrame,
-      features: Seq[(DataFrame, String, Seq[String])],
+      features0: Seq[(DataFrame, String, Seq[String])],
       joinKeys: Seq[String],
       spineTs: String,
-      salted: Boolean = false,
-      hotKeyCacheKey: Option[String] = None): DataFrame = {
+      maxStaleness: Option[String],
+      hotKeyCacheKey: Option[String]): DataFrame = {
     val P = "__graft_pkt_"
     val spineCols = spine.columns.toSeq
+    val spCols = spineCols.filterNot(joinKeys.contains)
+    // every feature table rides the shared window shuffle, so pruning each
+    // one by the (broadcastable) spine key set shrinks the one big exchange
+    val features = features0.map { case (f, fts, payload) =>
+      (prefilterBySpineKeys(spine, f, joinKeys), fts, payload)
+    }
 
     // One struct per feature view: the matched row travels wholesale (the
     // struct is non-null exactly on that FV's rows), so a NULL *inside* the
     // latest matching row stays NULL instead of being back-filled from an
     // older row — per-column carry-forward diverges from ASOF semantics.
-    val pktTypes: Seq[StructType] = features.map { case (f, _, payload) =>
-      StructType(payload.map(c => StructField(c, fieldType(f, c))))
+    val pktTypes: Seq[StructType] = features.map { case (f, fts, payload) =>
+      StructType(payload.map(c => StructField(c, fieldType(f, c))) ++
+        maxStaleness.map(_ => StructField(FTS, fieldType(f, fts))))
     }
 
     // one tagged relation per feature view: its own packet, null packets elsewhere
     val taggedFeatures = features.zipWithIndex.map { case ((f0, fts, payload), i) =>
-      val f = dropNullKeyed(f0, joinKeys :+ fts)
+      val f = pruneToHorizon(spine, dropNullKeyed(f0, joinKeys :+ fts), spineTs, fts,
+        maxStaleness)
       f.select(
         (joinKeys.map(col) ++
          Seq(col(fts).as(TS), lit(0).as(SIDE)) ++
          features.indices.map { j =>
-           if (j == i) struct(payload.map(c => col(c).as(c)): _*).as(s"$P$j")
+           if (j == i) struct(payload.map(c => col(c).as(c)) ++
+             maxStaleness.map(_ => col(fts).as(FTS)): _*).as(s"$P$j")
            else lit(null).cast(pktTypes(j)).as(s"$P$j")
          } ++
-         spineCols.filterNot(joinKeys.contains)
-           .map(c => lit(null).cast(fieldType(spine, c)).as(s"__sp_$c"))): _*)
+         spCols.map(c => lit(null).cast(fieldType(spine, c)).as(s"__sp_$c"))): _*)
     }
     val taggedSpine = spine.select(
       (joinKeys.map(col) ++
        Seq(col(spineTs).as(TS), lit(1).as(SIDE)) ++
        features.indices.map(j => lit(null).cast(pktTypes(j)).as(s"$P$j")) ++
-       spineCols.filterNot(joinKeys.contains).map(c => col(c).as(s"__sp_$c"))): _*)
+       spCols.map(c => col(c).as(s"__sp_$c"))): _*)
     val unioned = (taggedFeatures :+ taggedSpine).reduce(_ unionByName _)
 
     // One tie-break key per FV: a given FV's packet is null on every other
@@ -249,48 +178,54 @@ object AsOfJoin {
     val orderCols = Seq(col(TS).asc, col(SIDE).asc) ++
       features.indices.map(j => tb(j).asc_nulls_first)
 
-    def finishMulti(carried: DataFrame): DataFrame = {
+    // Keep spine rows, restore spine column names, apply the staleness TTL
+    // (a carried row older than spineTs − ttl is no match at all: the
+    // latest-≤ match is the freshest candidate, so nothing fresher
+    // exists), unpack every payload.
+    def finish(carried: DataFrame): DataFrame = {
       val out = carried.filter(col(SIDE) === 1).drop(SIDE)
-      val renamed = spineCols.filterNot(joinKeys.contains)
-        .foldLeft(out)((df, c) => df.withColumnRenamed(s"__sp_$c", c))
+      val renamed = spCols.foldLeft(out)((df, c) => df.withColumnRenamed(s"__sp_$c", c))
       val unpacked = features.zipWithIndex.flatMap { case ((_, _, payload), j) =>
-        payload.map(c => col(s"$P$j").getField(c).as(c))
+        val pkt = maxStaleness match {
+          case Some(iv) => when(
+            col(s"$P$j").getField(FTS) >= col(spineTs) - expr(s"INTERVAL $iv"), col(s"$P$j"))
+          case None => col(s"$P$j")
+        }
+        payload.map(c => pkt.getField(c).as(c))
       }
       renamed.select((spineCols.map(col) ++ unpacked): _*)
     }
 
-    val hot =
-      if (salted) detectHotKeys(unioned, joinKeys,
-        statsFrames = spine +: features.map(_._1), cacheKey = hotKeyCacheKey)
-      else None
-    hot match {
+    // Bound detection from the raw sides: the packed union's width estimate
+    // inflates with one struct per feature view.
+    detectHotKeys(unioned, joinKeys, statsFrames = spine +: features.map(_._1),
+        cacheKey = hotKeyCacheKey) match {
       case None =>
         // N feature views, still ONE shuffle + ONE sort: every last()
         // shares the same window frame.
         val w = Window.partitionBy(joinKeys.map(col): _*)
           .orderBy(orderCols: _*)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        finishMulti(unioned.select(
+        finish(unioned.select(
           (Seq(col(SIDE)) ++
            joinKeys.map(col) ++
-           spineCols.filterNot(joinKeys.contains).map(c => col(s"__sp_$c")) ++
+           spCols.map(c => col(s"__sp_$c")) ++
            features.indices.map(j =>
              last(col(s"$P$j"), ignoreNulls = true).over(w).as(s"$P$j"))): _*))
 
       case Some((hotDf, numBuckets)) =>
-        // Two-level salted variant of the shared window: the SAME
-        // saltedCarry pipeline as the single-FV strategy, with one packet
-        // + tie-break pair per FV all riding one per-(key, bucket) sort
-        // and one tiny grid window. Still one big shuffle + one detection
-        // pass + one hot-rows summary pass for N feature views.
-        finishMulti(saltedCarry(unioned, hotDf, numBuckets, joinKeys,
-          spineCols.filterNot(joinKeys.contains).map(c => s"__sp_$c"),
+        // Two-level salted variant of the shared window: one packet +
+        // tie-break pair per FV, all riding one per-(key, bucket) sort and
+        // one tiny grid window. Still one big shuffle + one detection pass
+        // + one hot-rows summary pass for N feature views.
+        finish(saltedCarry(unioned, hotDf, numBuckets, joinKeys,
+          spCols.map(c => s"__sp_$c"),
           features.indices.map(j => (s"$P$j", tb(j)))))
     }
   }
 
   /** Semi-join reduction of the feature side by the spine's key set — the
-    * "spine is a sample, history is the corpus" lever. The union-window plan
+    * "spine is a sample, history is the corpus" lever. The window plan
     * has no join node, so Catalyst's runtime row-level filtering can never
     * inject this itself: without it, ALL feature history shuffles by key
     * even when the spine touches 0.1% of keys. A feature row whose key is
@@ -302,8 +237,8 @@ object AsOfJoin {
     *
     * The semi-join condition is plain equi (`===`), matching the pinned
     * NULL-key semantics: a NULL-keyed feature row can never match any spine
-    * row, so dropping it here is exact (both strategies independently
-    * enforce the same rule).
+    * row, so dropping it here is exact (`dropNullKeyed` enforces the same
+    * rule when the reduction is skipped).
     */
   private def prefilterBySpineKeys(
       spine: DataFrame, features: DataFrame, joinKeys: Seq[String]): DataFrame = {
@@ -322,7 +257,7 @@ object AsOfJoin {
     * with any NULL join key (or NULL feature ts — `fts <= sts` is never true
     * for NULL) can never match, but `Window.partitionBy` would group NULL
     * keys with NULL-keyed spine rows (GROUP BY semantics) and a NULL ts
-    * sorts FIRST under `orderBy(ts asc)` — so the window strategies drop
+    * sorts FIRST under `orderBy(ts asc)` — so the window plan drops
     * those rows from the union explicitly. Pass the ts column in `cols`.
     */
   private def dropNullKeyed(features: DataFrame, cols: Seq[String]): DataFrame =
@@ -368,10 +303,14 @@ object AsOfJoin {
 
   private val SIDE = "__graft_side"
   private val TS = "__graft_ts"
-  private val PKT = "__graft_pkt"
   private val FTS = "__graft_fts"
   private val BKT = "__graft_bkt"
   private val BOUNDS = "__graft_bounds"
+
+  /** Detection keeps at most this many of the heaviest hot keys. */
+  private val MaxHotKeys = 1000
+  /** The stats short-circuit's bytes-per-row floor (see detectHotKeysUncached). */
+  private val MinBytesPerRow = 2L
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.pit.AsOfJoin")
 
@@ -392,9 +331,8 @@ object AsOfJoin {
     * the first batch's verdict is safe: salting any key is always correct,
     * and a missed borderline key leaves the pre-existing unsalted plan
     * (a micro-batch spine is bounded by the trigger interval anyway).
-    * Every conf knob detection reads, the stats short-circuit's
-    * `minBytesPerRow` included, is folded into the key so a retuned knob
-    * is a miss.
+    * Every conf knob detection reads is folded into the key so a retuned
+    * knob is a miss.
     * Bounded: access-order LRU capped at 256 entries — eviction drops the
     * coldest verdict only, so a long-running serving session's actively
     * reused hot entries survive cache churn (an all-or-nothing clear
@@ -412,12 +350,12 @@ object AsOfJoin {
       })
   private[graft] def clearHotKeyCache(): Unit = hotKeyCache.clear()
 
-  /** Eager sampled hot-key detection shared by the salted strategies (the
-    * one plan-build-time action; same precedent as IVF's trainCentroids):
-    * per-key sampled union row count + in-key ts quantiles as bucket
-    * boundaries, keys whose estimated count clears the threshold only,
-    * capped at the maxHotKeys heaviest, collected (model-scale) for
-    * literal broadcast. Sampling keeps the pass cheap (a full-rate per-key
+  /** Eager sampled hot-key detection (the one plan-build-time action;
+    * same precedent as IVF's trainCentroids): per-key sampled union row
+    * count + in-key ts quantiles as bucket boundaries, keys whose
+    * estimated count clears the threshold only, capped at the `MaxHotKeys`
+    * heaviest, collected (model-scale) for literal broadcast. Sampling
+    * keeps the pass cheap (a full-rate per-key
     * percentile_approx was measured to DOUBLE the join's wall time) and is
     * safe: engagement noise around the threshold is harmless because
     * salting any key is always correct and missing a borderline key leaves
@@ -429,8 +367,8 @@ object AsOfJoin {
     */
   private def detectHotKeys(
       unioned: DataFrame, joinKeys: Seq[String],
-      statsFrames: Seq[DataFrame] = Seq.empty,
-      cacheKey: Option[String] = None): Option[(DataFrame, Int)] = {
+      statsFrames: Seq[DataFrame],
+      cacheKey: Option[String]): Option[(DataFrame, Int)] = {
     def rebuild(raw: Option[(Array[Row], StructType, Int)]): Option[(DataFrame, Int)] =
       raw.map { case (rows, schema, nb) =>
         (unioned.sparkSession.createDataFrame(
@@ -439,8 +377,7 @@ object AsOfJoin {
     cacheKey match {
       case Some(k0) =>
         val conf = unioned.sparkSession.conf
-        val k = k0 + "|" + Seq("buckets", "hotKeyThreshold", "sampleRate", "maxHotKeys",
-            "minBytesPerRow")
+        val k = k0 + "|" + Seq("buckets", "hotKeyThreshold", "sampleRate")
           .map(s => conf.get(s"graft.asof.salt.$s", "")).mkString(",")
         val hit = hotKeyCache.get(k)
         if (hit != null) rebuild(hit)
@@ -460,7 +397,6 @@ object AsOfJoin {
     val numBuckets = conf.get("graft.asof.salt.buckets", "16").toInt
     val hotThreshold = conf.get("graft.asof.salt.hotKeyThreshold", "2000000").toLong
     val sampleRate = conf.get("graft.asof.salt.sampleRate", "0.01").toDouble
-    val maxHotKeys = conf.get("graft.asof.salt.maxHotKeys", "1000").toInt
     require(numBuckets >= 2, s"graft.asof.salt.buckets must be >= 2, got $numBuckets")
     // Stats short-circuit: a hot key needs >= hotThreshold rows, so a
     // relation that provably holds fewer rows cannot contain one and the
@@ -472,17 +408,15 @@ object AsOfJoin {
     // INCLUDING the timestamp, which the as-of contract precludes. Any
     // production-scale input exceeds the cutoff trivially, so this only
     // fires where it should: small unions that cannot be skewed enough
-    // to matter. `statsFrames` lets the multi-FV path bound from its RAW
-    // sides: the packed union's width estimate inflates with one struct
-    // per feature view, which defeated the bound while the true row count
-    // (= Σ side rows) was far below the threshold.
-    val minBytesPerRow = conf.get("graft.asof.salt.minBytesPerRow", "2").toLong
+    // to matter. `statsFrames` are the RAW sides: the packed union's width
+    // estimate inflates with one struct per feature view, which defeated
+    // the bound while the true row count (= Σ side rows) was far below the
+    // threshold.
     val provablySmall = {
-      val frames = if (statsFrames.nonEmpty) statsFrames else Seq(unioned)
-      val st = frames.map(_.queryExecution.optimizedPlan.stats)
+      val st = statsFrames.map(_.queryExecution.optimizedPlan.stats)
       val small =
         if (st.forall(_.rowCount.isDefined)) st.map(_.rowCount.get).sum < hotThreshold
-        else st.map(_.sizeInBytes).sum < BigInt(hotThreshold) * minBytesPerRow
+        else st.map(_.sizeInBytes).sum < BigInt(hotThreshold) * MinBytesPerRow
       // diagnosable bypass: a heavily-RLE-compressed skewed corpus could
       // fall under the bytes fallback and silently skip the skew
       // mitigation — leave the evidence in the log
@@ -490,7 +424,7 @@ object AsOfJoin {
         log.debug(s"hot-key detection short-circuited: ${st.size} frame(s), " +
           s"rowCounts=${st.map(_.rowCount).mkString(",")}, " +
           s"sizeInBytes=${st.map(_.sizeInBytes).mkString(",")}, " +
-          s"threshold=$hotThreshold (minBytesPerRow=$minBytesPerRow)")
+          s"threshold=$hotThreshold (bytes-per-row floor $MinBytesPerRow)")
       small
     }
     if (provablySmall) return None
@@ -504,7 +438,7 @@ object AsOfJoin {
       .filter(col("__graft_cnt") >= math.max(1L, math.round(hotThreshold * sampleRate)) &&
         col(BOUNDS).isNotNull)
       .orderBy(col("__graft_cnt").desc)
-      .limit(maxHotKeys)
+      .limit(MaxHotKeys)
       .select(joinKeys.map(k => col(k).as(s"__hk_$k")) :+ col(BOUNDS): _*)
     val hotRows = det.collect()
     if (hotRows.isEmpty) None
@@ -532,7 +466,7 @@ object AsOfJoin {
     hotDf.select(joinKeys.map(k => col(s"__hk_$k").as(k)): _*)
       .withColumn(BKT, explode(sequence(lit(0), lit(numBuckets - 1))))
 
-  /** The shared two-level salted carry pipeline (single- and multi-FV):
+  /** The two-level salted carry pipeline:
     *
     * Level 1 — bucketize the tagged union and run the carry window per
     * (keys, bucket) with the SAME ordering/tie-break as the unsalted
@@ -540,8 +474,8 @@ object AsOfJoin {
     *
     * Level 2 — per-(hot key, bucket) winning packet per feature view, ONE
     * aggregation over the hot-key FEATURE rows only (inner broadcast
-    * join); the max_by ordering is null-guarded per packet so (in the
-    * multi case) other FVs' rows never displace a real winner. Every
+    * join); the max_by ordering is null-guarded per packet so other
+    * FVs' rows never displace a real winner. Every
     * bucket's carry-in = the latest winner among all earlier buckets,
     * computed over the dense (hotKeys × numBuckets) grid so spine-only
     * buckets inherit one. The final coalesce(localCarry, carryIn) is exact
@@ -550,8 +484,8 @@ object AsOfJoin {
     *
     * @param pkts one (packetColumn, tieBreakColumn) per feature view
     * @param spCols passthrough `__sp_*` spine column names
-    * @return frame with (SIDE, joinKeys, spCols, packet columns) — the
-    *         caller applies its own finishing step
+    * @return frame with (SIDE, joinKeys, spCols, packet columns) for the
+    *         caller's finishing step
     */
   private def saltedCarry(
       unioned: DataFrame,
@@ -595,186 +529,36 @@ object AsOfJoin {
     }.drop(BKT)
   }
 
-  /** Shared tagging step of the window strategies: features → (keys, ts,
-    * side=0, pkt struct, null spine cols); spine → (keys, ts, side=1, null
-    * pkt, spine cols as `__sp_*`); unioned.
-    *
-    * The matched feature row travels as ONE struct (non-null exactly on
-    * feature rows), so `last(pkt, ignoreNulls)` attaches the latest
-    * qualifying row wholesale — a NULL field inside that row stays NULL
-    * (ASOF semantics) instead of being back-filled from an older row,
-    * which per-column carry-forward would do.
-    */
-  private def tagAndUnion(
+  /** The non-equi reference the window plan is tested against: left join
+    * on keys + `fts <= sts` (+ the TTL bound), then keep the max `fts` per
+    * spine row, same tie-break. Its intermediate product is
+    * O(|spine_k| × |features_k|) per key, so it is no production path. */
+  private[graft] def joinFilter(
       spine: DataFrame,
       features: DataFrame,
       joinKeys: Seq[String],
       spineTs: String,
       featureTs: String,
       payload: Seq[String],
-      maxStaleness: Option[String]): DataFrame = {
-    val spineCols = spine.columns.toSeq
-    val pktType = StructType(
-      payload.map(c => StructField(c, fieldType(features, c))) :+
-      StructField(FTS, fieldType(features, featureTs)))
-
-    val fSel: Seq[Column] =
-      joinKeys.map(col) ++
-      Seq(col(featureTs).as(TS), lit(0).as(SIDE),
-        struct(payload.map(c => col(c).as(c)) :+ col(featureTs).as(FTS): _*).as(PKT)) ++
-      spineCols.filterNot(c => joinKeys.contains(c)).map(c => lit(null).cast(fieldType(spine, c)).as(s"__sp_$c"))
-    val fPruned = pruneToHorizon(spine, dropNullKeyed(features, joinKeys :+ featureTs),
-      spineTs, featureTs, maxStaleness)
-    val fTagged = fPruned.select(fSel: _*)
-
-    val sSel: Seq[Column] =
-      joinKeys.map(col) ++
-      Seq(col(spineTs).as(TS), lit(1).as(SIDE), lit(null).cast(pktType).as(PKT)) ++
-      spineCols.filterNot(c => joinKeys.contains(c)).map(c => col(c).as(s"__sp_$c"))
-    val sTagged = spine.select(sSel: _*)
-    fTagged.unionByName(sTagged)
-  }
-
-  /** Shared finishing step: keep spine rows, restore spine column names,
-    * apply the staleness TTL to the carried packet, unpack the payload.
-    * TTL: a carried row older than spineTs − staleness is no match at all —
-    * null the whole packet (the latest-≤ match is the freshest candidate,
-    * so there is nothing fresher to fall back to).
-    */
-  private def finishCarried(
-      carried: DataFrame,
-      spineCols: Seq[String],
-      joinKeys: Seq[String],
-      spineTs: String,
-      payload: Seq[String],
-      includeFeatureTs: Option[String],
-      maxStaleness: Option[String]): DataFrame = {
-    val out = carried.filter(col(SIDE) === 1).drop(SIDE)
-    val renamed = spineCols.filterNot(joinKeys.contains)
-      .foldLeft(out)((df, c) => df.withColumnRenamed(s"__sp_$c", c))
-    val pkt = maxStaleness match {
-      case Some(iv) =>
-        when(col(PKT).getField(FTS) >= col(spineTs) - expr(s"INTERVAL $iv"), col(PKT))
-      case None => col(PKT)
-    }
-    renamed.select(
-      (spineCols.map(col) ++
-       payload.map(c => pkt.getField(c).as(c)) ++
-       includeFeatureTs.map(a => pkt.getField(FTS).as(a)).toSeq): _*)
-  }
-
-  private def unionWindow(
-      spine: DataFrame,
-      features: DataFrame,
-      joinKeys: Seq[String],
-      spineTs: String,
-      featureTs: String,
-      payload: Seq[String],
-      includeFeatureTs: Option[String],
       maxStaleness: Option[String] = None): DataFrame = {
-    val spineCols = spine.columns.toSeq
-    val unioned = tagAndUnion(spine, features, joinKeys, spineTs, featureTs, payload, maxStaleness)
-
-    // One shuffle: partition by keys, order by (ts, side) so features at the
-    // same instant sort before the spine row → inclusive `<=` bound. The
-    // third sort key is the documented tie-break: among feature rows at the
-    // SAME (key, ts), the greater last-payload value sorts last and wins
-    // `last()` — without it the winner is partition-order-dependent.
-    val w = Window.partitionBy(joinKeys.map(col): _*)
-      .orderBy(col(TS).asc, col(SIDE).asc,
-        col(PKT).getField(payload.last).asc_nulls_first)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val carried = unioned.select(
-      (Seq(col(SIDE)) ++
-       joinKeys.map(col) ++
-       spineCols.filterNot(joinKeys.contains).map(c => col(s"__sp_$c")) ++
-       Seq(last(col(PKT), ignoreNulls = true).over(w).as(PKT))): _*)
-
-    finishCarried(carried, spineCols, joinKeys, spineTs, payload, includeFeatureTs, maxStaleness)
-  }
-
-  /** Hot-key-skew-safe union-window (strategy `"salted-window"`; see the
-    * object scaladoc for the two-level design and its correctness argument).
-    *
-    * Scale notes: the detection aggregation is sampled and map-side
-    * combined, so its shuffle is one ~(key, count, boundaries) row per
-    * sampled distinct key — tiny bytes even at billions of keys — and the
-    * hot set it collects is by construction a bounded set of heavy
-    * hitters. Beyond union-window, the inputs are read twice more: the
-    * sampled detection job (eager, once per call) and the bucket-summary
-    * pass (lazy, pruned to hot-key feature rows by an inner broadcast
-    * join). At scale that trade — two extra cheap passes for never
-    * serializing a hot key in one task — is the right one, so this is
-    * the default strategy (see `resolveMethod`): a default-path plan
-    * build runs the eager detection job once per hot-key memo miss, and
-    * only `graft.asof.method=union-window` keeps plan construction lazy
-    * and job-free. Bucket boundaries
-    * come from `percentile_approx` over a monotone numeric image of the
-    * event time (`cast double`; a type with no such image degrades to
-    * bucket 0 = the unsalted plan, still correct). AQE cannot split window
-    * partitions, so this two-level carry is the only way to parallelize a
-    * hot key's sort.
-    */
-  private def saltedUnionWindow(
-      spine: DataFrame,
-      features: DataFrame,
-      joinKeys: Seq[String],
-      spineTs: String,
-      featureTs: String,
-      payload: Seq[String],
-      includeFeatureTs: Option[String],
-      maxStaleness: Option[String],
-      hotKeyCacheKey: Option[String] = None): DataFrame = {
-    val spineCols = spine.columns.toSeq
-    val unioned = tagAndUnion(spine, features, joinKeys, spineTs, featureTs, payload, maxStaleness)
-
-    // No hot keys → the plain union-window plan: zero salting overhead
-    // beyond the detection job (see detectHotKeys). Bound from the raw
-    // sides: the packed union's struct width inflates its size estimate.
-    val (hotDf, numBuckets) = detectHotKeys(unioned, joinKeys,
-        statsFrames = Seq(spine, features), cacheKey = hotKeyCacheKey) match {
-      case None =>
-        return unionWindow(spine, features, joinKeys, spineTs, featureTs, payload,
-          includeFeatureTs, maxStaleness)
-      case Some(h) => h
-    }
-    val merged = saltedCarry(unioned, hotDf, numBuckets, joinKeys,
-      spineCols.filterNot(joinKeys.contains).map(c => s"__sp_$c"),
-      Seq((PKT, col(PKT).getField(payload.last))))
-    finishCarried(merged, spineCols, joinKeys, spineTs, payload, includeFeatureTs, maxStaleness)
-  }
-
-  private def joinFilter(
-      spine: DataFrame,
-      features: DataFrame,
-      joinKeys: Seq[String],
-      spineTs: String,
-      featureTs: String,
-      payload: Seq[String],
-      includeFeatureTs: Option[String],
-      maxStaleness: Option[String],
-      hint: Boolean): DataFrame = {
     val RID = "__graft_rid"
     val RN = "__graft_rn"
     val s = spine.withColumn(RID, monotonically_increasing_id())
-    val f0 = features.select((joinKeys.map(c => col(c).as(s"__f_$c")) ++
+    val f = features.select((joinKeys.map(c => col(c).as(s"__f_$c")) ++
       Seq(col(featureTs).as("__f_ts")) ++ payload.map(c => col(c).as(s"__f_$c"))): _*)
-    val f = if (hint) broadcast(f0) else f0
     val cond = joinKeys.map(k => s(k) === f(s"__f_$k")).reduce(_ && _) &&
       (f("__f_ts") <= s(spineTs)) &&
       maxStaleness.map(iv => f("__f_ts") >= s(spineTs) - expr(s"INTERVAL $iv"))
         .getOrElse(lit(true))
     val joined = s.join(f, cond, "left")
-    // same documented tie-break as union-window: among equal fts, the
-    // greater last-payload value wins row_number 1
+    // the documented tie-break: among equal fts, the greater last-payload
+    // value wins row_number 1
     val w = Window.partitionBy(col(RID)).orderBy(
       col("__f_ts").desc_nulls_last,
       col(s"__f_${payload.last}").desc_nulls_last)
     joined.withColumn(RN, row_number().over(w))
       .filter(col(RN) === 1)
       .select((spine.columns.toSeq.map(col) ++
-        payload.map(c => col(s"__f_$c").as(c)) ++
-        includeFeatureTs.map(a => col("__f_ts").as(a)).toSeq): _*)
+        payload.map(c => col(s"__f_$c").as(c))): _*)
   }
 }

@@ -1067,17 +1067,20 @@ object PipelineQueries {
       // and Filter conditions get no common-subexpression elimination,
       // so the pushed-down qualityKeep re-tokenized every row ~10×
       // (plans/r17/q95_corpus_prep_after.txt, Filter(2) on the scan).
-      // The lazy localCheckpoint is an optimizer barrier: tokens are
-      // materialized ONCE per row, post-spread (parallel), and the gate
-      // filters the cached array. Downstream aggregates are integer/min
-      // — partitioning-independent.
+      // The lazy localCheckpoint is an optimizer barrier: tokens and the
+      // keep bit are materialized ONCE per row, post-spread (parallel),
+      // and the gate filters the cached bit. The bit is projected before
+      // the barrier: a projection shares one GramStatsExpr call among
+      // qualityKeep's four reads, a Filter condition calls it four times
+      // (and pushdown would inline a bit projected after the barrier).
+      // Downstream aggregates are integer/min — partitioning-independent.
       val tokped = graft.operators.Spread.forCompute(Tables.documents(s, dir))
         .withColumn("__t", toks)
+        .withColumn("__keep", TextFunctions.qualityKeep(col("__t")))
         .localCheckpoint(false)
       val gated = tokped
-        .filter(size(col("__t")) > 0)
-        .filter(TextFunctions.qualityKeep(col("__t")))
-        .drop("__t")
+        .filter(size(col("__t")) > 0 && col("__keep"))
+        .drop("__t", "__keep")
       val canon = gated.groupBy(col("text"))
         .agg(min(col("doc_id")).as("doc_id"),
           min_by(col("source"), col("doc_id")).as("source"))
@@ -1653,14 +1656,15 @@ object PipelineQueries {
       val toks = filter(split(lower(col("text")), "\\s+"), x => length(x) > 0)
       // spread + RDD barrier — see q95: pushdown re-inlined the gate
       // below the exchange with ~10× re-tokenization; the lazy
-      // localCheckpoint materializes tokens once per row, post-spread.
+      // localCheckpoint materializes tokens and the keep bit once per
+      // row, post-spread (the bit is projected, as in q95).
       // Packing is md5-order deterministic (r17).
       val gated = graft.operators.Spread.forCompute(Tables.documents(s, dir))
         .withColumn("__t", toks)
+        .withColumn("__keep", TextFunctions.qualityKeep(col("__t")))
         .localCheckpoint(false)
-        .filter(size(col("__t")) > 0)
-        .filter(TextFunctions.qualityKeep(col("__t")))
-        .drop("__t")
+        .filter(size(col("__t")) > 0 && col("__keep"))
+        .drop("__t", "__keep")
       val canon = gated.groupBy(col("text"))
         .agg(min(col("doc_id")).as("doc_id"))
       graft.functions.ShardExport.shardManifest(

@@ -171,7 +171,7 @@ object RelationalQueries {
       building.intersect(bigSpenders).exceptAll(fulfilled).distinct()
     }),
 
-    // B17 ⭐ — point-in-time (as-of) join, union-window strategy
+    // B17 ⭐ — point-in-time (as-of) join (no key is hot: the plain union window)
     "q14_asof" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
       val spine = ev.filter(col("event_type") === "purchase")
@@ -183,8 +183,8 @@ object RelationalQueries {
         featureCols = Seq("f_view_value"))
     }),
 
-    // B17 ⭐ — the same point-in-time join on the salted-window strategy,
-    // with thresholds forced low enough that the two-level hot-key path
+    // B17 ⭐ — the same point-in-time join with salting engaged: thresholds
+    // forced low enough that the two-level hot-key path
     // actually ENGAGES at this sf (full-rate detection, every key over 40
     // union rows bucketed 4-ways) — the driver hash-checks it against the
     // identical DuckDB ASOF oracle as q14, so the skew-safe plan is pinned
@@ -203,7 +203,7 @@ object RelationalQueries {
         // conf is read eagerly at plan-build (detection job included), so
         // the settings can be restored before the lazy frame is returned
         AsOfJoin.joinAsOf(spine, features, Seq("user_id"), "ts", "ts",
-          featureCols = Seq("f_view_value"), method = "salted-window")
+          featureCols = Seq("f_view_value"))
       } finally {
         s.conf.unset("graft.asof.salt.hotKeyThreshold")
         s.conf.unset("graft.asof.salt.sampleRate")

@@ -1209,10 +1209,13 @@ object DeltaInterop {
     * subset when given; unsupported-typed columns get a nullCount only
     * (still enough for IsNull pruning). Feed the result to
     * [[writeCommit]]'s `stats` and [[importSnapshotWhere]] prunes on it.
+    * A caller that holds the files' schema passes it as `dataSchema`: the
+    * read then infers nothing (no footer-read Spark job).
     */
   def computeAddStats(
       spark: SparkSession, deltaDir: String, rels: Seq[String],
-      columns: Seq[String] = Nil): Map[String, String] = {
+      columns: Seq[String] = Nil,
+      dataSchema: Option[org.apache.spark.sql.types.StructType] = None): Map[String, String] = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     if (rels.isEmpty) return Map.empty
@@ -1222,7 +1225,7 @@ object DeltaInterop {
       require(Files.exists(p), s"stats requested for a file not on disk: $p")
       p
     }
-    val df = spark.read.parquet(paths.map(_.toString): _*)
+    val df = dataSchema.fold(spark.read)(spark.read.schema(_)).parquet(paths.map(_.toString): _*)
     def boundable(dt: DataType): Boolean = dt match {
       case ByteType | ShortType | IntegerType | LongType | FloatType |
            DoubleType | StringType | BooleanType | DateType | TimestampType => true
@@ -1896,7 +1899,8 @@ object DeltaInterop {
             Files.move(part, root.resolve(rel))
             rel -> pv
           }
-        (landed, computeAddStats(spark, deltaDir, landed.map(_._1)))
+        (landed, computeAddStats(spark, deltaDir, landed.map(_._1),
+          dataSchema = Some(dataSchema)))
       }
 
       // the change data: pre-images from the match pass, post-images and

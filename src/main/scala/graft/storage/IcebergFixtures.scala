@@ -36,7 +36,7 @@ import org.apache.spark.sql.types._
   */
 object IcebergFixtures {
 
-  import IcebergInterop.{fld, mapFld, mapper, writeAvro, icebergSchemaJson, manifestFileSchema}
+  import IcebergInterop.{fld, mapFld, mapper, writeAvro, icebergSchemaJson}
 
   private[storage] def partitionStruct(fields: Seq[(String, Schema, Int)]): Schema = {
     val s = Schema.createRecord("r102", null, "iceberg", false)
@@ -274,7 +274,7 @@ object IcebergFixtures {
       (f, part, n)
     }
     val specJson = s"""[{"name":"$partCol","transform":"identity","source-id":${partIdx + 1},"field-id":1000}]"""
-    writeV1Meta(out, schemaJson, lastColumnId, specJson, pStruct,
+    IcebergInterop.writeV1Meta(out, schemaJson, lastColumnId, specJson, pStruct,
       withParts, lastPartitionId = 1000)
     files.map(_._2)
   }
@@ -342,77 +342,8 @@ object IcebergFixtures {
     val specJson = fields.zipWithIndex.map { case ((n, t, src, _), i) =>
       s"""{"name":"$n","transform":"$t","source-id":${schema.fieldIndex(src) + 1},"field-id":${1000 + i}}"""
     }.mkString("[", ",", "]")
-    writeV1Meta(out, schemaJson, lastColumnId, specJson, pStruct, files,
+    IcebergInterop.writeV1Meta(out, schemaJson, lastColumnId, specJson, pStruct, files,
       lastPartitionId = 1000 + fields.size - 1)
-  }
-
-  /** Shared v1 metadata tail: one manifest over `files` (path, partition
-    * record, row count), a one-manifest list, and the v1.metadata.json
-    * published through [[IcebergInterop.publish]] — spec "Table Metadata".
-    */
-  private def writeV1Meta(out: Path, schemaJson: String, lastColumnId: Int,
-      specJson: String, pStruct: Schema,
-      files: Seq[(Path, GenericRecord, Long)], lastPartitionId: Int): Unit = {
-    val metaDir = out.resolve("metadata")
-    Files.createDirectories(metaDir)
-    val snapshotId = 4242L
-    val eSchema = entrySchema(pStruct, v2 = false)
-    val entries = files.map { case (f, part, n) =>
-      val dfr = new GenericData.Record(eSchema.getField("data_file").schema())
-      dfr.put("file_path", f.toUri.toString)
-      dfr.put("file_format", "PARQUET")
-      dfr.put("partition", part)
-      dfr.put("record_count", n)
-      dfr.put("file_size_in_bytes", Files.size(f))
-      dfr.put("block_size_in_bytes", 64L * 1024 * 1024)
-      val e = new GenericData.Record(eSchema)
-      e.put("status", 1)
-      e.put("snapshot_id", snapshotId)
-      e.put("data_file", dfr)
-      e
-    }
-    val manifestPath = metaDir.resolve("fixture-m0.avro")
-    writeAvro(manifestPath, eSchema, entries, Map(
-      "schema" -> schemaJson, "partition-spec" -> specJson,
-      "partition-spec-id" -> "0", "format-version" -> "1"))
-    val mf = new GenericData.Record(manifestFileSchema)
-    mf.put("manifest_path", manifestPath.toUri.toString)
-    mf.put("manifest_length", Files.size(manifestPath))
-    mf.put("partition_spec_id", 0)
-    mf.put("added_snapshot_id", snapshotId)
-    mf.put("added_data_files_count", files.size)
-    mf.put("existing_data_files_count", 0)
-    mf.put("deleted_data_files_count", 0)
-    mf.put("added_rows_count", files.map(_._3).sum)
-    mf.put("existing_rows_count", 0L)
-    mf.put("deleted_rows_count", 0L)
-    val manifestListPath = metaDir.resolve(s"snap-$snapshotId-1-fixture.avro")
-    writeAvro(manifestListPath, manifestFileSchema, Seq(mf), Map("format-version" -> "1"))
-
-    val root = mapper.createObjectNode()
-    root.put("format-version", 1)
-    root.put("table-uuid", java.util.UUID.randomUUID().toString)
-    root.put("location", out.toString)
-    root.put("last-updated-ms", 0L)
-    root.put("last-column-id", lastColumnId)
-    root.set[com.fasterxml.jackson.databind.JsonNode]("schema", mapper.readTree(schemaJson))
-    val specs = root.putArray("partition-specs")
-    val spec0 = specs.addObject()
-    spec0.put("spec-id", 0)
-    spec0.set[com.fasterxml.jackson.databind.JsonNode]("fields", mapper.readTree(specJson))
-    root.put("default-spec-id", 0)
-    root.put("last-partition-id", lastPartitionId)
-    root.putObject("properties")
-    root.put("current-snapshot-id", snapshotId)
-    val snaps = root.putArray("snapshots")
-    val snap = snaps.addObject()
-    snap.put("snapshot-id", snapshotId)
-    snap.put("timestamp-ms", 0L)
-    snap.putObject("summary").put("operation", "append")
-    snap.put("manifest-list", manifestListPath.toUri.toString)
-    root.putArray("snapshot-log")
-    root.putArray("metadata-log")
-    IcebergInterop.publish(metaDir, 1L, root)
   }
 
   /** A format-v2 table whose history makes SEQUENCE ordering observable:

@@ -441,14 +441,7 @@ object IcebergInterop {
       .getOrElse(throw new IllegalArgumentException(
         s"no current-snapshot-id at $icebergDir"))
     require(snapId != -1L, s"table at $icebergDir has no current snapshot")
-    val schemaNode =
-      if (meta.has("schemas")) {
-        val cur = meta.get("current-schema-id").asInt()
-        meta.get("schemas").elements().asScala
-          .find(_.get("schema-id").asInt() == cur)
-          .getOrElse(throw new IllegalArgumentException(
-            s"current-schema-id $cur not in the schemas list"))
-      } else meta.get("schema")
+    val schemaNode = currentSchemaNode(meta)
     val schema = sparkSchemaFrom(schemaNode)
     val idToName: Map[Int, String] = schemaNode.get("fields").elements().asScala
       .map(f => f.get("id").asInt() -> f.get("name").asText()).toMap
@@ -539,9 +532,11 @@ object IcebergInterop {
     * list, the metadata JSON (spec fields from `specJson`) and the
     * HadoopTables version hint. Partition-aware superset of the
     * unpartitioned tail [[exportSnapshot]]/[[convertFromDelta]] always
-    * wrote; identity specs land here from partitioned Delta tables.
+    * wrote; identity specs land here from partitioned Delta tables, and
+    * the partitioned v1 test fixtures ([[IcebergFixtures]]) write theirs
+    * through it too.
     */
-  private def writeV1Meta(out: Path, schemaJson: String,
+  private[storage] def writeV1Meta(out: Path, schemaJson: String,
       lastColumnId: Int, specJson: String, pStruct: Schema,
       files: Seq[(Path, GenericRecord, Long)], lastPartitionId: Int,
       properties: Map[String, String] = Map.empty,
@@ -883,6 +878,18 @@ object IcebergInterop {
     (v, meta)
   }
 
+  /** The current schema node: v2 metadata carries `schemas` +
+    * `current-schema-id`, v1 the single `schema` key (spec "Table
+    * Metadata", both fields listed). */
+  private def currentSchemaNode(meta: JsonNode): JsonNode =
+    if (meta.has("schemas")) {
+      val cur = meta.get("current-schema-id").asInt()
+      meta.get("schemas").elements().asScala
+        .find(_.get("schema-id").asInt() == cur)
+        .getOrElse(throw new IllegalArgumentException(
+          s"current-schema-id $cur not in the schemas list"))
+    } else meta.get("schema")
+
   /** One live file of a snapshot: the manifest-declared path (verbatim —
     * [[resolve]] makes it absolute), declared size, record count, the
     * manifest entry's partition-struct values keyed by spec field name
@@ -1144,16 +1151,7 @@ object IcebergInterop {
       specFieldNodes.partition(_.get("transform").asText() == "identity")
     val partNames = identityFieldNodes.map(_.get("name").asText())
 
-    // v2 metadata carries `schemas` + `current-schema-id`; v1 the single
-    // `schema` key (spec "Table Metadata", both fields listed)
-    val schemaNode =
-      if (meta.has("schemas")) {
-        val cur = meta.get("current-schema-id").asInt()
-        meta.get("schemas").elements().asScala
-          .find(_.get("schema-id").asInt() == cur)
-          .getOrElse(throw new IllegalArgumentException(
-            s"current-schema-id $cur not in the schemas list"))
-      } else meta.get("schema")
+    val schemaNode = currentSchemaNode(meta)
     // Iceberg resolves columns by FIELD ID, this bridge reads parquet by
     // NAME — a column RENAME anywhere in the schema history means data
     // files written under the old name would silently read as NULL under
@@ -1678,14 +1676,7 @@ object IcebergInterop {
       "deleteWhere appends a sequence-gated v2 delete snapshot; a " +
         "format-v1 table has no sequence numbers — refusing")
     val currentSnap = meta.get("current-snapshot-id").asLong()
-    val schemaNode =
-      if (meta.has("schemas")) {
-        val cur = meta.get("current-schema-id").asInt()
-        meta.get("schemas").elements().asScala
-          .find(_.get("schema-id").asInt() == cur)
-          .getOrElse(throw new IllegalArgumentException(
-            s"current-schema-id $cur not in the schemas list"))
-      } else meta.get("schema")
+    val schemaNode = currentSchemaNode(meta)
     val schema = sparkSchemaFrom(schemaNode)
     val (live, deletes) = liveFiles(root, meta, currentSnap)
     require(live.forall(_.partition.isEmpty),
@@ -1883,14 +1874,7 @@ object IcebergInterop {
       "deleteWhereEquality appends a sequence-gated v2 delete snapshot; a " +
         "format-v1 table has no sequence numbers — refusing")
     val currentSnap = meta.get("current-snapshot-id").asLong()
-    val schemaNode =
-      if (meta.has("schemas")) {
-        val cur = meta.get("current-schema-id").asInt()
-        meta.get("schemas").elements().asScala
-          .find(_.get("schema-id").asInt() == cur)
-          .getOrElse(throw new IllegalArgumentException(
-            s"current-schema-id $cur not in the schemas list"))
-      } else meta.get("schema")
+    val schemaNode = currentSchemaNode(meta)
     val nameToId: Map[String, Int] = schemaNode.get("fields").elements().asScala
       .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
     val eqIds = equalityCols.map(c => nameToId.getOrElse(c,
@@ -2028,14 +2012,7 @@ object IcebergInterop {
       "upsertCdc writes a sequence-gated v2 snapshot; a format-v1 table " +
         "has no sequence numbers — refusing")
     val currentSnap = meta.get("current-snapshot-id").asLong()
-    val schemaNode =
-      if (meta.has("schemas")) {
-        val cur = meta.get("current-schema-id").asInt()
-        meta.get("schemas").elements().asScala
-          .find(_.get("schema-id").asInt() == cur)
-          .getOrElse(throw new IllegalArgumentException(
-            s"current-schema-id $cur not in the schemas list"))
-      } else meta.get("schema")
+    val schemaNode = currentSchemaNode(meta)
     val tableSchema = sparkSchemaFrom(schemaNode)
     val nameToId: Map[String, Int] = schemaNode.get("fields").elements().asScala
       .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
@@ -2318,14 +2295,7 @@ object IcebergInterop {
       "rewriteDataFiles compacts v2 merge-on-read state; a v1 table has " +
         "no delete files to collapse — re-export it instead")
     val currentSnap = meta.get("current-snapshot-id").asLong()
-    val schemaNode =
-      if (meta.has("schemas")) {
-        val cur = meta.get("current-schema-id").asInt()
-        meta.get("schemas").elements().asScala
-          .find(_.get("schema-id").asInt() == cur)
-          .getOrElse(throw new IllegalArgumentException(
-            s"current-schema-id $cur not in the schemas list"))
-      } else meta.get("schema")
+    val schemaNode = currentSchemaNode(meta)
     val tableSchema = sparkSchemaFrom(schemaNode)
     val nameToId: Map[String, Int] = schemaNode.get("fields").elements().asScala
       .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
@@ -2623,12 +2593,7 @@ object IcebergInterop {
         .exists(_.asLong() == fromSnapshotId)
     }, s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId")
 
-    val schemaNode =
-      if (meta.has("schemas")) {
-        val cur = meta.get("current-schema-id").asInt()
-        meta.get("schemas").elements().asScala
-          .find(_.get("schema-id").asInt() == cur).get
-      } else meta.get("schema")
+    val schemaNode = currentSchemaNode(meta)
     val schema = sparkSchemaFrom(schemaNode)
     val defaultSpec = Option(meta.get("default-spec-id")).map(_.asInt()).getOrElse(0)
     val partNames = Option(meta.get("partition-specs"))
@@ -2732,14 +2697,7 @@ object IcebergInterop {
     require(addColumns.nonEmpty || promote.nonEmpty, "nothing to evolve")
     val root = Paths.get(icebergDir)
     val (v, meta) = readTableMeta(root)
-    val schemaNode =
-      if (meta.has("schemas")) {
-        val cur = meta.get("current-schema-id").asInt()
-        meta.get("schemas").elements().asScala
-          .find(_.get("schema-id").asInt() == cur)
-          .getOrElse(throw new IllegalArgumentException(
-            s"current-schema-id $cur not in the schemas list"))
-      } else meta.get("schema")
+    val schemaNode = currentSchemaNode(meta)
     val existingNames = schemaNode.get("fields").elements().asScala
       .map(_.get("name").asText()).toSet
     promote.foreach { case (n, _) => require(existingNames.contains(n),
@@ -2962,12 +2920,7 @@ object IcebergInterop {
           StructField("sequence_number", LongType, nullable = true),
           StructField("added_snapshot_id", LongType, nullable = true))), rows)
       case "partitions" =>
-        val schemaNode =
-          if (meta.has("schemas")) {
-            val cur = meta.get("current-schema-id").asInt()
-            meta.get("schemas").elements().asScala
-              .find(_.get("schema-id").asInt() == cur).get
-          } else meta.get("schema")
+        val schemaNode = currentSchemaNode(meta)
         val tableSchema = sparkSchemaFrom(schemaNode)
         val defaultSpec = Option(meta.get("default-spec-id")).map(_.asInt()).getOrElse(0)
         val idFields = Option(meta.get("partition-specs"))

@@ -17,7 +17,7 @@ import graft.storage.VersionedTable
   *   1. each micro-batch of spine events runs the SAME batch
   *      [[AsOfJoin.joinAsOf]] used for training sets — one code path for
   *      backfill and ingest, so online/offline skew is zero by construction
-  *      (strategy still routed by the `graft.asof.method` session conf);
+  *      (hot-key salting included: detection is memoized per snapshot);
   *   2. the feature side is re-resolved from the manifest at every batch,
   *      so a refresh that commits between ticks is picked up at the next
   *      tick, and a batch mid-flight keeps its pinned snapshot (manifest
@@ -27,9 +27,7 @@ import graft.storage.VersionedTable
   *
   * 100 TB shape: per tick, work is O(batch) spine rows; the as-of join's
   * spine-key semi-join prefilter prunes the (large) feature history to the
-  * batch's keys before its one shuffle, and a small batch side makes the
-  * `auto` strategy's broadcast join-filter route the usual winner. The
-  * feature table is never rewritten by the enrichment — output is an
+  * batch's keys before its one shuffle. The feature table is never rewritten by the enrichment — output is an
   * append-only enriched event log downstream training can consume.
   */
 object StreamingEnrich {

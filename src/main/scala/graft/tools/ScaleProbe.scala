@@ -7,8 +7,8 @@ import graft.pit.AsOfJoin
 
 /** Scale experiment for the as-of join: synthesize a large event-history
   * shape (default 10M feature rows × 1M spine rows over 100k keys — ~100×
-  * the sf0.1 corpus) and compare the union-window strategy against the
-  * join-filter strategy. Evidence for the scale claims in README/SURVEY §8.
+  * the sf0.1 corpus) and compare the window join against the join-filter
+  * reference. Evidence for the scale claims in README/SURVEY §8.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -39,20 +39,21 @@ object ScaleProbe {
     }
 
     println(s"features=$nFeatures spine=$nSpine keys=$nKeys (~${nFeatures / nKeys} snapshots/key)")
-    time("union-window") {
+    time("window") {
       AsOfJoin.joinAsOf(spine, features, Seq("k"), "sts", "fts",
-        Seq("f_val"), method = "union-window").agg(count(col("f_val"))).head.getLong(0)
+        Seq("f_val")).agg(count(col("f_val"))).head.getLong(0)
     }
     time("join-filter") {
-      AsOfJoin.joinAsOf(spine, features, Seq("k"), "sts", "fts",
-        Seq("f_val"), method = "join-filter").agg(count(col("f_val"))).head.getLong(0)
+      AsOfJoin.joinFilter(spine, features, Seq("k"), "sts", "fts",
+        Seq("f_val")).agg(count(col("f_val"))).head.getLong(0)
     }
 
     // Hot-key skew: 20% of history and spine land on ONE key. AQE cannot
-    // split a window partition, so under plain union-window the hot key's
-    // full history sorts in one task (spillable — completes, but
-    // serialized). The training-dataset shape (spine = recent labels,
-    // history = long tail) makes the maxStaleness horizon the mitigation:
+    // split a window partition, so an unsalted window sorts the hot key's
+    // full history in one task; at the default sizes the key clears the 2M
+    // hot-key threshold and the window join salts it. The training-dataset
+    // shape (spine = recent labels, history = long tail) makes the
+    // maxStaleness horizon the other mitigation:
     // spine spans only the last hour, so a 1-hour TTL prunes ~92% of the
     // hot key's history BEFORE the shuffle and the straggler task shrinks
     // proportionally.
@@ -68,11 +69,11 @@ object ScaleProbe {
       timestamp_micros(lit(82800000000L) + (col("id") * 104729L) % 3600000000L).as("sts"))
     time("hot20-window") {
       AsOfJoin.joinAsOf(hotSpine, hotFeatures, Seq("k"), "sts", "fts",
-        Seq("f_val"), method = "union-window").agg(count(col("f_val"))).head.getLong(0)
+        Seq("f_val")).agg(count(col("f_val"))).head.getLong(0)
     }
     time("hot20-ttl-1h") {
       AsOfJoin.joinAsOf(hotSpine, hotFeatures, Seq("k"), "sts", "fts",
-        Seq("f_val"), method = "union-window", maxStaleness = Some("1 hour")).agg(count(col("f_val"))).head.getLong(0)
+        Seq("f_val"), maxStaleness = Some("1 hour")).agg(count(col("f_val"))).head.getLong(0)
     }
     spark.stop()
   }

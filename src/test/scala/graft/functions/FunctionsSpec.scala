@@ -816,6 +816,34 @@ class FunctionsSpec extends SparkSpec {
     assert(df.collect().length == 1)
   }
 
+  test("q95's quality gate runs the gram kernel once per row: keep bit projected before the checkpoint") {
+    // Spark eliminates common subexpressions in a projection but not in a
+    // Filter condition, where each of qualityKeep's four GramStatsExpr
+    // reads calls the kernel; and a keep bit projected above the
+    // checkpoint is inlined back into the Filter by predicate pushdown
+    val toks = filter(split(lower(col("text")), "\\s+"), x => length(x) > 0)
+    // checkpointed, so the projection is planned rather than folded into
+    // a local relation
+    val docs = Seq((1L, "the quick brown fox jumps over lazy dogs"), (2L, ""), (3L, "a a a a a a"))
+      .toDF("doc_id", "text").localCheckpoint()
+    def kernelCalls(df: org.apache.spark.sql.DataFrame): Int =
+      "GramStatsExpr\\.compute\\(".r.findAllIn(
+        org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)).size
+    val inFilter = docs.withColumn("__t", toks).localCheckpoint(false)
+      .filter(size(col("__t")) > 0)
+      .filter(TextFunctions.qualityKeep(col("__t"))).drop("__t")
+    assert(kernelCalls(inFilter) == 4)
+    // q95: tokens and keep bit in one projection, then the checkpoint
+    val tokped = docs.withColumn("__t", toks)
+      .withColumn("__keep", TextFunctions.qualityKeep(col("__t")))
+    assert(kernelCalls(tokped) == 1)
+    val gated = tokped.localCheckpoint(false)
+      .filter(size(col("__t")) > 0 && col("__keep")).drop("__keep", "__t")
+    assert(kernelCalls(gated) == 0)
+    assert(gated.collect().toSeq == inFilter.collect().toSeq)
+    assert(gated.collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
   test("exactSubstrDedup: first occurrence kept, later spans cut, within-doc repeats cut") {
     val docs = Seq(
       (1L, "a b c d e"),         // canonical owner of every shared span

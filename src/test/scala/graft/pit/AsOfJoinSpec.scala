@@ -2,7 +2,7 @@ package graft.pit
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -26,67 +26,94 @@ class AsOfJoinSpec extends SparkSpec {
   private lazy val spine = (1 to 10)
     .map(cid => (cid, daysAgo(7), cid % 2)).toDF("customer_id", "event_time", "label")
 
-  private def run(method: String) = AsOfJoin.joinAsOf(
+  private def window() = AsOfJoin.joinAsOf(
     spine, features, Seq("customer_id"), "event_time", "updated_at",
-    featureCols = Seq("age", "snap"), method = method)
+    featureCols = Seq("age", "snap"))
 
-  test("auto with a non-broadcastable feature side takes the salted branch, result exact") {
-    // force isBroadcastable=false so auto exercises its window branch (every
-    // other auto test uses tiny broadcastable fixtures and takes join-filter);
-    // engage detection so the salted path is genuinely entered
+  /** Engaged-salting runs use a tiny hot threshold and few buckets so the
+    * two-level path actually fires at test scale; conf restored after. */
+  private def withSaltConf[T](threshold: Long, buckets: Int)(body: => T): T = {
     val c = spark.conf
-    val prev = c.get("spark.sql.autoBroadcastJoinThreshold")
-    c.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    c.set("graft.asof.salt.hotKeyThreshold", "5")
+    c.set("graft.asof.salt.hotKeyThreshold", threshold.toString)
+    c.set("graft.asof.salt.buckets", buckets.toString)
+    // full-rate detection: at test scale a 1% sample could miss every row
+    // of a hot key and silently skip the code path under test
     c.set("graft.asof.salt.sampleRate", "1.0")
-    try {
-      val expected = run("union-window").collect().sortBy(_.getInt(0)).toSeq
-      assert(run("auto").collect().sortBy(_.getInt(0)).toSeq == expected,
-        "auto's non-broadcastable (salted) branch diverged from union-window")
-    } finally {
-      c.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    try body finally {
       c.unset("graft.asof.salt.hotKeyThreshold")
+      c.unset("graft.asof.salt.buckets")
       c.unset("graft.asof.salt.sampleRate")
     }
+  }
+
+  /** The window join in its two settings — "plain" (default threshold: the
+    * one-level plan) and "salted" (threshold 10, full-rate detection, 4
+    * buckets: the two-level carry engages) — plus the "join-filter"
+    * reference, each collected. */
+  private def allRuns(sp: DataFrame, f: DataFrame, keys: Seq[String], sts: String,
+      fts: String, cols: Seq[String], ttl: Option[String] = None): Seq[(String, Array[Row])] = {
+    def win() = AsOfJoin.joinAsOf(sp, f, keys, sts, fts, cols, maxStaleness = ttl).collect()
+    Seq("plain" -> win(), "salted" -> withSaltConf(10, 4)(win()),
+      "join-filter" -> AsOfJoin.joinFilter(sp, f, keys, sts, fts, cols, ttl).collect())
+  }
+
+  test("non-broadcastable sides: engaged salting without the prefilter, result exact") {
+    // autoBroadcastJoinThreshold=-1 turns the spine-key prefilter off, so
+    // the salted window runs over the whole feature history
+    val c = spark.conf
+    val prev = c.get("spark.sql.autoBroadcastJoinThreshold")
+    val expected = window().collect().sortBy(_.getInt(0)).toSeq
+    c.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try withSaltConf(5, 4) {
+      val salted = window()
+      val plan = salted.queryExecution.executedPlan.toString
+      assert(plan.contains("__graft_bounds") && !plan.contains("LeftSemi"), plan)
+      assert(salted.collect().sortBy(_.getInt(0)).toSeq == expected,
+        "salted window without the prefilter diverged from the plain window")
+    } finally c.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("default method engages salting on a skewed corpus, result identical to union-window") {
-    // No graft.asof.method set: the default must route to salted-window,
-    // and with a cleared hot threshold the skewed key must genuinely
-    // engage the two-level carry (observable as the __graft_bounds
-    // detection column in the executed plan), with results unchanged.
+    // No method to pick: with a cleared hot threshold the skewed key must
+    // genuinely engage the two-level carry (observable as the
+    // __graft_bounds detection column in the executed plan), with results
+    // unchanged against the plain window and the join-filter reference.
+    // key 1 is hot: 200 feature snapshots; keys 2-5 have 5 each
+    val skewedFeatures = ((1 to 200).map(i => (1, daysAgo(230 - i), 100 + i, s"h$i")) ++
+      (for { cid <- 2 to 5; d <- Seq(30, 20, 10, 5, 1) }
+        yield (cid, daysAgo(d), 20 + cid, s"snap$d")))
+      .toDF("customer_id", "updated_at", "age", "snap")
+    val sk = (1 to 5).map(cid => (cid, daysAgo(7), cid % 2))
+      .toDF("customer_id", "event_time", "label")
+    def go() = AsOfJoin.joinAsOf(
+      sk, skewedFeatures, Seq("customer_id"), "event_time", "updated_at",
+      featureCols = Seq("age", "snap"))
+    val expected = go().collect().sortBy(_.getInt(0)).toSeq
+    assert(expected == AsOfJoin.joinFilter(sk, skewedFeatures, Seq("customer_id"),
+      "event_time", "updated_at", Seq("age", "snap")).collect().sortBy(_.getInt(0)).toSeq)
     val c = spark.conf
-    val prevMethod = c.getOption("graft.asof.method")
-    c.unset("graft.asof.method")
     c.set("graft.asof.salt.hotKeyThreshold", "20")
     c.set("graft.asof.salt.sampleRate", "1.0")
     try {
-      // key 1 is hot: 200 feature snapshots; keys 2-5 have 5 each
-      val skewedFeatures = ((1 to 200).map(i => (1, daysAgo(230 - i), 100 + i, s"h$i")) ++
-        (for { cid <- 2 to 5; d <- Seq(30, 20, 10, 5, 1) }
-          yield (cid, daysAgo(d), 20 + cid, s"snap$d")))
-        .toDF("customer_id", "updated_at", "age", "snap")
-      val sk = (1 to 5).map(cid => (cid, daysAgo(7), cid % 2))
-        .toDF("customer_id", "event_time", "label")
-      def go(method: String) = AsOfJoin.joinAsOf(
-        sk, skewedFeatures, Seq("customer_id"), "event_time", "updated_at",
-        featureCols = Seq("age", "snap"), method = method)
-      val expected = go("union-window").collect().sortBy(_.getInt(0)).toSeq
-      val defaultRun = go("default")
+      val defaultRun = go()
       assert(defaultRun.queryExecution.executedPlan.toString.contains("__graft_bounds"),
-        "default as-of path did not engage the salted two-level carry on a skewed corpus")
+        "the as-of join did not engage the salted two-level carry on a skewed corpus")
       assert(defaultRun.collect().sortBy(_.getInt(0)).toSeq == expected,
-        "default (salted) as-of result diverged from union-window")
+        "salted as-of result diverged from the plain window")
     } finally {
-      prevMethod.foreach(c.set("graft.asof.method", _))
       c.unset("graft.asof.salt.hotKeyThreshold")
       c.unset("graft.asof.salt.sampleRate")
     }
   }
 
-  for (m <- Seq("union-window", "join-filter", "salted-window")) {
+  // union-window = the plain setting, salted-window = engaged salting
+  for ((m, runner) <- Seq[(String, () => Array[Row])](
+      "union-window" -> (() => window().collect()),
+      "join-filter" -> (() => AsOfJoin.joinFilter(spine, features, Seq("customer_id"),
+        "event_time", "updated_at", Seq("age", "snap")).collect()),
+      "salted-window" -> (() => withSaltConf(10, 4)(window().collect())))) {
     test(s"$m: every spine row matches the -10d snapshot (reference PIT semantics)") {
-      val rows = run(m).collect()
+      val rows = runner()
       assert(rows.length == 10)
       rows.foreach { r =>
         assert(r.getAs[String]("snap") == "snap10", s"wrong snapshot in $r")
@@ -99,35 +126,25 @@ class AsOfJoinSpec extends SparkSpec {
   test("inclusive bound: feature at exactly the spine ts wins") {
     val f = Seq((1, daysAgo(7), 99, "exact"), (1, daysAgo(10), 31, "older"))
       .toDF("customer_id", "updated_at", "age", "snap")
-    for (m <- Seq("union-window", "join-filter", "salted-window")) {
-      val out = AsOfJoin.joinAsOf(spine.filter($"customer_id" === 1), f,
-        Seq("customer_id"), "event_time", "updated_at",
-        featureCols = Seq("age", "snap"), method = m).collect()
-      assert(out.length == 1 && out(0).getAs[String]("snap") == "exact", s"method=$m")
+    for ((m, out) <- allRuns(spine.filter($"customer_id" === 1), f,
+        Seq("customer_id"), "event_time", "updated_at", Seq("age", "snap"))) {
+      assert(out.length == 1 && out(0).getAs[String]("snap") == "exact", s"setting=$m")
     }
   }
 
   test("spine rows before all feature history get nulls (left-join semantics)") {
     val earlySpine = Seq((1, daysAgo(60), 0)).toDF("customer_id", "event_time", "label")
-    for (m <- Seq("union-window", "join-filter", "salted-window")) {
-      val out = AsOfJoin.joinAsOf(earlySpine, features, Seq("customer_id"),
-        "event_time", "updated_at", featureCols = Seq("age", "snap"), method = m).collect()
-      assert(out.length == 1 && out(0).isNullAt(out(0).fieldIndex("snap")), s"method=$m")
+    for ((m, out) <- allRuns(earlySpine, features, Seq("customer_id"),
+        "event_time", "updated_at", Seq("age", "snap"))) {
+      assert(out.length == 1 && out(0).isNullAt(out(0).fieldIndex("snap")), s"setting=$m")
     }
   }
 
   test("keys absent from features keep spine row with null features") {
     val unknown = Seq((999, daysAgo(7), 1)).toDF("customer_id", "event_time", "label")
     val out = AsOfJoin.joinAsOf(unknown, features, Seq("customer_id"),
-      "event_time", "updated_at", featureCols = Seq("age"), method = "union-window").collect()
+      "event_time", "updated_at", featureCols = Seq("age")).collect()
     assert(out.length == 1 && out(0).isNullAt(out(0).fieldIndex("age")))
-  }
-
-  test("auto method picks a strategy and matches both explicit strategies") {
-    val out = AsOfJoin.joinAsOf(spine, features, Seq("customer_id"),
-      "event_time", "updated_at", featureCols = Seq("age", "snap"), method = "auto")
-    val expected = run("union-window")
-    assert(out.exceptAll(expected).isEmpty && expected.exceptAll(out).isEmpty)
   }
 
   test("both strategies agree on the events table (property cross-check)") {
@@ -136,8 +153,8 @@ class AsOfJoinSpec extends SparkSpec {
       .select($"event_id", $"user_id", $"ts", $"value".as("label"))
     val ft = ev.filter($"event_type" === "view")
       .groupBy($"user_id", $"ts").agg(max($"value").as("f_v"))
-    val a = AsOfJoin.joinAsOf(sp, ft, Seq("user_id"), "ts", "ts", Seq("f_v"), method = "union-window")
-    val b = AsOfJoin.joinAsOf(sp, ft, Seq("user_id"), "ts", "ts", Seq("f_v"), method = "join-filter")
+    val a = AsOfJoin.joinAsOf(sp, ft, Seq("user_id"), "ts", "ts", Seq("f_v"))
+    val b = AsOfJoin.joinFilter(sp, ft, Seq("user_id"), "ts", "ts", Seq("f_v"))
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
@@ -148,14 +165,13 @@ class AsOfJoinSpec extends SparkSpec {
       .toDF("customer_id", "region", "updated_at", "f_val")
     val sp = Seq((1, "A", daysAgo(7)), (1, "B", daysAgo(7)), (2, "B", daysAgo(7)))
       .toDF("customer_id", "region", "event_time")
-    for (m <- Seq("union-window", "join-filter", "salted-window")) {
-      val out = AsOfJoin.joinAsOf(sp, f, Seq("customer_id", "region"),
-        "event_time", "updated_at", featureCols = Seq("f_val"), method = m)
-        .collect().map(r => (r.getInt(0), r.getString(1)) ->
-          (if (r.isNullAt(r.fieldIndex("f_val"))) None else Some(r.getInt(r.fieldIndex("f_val"))))).toMap
-      assert(out((1, "A")) == Some(100), s"method=$m")  // -3d snapshot is AFTER spine → excluded
-      assert(out((1, "B")) == Some(200), s"method=$m")
-      assert(out((2, "B")) == None, s"method=$m")       // no (2,B) history
+    for ((m, rows) <- allRuns(sp, f, Seq("customer_id", "region"),
+        "event_time", "updated_at", Seq("f_val"))) {
+      val out = rows.map(r => (r.getInt(0), r.getString(1)) ->
+        (if (r.isNullAt(r.fieldIndex("f_val"))) None else Some(r.getInt(r.fieldIndex("f_val"))))).toMap
+      assert(out((1, "A")) == Some(100), s"setting=$m")  // -3d snapshot is AFTER spine → excluded
+      assert(out((1, "B")) == Some(200), s"setting=$m")
+      assert(out((2, "B")) == None, s"setting=$m")       // no (2,B) history
     }
   }
 
@@ -167,14 +183,12 @@ class AsOfJoinSpec extends SparkSpec {
       (1, daysAgo(20), Some(31), "older"),
       (1, daysAgo(10), None, "latest"))
       .toDF("customer_id", "updated_at", "age", "snap")
-    for (m <- Seq("union-window", "join-filter", "salted-window")) {
-      val out = AsOfJoin.joinAsOf(spine.filter($"customer_id" === 1), f,
-        Seq("customer_id"), "event_time", "updated_at",
-        featureCols = Seq("age", "snap"), method = m).collect()
-      assert(out.length == 1, s"method=$m")
-      assert(out(0).getAs[String]("snap") == "latest", s"method=$m: $out")
+    for ((m, out) <- allRuns(spine.filter($"customer_id" === 1), f,
+        Seq("customer_id"), "event_time", "updated_at", Seq("age", "snap"))) {
+      assert(out.length == 1, s"setting=$m")
+      assert(out(0).getAs[String]("snap") == "latest", s"setting=$m: $out")
       assert(out(0).isNullAt(out(0).fieldIndex("age")),
-        s"method=$m resurrected a stale value for a NULL field: ${out(0)}")
+        s"setting=$m resurrected a stale value for a NULL field: ${out(0)}")
     }
   }
 
@@ -198,14 +212,14 @@ class AsOfJoinSpec extends SparkSpec {
     val f = Seq((1, daysAgo(10), 42)).toDF("CUSTOMER_ID", "UPDATED_AT", "F_VAL")
     val out = AsOfJoin.joinAsOf(spine.filter($"customer_id" === 1), f,
       Seq("customer_id"), "event_time", "updated_at",
-      featureCols = Seq("f_val"), method = "union-window").collect()
+      featureCols = Seq("f_val")).collect()
     assert(out.length == 1 && out(0).getAs[Int]("f_val") == 42)
   }
 
   test("multi-row same (key, ts) on spine side: each spine row preserved") {
     val dupSpine = Seq((1, daysAgo(7), 0), (1, daysAgo(7), 1)).toDF("customer_id", "event_time", "label")
     val out = AsOfJoin.joinAsOf(dupSpine, features, Seq("customer_id"),
-      "event_time", "updated_at", featureCols = Seq("age"), method = "union-window").collect()
+      "event_time", "updated_at", featureCols = Seq("age")).collect()
     assert(out.length == 2 && out.forall(_.getAs[Int]("age") == 21))
   }
 
@@ -215,21 +229,18 @@ class AsOfJoinSpec extends SparkSpec {
     // spine at -7d; latest match is the -10d snapshot → 3 days stale.
     // TTL "4 days" keeps it; TTL "2 days" nulls it; boundary "3 days" is
     // inclusive (ts - ttl <= fts) and keeps it.
-    for (m <- Seq("union-window", "join-filter", "salted-window")) {
-      def withTtl(ttl: String) = AsOfJoin.joinAsOf(
-        spine, features, Seq("customer_id"), "event_time", "updated_at",
-        featureCols = Seq("age", "snap"), method = m, maxStaleness = Some(ttl))
-      val keep = withTtl("4 days").collect()
+    def withTtl(ttl: String) = allRuns(spine, features, Seq("customer_id"),
+      "event_time", "updated_at", Seq("age", "snap"), Some(ttl))
+    for ((m, keep) <- withTtl("4 days"))
       assert(keep.length == 10 && keep.forall(_.getAs[String]("snap") == "snap10"),
         s"$m: TTL 4 days must keep the -10d match")
-      val boundary = withTtl("3 days").collect()
+    for ((m, boundary) <- withTtl("3 days"))
       assert(boundary.forall(_.getAs[String]("snap") == "snap10"),
         s"$m: TTL boundary must be inclusive")
-      val drop = withTtl("2 days").collect()
+    for ((m, drop) <- withTtl("2 days"))
       assert(drop.length == 10 && drop.forall(r =>
           r.getAs[String]("snap") == null && r.isNullAt(r.fieldIndex("age"))),
         s"$m: TTL 2 days must null the stale match, got ${drop.toSeq}")
-    }
   }
 
   test("spine-key prefilter: narrow spine reduces the feature side, result exact") {
@@ -237,16 +248,21 @@ class AsOfJoinSpec extends SparkSpec {
     // agree exactly (a feature row with a key absent from the spine can
     // never match, and left-join semantics keep every spine row)
     val narrow = spine.filter($"customer_id" <= 2)
-    def run(pf: Boolean) = AsOfJoin.joinAsOf(
+    def run() = AsOfJoin.joinAsOf(
       narrow, features, Seq("customer_id"), "event_time", "updated_at",
-      featureCols = Seq("age", "snap"), prefilterSpineKeys = pf)
-    val on = run(true).orderBy("customer_id").collect().toSeq
-    val off = run(false).orderBy("customer_id").collect().toSeq
-    assert(on == off && on.length == 2)
+      featureCols = Seq("age", "snap"))
+    val on = run()
+    // the prefilter gates itself on a broadcastable spine key set, so a
+    // disabled broadcast threshold turns it off
+    val (off, offPlan) = withoutBroadcast {
+      val df = run()
+      (df.orderBy("customer_id").collect().toSeq, df.queryExecution.executedPlan.toString)
+    }
+    assert(on.orderBy("customer_id").collect().toSeq == off && off.length == 2)
     // the reduction is real: a broadcast semi join guards the window shuffle
-    val plan = run(true).queryExecution.executedPlan.toString
+    val plan = on.queryExecution.executedPlan.toString
     assert(plan.contains("LeftSemi"), s"no semi-join reduction in plan:\n$plan")
-    assert(!run(false).queryExecution.executedPlan.toString.contains("LeftSemi"))
+    assert(!offPlan.contains("LeftSemi"))
   }
 
   test("NULL join keys: SQL equi-join semantics — never match, on every strategy") {
@@ -262,11 +278,10 @@ class AsOfJoinSpec extends SparkSpec {
       (Some(1), daysAgo(7), 0),
       (None: Option[Int], daysAgo(7), 1))
       .toDF("customer_id", "event_time", "label")
-    for (m <- Seq("union-window", "join-filter", "salted-window", "auto"); pf <- Seq(true, false)) {
-      val out = AsOfJoin.joinAsOf(sp, f, Seq("customer_id"), "event_time",
-        "updated_at", featureCols = Seq("age", "snap"), method = m,
-        prefilterSpineKeys = pf)
-        .orderBy(asc_nulls_last("customer_id")).collect()
+    def runs() = allRuns(sp, f, Seq("customer_id"), "event_time", "updated_at",
+      Seq("age", "snap"))
+    for (pf <- Seq(true, false); (m, rows) <- if (pf) runs() else withoutBroadcast(runs())) {
+      val out = rows.sortBy(r => if (r.isNullAt(0)) Int.MaxValue else r.getInt(0))
       assert(out.length == 2, s"$m/pf=$pf: left join must keep the NULL-keyed spine row")
       assert(out(0).getAs[String]("snap") == "k1", s"$m/pf=$pf: non-null key must match")
       assert(out(1).isNullAt(out(1).fieldIndex("snap")) &&
@@ -284,10 +299,9 @@ class AsOfJoinSpec extends SparkSpec {
       (1, Some(daysAgo(7)), 0),
       (2, None: Option[Timestamp], 1))
       .toDF("customer_id", "event_time", "label")
-    for (m <- Seq("union-window", "join-filter", "salted-window")) {
-      val out = AsOfJoin.joinAsOf(sp, f, Seq("customer_id"), "event_time",
-        "updated_at", featureCols = Seq("age", "snap"), method = m)
-        .orderBy("customer_id").collect()
+    for ((m, rows) <- allRuns(sp, f, Seq("customer_id"), "event_time", "updated_at",
+        Seq("age", "snap"))) {
+      val out = rows.sortBy(_.getInt(0))
       assert(out.length == 2)
       assert(out(0).getAs[String]("snap") == "real",
         s"$m: NULL-ts feature row must never be the match")
@@ -296,20 +310,13 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
-  /** Engaged-salting tests run with a tiny hot threshold and few buckets so
-    * the two-level path actually fires at test scale; conf restored after. */
-  private def withSaltConf(threshold: Long, buckets: Int)(body: => Unit): Unit = {
+  /** Runs `body` with broadcasts disabled, which turns the spine-key
+    * prefilter off. */
+  private def withoutBroadcast[T](body: => T): T = {
     val c = spark.conf
-    c.set("graft.asof.salt.hotKeyThreshold", threshold.toString)
-    c.set("graft.asof.salt.buckets", buckets.toString)
-    // full-rate detection: at test scale a 1% sample could miss every row
-    // of a hot key and silently skip the code path under test
-    c.set("graft.asof.salt.sampleRate", "1.0")
-    try body finally {
-      c.unset("graft.asof.salt.hotKeyThreshold")
-      c.unset("graft.asof.salt.buckets")
-      c.unset("graft.asof.salt.sampleRate")
-    }
+    val prev = c.get("spark.sql.autoBroadcastJoinThreshold")
+    c.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body finally c.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("salted-window engaged: skewed corpus (one key = 50% of rows) matches both strategies") {
@@ -327,12 +334,14 @@ class AsOfJoinSpec extends SparkSpec {
       val k = if (i % 2 == 0) 1 else 2 + rnd.nextInt(25)
       (k, daysAgo(rnd.nextInt(210)), i)
     }.toDF("customer_id", "event_time", "label")
-    def run(m: String) = AsOfJoin.joinAsOf(sp, f, Seq("customer_id"),
-      "event_time", "updated_at", featureCols = Seq("age", "snap"), method = m)
+    def run() = AsOfJoin.joinAsOf(sp, f, Seq("customer_id"),
+      "event_time", "updated_at", featureCols = Seq("age", "snap"))
+    val plain = run()
+    val jf = AsOfJoin.joinFilter(sp, f, Seq("customer_id"),
+      "event_time", "updated_at", Seq("age", "snap"))
     withSaltConf(threshold = 100, buckets = 4) {
-      val salted = run("salted-window")
-      val plain = run("union-window")
-      val jf = run("join-filter")
+      val salted = run()
+      assert(salted.queryExecution.executedPlan.toString.contains("__graft_bounds"))
       assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty,
         "salted-window diverged from union-window on the skewed corpus")
       assert(salted.exceptAll(jf).isEmpty && jf.exceptAll(salted).isEmpty,
@@ -349,7 +358,7 @@ class AsOfJoinSpec extends SparkSpec {
     val sp = (1 to 50).map(i => (1, daysAgo(i * 5), i)).toDF("customer_id", "event_time", "label")
     withSaltConf(threshold = 10, buckets = 4) {
       val out = AsOfJoin.joinAsOf(sp, f, Seq("customer_id"), "event_time",
-        "updated_at", featureCols = Seq("age", "snap"), method = "salted-window").collect()
+        "updated_at", featureCols = Seq("age", "snap")).collect()
       assert(out.length == 50)
       // latest feature overall is daysAgo(296) (i%5==4): every spine row is
       // later than all history, so all must carry that exact row
@@ -369,7 +378,7 @@ class AsOfJoinSpec extends SparkSpec {
     val sp = (1 to 50).map(i => (1, daysAgo(i * 5), i)).toDF("customer_id", "event_time", "label")
     withSaltConf(threshold = 10, buckets = 4) {
       val out = AsOfJoin.joinAsOf(sp, f, Seq("customer_id"), "event_time",
-        "updated_at", featureCols = Seq("age", "snap"), method = "salted-window",
+        "updated_at", featureCols = Seq("age", "snap"),
         maxStaleness = Some("100 days")).collect()
       assert(out.length == 50)
       out.foreach { r =>
@@ -397,36 +406,10 @@ class AsOfJoinSpec extends SparkSpec {
       Seq("customer_id"), "event_time")
     val plain = multi()
     withSaltConf(threshold = 100, buckets = 4) {
-      spark.conf.set("graft.asof.method", "salted-window")
-      try {
-        val salted = multi()
-        assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty,
-          "two-level multi-FV salted window diverged from the unsalted one-pass window")
-      } finally spark.conf.unset("graft.asof.method")
-    }
-  }
-
-  test("graft.asof.method session conf routes the default strategy (single + multi FV)") {
-    val c = spark.conf
-    val expectSingle = run("union-window").collect().sortBy(_.getInt(0)).toSeq
-    val fvB = Seq((1, daysAgo(15), 7)).toDF("customer_id", "snap_ts", "f_b")
-    def multi() = AsOfJoin.joinAsOfMulti(spine,
-      Seq((features, "updated_at", Seq("age", "snap")), (fvB, "snap_ts", Seq("f_b"))),
-      Seq("customer_id"), "event_time")
-    val expectMulti = multi().collect().sortBy(_.getInt(0)).toSeq
-    c.set("graft.asof.method", "salted-window")
-    c.set("graft.asof.salt.hotKeyThreshold", "5")
-    c.set("graft.asof.salt.sampleRate", "1.0")
-    try {
-      // default-method call must now take the salted path and agree exactly
-      assert(run("default").collect().sortBy(_.getInt(0)).toSeq == expectSingle,
-        "conf-routed salted default diverged on the single-FV path")
-      assert(multi().collect().sortBy(_.getInt(0)).toSeq == expectMulti,
-        "conf-routed salted default diverged on the multi-FV one-pass path")
-    } finally {
-      c.unset("graft.asof.method")
-      c.unset("graft.asof.salt.hotKeyThreshold")
-      c.unset("graft.asof.salt.sampleRate")
+      val salted = multi()
+      assert(salted.queryExecution.executedPlan.toString.contains("__graft_bounds"))
+      assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty,
+        "two-level multi-FV salted window diverged from the unsalted one-pass window")
     }
   }
 
@@ -434,56 +417,57 @@ class AsOfJoinSpec extends SparkSpec {
     // history spans -30d..-1d; spine at -7d with ttl 5 days ⇒ horizon -12d:
     // the -20d/-30d snapshots are pruned before the shuffle, and the result
     // still matches the unpruned join-filter strategy exactly.
-    def run(m: String) = AsOfJoin.joinAsOf(
+    val pruned = AsOfJoin.joinAsOf(
       spine, features, Seq("customer_id"), "event_time", "updated_at",
-      featureCols = Seq("age", "snap"), method = m, maxStaleness = Some("5 days"))
-    val uw = run("union-window").orderBy("customer_id").collect().toSeq
-    val jf = run("join-filter").orderBy("customer_id").collect().toSeq
+      featureCols = Seq("age", "snap"), maxStaleness = Some("5 days"))
+    val uw = pruned.orderBy("customer_id").collect().toSeq
+    val jf = AsOfJoin.joinFilter(spine, features, Seq("customer_id"), "event_time",
+      "updated_at", Seq("age", "snap"), Some("5 days")).orderBy("customer_id").collect().toSeq
     assert(uw == jf && uw.length == 10)
     assert(uw.forall(_.getAs[String]("snap") == "snap10"))
+    // the horizon is a broadcast inner join in front of the window shuffle
+    val plan = pruned.queryExecution.optimizedPlan.toString
+    assert(plan.contains("__graft_hz"), s"no horizon prune in plan:\n$plan")
   }
 
-  test("hot-key memo key folds minBytesPerRow: retuning the stats short-circuit is a miss") {
-    // minBytesPerRow decides the stats short-circuit, so a memoized "no hot
-    // keys" verdict from a short-circuited call must not survive retuning it
-    val c = spark.conf
-    // parquet-backed sides carry sizeInBytes but no rowCount, so the
-    // short-circuit takes its bytes-per-row branch (local frames carry a
-    // rowCount and never consult minBytesPerRow)
-    def onDisk(df: org.apache.spark.sql.DataFrame) = {
-      val d = java.nio.file.Files.createTempDirectory("graft_asof_mbpr_").resolve("t").toString
-      df.write.parquet(d)
-      spark.read.parquet(d)
+  test("multi-FV maxStaleness: each FV's match past the TTL becomes null, equal to a per-FV reference") {
+    // FV A: snapshots at -60d..-30d; FV B: one snapshot at -40d. With a
+    // 12-day TTL the spine row at -5d loses both matches (25 and 35 days
+    // old), the rows at -35d/-30d keep both, and the row at -55d keeps A's
+    // -60d match while B has none yet.
+    val fvA = (for { cid <- 1 to 4; d <- Seq(60, 50, 40, 30) }
+      yield (cid, daysAgo(d), s"a$cid-$d")).toDF("customer_id", "ts_a", "f_a")
+    val fvB = (1 to 4).map(cid => (cid, daysAgo(40), cid * 10)).toDF("customer_id", "ts_b", "f_b")
+    val sp = (for { cid <- 1 to 4; d <- Seq(55, 35, 30, 5) } yield (cid, daysAgo(d), s"$cid/$d"))
+      .toDF("customer_id", "event_time", "sid")
+    val ttl = Some("12 days")
+    val expected = AsOfJoin.joinFilter(
+        AsOfJoin.joinFilter(sp, fvA, Seq("customer_id"), "event_time", "ts_a", Seq("f_a"), ttl),
+        fvB, Seq("customer_id"), "event_time", "ts_b", Seq("f_b"), ttl)
+      .select("sid", "f_a", "f_b").collect().sortBy(_.getString(0)).toSeq
+    def multi() = AsOfJoin.joinAsOfMultiTagged(sp,
+      Seq((fvA, "ts_a", Seq("f_a")), (fvB, "ts_b", Seq("f_b"))),
+      Seq("customer_id"), "event_time", ttl, None)
+    def rows(df: DataFrame) =
+      df.select("sid", "f_a", "f_b").collect().sortBy(_.getString(0)).toSeq
+    // the fixture exercises both outcomes on each FV
+    assert(expected.exists(_.isNullAt(1)) && expected.exists(!_.isNullAt(1)))
+    assert(expected.exists(_.isNullAt(2)) && expected.exists(!_.isNullAt(2)))
+    assert(rows(multi()) == expected, "plain multi-FV TTL diverged from the per-FV reference")
+    // 9 union rows per key: a threshold of 5 salts every key
+    withSaltConf(5, 4) {
+      val salted = multi()
+      assert(salted.queryExecution.executedPlan.toString.contains("__graft_bounds"))
+      assert(rows(salted) == expected, "salted multi-FV TTL diverged from the per-FV reference")
     }
-    val (sp, feat) = (onDisk(spine), onDisk(features))
-    def salted() = AsOfJoin.joinAsOf(sp, feat, Seq("customer_id"), "event_time",
-      "updated_at", featureCols = Seq("age", "snap"), method = "salted-window",
-      hotKeyCacheKey = Some("asof:minBytesPerRow-spec"))
-    def detections(body: => Unit): Long = {
-      val before = AsOfJoin.detectionJobs.get()
-      body
-      AsOfJoin.detectionJobs.get() - before
-    }
-    val expected = run("union-window").collect().sortBy(_.getInt(0)).toSeq
-    c.set("graft.asof.salt.hotKeyThreshold", "5")
-    c.set("graft.asof.salt.sampleRate", "1.0")
-    AsOfJoin.clearHotKeyCache()
-    try {
-      // a huge per-row floor proves the tiny inputs too small: no job
-      c.set("graft.asof.salt.minBytesPerRow", "1000000000")
-      assert(detections(salted()) == 0)
-      assert(detections(salted()) == 0)
-      // the default floor no longer proves it: same cache key, one job
-      c.set("graft.asof.salt.minBytesPerRow", "2")
-      var out: Seq[org.apache.spark.sql.Row] = Seq.empty
-      assert(detections { out = salted().collect().sortBy(_.getInt(0)).toSeq } == 1)
-      assert(out == expected)
-      assert(detections(salted()) == 0, "the retuned verdict is memoized in turn")
-    } finally {
-      c.unset("graft.asof.salt.hotKeyThreshold")
-      c.unset("graft.asof.salt.sampleRate")
-      c.unset("graft.asof.salt.minBytesPerRow")
-      AsOfJoin.clearHotKeyCache()
-    }
+  }
+
+  test("joinAsOf over one FV and joinAsOfMulti over the same FV build the same optimized plan") {
+    val single = AsOfJoin.joinAsOf(spine, features, Seq("customer_id"), "event_time",
+      "updated_at", featureCols = Seq("age", "snap"))
+    val multi = AsOfJoin.joinAsOfMulti(spine,
+      Seq((features, "updated_at", Seq("age", "snap"))), Seq("customer_id"), "event_time")
+    val (a, b) = (single.queryExecution.optimizedPlan, multi.queryExecution.optimizedPlan)
+    assert(a.sameResult(b), s"plans differ:\n$a\n---\n$b")
   }
 }
