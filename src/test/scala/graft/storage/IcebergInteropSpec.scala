@@ -649,6 +649,32 @@ class IcebergInteropSpec extends SparkSpec {
     assert(IcebergInterop.importSnapshot(spark, out).count() == 11000L)
   }
 
+  test("upsertCdc and rewriteDataFiles run a fixed number of Spark jobs") {
+    val out = tmp("ice_cdc_jobs_") + "/ice"
+    IcebergFixtures.writeV2WithDeletes(spark, out,
+      (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v"), "id", col("id") % 5 === 0)
+    val cdcJobs = (1 to 3).map { k =>
+      jobsDuring(IcebergInterop.upsertCdc(spark, out,
+        Seq((k.toLong, s"U$k", false), (100L + k, "N", false), (10L + k, "x", true))
+          .toDF("id", "v", "del"), Seq("id"), Some("del")))._2
+    }
+    val (_, compactJobs) = jobsDuring(IcebergInterop.rewriteDataFiles(spark, out))
+    val pOut = tmp("ice_cdc_jobs_p_") + "/ice"
+    IcebergFixtures.writePartitionedV2WithDeletes(spark, pOut,
+      Seq((1L, "en", "a"), (2L, "de", "b"), (3L, "de", "c")).toDF("id", "lang", "v"),
+      "id", "lang", col("id") === 2L)
+    val (_, pCdcJobs) = jobsDuring(IcebergInterop.upsertCdc(spark, pOut,
+      Seq((1L, "fr", "A", false), (4L, "de", "d", false)).toDF("id", "lang", "v", "del"),
+      Seq("id"), Some("del")))
+    val (_, pCompactJobs) = jobsDuring(IcebergInterop.rewriteDataFiles(spark, pOut))
+    // manifests, manifest lists and metadata are written without Spark:
+    // they add no job to the writers' Spark work
+    assert(cdcJobs.forall(_ == 7) && pCdcJobs == 7,
+      s"jobs per upsertCdc: $cdcJobs, partitioned $pCdcJobs")
+    assert(compactJobs == 12 && pCompactJobs == 9,
+      s"jobs per rewriteDataFiles: $compactJobs, partitioned $pCompactJobs")
+  }
+
   test("identity-partitioned v1 import: partition column restored from manifest metadata, NULL included") {
     // the Hive-migrated shape: data files DO NOT contain the partition
     // column — its only home is the manifest entry partition struct
@@ -852,6 +878,32 @@ class IcebergInteropSpec extends SparkSpec {
       IcebergInterop.deleteWhere(spark, v1out, col("id") === 1L)
     }
     assert(e.getMessage.contains("format-v1"))
+  }
+
+  test("position-delete files carry the reserved parquet field ids: both fixtures and deleteWhere") {
+    def footerIds(p: java.nio.file.Path): Seq[(String, Option[Int])] = {
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p.toString), new org.apache.hadoop.conf.Configuration()))
+      try rd.getFooter.getFileMetaData.getSchema.getFields.asScala
+        .map(f => (f.getName, Option(f.getId).map(_.intValue))).toSeq
+      finally rd.close()
+    }
+    val reserved = Seq(("file_path", Some(2147483546)), ("pos", Some(2147483545)))
+    val out = tmp("ice_posids_")
+    IcebergFixtures.writeV2WithDeletes(spark, out,
+      (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v"), "id", col("id") === 1L)
+    assert(footerIds(Paths.get(out, "data", "del0.parquet")) == reserved)
+    assert(IcebergInterop.deleteWhere(spark, out, col("id") === 2L) == 1L)
+    val written = listNames(Paths.get(out, "data")).filter(_.startsWith("delete-")).toSeq
+    assert(written.size == 1 && footerIds(Paths.get(out, "data", written.head)) == reserved)
+    val pOut = tmp("ice_posids_p_")
+    IcebergFixtures.writePartitionedV2WithDeletes(spark, pOut,
+      Seq((1L, "en", "a"), (2L, "de", "b")).toDF("id", "lang", "v"), "id", "lang", col("id") === 2L)
+    assert(footerIds(Paths.get(pOut, "data", "del0.parquet")) == reserved)
+    // the ids change nothing for the reader, which resolves by name
+    assert(IcebergInterop.importSnapshot(spark, out).select("id").as[Long].collect().toSet ==
+      (3L to 10L).toSet)
   }
 
   test("appendSnapshot refuses format-v2 tables") {
@@ -1533,5 +1585,177 @@ class IcebergInteropSpec extends SparkSpec {
     val gone = IcebergInterop.removeOrphanFiles(out).map(Paths.get(_).getFileName.toString)
     assert(gone.sorted == staged.sorted, s"reclaimed $gone")
     assert(rows() == rowsN)
+  }
+
+  /** Checks every snapshot of the table's newest metadata version against
+    * the parts of the spec ("Manifests", "Manifest Lists", "Table
+    * Metadata") a writer controls: each manifest-list row names an existing
+    * manifest of the declared length, whose content, partition spec and
+    * added-file count the row repeats; every referenced spec id is in
+    * `partition-specs` and its field ids are the manifest's partition
+    * struct; every entry's sequence number is at most
+    * `last-sequence-number`; and the row counts match the entries. In v2
+    * the spec makes every count and sequence field of a list row required.
+    */
+  private def assertConforms(out: String): Unit = {
+    val metaDir = Paths.get(out, "metadata")
+    val newest = listNames(metaDir).collect {
+      case n if n.matches("v\\d+\\.metadata\\.json") => n.stripPrefix("v").stripSuffix(".metadata.json").toLong
+    }.max
+    val meta = mapper.readTree(Files.readAllBytes(metaDir.resolve(s"v$newest.metadata.json")))
+    val fv = meta.get("format-version").asInt()
+    val specs: Map[Int, Seq[Int]] = meta.get("partition-specs").elements().asScala.map { s =>
+      s.get("spec-id").asInt() -> s.get("fields").elements().asScala.map(_.get("field-id").asInt()).toSeq
+    }.toMap
+    val lastSeq = if (fv == 2) meta.get("last-sequence-number").asLong() else 0L
+    def opt(r: GenericRecord, f: String): Option[AnyRef] =
+      if (r.getSchema.getField(f) == null) None else Option(r.get(f))
+    val v2ListFields = Seq("content", "sequence_number", "min_sequence_number",
+      "added_snapshot_id", "added_data_files_count", "existing_data_files_count",
+      "deleted_data_files_count", "added_rows_count", "existing_rows_count",
+      "deleted_rows_count")
+    meta.get("snapshots").elements().asScala.foreach { snap =>
+      val where = s"$out snapshot ${snap.get("snapshot-id").asLong()}"
+      val (listSchema, rows) = readAvro(ref(out, snap.get("manifest-list").asText()))
+      if (fv == 2) v2ListFields.foreach { f =>
+        val field = listSchema.getField(f)
+        assert(field != null && field.schema().getType != org.apache.avro.Schema.Type.UNION,
+          s"$where: a v2 manifest list must carry '$f' as a required field")
+      }
+      rows.foreach { row =>
+        val manPath = ref(out, row.get("manifest_path").toString)
+        assert(Files.size(manPath) == row.get("manifest_length"), s"$where: manifest_length of $manPath")
+        val reader = new DataFileReader[GenericRecord](
+          new SeekableFileInput(manPath.toFile), new GenericDatumReader[GenericRecord]())
+        val (mSchema, entries, mSpecId, mContent) =
+          try (reader.getSchema, reader.iterator().asScala.toList,
+            reader.getMetaString("partition-spec-id"), Option(reader.getMetaString("content")))
+          finally reader.close()
+        val specId = row.get("partition_spec_id").asInstanceOf[Int]
+        assert(specs.contains(specId), s"$where: spec $specId is not in partition-specs ${specs.keySet}")
+        assert(mSpecId == specId.toString, s"$where: $manPath is written under spec $mSpecId, listed as $specId")
+        val structIds = mSchema.getField("data_file").schema().getField("partition").schema()
+          .getFields.asScala.map(_.getObjectProp("field-id").asInstanceOf[Int]).toSeq
+        assert(structIds == specs(specId), s"$where: $manPath partition struct ids $structIds, spec $specId")
+        val content = opt(row, "content").map(_.asInstanceOf[Int]).getOrElse(0)
+        val files = entries.map(_.get("data_file").asInstanceOf[GenericRecord])
+        val fileContents = files.map(d => opt(d, "content").map(_.asInstanceOf[Int]).getOrElse(0)).toSet
+        assert(if (content == 0) fileContents.subsetOf(Set(0)) else fileContents.subsetOf(Set(1, 2)),
+          s"$where: list content $content over data_file contents $fileContents")
+        if (fv == 2) assert(mContent.contains(if (content == 0) "data" else "deletes"),
+          s"$where: $manPath declares content $mContent, listed as $content")
+        def byStatus(st: Int) = entries.zip(files).collect {
+          case (e, d) if e.get("status").asInstanceOf[Int] == st => d.get("record_count").asInstanceOf[Long]
+        }
+        assert(row.get("added_data_files_count") == byStatus(1).size, s"$where: added files of $manPath")
+        opt(row, "existing_data_files_count").foreach(n =>
+          assert(n == byStatus(0).size, s"$where: existing files of $manPath"))
+        opt(row, "deleted_data_files_count").foreach(n =>
+          assert(n == byStatus(2).size, s"$where: deleted files of $manPath"))
+        Seq("added_rows_count" -> 1, "existing_rows_count" -> 0, "deleted_rows_count" -> 2).foreach {
+          case (f, st) => opt(row, f).foreach(n => assert(n == byStatus(st).sum, s"$where: $f of $manPath"))
+        }
+        val rowSeq = opt(row, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
+        entries.foreach { e =>
+          val seq = opt(e, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(rowSeq)
+          assert(seq <= lastSeq, s"$where: entry sequence $seq above last-sequence-number $lastSeq")
+        }
+        opt(row, "min_sequence_number").foreach { m =>
+          assert(m.asInstanceOf[Long] <= rowSeq, s"$where: min_sequence_number $m above $rowSeq")
+        }
+      }
+    }
+  }
+
+  test("writer conformance: every writer's and fixture's snapshots list manifests that " +
+    "match their rows, their specs and the table's sequence numbers") {
+    // v1: export, append, append with removePaths
+    val table = tmp("ice_conf_") + "/t"
+    VersionedTable.append(table)(dir =>
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1).write.parquet(dir))
+    VersionedTable.append(table)(dir =>
+      Seq((3L, "c")).toDF("id", "v").coalesce(1).write.parquet(dir))
+    val v1 = tmp("ice_conf_v1_")
+    val rels = IcebergInterop.exportSnapshot(spark, table, v1)
+    assertConforms(v1)
+    IcebergInterop.appendSnapshot(spark, v1, Seq((4L, "d")).toDF("id", "v").coalesce(1))
+    assertConforms(v1)
+    IcebergInterop.appendSnapshot(spark, v1, Seq((5L, "e")).toDF("id", "v").coalesce(1),
+      removePaths = Seq(rels.head))
+    assertConforms(v1)
+
+    // convertFromDelta, plain and identity-partitioned
+    def onePart(df: org.apache.spark.sql.DataFrame, dir: String, name: String): Unit = {
+      val t = tmp("ice_conf_part_")
+      df.coalesce(1).write.mode("overwrite").parquet(t)
+      Files.move(Paths.get(t, listNames(Paths.get(t)).find(_.endsWith(".parquet")).get),
+        Paths.get(dir, name))
+      ()
+    }
+    val plain = tmp("ice_conf_d2i_")
+    val rowsDf = Seq((1L, "x", "en"), (2L, "y", "de"), (3L, "z", "en")).toDF("id", "v", "lang")
+    onePart(rowsDf, plain, "a.parquet")
+    DeltaInterop.writeCommit(plain, 0L, adds = Seq("a.parquet"),
+      schemaJson = Some(rowsDf.schema.json))
+    IcebergInterop.convertFromDelta(spark, plain)
+    assertConforms(plain)
+    val parted = tmp("ice_conf_d2ip_")
+    Seq(("en", "p0.parquet"), ("de", "p1.parquet")).foreach { case (l, n) =>
+      onePart(rowsDf.filter(col("lang") === l).drop("lang"), parted, n)
+    }
+    DeltaInterop.writeCommit(parted, 0L, adds = Seq("p0.parquet", "p1.parquet"),
+      schemaJson = Some(rowsDf.schema.json), partitionColumns = Seq("lang"),
+      partitionValues = Map("p0.parquet" -> Map("lang" -> Some("en")),
+        "p1.parquet" -> Map("lang" -> Some("de"))))
+    IcebergInterop.convertFromDelta(spark, parted)
+    assertConforms(parted)
+
+    // the two v1 fixtures
+    val pv1 = tmp("ice_conf_pv1_")
+    IcebergFixtures.writePartitionedV1(spark, pv1, rowsDf, "lang")
+    assertConforms(pv1)
+    val xv1 = tmp("ice_conf_xv1_")
+    IcebergFixtures.writeTransformPartitionedV1(spark, xv1, rowsDf, Seq(
+      ("id_bucket", "bucket[2]", "id", pmod(col("id"), lit(2L)).cast("int"))))
+    assertConforms(xv1)
+
+    // position-delete fixture, then deleteWhere, upsertCdc, rewriteDataFiles
+    val ids = (1L to 12L).map(i => (i, s"v$i")).toDF("id", "v")
+    val pos = tmp("ice_conf_pos_") + "/ice"
+    IcebergFixtures.writeV2WithDeletes(spark, pos, ids, "id", col("id") % 5 === 0)
+    assertConforms(pos)
+    IcebergInterop.deleteWhere(spark, pos, col("id") === 3L)
+    assertConforms(pos)
+    IcebergInterop.upsertCdc(spark, pos,
+      Seq((1L, "U1", false), (2L, "x", true), (20L, "N20", false)).toDF("id", "v", "del"),
+      Seq("id"), Some("del"))
+    assertConforms(pos)
+    IcebergInterop.rewriteDataFiles(spark, pos)
+    assertConforms(pos)
+
+    // equality-delete fixture, then deleteWhereEquality
+    val eq = tmp("ice_conf_eq_")
+    IcebergFixtures.writeV2EqualityDeletes(spark, eq,
+      (1L to 6L).map(i => (i, if (i % 3 == 0) "del" else s"v$i")).toDF("id", "v"), "id", "v", "del")
+    assertConforms(eq)
+    IcebergInterop.deleteWhereEquality(spark, eq, Seq("v1").toDF("v"), Seq("v"))
+    assertConforms(eq)
+
+    // the partitioned v2 fixture with and without a declared global spec,
+    // then deleteWhereEquality (reusing or adding that spec) and upsertCdc
+    Seq(true, false).foreach { declared =>
+      val p = tmp("ice_conf_pv2_") + "/ice"
+      IcebergFixtures.writePartitionedV2WithDeletes(spark, p, rowsDf, "id", "lang",
+        col("id") === 2L, declareGlobalSpec = declared)
+      // undeclared, the fixture's delete manifest names a spec the
+      // metadata lacks: the shape deleteWhereEquality's commit repairs
+      if (declared) assertConforms(p)
+      IcebergInterop.deleteWhereEquality(spark, p, Seq(3L).toDF("id"), Seq("id"))
+      assertConforms(p)
+      IcebergInterop.upsertCdc(spark, p,
+        Seq((1L, "fr", "A", false), (4L, "de", "d", false)).toDF("id", "lang", "v", "del"),
+        Seq("id"), Some("del"))
+      assertConforms(p)
+    }
   }
 }

@@ -184,7 +184,11 @@ print("FAILURES:", fails)
 gate_path = os.environ.get("GRAFT_GATE_JSON")
 if gate_path:
     import datetime
+    # a SPARK_GRAFT_ONLY subset run labels itself, so its record is never
+    # read as the full-inventory gate
+    only = os.environ.get("SPARK_GRAFT_ONLY")
     doc = {"sf_dir": sf_dir, "out_dir": out_dir, "failures": fails,
+           "only": sorted(only.split(",")) if only else None,
            "n_queries": len(gate),
            "n_ok": sum(1 for e in gate.values() if e["status"] in ("ok", "rows_only")),
            "generated_utc": datetime.datetime.now(datetime.timezone.utc).isoformat(),

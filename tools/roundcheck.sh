@@ -13,6 +13,12 @@ OUT="${2:-/tmp/graft_roundcheck}"
 # per-query gate record as GATE_r16.json in the repo root, so a failed
 # driver-side CORRECTNESS scrape (r15: landed as `{}`) never again leaves
 # a round without its correctness record.
+#
+# Subset run: set SPARK_GRAFT_ONLY to a comma-separated list of full query
+# names (e.g. `q142_iceberg_roundtrip,q145_iceberg_partitioned`). Verify then
+# runs only those queries, check.py compares only their outputs, and the gate
+# record carries the list as `"only": [...]` (`null` on a full run), so a
+# subset result is never read as the full-inventory gate.
 ROUND="${3:-}"
 GATE_JSON=""
 if [ -n "$ROUND" ]; then GATE_JSON="$(pwd)/GATE_r${ROUND}.json"; fi
