@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.FeatureStore
 import graft.model._
-import graft.refresh.RefreshManager
+import graft.refresh.{RefreshManager, RefreshRun}
 
 /** Sustained target-lag evidence for the managed-refresh plane (C1 parity,
   * BASELINE.md: "sustain 1-minute lag on events"; reference contract:
@@ -184,6 +184,10 @@ object LagProbe {
       if (isMaint) mgr.startMaintenanceStream(rec, view, srcDir, schema)
       else mgr.startIncremental(rec, view, srcDir, schema)
     val elected = mgr.electedMode(rec).getOrElse("?")
+    // per-batch progress exists only for streamed runs; a folded run
+    // reports its last commit
+    val streamed = q match { case s: RefreshRun.Streamed => Some(s.query); case _ => None }
+    def lastBatch: Option[Long] = streamed.flatMap(s => Option(s.lastProgress)).map(_.batchId)
 
     val feeder = new Thread(() => {
       while (!Thread.currentThread().isInterrupted) {
@@ -209,17 +213,17 @@ object LagProbe {
         samples += lag
         System.err.println(f"[lagprobe ${cell.mode}x${cell.scale}] " +
           f"t=${samples.size * 5}%4ds lag=$lag%6.1f s " +
-          f"(batches=${Option(q.lastProgress).map(_.batchId).getOrElse(-1L)})")
+          f"(batches=${lastBatch.getOrElse(-1L)}, version=${q.lastCommit.map(_.version).getOrElse(-1L)})")
       }
     }
     feeder.interrupt()
     // per-batch evidence BEFORE stopping: (batchId, stateRows, triggerMs)
-    val series = q.recentProgress.toSeq.map { p =>
+    val series = streamed.toSeq.flatMap(_.recentProgress).map { p =>
       val stateRows =
         if (p.stateOperators.nonEmpty) p.stateOperators.map(_.numRowsTotal).max else 0L
       (p.batchId, stateRows, Option(p.durationMs.get("triggerExecution")).map(_.toLong).getOrElse(0L))
     }.filter(_._3 > 0)
-    val nBatches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(0L)
+    val nBatches = lastBatch.map(_ + 1).getOrElse(0L)
     mgr.stopAll()
     val tableRows = scala.util.Try(
       if (isMaint) mgr.serveMaintained(rec).count()

@@ -378,9 +378,12 @@ object IcebergFixtures {
   private def identitySpec(partCol: String, partIdx: Int, partType: DataType): PartitionSpec =
     PartitionSpec(0, Seq(PartitionField(partCol, "identity", partIdx + 1, 1000, partType)))
 
-  /** A position-delete frame, one partition, its `file_path`/`pos`
-    * columns carrying the spec's reserved field ids.
+  /** A position-delete frame, one partition sorted by (`file_path`,
+    * `pos`) as the spec's "Position Delete Files" requires, its columns
+    * carrying the spec's reserved field ids.
     */
   private def positionDeletes(delDf: DataFrame): DataFrame =
-    IcebergInterop.withParquetIds(delDf.repartition(1), IcebergInterop.PositionDeleteIds)
+    IcebergInterop.withParquetIds(
+      delDf.repartition(1).sortWithinPartitions(col("file_path"), col("pos")),
+      IcebergInterop.PositionDeleteIds)
 }

@@ -855,7 +855,8 @@ object IcebergInterop {
   }
 
   /** Write `m` under `metaDir` (spec "Manifests"): one entry per file,
-    * stamped with `snapshotId`, v2 entries with their file's sequence
+    * an added one stamped with `snapshotId` and a carried (EXISTING) one
+    * with the snapshot that added it, v2 entries with their file's sequence
     * number and content. A manifest holds data files or delete files,
     * never both. Returns its manifest-list row, whose sequence numbers
     * span its entries' (`seq` when it has none).
@@ -884,7 +885,7 @@ object IcebergInterop {
       putStatMaps(df, lf)
       val e = new GenericData.Record(eSchema)
       e.put("status", status)
-      e.put("snapshot_id", snapshotId)
+      e.put("snapshot_id", if (status == 0) lf.addedSnapshot.getOrElse(snapshotId) else snapshotId)
       if (v2) {
         e.put("sequence_number", lf.seq)
         e.put("file_sequence_number", lf.seq)
@@ -1213,7 +1214,9 @@ object IcebergInterop {
     * (empty for unpartitioned tables / delete files), the entry's data
     * sequence number (0 in v1), the `data_file.content` discriminator
     * (0 data, 1 position deletes, 2 equality deletes), the equality
-    * field ids (equality deletes only) and the column-stat maps.
+    * field ids (equality deletes only), the column-stat maps, and the id
+    * of the snapshot that added the file (None for a file not yet
+    * committed, which the snapshot adding it stamps with its own id).
     */
   private[storage] case class LiveFile(
       path: String, size: Long, records: Long, partition: Map[String, Any],
@@ -1221,7 +1224,8 @@ object IcebergInterop {
       nullCounts: Map[Int, Long] = Map.empty,
       valueCounts: Map[Int, Long] = Map.empty,
       lowerBounds: Map[Int, Array[Byte]] = Map.empty,
-      upperBounds: Map[Int, Array[Byte]] = Map.empty)
+      upperBounds: Map[Int, Array[Byte]] = Map.empty,
+      addedSnapshot: Option[Long] = None)
 
   /** An Avro field read that tolerates the field being absent from the
     * file's writer schema (v1 manifests lack the v2-only fields).
@@ -1257,7 +1261,10 @@ object IcebergInterop {
       require(Files.exists(p), s"manifest missing: $p")
       readAvro(p)
     }
-    def fileOf(e: GenericRecord, manifestSeq: Long): LiveFile = {
+    def manifestSeqOf(m: GenericRecord): Long =
+      avroOpt(m, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
+    def fileOf(e: GenericRecord, m: GenericRecord): LiveFile = {
+      val manifestSeq = manifestSeqOf(m)
       val df = e.get("data_file").asInstanceOf[GenericRecord]
       val fmt = df.get("file_format").toString
       require(fmt.equalsIgnoreCase("PARQUET"), s"unsupported data file format $fmt")
@@ -1308,19 +1315,21 @@ object IcebergInterop {
         valueCounts = statMap("value_counts")
           .map { case (k, v) => k -> v.asInstanceOf[Long] },
         lowerBounds = statMap("lower_bounds").map { case (k, v) => k -> bytesOf(v) },
-        upperBounds = statMap("upper_bounds").map { case (k, v) => k -> bytesOf(v) })
+        upperBounds = statMap("upper_bounds").map { case (k, v) => k -> bytesOf(v) },
+        // a null entry snapshot id inherits the manifest's (spec
+        // "Snapshot ID Inheritance")
+        addedSnapshot = avroOpt(e, "snapshot_id").orElse(avroOpt(m, "added_snapshot_id"))
+          .map(_.asInstanceOf[Long]))
     }
 
     val (dataManifests, deleteManifests) = readAvro(manifestList).partition { r =>
       avroOpt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0) == 0
     }
-    def manifestSeqOf(m: GenericRecord): Long =
-      avroOpt(m, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
     val data = dataManifests.flatMap { m =>
       entriesOf(m.get("manifest_path").toString).flatMap { e =>
         if (e.get("status").asInstanceOf[Int] == 2) None // DELETED
         else {
-          val lf = fileOf(e, manifestSeqOf(m))
+          val lf = fileOf(e, m)
           require(lf.content == 0,
             "delete file carried by a DATA manifest (manifest_file.content=0 " +
               "but data_file.content!=0) — malformed table, refusing")
@@ -1332,7 +1341,7 @@ object IcebergInterop {
       entriesOf(m.get("manifest_path").toString).flatMap { e =>
         if (e.get("status").asInstanceOf[Int] == 2) None
         else {
-          val lf = fileOf(e, manifestSeqOf(m))
+          val lf = fileOf(e, m)
           lf.content match {
             case 1 => Some(lf) // position deletes — applied by path+pos
             case 2 =>          // equality deletes — applied by value+sequence

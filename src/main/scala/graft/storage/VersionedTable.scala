@@ -50,7 +50,7 @@ import org.apache.spark.sql.types.StructType
   *     clean [[ConcurrentCommitException]], never a silently lost commit
   *     (see [[claimVersion]]).
   *
-  * Three commit kinds:
+  * Commit kinds:
   *  - [[overwrite]]: manifest := [newSegment] — FULL refresh.
   *  - [[append]]: manifest := segments :+ newSegment — append-mode streams
   *    (each micro-batch lands O(batch) bytes, never rewrites history).
@@ -60,6 +60,11 @@ import org.apache.spark.sql.types.StructType
   *    `compactEvery` commits the merged view is rewritten into one segment
   *    (manifest := [compacted]) so read amplification stays bounded — the
   *    LSM/Delta compaction trade.
+  *  - [[fold]]: an append or upsert segment (or a replacing one) committed
+  *    together with the set of source files the batch refresh folded;
+  *    an upsert fold's segments hold partial aggregates that the
+  *    manifest's per-column `merge` functions (sum, min, max) combine at
+  *    read time.
   *
   * Mode compatibility is enforced at commit: upserting into a table whose
   * history is keyless ''append'' segments is refused (merge-on-read would
@@ -150,10 +155,31 @@ object VersionedTable {
     * without rebuilding the table (or vice versa) breaks the guard; the
     * force-full-refresh admin op resets both together, and any batch
     * overwrite (batchId −1) clears the guard.
+    *
+    * `merge`: per value column of a keyed table, the [[MergeFns]] function
+    * that folds its per-segment partial aggregates at read time; empty
+    * means latest-segment-wins for every column. `consumed`: the source
+    * files a batch fold ([[fold]]) has folded into the table, committed in
+    * the same flip as the data they produced, so a fold lists exactly the
+    * files it has not seen yet. None means no fold record (a table written
+    * by any other writer); every rewrite of a table (compaction, optimize,
+    * range delete) carries both fields over.
     */
   final case class Manifest(version: Long, kind: String, keys: Seq[String],
       segments: Seq[String], batchId: Long = -1L,
-      stats: Map[String, SegStats] = Map.empty)
+      stats: Map[String, SegStats] = Map.empty,
+      merge: Map[String, String] = Map.empty,
+      consumed: Option[Set[String]] = None)
+
+  /** Merge-on-read functions a keyed table may name per value column (see
+    * `merge` on [[Manifest]]): every segment then holds a partial
+    * aggregate per key, and the read folds them with the named function.
+    * `sum` also merges counts. Columns without one stay latest-wins.
+    */
+  val MergeFns: Set[String] = Set("sum", "min", "max")
+
+  /** Segments an upsert table holds before a commit compacts it. */
+  val CompactEvery: Int = 8
 
   /** Per-segment min/max of one long-ordered column (event time as epoch
     * micros) — the manifest-level data-skipping index. Parquet footers
@@ -192,11 +218,15 @@ object VersionedTable {
         e.getKey -> SegStats(v.get("col").asText(), v.get("min").asLong(), v.get("max").asLong())
       }.toMap
     }.getOrElse(Map.empty[String, SegStats])
+    val merge = Option(n.get("merge")).map(
+      _.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
+      .getOrElse(Map.empty[String, String])
+    val consumed = Option(n.get("consumed")).map(_.elements().asScala.map(_.asText()).toSet)
     Manifest(
       n.get("version").asLong(), kind, keys,
       n.get("segments").elements().asScala.map(_.asText()).toSeq,
       Option(n.get("batchId")).map(_.asLong()).getOrElse(-1L),
-      stats)
+      stats, merge, consumed)
   }
 
   def readManifest(path: String): Option[Manifest] = {
@@ -267,6 +297,13 @@ object VersionedTable {
           val o = st.putObject(seg)
           o.put("col", s.col); o.put("min", s.min); o.put("max", s.max)
         }
+      }
+      if (m.merge.nonEmpty) {
+        val mo = n.putObject("merge")
+        m.merge.toSeq.sorted.foreach { case (c, f) => mo.put(c, f) }
+      }
+      m.consumed.foreach { c =>
+        val ca = n.putArray("consumed"); c.toSeq.sorted.foreach(ca.add)
       }
       val bytes = mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(n)
       claimVersion(path, m.version)
@@ -469,9 +506,11 @@ object VersionedTable {
   }
 
   /** Committed merged view of the table. Plain union for overwrite/append
-    * tables; for keyed (upsert) tables, latest-segment-wins per key — the
-    * merge-on-read side of the upsert commit. `asOfVersion` reads the table
-    * as of a past commit (time travel; see [[readManifestAt]]).
+    * tables; for keyed (upsert) tables, one row per key — the merge-on-read
+    * side of the upsert commit: each column the manifest's `merge` names is
+    * folded over the segments by its function, every other column is
+    * latest-segment-wins. `asOfVersion` reads the table as of a past commit
+    * (time travel; see [[readManifestAt]]).
     */
   def read(spark: SparkSession, path: String, asOfVersion: Option[Long] = None): DataFrame =
     (asOfVersion match {
@@ -495,22 +534,47 @@ object VersionedTable {
         val tagged = m.segments.zipWithIndex.map { case (s, i) =>
           readSegment(spark, path, s).withColumn(SegCol, lit(i))
         }
-        // latest-segment-wins as a hash max_by aggregation, not a
-        // partitioned row_number sort (r17, guide §2.2): same one shuffle
-        // on the keys, but map-side partial aggregation replaces the
-        // per-key sort, and segments hold at most one row per key (the
-        // upsert contract) so max_by(…, seg) picks the identical row.
-        val u = union(tagged)
-        val outCols = u.columns.filter(_ != SegCol).toSeq
-        val valCols = outCols.filterNot(m.keys.contains)
-        if (valCols.isEmpty) // key-only table: latest-wins ≡ distinct
-          u.select(outCols.map(col): _*).distinct()
-        else
-          u.groupBy(m.keys.map(col): _*)
-            .agg(max_by(struct(valCols.map(col): _*), col(SegCol)).as("__graft_v"))
-            .select(outCols.map(c =>
-              if (m.keys.contains(c)) col(c) else col(s"__graft_v.$c").as(c)): _*)
+        mergeByKey(union(tagged), m.keys, m.merge, Some(SegCol))
       }
+  }
+
+  /** One row per `keys` tuple of `u`: each column `merge` names is folded
+    * by its [[MergeFns]] function and cast back to its type in `u` (a
+    * `sum` widens), every other value column is latest-wins by the
+    * `order` column, which is dropped. Without `order`, `merge` must name
+    * every value column.
+    *
+    * Latest-wins is a hash max_by aggregation, not a partitioned
+    * row_number sort (r17, guide §2.2): same one shuffle on the keys, but
+    * map-side partial aggregation replaces the per-key sort, and segments
+    * hold at most one row per key (the upsert contract) so max_by(…, seg)
+    * picks the identical row. The merge functions ride the same
+    * aggregation.
+    */
+  private[graft] def mergeByKey(u: DataFrame, keys: Seq[String],
+      merge: Map[String, String], order: Option[String]): DataFrame = {
+    val outCols = u.columns.filterNot(order.contains).toSeq
+    val valCols = outCols.filterNot(keys.contains)
+    val latest = valCols.filterNot(merge.contains)
+    require(latest.isEmpty || order.isDefined,
+      s"no merge function and no order for ${latest.mkString(",")}")
+    if (valCols.isEmpty) // key-only table: latest-wins ≡ distinct
+      return u.select(outCols.map(col): _*).distinct()
+    val folded = valCols.filter(merge.contains).map { c =>
+      val f = merge(c) match {
+        case "sum" => sum(col(c))
+        case "min" => min(col(c))
+        case "max" => max(col(c))
+        case other => throw new IllegalArgumentException(s"unknown merge function $other for $c")
+      }
+      f.cast(u.schema(c).dataType).as(c)
+    }
+    val winner = if (latest.isEmpty) Nil
+      else Seq(max_by(struct(latest.map(col): _*), col(order.get)).as("__graft_v"))
+    val aggs = folded ++ winner
+    u.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      .select(outCols.map(c =>
+        if (keys.contains(c) || merge.contains(c)) col(c) else col(s"__graft_v.$c").as(c)): _*)
   }
 
   /** Change data feed between two committed versions — the Delta CDF /
@@ -624,10 +688,11 @@ object VersionedTable {
     * `OPTIMIZE [ZORDER BY]` maintenance operation, manifest-native.
     *
     * Logical content is untouched: what gets rewritten is the committed
-    * MERGED view (latest-wins merge-on-read for upsert tables), `keys` are
+    * MERGED view (merge-on-read for upsert tables), `keys` and `merge` are
     * preserved (an optimized upsert table keeps accepting upserts), and the
-    * committed `batchId` watermark carries over so a streaming sink's
-    * exactly-once replay guard survives an optimize between micro-batches.
+    * committed `batchId` watermark and fold `consumed` set carry over so a
+    * streaming sink's exactly-once replay guard, or a batch fold's, survives
+    * an optimize between refreshes.
     * Event-time stats for the new segment fold the old per-segment
     * envelopes (min of mins / max of maxes — conservative: an upsert merge
     * can only narrow the true range, and a too-wide envelope keeps a
@@ -688,8 +753,8 @@ object VersionedTable {
     val seg = newSegName(v)
     laidOut.write.parquet(segDir(path, seg))
     commitManifest(path, Some(m.version),
-      Manifest(v, if (m.kind == "upsert") "upsert" else "full", m.keys,
-        Seq(seg), m.batchId, segStats.map(seg -> _).toMap))
+      m.copy(version = v, kind = if (m.kind == "upsert") "upsert" else "full",
+        segments = Seq(seg), stats = segStats.map(seg -> _).toMap))
     vacuum(path)
   }
 
@@ -708,8 +773,10 @@ object VersionedTable {
     * retention ticks viable on a table of thousands of segments. Keyed
     * upsert tables take the conservative whole-table path (merge-on-read
     * first, then filter: a pruned segment there could resurrect a
-    * superseded key), preserving keys. The commit is one CAS manifest
-    * flip; `batchId` carries over so streaming replay guards survive.
+    * superseded key), preserving keys and merge functions. The commit is
+    * one CAS manifest flip; `batchId` and the fold `consumed` set carry
+    * over so refresh replay guards survive (a fold that lost its consumed
+    * set would re-read every source file and resurrect the expired rows).
     * Returns (segments kept verbatim, dropped, rewritten).
     */
   def deleteRange(
@@ -730,7 +797,7 @@ object VersionedTable {
       merged.write.parquet(segDir(path, seg))
       val st = SegStats.of(readSegment(spark, path, seg), statsCol)
       commitManifest(path, Some(m.version),
-        Manifest(v, "upsert", m.keys, Seq(seg), m.batchId, st.map(seg -> _).toMap))
+        m.copy(version = v, kind = "upsert", segments = Seq(seg), stats = st.map(seg -> _).toMap))
       vacuum(path)
       return (0, 0, 1)
     }
@@ -767,7 +834,7 @@ object VersionedTable {
         (Seq(ns), Map.empty[String, SegStats])
       }
     commitManifest(path, Some(m.version),
-      Manifest(v, m.kind, m.keys, finalSegs, m.batchId, finalStats))
+      m.copy(version = v, segments = finalSegs, stats = finalStats))
     vacuum(path)
     (kept, dropped, rewritten)
   }
@@ -821,12 +888,8 @@ object VersionedTable {
       stats: Option[SegStats] = None)(writeSeg: String => Unit): Unit = {
     val m = readManifest(path)
     if (alreadyCommitted(m, batchId)) return
-    val v = m.map(_.version).getOrElse(0L) + 1
-    val seg = newSegName(v)
-    writeSeg(segDir(path, seg))
-    commitManifest(path, m.map(_.version),
-      Manifest(v, "full", Seq.empty, Seq(seg), batchId.getOrElse(-1L),
-        stats.map(seg -> _).toMap))
+    commitSegment(path, m, replace = true, "full", Seq.empty, batchId.getOrElse(-1L),
+      stats, Map.empty, None)(writeSeg)
   }
 
   /** Append publish: the new segment joins the committed set (O(batch)).
@@ -841,29 +904,26 @@ object VersionedTable {
     if (alreadyCommitted(m, batchId)) return
     m.foreach(prev => require(prev.keys.isEmpty,
       s"cannot append keyless rows into upsert table (keys ${prev.keys}) at $path"))
-    val v = m.map(_.version).getOrElse(0L) + 1
-    val seg = newSegName(v)
-    writeSeg(segDir(path, seg))
-    commitManifest(path, m.map(_.version),
-      Manifest(v, "append", Seq.empty, m.map(_.segments).getOrElse(Seq.empty) :+ seg,
-        batchId.getOrElse(-1L),
-        m.map(_.stats).getOrElse(Map.empty) ++ stats.map(seg -> _).toMap))
+    commitSegment(path, m, replace = false, "append", Seq.empty, batchId.getOrElse(-1L),
+      stats, Map.empty, None)(writeSeg)
   }
 
   /** Upsert publish: new segment's rows supersede older rows with the same
-    * `keys` tuple at read time. Valid bases: an upsert table with the same
-    * keys, a single-segment FULL publish (the initialize→incremental flow;
-    * a FULL aggregation result has unique keys by construction), or an empty
-    * table. An append-history base is refused — merge-on-read would collapse
-    * legitimate duplicate-key rows inside its segments. Rewrites the merged
-    * view into a single segment every `compactEvery` commits via
+    * `keys` tuple at read time. Valid bases: a latest-wins upsert table with
+    * the same keys, a single-segment FULL or upsert publish (the
+    * initialize→incremental flow; a FULL aggregation result has unique keys
+    * by construction), or an empty table. An append-history base is
+    * refused — merge-on-read would collapse legitimate duplicate-key rows
+    * inside its segments — and so is a multi-segment table with merge
+    * functions, whose segments hold partial aggregates, not rows. Rewrites
+    * the merged view into a single segment every `compactEvery` commits via
     * `compactWrite`.
     */
   def upsert(
       spark: SparkSession,
       path: String,
       keys: Seq[String],
-      compactEvery: Int = 8,
+      compactEvery: Int = CompactEvery,
       compactWrite: (DataFrame, String) => Unit,
       batchId: Option[Long] = None,
       stats: Option[SegStats] = None)(writeSeg: String => Unit): Unit = {
@@ -871,38 +931,111 @@ object VersionedTable {
     val m = if (m0.isEmpty && legacyExists(path)) Some(migrateLegacy(path)) else m0
     if (alreadyCommitted(m, batchId)) return
     m.foreach { prev =>
-      val compatible = (prev.kind == "upsert" && prev.keys == keys) ||
-        (prev.kind == "full" && prev.segments.size == 1)
+      val compatible = prev.segments.size == 1 && prev.kind == "full" ||
+        prev.kind == "upsert" && prev.keys == keys && (prev.merge.isEmpty || prev.segments.size == 1)
       require(compatible,
         s"upsert(keys=$keys) incompatible with ${prev.kind} table (keys ${prev.keys}) at $path")
     }
-    val v = m.map(_.version).getOrElse(0L) + 1
+    val appended = commitSegment(path, m, replace = false, "upsert", keys,
+      batchId.getOrElse(-1L), stats, Map.empty, None)(writeSeg)
+    maybeCompact(spark, path, appended, compactEvery, compactWrite)
+  }
+
+  /** Fold publish — the commit of one batch refresh that folded the source
+    * files it had not consumed yet. `base` is the manifest the caller
+    * listed those files against, and the flip is a compare-and-swap on its
+    * version, so the data and the new `consumed` set land together or not
+    * at all: a racing fold that read the same base loses with a
+    * [[ConcurrentCommitException]] and no file is folded twice, with no
+    * checkpoint beside the table.
+    *
+    * `replace` makes the new segment the whole table (the first fold, or a
+    * rebase); otherwise it joins `base`'s segments — an append segment when
+    * `keys` is empty, else a partial-aggregate upsert segment that `merge`
+    * folds into the older ones at read time. A keyed fold compacts every
+    * [[CompactEvery]] segments through `compactWrite`, as [[upsert]] does.
+    * Returns the manifest that ends up committed.
+    */
+  def fold(
+      spark: SparkSession,
+      path: String,
+      base: Option[Manifest],
+      consumed: Set[String],
+      keys: Seq[String] = Seq.empty,
+      merge: Map[String, String] = Map.empty,
+      replace: Boolean = false,
+      stats: Option[SegStats] = None,
+      compactWrite: (DataFrame, String) => Unit = (df, dir) => df.write.parquet(dir))(
+      writeSeg: String => Unit): Manifest = {
+    require(merge.values.forall(MergeFns.contains), s"unknown merge function in $merge")
+    if (!replace) {
+      val prev = base.getOrElse(throw new IllegalArgumentException(
+        s"a stacking fold needs a committed base at $path"))
+      require(canStack(prev, keys, merge),
+        s"fold(keys=$keys, merge=$merge) cannot stack on ${prev.kind} table " +
+          s"(keys ${prev.keys}, merge ${prev.merge}) at $path")
+    }
+    val kind = if (keys.nonEmpty) "upsert" else if (replace) "full" else "append"
+    val m = commitSegment(path, base, replace, kind, keys, -1L, stats, merge,
+      Some(consumed))(writeSeg)
+    if (keys.isEmpty) m else maybeCompact(spark, path, m, CompactEvery, compactWrite)
+  }
+
+  /** True when a fold with `keys` and `merge` may add a segment on top of
+    * `base` instead of replacing it: an append fold onto any keyless table,
+    * a keyed fold onto a table with the same keys whose merge functions
+    * match (or that has one segment, whose keys are unique).
+    */
+  private[graft] def canStack(base: Manifest, keys: Seq[String], merge: Map[String, String]): Boolean =
+    if (keys.isEmpty) base.keys.isEmpty
+    else base.segments.size == 1 && (base.kind == "full" || base.keys == keys) ||
+      base.kind == "upsert" && base.keys == keys && base.merge == merge
+
+  /** Write one segment and flip the manifest from `base` to a manifest that
+    * holds it: alone (`replace`) or after `base`'s segments, whose stats
+    * it keeps.
+    */
+  private def commitSegment(path: String, base: Option[Manifest], replace: Boolean,
+      kind: String, keys: Seq[String], batchId: Long, stats: Option[SegStats],
+      merge: Map[String, String], consumed: Option[Set[String]])(
+      writeSeg: String => Unit): Manifest = {
+    val v = base.map(_.version).getOrElse(0L) + 1
     val seg = newSegName(v)
     writeSeg(segDir(path, seg))
-    val appended = Manifest(v, "upsert", keys,
-      m.map(_.segments).getOrElse(Seq.empty) :+ seg, batchId.getOrElse(-1L),
-      m.map(_.stats).getOrElse(Map.empty) ++ stats.map(seg -> _).toMap)
-    commitManifest(path, m.map(_.version), appended)
-    if (appended.segments.size >= compactEvery) {
-      val merged = read(spark, path) // resolves the manifest just committed
-      val cseg = newSegName(appended.version + 1)
-      compactWrite(merged, segDir(path, cseg))
-      // the compacted segment's stats are the union envelope of its inputs'
-      // (valid iff every input segment carried stats on the same column —
-      // merge-on-read only drops rows, so the envelope stays a sound bound)
-      val cstats = {
-        val ss = appended.segments.flatMap(appended.stats.get)
-        if (ss.size == appended.segments.size && ss.map(_.col).distinct.size == 1)
-          Map(cseg -> SegStats(ss.head.col, ss.map(_.min).min, ss.map(_.max).max))
-        else Map.empty[String, SegStats]
-      }
-      // compaction is an optimization, not a publish: if a concurrent commit
-      // beat the flip, skip it — the upsert above is already durable. The
-      // compacted manifest keeps the data-state batchId.
-      try commitManifest(path, Some(appended.version),
-        Manifest(appended.version + 1, "upsert", keys, Seq(cseg), appended.batchId, cstats))
-      catch { case _: ConcurrentCommitException => () }
+    val prior = if (replace) None else base
+    val m = Manifest(v, kind, keys, prior.map(_.segments).getOrElse(Seq.empty) :+ seg,
+      batchId, prior.map(_.stats).getOrElse(Map.empty) ++ stats.map(seg -> _),
+      merge, consumed)
+    commitManifest(path, base.map(_.version), m)
+    m
+  }
+
+  /** Rewrite a keyed table's merged view into one segment once it has
+    * `compactEvery` segments; returns the manifest left committed.
+    */
+  private def maybeCompact(spark: SparkSession, path: String, appended: Manifest,
+      compactEvery: Int, compactWrite: (DataFrame, String) => Unit): Manifest = {
+    if (appended.segments.size < compactEvery) return appended
+    val merged = read(spark, path) // resolves the manifest just committed
+    val cseg = newSegName(appended.version + 1)
+    compactWrite(merged, segDir(path, cseg))
+    // the compacted segment's stats are the union envelope of its inputs'
+    // (valid iff every input segment carried stats on the same column —
+    // merge-on-read only drops rows, so the envelope stays a sound bound)
+    val cstats = {
+      val ss = appended.segments.flatMap(appended.stats.get)
+      if (ss.size == appended.segments.size && ss.map(_.col).distinct.size == 1)
+        Map(cseg -> SegStats(ss.head.col, ss.map(_.min).min, ss.map(_.max).max))
+      else Map.empty[String, SegStats]
     }
+    // compaction is an optimization, not a publish: if a concurrent commit
+    // beat the flip, skip it — the commit above is already durable. The
+    // compacted manifest keeps the data-state batchId, merge functions and
+    // consumed set.
+    val compacted = appended.copy(version = appended.version + 1,
+      segments = Seq(cseg), stats = cstats)
+    try { commitManifest(path, Some(appended.version), compacted); compacted }
+    catch { case _: ConcurrentCommitException => appended }
   }
 
   /** Delete unreferenced segments older than `keepGenerations` manifest

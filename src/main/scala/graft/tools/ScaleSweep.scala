@@ -33,6 +33,27 @@ import graft.pit.AsOfJoin
   * Usage: tools/run.sh graft.tools.ScaleSweep [sfDir] → SCALEPROBE_r09.json (override via GRAFT_PROBE_OUT)
   */
 object ScaleSweep {
+
+  /** The q95/q123 quality gate over `docs`' `text`: tokens and the keep
+    * bit are projected below a lazy `localCheckpoint` barrier and the
+    * filter reads the stored bit, so `GramStatsExpr` runs once per row. A
+    * Filter condition gets no common-subexpression elimination (each of
+    * `qualityKeep`'s four reads calls the kernel), and without the barrier
+    * predicate pushdown substitutes a projected bit back into the Filter.
+    */
+  private[graft] def publishGate(docs: DataFrame): DataFrame =
+    keepBit(docs).localCheckpoint(false)
+      .filter(size(col("__t")) > 0 && col("__keep"))
+      .drop("__t", "__keep")
+
+  /** `docs` with its `text` tokens (`__t`) and quality keep bit (`__keep`)
+    * in one projection: the part of [[publishGate]] below the barrier.
+    */
+  private[graft] def keepBit(docs: DataFrame): DataFrame = {
+    val toks = filter(split(lower(col("text")), "\\s+"), x => length(x) > 0)
+    docs.withColumn("__t", toks)
+      .withColumn("__keep", graft.functions.TextFunctions.qualityKeep(col("__t")))
+  }
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = SparkSession.builder().master("local[32]")
@@ -472,13 +493,7 @@ object ScaleSweep {
       //     never blow past it (a third corpus-scale exchange = the
       //     composition regressed)
       measure("publish", scale) {
-        val toks = filter(split(lower(col("text")), "\\s+"), x => length(x) > 0)
-        val gated = docs
-          .withColumn("__t", toks)
-          .filter(size(col("__t")) > 0)
-          .filter(graft.functions.TextFunctions.qualityKeep(col("__t")))
-          .drop("__t")
-        val canon = gated.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
+        val canon = publishGate(docs).groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
         runAll(graft.functions.ShardExport.shardManifest(
           graft.functions.ShardExport.shardAssign(canon, "doc_id", "text", 8, 1000L),
           "doc_id"))

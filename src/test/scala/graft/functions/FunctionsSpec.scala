@@ -842,6 +842,11 @@ class FunctionsSpec extends SparkSpec {
     assert(kernelCalls(gated) == 0)
     assert(gated.collect().toSeq == inFilter.collect().toSeq)
     assert(gated.collect().map(_.getLong(0)).toSeq == Seq(1L))
+    // ScaleSweep's publish gate: one call below its barrier, none above
+    assert(kernelCalls(graft.tools.ScaleSweep.keepBit(docs)) == 1)
+    val sweepGate = graft.tools.ScaleSweep.publishGate(docs)
+    assert(kernelCalls(sweepGate) == 0)
+    assert(sweepGate.collect().toSeq == inFilter.collect().toSeq)
   }
 
   test("exactSubstrDedup: first occurrence kept, later spans cut, within-doc repeats cut") {

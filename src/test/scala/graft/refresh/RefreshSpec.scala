@@ -146,9 +146,9 @@ class RefreshSpec extends SparkSpec {
       availableNow = false, pathGlobFilter = Some("events.parquet"))
     try {
       val deadline = System.currentTimeMillis() + 120000
-      while (q.lastProgress == null && System.currentTimeMillis() < deadline) Thread.sleep(500)
-      assert(q.lastProgress != null, "no micro-batch completed within 2 minutes")
-      val batchMs = q.lastProgress.durationMs.get("triggerExecution").longValue()
+      while (q.lastCommit.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(500)
+      assert(q.lastCommit.nonEmpty, "no refresh completed within 2 minutes")
+      val batchMs = q.lastCommit.get.millis
       assert(batchMs < 60000, s"micro-batch took ${batchMs}ms — exceeds the 1-minute target lag")
       assert(fs.readFeatureView("fv_lag", "1").agg(sum("f_n")).collect()(0).getLong(0) ==
         raw.count())
@@ -700,6 +700,242 @@ class RefreshSpec extends SparkSpec {
         r.getAs[Long]("n_users"))).toSet
     assert(got == want)
     mgr.stopAll()
+  }
+
+  // ---- batch fold: shared fixtures -------------------------------------
+
+  private val foldSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
+    org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
+  private val T0 = 1704067200L // 2024-01-01T00:00:00Z, seconds
+
+  private type SrcRow = (Long, Long, Option[Long]) // k, ts seconds, v
+
+  /** Seeded rows of source file `i`: event times inside hour `i`. */
+  private def foldRows(rnd: scala.util.Random, i: Int): Seq[SrcRow] =
+    Seq.fill(5 + rnd.nextInt(30))((rnd.nextInt(12).toLong, T0 + i * 3600L + rnd.nextInt(3600),
+      if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(100).toLong)))
+
+  /** Land `rows` as one new parquet file under `dir`. */
+  private def landFile(dir: String, rows: Seq[SrcRow]): Unit = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.map { case (k, t, v) =>
+      org.apache.spark.sql.Row(k, new java.sql.Timestamp(t * 1000L), v.map(Long.box).orNull)
+    }.asJava, foldSchema).coalesce(1).write.mode("append").parquet(dir)
+  }
+
+  private val AppendFoldQuery = "SELECT k, ts, v FROM %s WHERE v >= 10"
+  private val AggFoldQuery =
+    "SELECT k, count(*) AS n, sum(v) AS s, min(v) AS lo, max(ts) AS last_ts FROM %s GROUP BY k"
+
+  private type AggRow = (Long, Option[Long], Option[Long], Long) // n, s, lo, last_ts
+
+  /** The append FV over `rows`, sorted. */
+  private def appendModel(rows: Seq[SrcRow]): Seq[SrcRow] =
+    rows.filter(_._3.exists(_ >= 10)).sorted
+
+  /** Fold `rows` into the aggregate FV state `m`. */
+  private def aggModel(m: Map[Long, AggRow], rows: Seq[SrcRow]): Map[Long, AggRow] =
+    rows.foldLeft(m) { case (acc, (k, t, v)) =>
+      def plus(a: Option[Long], b: Option[Long], f: (Long, Long) => Long) =
+        (a ++ b).reduceOption(f)
+      acc.get(k) match {
+        case None => acc + (k -> ((1L, v, v, t)))
+        case Some((n, s, lo, last)) =>
+          acc + (k -> ((n + 1, plus(s, v, _ + _), plus(lo, v, math.min), math.max(last, t))))
+      }
+    }
+
+  private def appendTable(fs: FeatureStore, name: String): Seq[SrcRow] =
+    fs.readFeatureView(name, "1").select(col("k"), unix_seconds(col("ts")), col("v"))
+      .collect().map(r => (r.getLong(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSeq.sorted
+
+  private def aggTable(fs: FeatureStore, name: String): Map[Long, AggRow] =
+    fs.readFeatureView(name, "1")
+      .select(col("k"), col("n"), col("s"), col("lo"), unix_seconds(col("last_ts")))
+      .collect().map { r =>
+        def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+        r.getLong(0) -> ((r.getLong(1), opt(2), opt(3), r.getLong(4)))
+      }.toMap
+
+  /** A store with one INCREMENTAL FV `name` over temp view `src`. */
+  private def foldFv(name: String, src: String, query: String, ts: String,
+      lag: String = "1 minute"): (FeatureStore, RefreshManager, String) = {
+    val fs = freshStore()
+    val dir = Files.createTempDirectory(s"graft_src_${name}_").toString
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], foldSchema)
+      .createOrReplaceTempView(src)
+    fs.registerEntity(Entity("fk", Seq("k")))
+    fs.registerFeatureView(FeatureView(name, Seq(Entity("fk", Seq("k"))),
+      query.format(src), timestampCol = Some(ts),
+      refresh = Some(RefreshConfig(lag, RefreshMode.Incremental, InitializeMode.OnSchedule))), "1")
+    (fs, new RefreshManager(fs), dir)
+  }
+
+  test("fold fuzz: land/fold/expire/optimize/compact/refreshOnce keep both fold shapes equal to a recompute") {
+    Seq(false, true).foreach { agg =>
+      val name = if (agg) "fv_fz_agg" else "fv_fz_app"
+      val src = name + "_src"
+      val (fs, mgr, dir) =
+        foldFv(name, src, if (agg) AggFoldQuery else AppendFoldQuery, if (agg) "last_ts" else "ts")
+      val rec = fs.getFeatureView(name, "1")
+      val path = rec.physicalPath.get
+      val rnd = new scala.util.Random(if (agg) 11 else 7)
+      val landed = scala.collection.mutable.ArrayBuffer.empty[Seq[SrcRow]]
+      var folded = 0         // landed files the FV holds
+      var recorded = false   // the manifest carries a consumed set
+      var appRows = Seq.empty[SrcRow]
+      var aggRows = Map.empty[Long, AggRow]
+      var compactions = 0
+      def land(): Unit = { landed += foldRows(rnd, landed.size); landFile(dir, landed.last) }
+      def fold(): Unit = {
+        val before = graft.storage.VersionedTable.readManifest(path).map(_.segments.size)
+        mgr.startIncremental(rec, src, dir, foldSchema, availableNow = true).awaitTermination()
+        val fresh = if (recorded) landed.drop(folded).flatten.toSeq else landed.flatten.toSeq
+        if (recorded) { appRows = appendModel(appRows ++ fresh); aggRows = aggModel(aggRows, fresh) }
+        else { appRows = appendModel(fresh); aggRows = aggModel(Map.empty, fresh) }
+        folded = landed.size; recorded = true
+        val after = graft.storage.VersionedTable.readManifest(path).map(_.segments.size)
+        if (before.exists(b => after.exists(_ < b))) compactions += 1
+      }
+      spark.conf.set("graft.refresh.autoOptimize.segments", "4")
+      try {
+        land(); fold()
+        // every operation once in a seeded order, then a weighted random tail
+        val kinds = Seq("land", "fold", "expire", "optimize", "compact", "refreshOnce")
+        val weights = Seq(7, 6, 2, 2, 2, 1)
+        def pick(): String = {
+          var r = rnd.nextInt(weights.sum)
+          kinds.zip(weights).find { case (_, w) => r -= w; r < 0 }.get._1
+        }
+        (rnd.shuffle(kinds) ++ Seq.fill(24)(pick())).zipWithIndex.foreach { case (what, step) =>
+          what match {
+            case "land" => land()
+            case "fold" => fold()
+            case "expire" =>
+              val cut = T0 + rnd.nextInt(landed.size + 1) * 3600L
+              fs.expireFeatureViewData(name, "1", cut * 1000000L)
+              appRows = appRows.filter(_._2 >= cut)
+              aggRows = aggRows.filter(_._2._4 >= cut)
+            case "optimize" => fs.optimizeFeatureView(name, "1", numFiles = 2)
+            case "compact" =>
+              // enough folds in a row to reach the compaction threshold
+              (1 to 8).foreach { _ => land(); fold() }
+            case "refreshOnce" =>
+              spark.read.schema(foldSchema).parquet(dir).createOrReplaceTempView(src)
+              mgr.refreshOnce(rec)
+              appRows = appendModel(landed.flatten.toSeq)
+              aggRows = aggModel(Map.empty, landed.flatten.toSeq)
+              folded = landed.size; recorded = false
+          }
+          if (agg) assert(aggTable(fs, name) == aggRows, s"$name diverged after step $step ($what)")
+          else assert(appendTable(fs, name) == appRows, s"$name diverged after step $step ($what)")
+        }
+      } finally spark.conf.unset("graft.refresh.autoOptimize.segments")
+      assert(mgr.electedMode(rec).contains(if (agg) "fold-aggregate" else "fold-append"))
+      assert(compactions > 0, s"$name: no fold compacted")
+      assert(mgr.status(rec).startsWith("INCREMENTAL:fold(version="), mgr.status(rec))
+      mgr.stopAll()
+    }
+  }
+
+  test("fold crash between segment write and manifest flip: next fold folds each file once, vacuum reclaims") {
+    val (fs, mgr, dir) = foldFv("fv_crash", "crash_src", AggFoldQuery, "last_ts")
+    val rec = fs.getFeatureView("fv_crash", "1")
+    val rnd = new scala.util.Random(3)
+    val files = Seq(foldRows(rnd, 0), foldRows(rnd, 1))
+    landFile(dir, files(0))
+    mgr.foldOnce(rec, "crash_src", dir, foldSchema)
+    landFile(dir, files(1))
+    var orphan = ""
+    intercept[IllegalStateException] {
+      mgr.foldOnce(rec, "crash_src", dir, foldSchema, beforeCommit = d => {
+        orphan = d
+        throw new IllegalStateException("crash before the flip")
+      })
+    }
+    val path = rec.physicalPath.get
+    val m = graft.storage.VersionedTable.readManifest(path).get
+    assert(Files.isDirectory(java.nio.file.Paths.get(orphan)))
+    assert(!m.segments.exists(s => orphan.endsWith(s)) && m.consumed.get.size == 1)
+    mgr.foldOnce(rec, "crash_src", dir, foldSchema)
+    assert(aggTable(fs, "fv_crash") == aggModel(Map.empty, files.flatten))
+    assert(graft.storage.VersionedTable.readManifest(path).get.consumed.get.size == 2)
+    graft.storage.VersionedTable.vacuum(path, keepGenerations = 0)
+    assert(!Files.exists(java.nio.file.Paths.get(orphan)), "vacuum left the orphan segment")
+    assert(aggTable(fs, "fv_crash") == aggModel(Map.empty, files.flatten))
+  }
+
+  test("two folds racing on one FV: the loser gets ConcurrentCommitException, no file counts twice") {
+    val (fs, mgr, dir) = foldFv("fv_race", "race_src", AggFoldQuery, "last_ts")
+    val rec = fs.getFeatureView("fv_race", "1")
+    val rnd = new scala.util.Random(5)
+    val landed = scala.collection.mutable.ArrayBuffer(foldRows(rnd, 0))
+    landFile(dir, landed.head)
+    mgr.foldOnce(rec, "race_src", dir, foldSchema)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try (1 to 50).foreach { trial =>
+      landed += foldRows(rnd, trial)
+      landFile(dir, landed.last)
+      // both folds have written their segment before either flips
+      val barrier = new java.util.concurrent.CyclicBarrier(2)
+      val outcomes = Seq.fill(2)(pool.submit(() => scala.util.Try(
+        mgr.foldOnce(rec, "race_src", dir, foldSchema,
+          beforeCommit = _ => barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)))))
+        .map(_.get())
+      val lost = outcomes.collect {
+        case scala.util.Failure(_: graft.storage.VersionedTable.ConcurrentCommitException) => 1
+      }.sum
+      assert(lost == 1 && outcomes.count(_.isSuccess) == 1, s"trial $trial: $outcomes")
+      assert(aggTable(fs, "fv_race") == aggModel(Map.empty, landed.flatten.toSeq),
+        s"trial $trial: a file was folded twice or not at all")
+    } finally pool.shutdownNow()
+  }
+
+  test("a table written by the streaming path, then folded, equals the recompute") {
+    Seq(AggFoldQuery -> "last_ts", AppendFoldQuery -> "ts").foreach { case (query, ts) =>
+      val agg = query == AggFoldQuery
+      val name = if (agg) "fv_mig_agg" else "fv_mig_app"
+      val (fs, mgr, dir) = foldFv(name, name + "_src", query, ts)
+      val rec = fs.getFeatureView(name, "1")
+      val path = rec.physicalPath.get
+      val src = RefreshManager.Source(name + "_src", dir, foldSchema, None)
+      val rnd = new scala.util.Random(9)
+      val files = (0 until 4).map(foldRows(rnd, _))
+      // two micro-batches through the streaming route
+      files.take(2).foreach { f =>
+        landFile(dir, f)
+        mgr.startStream(rec, path, src, availableNow = true).awaitTermination()
+      }
+      val streamed = graft.storage.VersionedTable.readManifest(path).get
+      assert(streamed.batchId == 1 && streamed.consumed.isEmpty && streamed.segments.size == 2)
+      // the fold adopts the checkpoint's files and folds only the new ones
+      files.drop(2).foreach { f =>
+        landFile(dir, f)
+        mgr.startIncremental(rec, name + "_src", dir, foldSchema, availableNow = true)
+          .awaitTermination()
+      }
+      assert(mgr.electedMode(rec).contains(if (agg) "fold-aggregate" else "fold-append"))
+      assert(graft.storage.VersionedTable.readManifest(path).get.consumed.get.size == 4)
+      if (agg) assert(aggTable(fs, name) == aggModel(Map.empty, files.flatten))
+      else assert(appendTable(fs, name) == appendModel(files.flatten))
+      mgr.stopAll()
+    }
+  }
+
+  test("a failed scheduled fold tick surfaces through RefreshRun.exception and status") {
+    val (fs, mgr, dir) = foldFv("fv_failtick", "failtick_src", AppendFoldQuery, "ts", "1 second")
+    val rec = fs.getFeatureView("fv_failtick", "1")
+    landFile(dir, foldRows(new scala.util.Random(1), 0))
+    Files.write(java.nio.file.Paths.get(dir, "corrupt.parquet"), "not parquet".getBytes)
+    val run = mgr.startIncremental(rec, "failtick_src", dir, foldSchema)
+    try {
+      intercept[Exception](run.awaitTermination(120000))
+      assert(run.exception.nonEmpty && !run.isActive)
+      assert(mgr.status(rec).startsWith("INCREMENTAL:failed"), mgr.status(rec))
+    } finally mgr.stopAll()
   }
 
   test("target-lag tick reserves a 25% processing allowance with a 1 s floor") {

@@ -594,6 +594,73 @@ class IcebergInteropSpec extends SparkSpec {
     assert(e.getMessage.contains("schema"))
   }
 
+  test("appendSnapshot keeps each carried EXISTING entry's adding snapshot id") {
+    val table = tmp("ice_sid_") + "/t"
+    VersionedTable.append(table)(dir =>
+      Seq((1L, "a")).toDF("id", "v").coalesce(1).write.parquet(dir))
+    val out = tmp("ice_sid_out_")
+    IcebergInterop.exportSnapshot(spark, table, out)
+    def meta(v: Int) = mapper.readTree(Files.readAllBytes(
+      Paths.get(out, "metadata", s"v$v.metadata.json")))
+    val snap1 = meta(1).get("current-snapshot-id").asLong()
+    val snap2 = IcebergInterop.appendSnapshot(spark, out,
+      Seq((2L, "b")).toDF("id", "v").coalesce(1))
+    val snap3 = IcebergInterop.appendSnapshot(spark, out,
+      Seq((3L, "c")).toDF("id", "v").coalesce(1))
+    val snap = meta(3).get("snapshots").elements().asScala
+      .find(_.get("snapshot-id").asLong() == snap3).get
+    val entries = readAvro(ref(out, snap.get("manifest-list").asText()))._2
+      .flatMap(m => readAvro(ref(out, m.get("manifest_path").toString))._2)
+    // each file holds one row; its id names the snapshot that added it
+    val byRow = entries.map { e =>
+      val path = e.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString
+      spark.read.parquet(ref(out, path).toString).head().getLong(0) ->
+        ((e.get("status").asInstanceOf[Int], e.get("snapshot_id").asInstanceOf[Long]))
+    }.toMap
+    assert(byRow == Map(1L -> ((0, snap1)), 2L -> ((0, snap2)), 3L -> ((1, snap3))))
+  }
+
+  /** The (`file_path`, `pos`) rows of each live position-delete file of
+    * the current snapshot, in file order.
+    */
+  private def positionDeleteFiles(out: String): Seq[Seq[(String, Long)]] = {
+    val v = new String(Files.readAllBytes(
+      Paths.get(out, "metadata", "version-hint.text")), "UTF-8").trim
+    val meta = mapper.readTree(Files.readAllBytes(
+      Paths.get(out, "metadata", s"v$v.metadata.json")))
+    val cur = meta.get("current-snapshot-id").asLong()
+    val snap = meta.get("snapshots").elements().asScala
+      .find(_.get("snapshot-id").asLong() == cur).get
+    def content(r: GenericRecord) =
+      if (r.getSchema.getField("content") == null) 0 else r.get("content").asInstanceOf[Int]
+    readAvro(ref(out, snap.get("manifest-list").asText()))._2.filter(content(_) != 0)
+      .flatMap(m => readAvro(ref(out, m.get("manifest_path").toString))._2)
+      .filter(e => e.get("status").asInstanceOf[Int] != 2)
+      .map(_.get("data_file").asInstanceOf[GenericRecord])
+      .filter(content(_) == 1)
+      .map { df =>
+        spark.read.parquet(ref(out, df.get("file_path").toString).toString)
+          .select("file_path", "pos").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      }
+  }
+
+  test("every position-delete writer sorts its file by (file_path, pos)") {
+    // twelve partition files p0…p11: their value order is not their
+    // path order (p10 < p2)
+    val df = (0L until 60L).map(i => (i, s"v$i", f"g${i % 12}%02d")).toDF("id", "v", "lang")
+    val out = tmp("ice_pdsort_")
+    IcebergFixtures.writeV2WithDeletes(spark, out, df.drop("lang"), "id", col("id") % 3 =!= 0)
+    val pOut = tmp("ice_pdsort_p_") + "/ice"
+    IcebergFixtures.writePartitionedV2WithDeletes(spark, pOut, df, "id", "lang",
+      col("id") % 3 =!= 0)
+    IcebergInterop.deleteWhere(spark, out, col("id") % 3 === 0)
+    Seq(out, pOut).foreach { o =>
+      val files = positionDeleteFiles(o)
+      assert(files.nonEmpty && files.forall(_.nonEmpty), s"$o: no position deletes")
+      files.foreach(rows => assert(rows == rows.sorted, s"$o: unsorted position deletes $rows"))
+    }
+  }
+
   /** The current snapshot's manifest entries: file path → (status,
     * record count, the four stat maps with bounds as bytes).
     */
