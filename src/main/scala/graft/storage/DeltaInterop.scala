@@ -2,9 +2,11 @@ package graft.storage
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Two-way bridge between [[VersionedTable]]'s manifest format and a
   * Delta-Lake-readable directory layout — the interop answer to
@@ -26,12 +28,15 @@ import org.apache.spark.sql.SparkSession
   *    materialized once (the same rows every [[VersionedTable.read]]
   *    would serve) and exported as a fresh snapshot.
   *
-  * The log carries the three mandatory actions of a first commit —
-  * `protocol` (minReader 1 / minWriter 2), `metaData` (the Spark
-  * schema-JSON string Delta uses verbatim, parquet format, no
-  * partition columns), and one `add` per data file with its real size
-  * and `dataChange: true` — which is exactly what a v0 Delta snapshot
-  * needs to be scannable.
+  * One action model carries the log: `protocol`, `metaData`, `add`,
+  * `remove`, `cdc` and `commitInfo` ([[Action]]), with one JSON codec
+  * for commit lines and one row codec over [[CheckpointSchema]] for
+  * checkpoint parquet. Every writer emits through it — the export's v0 is
+  * an ordinary [[writeCommit]] (protocol minReader 1 / minWriter 2, the
+  * schema's metaData, one `add` per data file), published put-if-absent
+  * like every later commit — and every reader replays commits and
+  * checkpoints through the same fold ([[replay]]), so the two paths can
+  * never disagree on what the log says.
   */
 object DeltaInterop {
 
@@ -39,7 +44,10 @@ object DeltaInterop {
 
   /** Export the committed snapshot at `tablePath` into `outDir` (created;
     * must not already contain a `_delta_log`). Returns the relative paths
-    * of the exported data files, in `add`-action order.
+    * of the exported data files, in `add`-action order. Of two exports
+    * racing into one directory exactly one commits v0; the other gets a
+    * [[VersionedTable.ConcurrentCommitException]] (or the `_delta_log`
+    * refusal, when it starts after the winner's log exists).
     */
   def exportSnapshot(
       spark: SparkSession, tablePath: String, outDir: String): Seq[String] = {
@@ -58,17 +66,24 @@ object DeltaInterop {
     // tables take the materialize path, where the read restores the
     // partition columns as data
     val flat = m.segments.forall(seg => !hasSubdirs(Paths.get(tablePath, seg)))
+    val verbatim = m.keys.isEmpty && flat
 
     val dataFiles: Seq[Path] =
-      if (m.keys.isEmpty && flat) {
+      if (verbatim) {
         // copy committed segment files verbatim, names prefixed by their
-        // segment so two segments' part files never collide
+        // segment so two segments' part files never collide; each copy
+        // lands by atomic rename, so an export racing this one never
+        // sees (or logs the size of) a half-copied file
         for {
           seg <- m.segments
           f <- listParquet(Paths.get(tablePath, seg))
         } yield {
           val dst = out.resolve(s"$seg-${f.getFileName}")
-          Files.copy(f, dst, StandardCopyOption.REPLACE_EXISTING)
+          val staged = Files.createTempFile(out, s".${dst.getFileName}.", ".tmp")
+          try {
+            Files.copy(f, staged, StandardCopyOption.REPLACE_EXISTING)
+            Files.move(staged, dst, StandardCopyOption.ATOMIC_MOVE)
+          } finally Files.deleteIfExists(staged)
           dst
         }
       } else {
@@ -86,41 +101,16 @@ object DeltaInterop {
         }
       }
 
-    val logDir = out.resolve("_delta_log")
-    Files.createDirectories(logDir)
-    val now = System.currentTimeMillis()
-    val actions = Seq(
-      {
-        val n = mapper.createObjectNode()
-        val p = n.putObject("protocol")
-        p.put("minReaderVersion", 1); p.put("minWriterVersion", 2)
-        n
-      },
-      {
-        val n = mapper.createObjectNode()
-        val md = n.putObject("metaData")
-        md.put("id", java.util.UUID.randomUUID().toString)
-        val fmt = md.putObject("format")
-        fmt.put("provider", "parquet"); fmt.putObject("options")
-        md.put("schemaString", schemaJson)
-        md.putArray("partitionColumns")
-        md.putObject("configuration")
-        md.put("createdTime", now)
-        n
-      }) ++ dataFiles.map { f =>
-      val n = mapper.createObjectNode()
-      val add = n.putObject("add")
-      add.put("path", encodeLogPath(out.relativize(f).toString))
-      add.putObject("partitionValues")
-      add.put("size", Files.size(f))
-      add.put("modificationTime", now)
-      add.put("dataChange", true)
-      n
+    val rels = dataFiles.map(f => out.relativize(f).toString)
+    try writeCommit(outDir, 0L, adds = rels, schemaJson = Some(schemaJson))
+    catch {
+      // a losing export's materialized parts are its own (uniquely named):
+      // they must not sit next to the winner's files as unlogged rows
+      case e: VersionedTable.ConcurrentCommitException if !verbatim =>
+        dataFiles.foreach(Files.deleteIfExists)
+        throw e
     }
-    val log = actions.map(mapper.writeValueAsString).mkString("", "\n", "\n")
-    val commit = logDir.resolve("00000000000000000000.json")
-    Files.write(commit, log.getBytes("UTF-8"))
-    dataFiles.map(f => out.relativize(f).toString)
+    rels
   }
 
   /** VACUUM — the Delta maintenance op next to Iceberg's
@@ -160,7 +150,6 @@ object DeltaInterop {
       retentionMs: Long = 7L * 24 * 3600 * 1000,
       dryRun: Boolean = false,
       disableRetentionCheck: Boolean = false): Seq[String] = {
-    import scala.jdk.CollectionConverters._
     require(retentionMs >= 0, s"negative retention $retentionMs")
     require(disableRetentionCheck || retentionMs >= 7L * 24 * 3600 * 1000,
       s"retention ${retentionMs}ms is below the 7-day default; a short " +
@@ -169,8 +158,7 @@ object DeltaInterop {
         "to override deliberately")
     val root = Paths.get(deltaDir).normalize()
     val logDir = root.resolve("_delta_log")
-    require(Files.isDirectory(logDir), s"no _delta_log under $deltaDir")
-    val st = resolveState(spark, root, logDir, deltaDir)
+    val st = resolveState(spark, deltaDir)
     // live set carries BOTH the decoded and the verbatim-raw resolution of
     // every active path (ADVICE r16): a spec-compliant encoded path decodes
     // onto the on-disk file, while an off-spec raw path whose name happens
@@ -179,24 +167,17 @@ object DeltaInterop {
     // fall out of the set and be deleted as orphan debris
     val live: Set[Path] =
       st.active.valuesIterator.flatMap(af =>
-        Iterator(af.rawPath, decodeLogPath(af.rawPath)))
+        Iterator(af.path, decodeLogPath(af.path)))
         .map(rel => root.resolve(rel).normalize()).toSet
     // deletionTimestamp per removed path, LATEST wins (a path re-added and
     // re-removed carries its most recent tombstone); raw AND decoded forms
     // both tombstone — same double-resolution rule as the live set
     val tombstones = scala.collection.mutable.Map.empty[Path, Long]
     for (commit <- listCommits(logDir);
-         line <- Files.readAllLines(commit).asScala if line.nonEmpty) {
-      val node = mapper.readTree(line)
-      Option(node.get("remove")).foreach { rm =>
-        val raw = rm.get("path").asText()
-        val ts = Option(rm.get("deletionTimestamp"))
-          .filterNot(_.isNull).map(_.asLong()).getOrElse(0L)
-        Seq(raw, decodeLogPath(raw)).distinct.foreach { rel =>
-          val p = root.resolve(rel).normalize()
-          tombstones(p) = math.max(tombstones.getOrElse(p, 0L), ts)
-        }
-      }
+         RemoveFile(raw, ts, _) <- readCommit(commit);
+         rel <- Seq(raw, decodeLogPath(raw)).distinct) {
+      val p = root.resolve(rel).normalize()
+      tombstones(p) = math.max(tombstones.getOrElse(p, 0L), ts.getOrElse(0L))
     }
     val cutoff = System.currentTimeMillis() - retentionMs
     val candidates = {
@@ -310,11 +291,11 @@ object DeltaInterop {
     * they are ignored (the active set is exactly the checkpoint's `add`
     * rows, per delta.io PROTOCOL.md).
     *
-    * Scale shape: the checkpoint is ONE distributed parquet scan
-    * projecting only (path, size, partitionValues) — the file listing any
-    * planner must hold driver-side anyway; data files are then ONE
-    * parquet scan over all active files (not one scan per partition) —
-    * partition-column values, which Delta stores in the
+    * Scale shape: the checkpoint is ONE parquet scan of all its parts
+    * under an explicit schema (one Spark job, no schema inference) — the
+    * file listing any planner must hold driver-side anyway; data files
+    * are then ONE parquet scan over all active files (not one scan per
+    * partition) — partition-column values, which Delta stores in the
     * `add.partitionValues` of the LOG rather than in the data files, are
     * restored by a broadcast join from file name to partition tuple, so
     * a table with 10^5 partitions costs one broadcast of 10^5 tiny rows,
@@ -332,9 +313,7 @@ object DeltaInterop {
       spark: SparkSession, deltaDir: String,
       verifySizes: Boolean = true): org.apache.spark.sql.DataFrame = {
     val root = Paths.get(deltaDir)
-    val logDir = root.resolve("_delta_log")
-    require(Files.isDirectory(logDir), s"no _delta_log under $deltaDir")
-    val st = resolveState(spark, root, logDir, deltaDir)
+    val st = resolveState(spark, deltaDir)
     assembleSnapshot(spark, root, st, verifySizes)
   }
 
@@ -358,9 +337,7 @@ object DeltaInterop {
       : (org.apache.spark.sql.DataFrame, DataSkipping.SkipReport) = {
     import org.apache.spark.sql.types.StructType
     val root = Paths.get(deltaDir)
-    val logDir = root.resolve("_delta_log")
-    require(Files.isDirectory(logDir), s"no _delta_log under $deltaDir")
-    val st = resolveState(spark, root, logDir, deltaDir)
+    val st = resolveState(spark, deltaDir)
     val schema = org.apache.spark.sql.types.DataType.fromJson(st.schemaJson)
       .asInstanceOf[StructType]
     val mapped = st.cmMode.isDefined
@@ -392,11 +369,8 @@ object DeltaInterop {
       spark: SparkSession, deltaDir: String, version: Long,
       verifySizes: Boolean = true): org.apache.spark.sql.DataFrame = {
     require(version >= 0, s"negative version $version")
-    val root = Paths.get(deltaDir)
-    val logDir = root.resolve("_delta_log")
-    require(Files.isDirectory(logDir), s"no _delta_log under $deltaDir")
-    val st = resolveState(spark, root, logDir, deltaDir, Some(version))
-    assembleSnapshot(spark, root, st, verifySizes)
+    val st = resolveState(spark, deltaDir, Some(version))
+    assembleSnapshot(spark, Paths.get(deltaDir), st, verifySizes)
   }
 
   /** TIMESTAMP time travel — `TIMESTAMP AS OF t`: the latest version
@@ -427,15 +401,9 @@ object DeltaInterop {
     * [[importSnapshotAsOfTimestamp]]).
     */
   private def commitTimestamps(logDir: Path): Seq[(Long, Long)] = {
-    import scala.jdk.CollectionConverters._
     val raw = listCommits(logDir).map { p =>
-      val v = p.getFileName.toString.dropRight(5).toLong
-      val fromInfo = Files.readAllLines(p).asScala.iterator
-        .filter(_.nonEmpty).map(mapper.readTree)
-        .flatMap(n => Option(n.get("commitInfo")))
-        .flatMap(ci => Option(ci.get("timestamp")).filterNot(_.isNull))
-        .map(_.asLong()).toSeq.headOption
-      v -> fromInfo.getOrElse(Files.getLastModifiedTime(p).toMillis)
+      val fromInfo = readCommit(p).collectFirst { case CommitInfo(Some(t)) => t }
+      versionOf(p) -> fromInfo.getOrElse(Files.getLastModifiedTime(p).toMillis)
     }
     raw.foldLeft(Vector.empty[(Long, Long)]) { case (acc, (v, t)) =>
       acc :+ (v -> acc.lastOption.map { case (_, pt) => math.max(t, pt + 1) }
@@ -464,15 +432,16 @@ object DeltaInterop {
     */
   def restore(spark: SparkSession, deltaDir: String, toVersion: Long): RestoreReport = {
     val root = Paths.get(deltaDir)
-    val logDir = root.resolve("_delta_log")
-    require(Files.isDirectory(logDir), s"no _delta_log under $deltaDir")
-    val target = resolveState(spark, root, logDir, deltaDir, Some(toVersion))
-    val current = resolveState(spark, root, logDir, deltaDir)
-    val tip = tipVersion(logDir)
+    val target = resolveState(spark, deltaDir, Some(toVersion))
+    val current = resolveState(spark, deltaDir)
+    val tip = tipVersion(root.resolve("_delta_log"))
     require(toVersion < tip,
       s"restore target $toVersion is not before the current version $tip")
+    // a file is unchanged when everything a reader serves from it is —
+    // the add's commit time and dataChange flag do not count
+    def served(af: AddFile) = (af.path, af.size, af.partitionValues, af.deletionVector, af.stats)
     val adds = target.active.toSeq.collect {
-      case (p, af) if !current.active.get(p).contains(af) => (p, af)
+      case (p, af) if !current.active.get(p).map(served).contains(served(af)) => (p, af)
     }.sortBy(_._1)
     val removes = (current.active.keySet -- target.active.keySet).toSeq.sorted
     adds.foreach { case (rel, _) =>
@@ -487,11 +456,11 @@ object DeltaInterop {
       adds = adds.map(_._1),
       removes = removes,
       schemaJson = if (metaChanged) Some(target.schemaJson) else None,
-      dvs = adds.collect { case (p, af) if af.dv.isDefined => p -> af.dv.get }.toMap,
+      dvs = adds.flatMap { case (p, af) => af.deletionVector.map(p -> _) }.toMap,
       configuration = if (metaChanged) target.configuration else Map.empty,
       partitionColumns = if (metaChanged) target.partCols else Nil,
-      partitionValues = adds.map { case (p, af) => p -> af.pv }.toMap,
-      stats = adds.collect { case (p, af) if af.stats.isDefined => p -> af.stats.get }.toMap)
+      partitionValues = adds.map { case (p, af) => p -> af.partitionValues }.toMap,
+      stats = adds.flatMap { case (p, af) => af.stats.map(p -> _) }.toMap)
     RestoreReport(toVersion, tip + 1, adds.size, removes.size, metaChanged)
   }
 
@@ -518,14 +487,10 @@ object DeltaInterop {
   def readChangeFeed(spark: SparkSession, deltaDir: String,
       fromVersion: Long, toVersion: Long): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.lit
-    import org.apache.spark.sql.types.StructType
-    import scala.jdk.CollectionConverters._
     require(fromVersion >= 0 && fromVersion <= toVersion,
       s"bad change-feed range [$fromVersion, $toVersion]")
     val root = Paths.get(deltaDir)
-    val logDir = root.resolve("_delta_log")
-    require(Files.isDirectory(logDir), s"no _delta_log under $deltaDir")
-    val st = resolveState(spark, root, logDir, deltaDir)
+    val st = resolveState(spark, deltaDir)
     require(st.partCols.isEmpty,
       "change-feed read on a partitioned table is out of scope")
     require(st.cmMode.isEmpty,
@@ -534,29 +499,16 @@ object DeltaInterop {
       .asInstanceOf[StructType]
     val cdcSchema = schema.add("_change_type", org.apache.spark.sql.types.StringType)
     val perCommit = (fromVersion to toVersion).map { v =>
-      val commit = logDir.resolve(f"$v%020d.json")
+      val commit = root.resolve("_delta_log").resolve(f"$v%020d.json")
       require(Files.exists(commit),
         s"commit $v is gone (log cleaned up) — the change feed below the " +
           "checkpoint horizon is unreadable")
-      val cdc = Seq.newBuilder[String]
-      val addPaths = Seq.newBuilder[String]
-      val removePaths = Seq.newBuilder[String]
-      var dvSeen = false
-      for (line <- Files.readAllLines(commit).asScala if line.nonEmpty) {
-        val node = mapper.readTree(line)
-        Option(node.get("cdc")).foreach(c =>
-          cdc += decodeLogPath(c.get("path").asText()))
-        Option(node.get("add")).foreach { a =>
-          if (Option(a.get("dataChange")).forall(_.asBoolean()))
-            addPaths += decodeLogPath(a.get("path").asText())
-          if (Option(a.get("deletionVector")).exists(!_.isNull)) dvSeen = true
-        }
-        Option(node.get("remove")).foreach { r =>
-          if (Option(r.get("dataChange")).forall(_.asBoolean()))
-            removePaths += decodeLogPath(r.get("path").asText())
-        }
-      }
-      (v, cdc.result(), addPaths.result(), removePaths.result(), dvSeen)
+      val actions = readCommit(commit)
+      (v,
+        actions.collect { case c: AddCdcFile => decodeLogPath(c.path) },
+        actions.collect { case a: AddFile if a.dataChange => decodeLogPath(a.path) },
+        actions.collect { case r: RemoveFile if r.dataChange => decodeLogPath(r.path) },
+        actions.exists { case a: AddFile => a.deletionVector.isDefined; case _ => false })
     }
     def readRel(rels: Seq[String], readSchema: StructType): org.apache.spark.sql.DataFrame = {
       val abs = rels.map { rel =>
@@ -599,7 +551,7 @@ object DeltaInterop {
     * keeps — the same SQL-null contract the stats rules follow.
     */
   private def fileStatsOf(
-      af: ActiveFile,
+      af: AddFile,
       schema: org.apache.spark.sql.types.StructType,
       partCols: Seq[String],
       physToLogical: Map[String, String],
@@ -638,8 +590,8 @@ object DeltaInterop {
     // partition columns: constant per file, so pv IS the exact interval
     partCols.foreach { c =>
       val f = schema.fields.find(_.name == c)
-      val pv = af.pv.get(c).orElse(
-        f.flatMap(ff => af.pv.get(physicalName(ff, mapped))))
+      val pv = af.partitionValues.get(c).orElse(
+        f.flatMap(ff => af.partitionValues.get(physicalName(ff, mapped))))
       (f, pv) match {
         case (Some(ff), Some(Some(raw))) =>
           parsePartitionValue(raw, ff.dataType).foreach { v =>
@@ -724,7 +676,7 @@ object DeltaInterop {
       .asInstanceOf[StructType]
 
     val files = active.toSeq.sortBy(_._1).map { case (rel0, af) =>
-      val rel = diskRel(root, rel0, af.rawPath)
+      val rel = diskRel(root, rel0, af.path)
       val p = root.resolve(rel)
       require(Files.exists(p), s"active file missing on disk: $p")
       if (verifySizes) {
@@ -751,8 +703,8 @@ object DeltaInterop {
           // PHYSICAL name (PROTOCOL.md Column Mapping); logical tolerated
           org.apache.spark.sql.Row.fromSeq(
             p.getFileName.toString +: partCols.map { c =>
-              af.pv.get(physicalName(schema(c), mapped))
-                .orElse(af.pv.get(c)).flatten.orNull
+              af.partitionValues.get(physicalName(schema(c), mapped))
+                .orElse(af.partitionValues.get(c)).flatten.orNull
             })
         }
         val mapSchema = StructType(
@@ -793,145 +745,50 @@ object DeltaInterop {
 
   def liveState(spark: SparkSession, deltaDir: String): LiveState = {
     val root = Paths.get(deltaDir)
-    val logDir = root.resolve("_delta_log")
-    require(Files.isDirectory(logDir), s"no _delta_log under $deltaDir")
-    val st = resolveState(spark, root, logDir, deltaDir)
+    val st = resolveState(spark, deltaDir)
     LiveState(st.schemaJson, st.partCols, st.cmMode,
       st.active.toSeq.sortBy(_._1).map { case (rel, af) =>
-        (root.resolve(diskRel(root, rel, af.rawPath)).toString,
-          af.size, af.dv.isDefined, af.pv)
+        (root.resolve(diskRel(root, rel, af.path)).toString,
+          af.size, af.deletionVector.isDefined, af.partitionValues)
       })
   }
 
   /** Resolve the table state at `deltaDir`: checkpoint base (when
-    * `_last_checkpoint` points at one) + commit-JSON tail replay, then the
-    * reader-protocol gate. Shared by [[importSnapshot]] and [[deleteWhere]]
-    * so the two can never disagree on what is live.
+    * `_last_checkpoint` points at one) + commit-JSON tail replay through
+    * the one [[replay]] fold, then the reader-protocol gate. Shared by
+    * every reader and writer that needs the live state, so none can
+    * disagree with another on what is live.
     */
   private def resolveState(
-      spark: SparkSession, root: Path, logDir: Path, deltaDir: String,
+      spark: SparkSession, deltaDir: String,
       asOfVersion: Option[Long] = None): LogState = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.StructType
-    import scala.jdk.CollectionConverters._
-
+    val logDir = Paths.get(deltaDir).resolve("_delta_log")
+    require(Files.isDirectory(logDir), s"no _delta_log under $deltaDir")
     val st = new LogState
-    val lastCp = logDir.resolve("_last_checkpoint")
     // version-pinned resolve (time travel / RESTORE): a checkpoint NEWER
     // than the pinned version is useless (it has already folded later
     // commits in), so the replay falls back to the JSON log from 0 —
     // refusing below if pre-checkpoint commits were cleaned up, rather
     // than silently serving a partial state
-    val cpUsable = Files.exists(lastCp) && asOfVersion.forall { want =>
-      mapper.readTree(Files.readAllBytes(lastCp)).get("version").asLong() <= want
-    }
-    val cpVersion: Long =
-      if (!cpUsable) -1L
-      else {
-        val ptr = mapper.readTree(Files.readAllBytes(lastCp))
-        val v = ptr.get("version").asLong()
-        val parts = Option(ptr.get("parts")).filterNot(_.isNull).map(_.asInt())
-        val cpFiles = parts match {
-          case None    => Seq(logDir.resolve(f"$v%020d.checkpoint.parquet"))
-          case Some(k) => (1 to k).map(i =>
-            logDir.resolve(f"$v%020d.checkpoint.$i%010d.$k%010d.parquet"))
-        }
-        cpFiles.foreach(p => require(Files.exists(p),
-          s"_last_checkpoint points at version $v but $p is missing"))
-        val cp = spark.read.parquet(cpFiles.map(_.toString): _*)
-        val cols = cp.schema.fieldNames.toSet
-        require(cols.contains("add") && cols.contains("metaData"),
-          s"checkpoint at version $v lacks add/metaData columns: ${cols.mkString(",")}")
-        val mdFields = cp.schema("metaData").dataType
-          .asInstanceOf[StructType].fieldNames.toSet
-        val confCol =
-          if (mdFields.contains("configuration")) col("metaData.configuration")
-          else lit(null).cast("map<string,string>")
-        val md = cp.filter(col("metaData").isNotNull)
-          .select(col("metaData.schemaString"), col("metaData.partitionColumns"),
-            col("metaData.format.provider"), confCol)
-          .collect()
-        require(md.length == 1,
-          s"checkpoint at version $v carries ${md.length} metaData rows, want exactly 1")
-        st.schemaJson = md(0).getString(0)
-        st.partCols = Option(md(0).getSeq[String](1)).getOrElse(Nil)
-        require(md(0).getString(2) == "parquet",
-          s"unsupported format provider: ${md(0).getString(2)}")
-        // same column-mapping rule as the JSON replay path: name AND id
-        // modes supported (id resolves through Spark's native
-        // parquet.field.id matching — see physicalType)
-        st.configuration = Option(md(0).getMap[String, String](3))
-          .map(_.toMap.filter(_._2 != null)).getOrElse(Map.empty)
-        st.cmMode = st.configuration.get("delta.columnMapping.mode")
-          .filterNot(_ == "none")
-        gateCmMode(st.cmMode)
-        if (cols.contains("protocol")) {
-          val protoSchema = cp.schema("protocol").dataType
-            .asInstanceOf[StructType].fieldNames.toSet
-          val pr = cp.filter(col("protocol").isNotNull)
-            .select(col("protocol.minReaderVersion"), col("protocol.minWriterVersion"),
-              if (protoSchema.contains("readerFeatures")) col("protocol.readerFeatures")
-              else lit(null).cast("array<string>"))
-            .collect()
-          pr.headOption.foreach { r =>
-            st.minReader = r.getInt(0); st.minWriter = r.getInt(1)
-            st.readerFeatures =
-              Option(r.getSeq[String](2)).map(_.toSet).getOrElse(Set.empty)
-          }
-        }
-        // add.deletionVector is part of the checkpoint add schema whenever
-        // the table carries DVs (PROTOCOL.md checkpoint schema) — a reader
-        // dropping the column would resurrect checkpointed deletes
-        val addFields = cp.schema("add").dataType
-          .asInstanceOf[StructType].fieldNames.toSet
-        val dvCol =
-          if (addFields.contains("deletionVector")) col("add.deletionVector")
-          else lit(null).cast(
-            "struct<storageType:string,pathOrInlineDv:string,offset:int," +
-              "sizeInBytes:int,cardinality:bigint>")
-        // add.stats is part of the checkpoint add schema whenever the
-        // writer carried per-file statistics — dropping it here would
-        // disable data skipping for every pre-checkpoint file
-        val statsCol =
-          if (addFields.contains("stats")) col("add.stats")
-          else lit(null).cast("string")
-        cp.filter(col("add").isNotNull)
-          .select(col("add.path"), col("add.size"), col("add.partitionValues"),
-            dvCol, statsCol)
-          .collect()
-          .foreach { r =>
-            val pv = Option(r.getMap[String, String](2))
-              .map(_.toMap.map { case (k, x) => k -> Option(x) })
-              .getOrElse(Map.empty[String, Option[String]])
-            val dv = Option(r.getStruct(3)).map { d =>
-              DeletionVectors.DvDescriptor(
-                d.getString(0), d.getString(1),
-                if (d.isNullAt(2)) None else Some(d.getInt(2)),
-                d.getInt(3), d.getLong(4))
-            }
-            val stats = Option(r.getString(4)).filter(_.nonEmpty)
-            // same decode-at-parse rule as the JSON replay path
-            val raw = r.getString(0)
-            st.active.put(decodeLogPath(raw),
-              ActiveFile(r.getLong(1), pv, dv, raw, stats))
-          }
+    val cpVersion = lastCheckpoint(logDir).filter(cp => asOfVersion.forall(cp._1 <= _)) match {
+      case None => -1L
+      case Some((v, parts)) =>
+        val base = readCheckpoint(spark, logDir, v, parts)
+        // a parquet file that is no checkpoint reads as all-null rows
+        val mds = base.count(_.isInstanceOf[MetaData])
+        require(mds == 1,
+          s"checkpoint at version $v carries $mds metaData rows, want exactly 1")
+        replay(base, st)
         v
-      }
+    }
 
     // ---- commit-JSON tail replay ----
-    val commits = {
-      val s = Files.list(logDir)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.matches("\\d{20}\\.json"))
-        .toSeq.sortBy(_.getFileName.toString)
-        .filter { p =>
-          val v = p.getFileName.toString.dropRight(5).toLong
-          v > cpVersion && asOfVersion.forall(v <= _)
-        }
-      finally s.close()
+    val commits = listCommits(logDir).filter { p =>
+      val v = versionOf(p)
+      v > cpVersion && asOfVersion.forall(v <= _)
     }
     require(cpVersion >= 0 || commits.nonEmpty, s"empty _delta_log under $deltaDir")
-    val tailVersions = commits.map(_.getFileName.toString.dropRight(5).toLong)
+    val tailVersions = commits.map(versionOf)
     if (tailVersions.nonEmpty) {
       require(cpVersion < 0 || tailVersions.head == cpVersion + 1,
         s"commit gap after checkpoint $cpVersion: tail starts at ${tailVersions.head}")
@@ -947,10 +804,45 @@ object DeltaInterop {
       require(tip == want,
         s"version $want not in the log (resolvable tip at or before it is $tip)")
     }
-    replayCommits(commits, st)
-    require(st.schemaJson != null, s"log at $deltaDir carries no metaData action")
+    commits.foreach(c => replay(readCommit(c), st))
+    require(st.metaData != null, s"log at $deltaDir carries no metaData action")
     gateProtocol(st, deltaDir)
     st
+  }
+
+  /** `_last_checkpoint`'s (version, parts), when the pointer exists. */
+  private def lastCheckpoint(logDir: Path): Option[(Long, Option[Int])] = {
+    val ptr = logDir.resolve("_last_checkpoint")
+    Option.when(Files.exists(ptr)) {
+      val n = mapper.readTree(Files.readAllBytes(ptr))
+      (n.get("version").asLong(), Option(n.get("parts")).filterNot(_.isNull).map(_.asInt()))
+    }
+  }
+
+  /** The spec's file names of checkpoint `version`: single-file, or the
+    * multi-part `v.checkpoint.i.parts.parquet` form.
+    */
+  private def checkpointFiles(logDir: Path, version: Long, parts: Option[Int]): Seq[Path] =
+    parts match {
+      case None    => Seq(logDir.resolve(f"$version%020d.checkpoint.parquet"))
+      case Some(k) => (1 to k).map(i =>
+        logDir.resolve(f"$version%020d.checkpoint.$i%010d.$k%010d.parquet"))
+    }
+
+  /** Every action of checkpoint `version`, all parts read in ONE scan
+    * under [[CheckpointSchema]] and one collect — the O(files) rows any
+    * planner must hold driver-side anyway. The explicit schema infers
+    * nothing: a column or nested field the writer left out (an external
+    * checkpoint without `add.stats` or `add.deletionVector`) reads as
+    * null, exactly as the JSON decoder treats an absent field.
+    */
+  private def readCheckpoint(
+      spark: SparkSession, logDir: Path, version: Long, parts: Option[Int]): Seq[Action] = {
+    val files = checkpointFiles(logDir, version, parts)
+    files.foreach(p => require(Files.exists(p),
+      s"_last_checkpoint points at version $version but $p is missing"))
+    spark.read.schema(CheckpointSchema).parquet(files.map(_.toString): _*)
+      .collect().toSeq.flatMap(fromRow)
   }
 
   /** Mask DV'd rows out of the assembled scan: each live file's deletion
@@ -967,9 +859,9 @@ object DeltaInterop {
   private def applyDeletionVectors(
       spark: SparkSession, root: Path,
       df: org.apache.spark.sql.DataFrame,
-      files: Seq[(Path, ActiveFile)]): org.apache.spark.sql.DataFrame = {
+      files: Seq[(Path, AddFile)]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val dvd = files.collect { case (p, af) if af.dv.isDefined => (p.toString, af.dv.get) }
+    val dvd = files.collect { case (p, af) if af.deletionVector.isDefined => (p.toString, af.deletionVector.get) }
     if (dvd.isEmpty) return df
     val totalDeleted = dvd.map(_._2.cardinality).sum
     import spark.implicits._
@@ -992,42 +884,284 @@ object DeltaInterop {
       .join(build, Seq("__graft_dv_path", "__graft_dv_pos"), "left_anti")
   }
 
-  /** Mutable log-replay state: metaData last-wins, add activates, remove
-    * retires (last action per path wins) — shared by [[importSnapshot]]'s
-    * tail replay and [[writeCheckpoint]]'s compaction so the two can never
-    * disagree on log semantics.
+  // ---- the log's action model: one JSON codec, one checkpoint-row codec ----
+
+  /** One Delta log action (PROTOCOL.md "Actions"). Paths stay as the log
+    * spells them — percent-encoded for spec writers, raw for off-spec ones
+    * — and [[replay]] decodes them; action kinds the bridge does not model
+    * (`txn`, `domainMetadata`, ...) decode to nothing.
     */
-  private final class LogState {
-    var schemaJson: String = _
-    var partCols: Seq[String] = Nil
-    var minReader: Int = 1
-    var minWriter: Int = 2
-    var readerFeatures: Set[String] = Set.empty
-    // delta.columnMapping.mode from the latest metaData ("name" supported:
-    // physical parquet names come from per-field schema metadata; "id"
-    // refuses — parquet field-id resolution is out of bridge scope)
-    var cmMode: Option[String] = None
-    // the latest metaData's full configuration — retained so checkpoints
-    // re-emit it (a checkpoint that dropped delta.columnMapping.mode would
-    // silently serve NULLs for every mapped column on the next import)
-    var configuration: Map[String, String] = Map.empty
-    // path -> active-file state; insertion order irrelevant (reads sort)
-    val active = scala.collection.mutable.LinkedHashMap.empty[String, ActiveFile]
+  private sealed trait Action
+
+  private final case class Protocol(
+      minReaderVersion: Int, minWriterVersion: Int,
+      readerFeatures: Option[Seq[String]] = None,
+      writerFeatures: Option[Seq[String]] = None) extends Action
+
+  /** `id` is the table's identity: minted at v0, carried by every later
+    * metaData, checkpointed as is.
+    */
+  private final case class MetaData(
+      id: String, provider: String, schemaString: String,
+      partitionColumns: Seq[String], configuration: Map[String, String],
+      createdTime: Option[Long]) extends Action {
+    // column mapping renames the PHYSICAL parquet columns away from the
+    // logical schema names. NAME mode: every field's physical name is
+    // declared in the schemaString's per-field metadata — PROTOCOL.md
+    // "Column Mapping" — so the read maps physical -> logical
+    // deterministically and renames cost nothing. ID mode: columns resolve
+    // by parquet field id, which the read honors by attaching each field's
+    // delta.columnMapping.id as parquet.field.id on the scan schema (native
+    // Spark field-id resolution). Unknown modes refuse in [[replay]].
+    def cmMode: Option[String] =
+      configuration.get("delta.columnMapping.mode").filterNot(_ == "none")
   }
 
-  /** One live file per the replayed log: its declared size, partition
-    * values, (reader protocol v3 `deletionVectors` feature) the deletion
-    * vector masking its dead rows, and the log's VERBATIM path string
-    * (the state map is keyed by the DECODED path — PROTOCOL.md mandates
-    * percent-encoding — but vacuum's live set must also hold the raw
-    * form, see [[vacuum]]).
+  /** One live file: its declared size, partition values, per-file stats
+    * JSON and (reader protocol v3 `deletionVectors` feature) the deletion
+    * vector masking its dead rows.
     */
-  private final case class ActiveFile(
-      size: Long,
-      pv: Map[String, Option[String]],
-      dv: Option[DeletionVectors.DvDescriptor],
-      rawPath: String,
-      stats: Option[String] = None)
+  private final case class AddFile(
+      path: String, partitionValues: Map[String, Option[String]], size: Long,
+      modificationTime: Long, dataChange: Boolean, stats: Option[String],
+      deletionVector: Option[DeletionVectors.DvDescriptor]) extends Action
+
+  private final case class RemoveFile(
+      path: String, deletionTimestamp: Option[Long], dataChange: Boolean) extends Action
+
+  /** PROTOCOL.md "Add CDC File": a change-data file of the commit's
+    * row-level changes (unpartitioned; `dataChange` is always false).
+    */
+  private final case class AddCdcFile(path: String, size: Long) extends Action
+
+  private final case class CommitInfo(timestamp: Option[Long]) extends Action
+
+  /** One commit line per action, fields in PROTOCOL.md order. */
+  private def toJson(action: Action): String = {
+    val n = mapper.createObjectNode()
+    def strings(o: ObjectNode, name: String, xs: Seq[String]): Unit = {
+      val arr = o.putArray(name)
+      xs.foreach(arr.add)
+    }
+    action match {
+      case p: Protocol =>
+        val o = n.putObject("protocol")
+        o.put("minReaderVersion", p.minReaderVersion)
+        o.put("minWriterVersion", p.minWriterVersion)
+        p.readerFeatures.foreach(strings(o, "readerFeatures", _))
+        p.writerFeatures.foreach(strings(o, "writerFeatures", _))
+      case m: MetaData =>
+        val o = n.putObject("metaData")
+        o.put("id", m.id)
+        val fmt = o.putObject("format")
+        fmt.put("provider", m.provider); fmt.putObject("options")
+        o.put("schemaString", m.schemaString)
+        strings(o, "partitionColumns", m.partitionColumns)
+        val cfg = o.putObject("configuration")
+        m.configuration.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
+        m.createdTime.foreach(t => o.put("createdTime", t))
+      case a: AddFile =>
+        val o = n.putObject("add")
+        o.put("path", a.path)
+        val pv = o.putObject("partitionValues")
+        a.partitionValues.toSeq.sortBy(_._1).foreach {
+          case (c, Some(v)) => pv.put(c, v)
+          case (c, None)    => pv.putNull(c)
+        }
+        o.put("size", a.size)
+        o.put("modificationTime", a.modificationTime)
+        o.put("dataChange", a.dataChange)
+        // per-file statistics (PROTOCOL.md "Per-file Statistics") ride
+        // verbatim as the JSON string computeAddStats produced
+        a.stats.foreach(s => o.put("stats", s))
+        a.deletionVector.foreach { d =>
+          val dn = o.putObject("deletionVector")
+          dn.put("storageType", d.storageType)
+          dn.put("pathOrInlineDv", d.pathOrInlineDv)
+          d.offset.foreach(off => dn.put("offset", off))
+          dn.put("sizeInBytes", d.sizeInBytes)
+          dn.put("cardinality", d.cardinality)
+        }
+      case r: RemoveFile =>
+        val o = n.putObject("remove")
+        o.put("path", r.path)
+        r.deletionTimestamp.foreach(t => o.put("deletionTimestamp", t))
+        o.put("dataChange", r.dataChange)
+      case c: AddCdcFile =>
+        val o = n.putObject("cdc")
+        o.put("path", c.path)
+        o.putObject("partitionValues")
+        o.put("size", c.size)
+        o.put("dataChange", false)
+      case c: CommitInfo =>
+        val o = n.putObject("commitInfo")
+        c.timestamp.foreach(t => o.put("timestamp", t))
+        o.put("engineInfo", "graft")
+    }
+    mapper.writeValueAsString(n)
+  }
+
+  /** The one parse of a commit line. An absent `dataChange` reads true,
+    * as PROTOCOL.md's readers assume.
+    */
+  private def fromJson(line: String): Option[Action] = {
+    import scala.jdk.CollectionConverters._
+    def field(o: JsonNode, name: String): Option[JsonNode] =
+      Option(o.get(name)).filterNot(_.isNull)
+    def text(o: JsonNode, name: String) = field(o, name).map(_.asText())
+    def long(o: JsonNode, name: String) = field(o, name).map(_.asLong())
+    def strings(o: JsonNode, name: String) =
+      field(o, name).map(_.elements().asScala.map(_.asText()).toSeq)
+    def entries(o: JsonNode, name: String) =
+      field(o, name).toSeq.flatMap(_.properties().asScala)
+    val node = mapper.readTree(line)
+    field(node, "protocol").map[Action] { p =>
+      Protocol(p.get("minReaderVersion").asInt(), p.get("minWriterVersion").asInt(),
+        strings(p, "readerFeatures"), strings(p, "writerFeatures"))
+    }.orElse(field(node, "metaData").map { m =>
+      MetaData(text(m, "id").orNull,
+        field(m, "format").flatMap(text(_, "provider")).orNull,
+        m.get("schemaString").asText(),
+        strings(m, "partitionColumns").getOrElse(Nil),
+        entries(m, "configuration").collect {
+          case e if !e.getValue.isNull => e.getKey -> e.getValue.asText()
+        }.toMap,
+        long(m, "createdTime"))
+    }).orElse(field(node, "add").map { a =>
+      AddFile(a.get("path").asText(),
+        entries(a, "partitionValues").map(e =>
+          e.getKey -> Option(e.getValue).filterNot(_.isNull).map(_.asText())).toMap,
+        a.get("size").asLong(), long(a, "modificationTime").getOrElse(0L),
+        field(a, "dataChange").forall(_.asBoolean()),
+        text(a, "stats").filter(_.nonEmpty),
+        field(a, "deletionVector").map { d =>
+          DeletionVectors.DvDescriptor(d.get("storageType").asText(),
+            d.get("pathOrInlineDv").asText(), field(d, "offset").map(_.asInt()),
+            d.get("sizeInBytes").asInt(), d.get("cardinality").asLong())
+        })
+    }).orElse(field(node, "remove").map { r =>
+      RemoveFile(r.get("path").asText(), long(r, "deletionTimestamp"),
+        field(r, "dataChange").forall(_.asBoolean()))
+    }).orElse(field(node, "cdc").map { c =>
+      AddCdcFile(c.get("path").asText(), long(c, "size").getOrElse(0L))
+    }).orElse(field(node, "commitInfo").map(c => CommitInfo(long(c, "timestamp"))))
+  }
+
+  /** PROTOCOL.md checkpoint schema, one row per action: the `protocol`,
+    * `metaData` and `add` structs this bridge reads and writes (checkpoint
+    * `remove` rows are vacuum tombstones, not state). `configuration`,
+    * `add.deletionVector` and `add.stats` must survive a checkpoint:
+    * dropping the first serves NULLs for every column-mapped column, the
+    * second resurrects checkpointed deletes, the third disables data
+    * skipping past the checkpoint.
+    */
+  private val CheckpointSchema: StructType = {
+    import org.apache.spark.sql.types._
+    val strings = ArrayType(StringType)
+    val stringMap = MapType(StringType, StringType)
+    StructType(Seq(
+      StructField("protocol", StructType(Seq(
+        StructField("minReaderVersion", IntegerType),
+        StructField("minWriterVersion", IntegerType),
+        StructField("readerFeatures", strings),
+        StructField("writerFeatures", strings)))),
+      StructField("metaData", StructType(Seq(
+        StructField("id", StringType),
+        StructField("format", StructType(Seq(StructField("provider", StringType)))),
+        StructField("schemaString", StringType),
+        StructField("partitionColumns", strings),
+        StructField("configuration", stringMap),
+        StructField("createdTime", LongType)))),
+      StructField("add", StructType(Seq(
+        StructField("path", StringType),
+        StructField("partitionValues", stringMap),
+        StructField("size", LongType),
+        StructField("modificationTime", LongType),
+        StructField("dataChange", BooleanType),
+        StructField("deletionVector", StructType(Seq(
+          StructField("storageType", StringType),
+          StructField("pathOrInlineDv", StringType),
+          StructField("offset", IntegerType),
+          StructField("sizeInBytes", IntegerType),
+          StructField("cardinality", LongType)))),
+        StructField("stats", StringType))))))
+  }
+
+  /** One [[CheckpointSchema]] row per protocol, metaData or add action. */
+  private def toRow(action: Action): Row = action match {
+    case p: Protocol =>
+      Row(Row(p.minReaderVersion, p.minWriterVersion,
+        p.readerFeatures.orNull, p.writerFeatures.orNull), null, null)
+    case m: MetaData =>
+      Row(null, Row(m.id, Row(m.provider), m.schemaString, m.partitionColumns,
+        m.configuration, m.createdTime.map(Long.box).orNull), null)
+    case a: AddFile =>
+      Row(null, null, Row(a.path, a.partitionValues.map { case (k, v) => k -> v.orNull },
+        a.size, a.modificationTime, a.dataChange,
+        a.deletionVector.map(d => Row(d.storageType, d.pathOrInlineDv,
+          d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality)).orNull,
+        a.stats.orNull))
+    case other =>
+      throw new IllegalArgumentException(s"a checkpoint carries no $other rows")
+  }
+
+  /** The inverse of [[toRow]]; a null nested field decodes as the JSON
+    * decoder decodes an absent one.
+    */
+  private def fromRow(row: Row): Option[Action] = {
+    def opt[T](r: Row, i: Int): Option[T] = if (r.isNullAt(i)) None else Some(r.getAs[T](i))
+    def strings(r: Row, i: Int) = opt[scala.collection.Seq[String]](r, i).map(_.toSeq)
+    def stringMap(r: Row, i: Int) =
+      opt[scala.collection.Map[String, String]](r, i).getOrElse(Map.empty)
+    opt[Row](row, 0).map[Action] { p =>
+      Protocol(p.getInt(0), p.getInt(1), strings(p, 2), strings(p, 3))
+    }.orElse(opt[Row](row, 1).map { m =>
+      MetaData(m.getString(0), opt[Row](m, 1).map(_.getString(0)).orNull, m.getString(2),
+        strings(m, 3).getOrElse(Nil),
+        stringMap(m, 4).collect { case (k, v) if v != null => k -> v }.toMap,
+        opt[Long](m, 5))
+    }).orElse(opt[Row](row, 2).map { a =>
+      AddFile(a.getString(0), stringMap(a, 1).map { case (k, v) => k -> Option(v) }.toMap,
+        a.getLong(2), opt[Long](a, 3).getOrElse(0L), opt[Boolean](a, 4).getOrElse(true),
+        opt[String](a, 6).filter(_.nonEmpty),
+        opt[Row](a, 5).map(d => DeletionVectors.DvDescriptor(
+          d.getString(0), d.getString(1), opt[Int](d, 2),
+          d.getInt(3), d.getLong(4))))
+    })
+  }
+
+  /** Log-replay state: the last protocol and metaData actions, and the
+    * live files keyed by DECODED path (PROTOCOL.md mandates
+    * percent-encoding; the add keeps the log's verbatim path, which
+    * vacuum's live set also needs — see [[vacuum]]).
+    */
+  private final class LogState {
+    var protocol: Protocol = Protocol(1, 2)
+    var metaData: MetaData = _
+    // path -> live add; insertion order irrelevant (reads sort)
+    val active = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
+    def schemaJson: String = metaData.schemaString
+    def partCols: Seq[String] = metaData.partitionColumns
+    def configuration: Map[String, String] = metaData.configuration
+    def cmMode: Option[String] = metaData.cmMode
+  }
+
+  /** The one fold over log actions, for checkpoint rows and commit lines
+    * alike: protocol and metaData last-wins, add activates, remove retires
+    * (last action per path wins). The ONE point paths are decoded, so
+    * importSnapshot, liveState, vacuum, deleteWhere and both
+    * format converters can never disagree on the on-disk resolution.
+    */
+  private def replay(actions: Seq[Action], st: LogState): Unit = actions.foreach {
+    case p: Protocol => st.protocol = p
+    case m: MetaData =>
+      require(m.provider == "parquet", s"unsupported format provider: ${m.provider}")
+      gateCmMode(m.cmMode)
+      st.metaData = m
+    case a: AddFile => st.active.put(decodeLogPath(a.path), a)
+    case r: RemoveFile => st.active.remove(decodeLogPath(r.path))
+    case _ => ()
+  }
 
   /** Reader features this bridge implements. `minReaderVersion` 3 tables
     * whose `readerFeatures` exceed this set REFUSE on import — reading a
@@ -1048,17 +1182,19 @@ object DeltaInterop {
         "name and id modes"))
 
   private def gateProtocol(st: LogState, where: String): Unit = {
-    if (st.minReader == 2) {
+    val minReader = st.protocol.minReaderVersion
+    if (minReader == 2) {
       // reader v2 = column mapping (PROTOCOL.md): honored iff the table
       // declares a mode we implement (name or id)
       require(st.cmMode.contains("name") || st.cmMode.contains("id"),
         s"minReaderVersion 2 at $where without a supported " +
           "delta.columnMapping.mode (name|id) — refusing rather than " +
           "mis-mapping columns")
-    } else if (st.minReader >= 3) {
-      require(st.minReader == 3,
-        s"minReaderVersion ${st.minReader} at $where is beyond this bridge")
-      val unsupported = st.readerFeatures -- SupportedReaderFeatures
+    } else if (minReader >= 3) {
+      require(minReader == 3,
+        s"minReaderVersion $minReader at $where is beyond this bridge")
+      val unsupported =
+        st.protocol.readerFeatures.getOrElse(Nil).toSet -- SupportedReaderFeatures
       require(unsupported.isEmpty,
         s"unsupported readerFeatures ${unsupported.mkString(",")} at $where — " +
           s"this bridge implements ${SupportedReaderFeatures.mkString(",")} only")
@@ -1123,72 +1259,14 @@ object DeltaInterop {
     }
   }
 
-  private def parseDvNode(
-      dvNode: com.fasterxml.jackson.databind.JsonNode): DeletionVectors.DvDescriptor =
-    DeletionVectors.DvDescriptor(
-      storageType = dvNode.get("storageType").asText(),
-      pathOrInlineDv = dvNode.get("pathOrInlineDv").asText(),
-      offset = Option(dvNode.get("offset")).filterNot(_.isNull).map(_.asInt()),
-      sizeInBytes = dvNode.get("sizeInBytes").asInt(),
-      cardinality = dvNode.get("cardinality").asLong())
-
-  private def replayCommits(commits: Seq[Path], st: LogState): Unit = {
+  /** Every action of one commit JSON, in log order. */
+  private def readCommit(commit: Path): Seq[Action] = {
     import scala.jdk.CollectionConverters._
-    for (commit <- commits; line <- Files.readAllLines(commit).asScala if line.nonEmpty) {
-      val node = mapper.readTree(line)
-      Option(node.get("protocol")).foreach { p =>
-        st.minReader = p.get("minReaderVersion").asInt()
-        st.minWriter = p.get("minWriterVersion").asInt()
-        st.readerFeatures = Option(p.get("readerFeatures")).toSet[
-          com.fasterxml.jackson.databind.JsonNode]
-          .flatMap(_.elements().asScala.map(_.asText()))
-      }
-      Option(node.get("metaData")).foreach { md =>
-        st.schemaJson = md.get("schemaString").asText()
-        st.partCols = Option(md.get("partitionColumns")).toSeq
-          .flatMap(_.elements().asScala).map(_.asText())
-        val provider = md.get("format").get("provider").asText()
-        require(provider == "parquet", s"unsupported format provider: $provider")
-        // column mapping renames the PHYSICAL parquet columns away from the
-        // logical schema names. NAME mode: every field's physical name is
-        // declared in the schemaString's per-field metadata — PROTOCOL.md
-        // "Column Mapping" — so the read maps physical -> logical
-        // deterministically and renames cost nothing. ID mode (round 16):
-        // columns resolve by parquet field id, which the read honors by
-        // attaching each field's delta.columnMapping.id as
-        // parquet.field.id on the scan schema (native Spark field-id
-        // resolution). Unknown future modes refuse loudly.
-        st.cmMode = None
-        st.configuration = Map.empty
-        Option(md.get("configuration")).filterNot(_.isNull).foreach { conf =>
-          st.configuration = conf.properties().asScala.flatMap { e =>
-            if (e.getValue.isNull) None else Some(e.getKey -> e.getValue.asText())
-          }.toMap
-          st.cmMode = st.configuration.get("delta.columnMapping.mode")
-            .filterNot(_ == "none")
-          gateCmMode(st.cmMode)
-        }
-      }
-      Option(node.get("add")).foreach { add =>
-        val pv = Option(add.get("partitionValues")).map { o =>
-          o.properties().asScala.map { e =>
-            e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText()))
-          }.toMap
-        }.getOrElse(Map.empty[String, Option[String]])
-        val dv = Option(add.get("deletionVector")).filterNot(_.isNull).map(parseDvNode)
-        // the ONE point add paths are parsed (ADVICE r16): decode here so
-        // importSnapshot, liveState, vacuum, deleteWhere and both format
-        // converters can never disagree on the on-disk resolution
-        val raw = add.get("path").asText()
-        val stats = Option(add.get("stats")).filterNot(_.isNull)
-          .map(_.asText()).filter(_.nonEmpty)
-        st.active.put(decodeLogPath(raw),
-          ActiveFile(add.get("size").asLong(), pv, dv, raw, stats))
-      }
-      Option(node.get("remove")).foreach(rm =>
-        st.active.remove(decodeLogPath(rm.get("path").asText())))
-    }
+    Files.readAllLines(commit).asScala.toSeq.filter(_.nonEmpty).flatMap(fromJson)
   }
+
+  private def versionOf(commit: Path): Long =
+    commit.getFileName.toString.dropRight(5).toLong
 
   private def listCommits(logDir: Path): Seq[Path] = {
     import scala.jdk.CollectionConverters._
@@ -1286,14 +1364,9 @@ object DeltaInterop {
     * may have been cleaned up — Delta metadata cleanup — so the pointer
     * anchors contiguity when it is newer).
     */
-  private def tipVersion(logDir: Path): Long = {
-    val fromCommits = listCommits(logDir).lastOption
-      .map(_.getFileName.toString.dropRight(5).toLong).getOrElse(-1L)
-    val lastCp = logDir.resolve("_last_checkpoint")
-    val fromCp = if (Files.exists(lastCp))
-      mapper.readTree(Files.readAllBytes(lastCp)).get("version").asLong() else -1L
-    math.max(fromCommits, fromCp)
-  }
+  private def tipVersion(logDir: Path): Long =
+    math.max(listCommits(logDir).lastOption.map(versionOf).getOrElse(-1L),
+      lastCheckpoint(logDir).fold(-1L)(_._1))
 
   /** `version` must be the log's next one: an already-committed version is
     * a lost race ([[VersionedTable.ConcurrentCommitException]]), a later
@@ -1307,18 +1380,32 @@ object DeltaInterop {
       s"non-contiguous commit: want version $expected, got $version")
   }
 
+  /** The table's current metaData action without replaying the live
+    * state: the last one in the newest commit JSON that carries one, else
+    * the checkpoint's.
+    */
+  private def latestMetaData(logDir: Path): Option[MetaData] =
+    listCommits(logDir).reverseIterator
+      .flatMap(c => readCommit(c).reverseIterator.collectFirst { case m: MetaData => m })
+      .nextOption()
+      .orElse(lastCheckpoint(logDir).flatMap { case (v, parts) =>
+        readCheckpoint(SparkSession.active, logDir, v, parts)
+          .collectFirst { case m: MetaData => m }
+      })
+
   /** Append commit `version` to an existing (or fresh) `_delta_log`:
     * `removes` retire previously-added relative paths, `adds` activate
     * relative paths whose files must already sit under `deltaDir` (sizes
     * are read from disk — the log never carries a size the bytes don't
     * back). `schemaJson` must be given on the FIRST commit (it emits the
     * protocol + metaData actions) and may be given later to record a
-    * schema change. Versions must be appended contiguously — the same
-    * no-gap rule [[importSnapshot]] enforces on read. The commit file is
-    * published put-if-absent, so of two writers racing on one version
-    * exactly one lands and the other gets a
-    * [[VersionedTable.ConcurrentCommitException]], as does a writer whose
-    * version is already in the log.
+    * schema or configuration change; the table's metaData `id` and
+    * `createdTime` are minted at v0 and carried by every later metaData.
+    * Versions must be appended contiguously — the same no-gap rule
+    * [[importSnapshot]] enforces on read. The commit file is published
+    * put-if-absent, so of two writers racing on one version exactly one
+    * lands and the other gets a [[VersionedTable.ConcurrentCommitException]],
+    * as does a writer whose version is already in the log.
     */
   def writeCommit(
       deltaDir: String, version: Long, adds: Seq[String],
@@ -1334,7 +1421,7 @@ object DeltaInterop {
     val root = Paths.get(deltaDir)
     val logDir = root.resolve("_delta_log")
     Files.createDirectories(logDir)
-    requireNext(deltaDir, logDir, version)
+    requireNext(deltaDir, root.resolve("_delta_log"), version)
     require(version > 0 || schemaJson.isDefined,
       "the first commit must carry schemaJson (protocol + metaData)")
     require((dvs.keySet -- adds.toSet).isEmpty,
@@ -1348,109 +1435,45 @@ object DeltaInterop {
       "stats for paths not being added: " +
         (stats.keySet -- adds.toSet).mkString(","))
     val now = System.currentTimeMillis()
-    val actions = Seq.newBuilder[com.fasterxml.jackson.databind.node.ObjectNode]
-    // commitInfo leads the commit when the writer pins a commit time —
-    // the timestamp importSnapshotAsOfTimestamp resolves through (the
-    // file-mtime fallback covers logs written without one)
-    commitTimestampMs.foreach { t =>
-      val n = mapper.createObjectNode()
-      val ci = n.putObject("commitInfo")
-      ci.put("timestamp", t)
-      ci.put("engineInfo", "graft")
-      actions += n
+    def sizeOnDisk(rel: String, kind: String): Long = {
+      val f = root.resolve(rel)
+      require(Files.exists(f), s"$kind action for a file not on disk: $f")
+      Files.size(f)
     }
     // attaching a DV is a reader-visible capability: upgrade the protocol
     // in the SAME commit (PROTOCOL.md: deletionVectors is a reader+writer
     // feature under minReaderVersion 3 / minWriterVersion 7), so any
     // feature-honest reader either applies the DVs or refuses — never
     // silently serves deleted rows
-    if (dvs.nonEmpty) {
-      val n = mapper.createObjectNode()
-      val p = n.putObject("protocol")
-      p.put("minReaderVersion", 3); p.put("minWriterVersion", 7)
-      p.putArray("readerFeatures").add("deletionVectors")
-      p.putArray("writerFeatures").add("deletionVectors")
-      actions += n
-    }
-    schemaJson.foreach { sj =>
-      if (version == 0L && dvs.isEmpty) {
+    val protocol =
+      if (dvs.nonEmpty)
+        Some(Protocol(3, 7, Some(Seq("deletionVectors")), Some(Seq("deletionVectors"))))
+      else Option.when(version == 0L) {
         val (minR, minW) = protocolVersions.getOrElse((1, 2))
-        val n = mapper.createObjectNode()
-        val p = n.putObject("protocol")
-        p.put("minReaderVersion", minR); p.put("minWriterVersion", minW)
-        actions += n
+        Protocol(minR, minW)
       }
-      val n = mapper.createObjectNode()
-      val md = n.putObject("metaData")
-      md.put("id", java.util.UUID.randomUUID().toString)
-      val fmt = md.putObject("format")
-      fmt.put("provider", "parquet"); fmt.putObject("options")
-      md.put("schemaString", sj)
-      val pcArr = md.putArray("partitionColumns")
-      partitionColumns.foreach(pcArr.add)
-      val cfg = md.putObject("configuration")
-      configuration.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-      md.put("createdTime", now)
-      actions += n
+    val metaData = schemaJson.map { sj =>
+      val prior = if (version == 0L) None else latestMetaData(logDir)
+      MetaData(prior.fold(java.util.UUID.randomUUID().toString)(_.id), "parquet", sj,
+        partitionColumns, configuration, prior.fold(Option(now))(_.createdTime))
     }
-    // add/remove paths are PERCENT-ENCODED at emission (PROTOCOL.md:
-    // paths are URL-encoded relative URIs; ADVICE r16) — the caller's
-    // `adds`/`removes` stay plain on-disk relative paths, and the
-    // decode-at-parse rule in resolveState makes the round trip exact
-    removes.foreach { rel =>
-      val n = mapper.createObjectNode()
-      val rm = n.putObject("remove")
-      rm.put("path", encodeLogPath(rel))
-      rm.put("deletionTimestamp", now)
-      rm.put("dataChange", true)
-      actions += n
-    }
-    // PROTOCOL.md "Add CDC File": change-data files carry the commit's
-    // row-level changes; dataChange=false — CDF readers use cdc actions
+    // commitInfo leads the commit when the writer pins a commit time —
+    // the timestamp importSnapshotAsOfTimestamp resolves through (the
+    // file-mtime fallback covers logs written without one). add/remove/cdc
+    // paths are PERCENT-ENCODED at emission (PROTOCOL.md: paths are
+    // URL-encoded relative URIs) — the caller's paths stay plain on-disk
+    // relative paths, and the decode in replay makes the round trip exact.
+    // cdc files carry the commit's row-level changes; CDF readers use them
     // INSTEAD of add/remove for a commit that has any
-    cdcFiles.foreach { rel =>
-      val f = root.resolve(rel)
-      require(Files.exists(f), s"cdc action for a file not on disk: $f")
-      val n = mapper.createObjectNode()
-      val c = n.putObject("cdc")
-      c.put("path", encodeLogPath(rel))
-      c.putObject("partitionValues")
-      c.put("size", Files.size(f))
-      c.put("dataChange", false)
-      actions += n
-    }
-    adds.foreach { rel =>
-      val f = root.resolve(rel)
-      require(Files.exists(f), s"add action for a file not on disk: $f")
-      val n = mapper.createObjectNode()
-      val add = n.putObject("add")
-      add.put("path", encodeLogPath(rel))
-      val pvObj = add.putObject("partitionValues")
-      partitionValues.getOrElse(rel, Map.empty).toSeq.sortBy(_._1).foreach {
-        case (c, Some(v)) => pvObj.put(c, v)
-        case (c, None)    => pvObj.putNull(c)
-      }
-      add.put("size", Files.size(f))
-      add.put("modificationTime", now)
-      add.put("dataChange", true)
-      // per-file statistics (PROTOCOL.md "Per-file Statistics"): the
-      // JSON string rides verbatim — numRecords/minValues/maxValues/
-      // nullCount as computeAddStats produced them
-      stats.get(rel).foreach(sj => add.put("stats", sj))
-      dvs.get(rel).foreach { d =>
-        val dn = add.putObject("deletionVector")
-        dn.put("storageType", d.storageType)
-        dn.put("pathOrInlineDv", d.pathOrInlineDv)
-        d.offset.foreach(o => dn.put("offset", o))
-        dn.put("sizeInBytes", d.sizeInBytes)
-        dn.put("cardinality", d.cardinality)
-      }
-      actions += n
-    }
-    val log = actions.result().map(mapper.writeValueAsString)
-      .mkString("", "\n", "\n")
+    val actions: Seq[Action] =
+      commitTimestampMs.map(t => CommitInfo(Some(t))).toSeq ++ protocol ++ metaData ++
+        removes.map(rel => RemoveFile(encodeLogPath(rel), Some(now), dataChange = true)) ++
+        cdcFiles.map(rel => AddCdcFile(encodeLogPath(rel), sizeOnDisk(rel, "cdc"))) ++
+        adds.map(rel => AddFile(encodeLogPath(rel), partitionValues.getOrElse(rel, Map.empty),
+          sizeOnDisk(rel, "add"), now, dataChange = true, stats.get(rel), dvs.get(rel)))
     // put-if-absent (PROTOCOL.md: mutual exclusion on N.json)
-    VersionedTable.publishIfAbsent(logDir, f"$version%020d.json", log.getBytes("UTF-8"),
+    VersionedTable.publishIfAbsent(logDir, f"$version%020d.json",
+      actions.map(toJson).mkString("", "\n", "\n").getBytes("UTF-8"),
       s"concurrent commit at $deltaDir: another writer committed version $version")
   }
 
@@ -1484,9 +1507,7 @@ object DeltaInterop {
     import org.apache.spark.sql.functions.{col, regexp_replace}
     import org.apache.spark.sql.types.{DataType, StructType}
     val root = Paths.get(deltaDir)
-    val logDir = root.resolve("_delta_log")
-    require(Files.isDirectory(logDir), s"no _delta_log under $deltaDir")
-    val st = resolveState(spark, root, logDir, deltaDir)
+    val st = resolveState(spark, deltaDir)
     require(st.partCols.isEmpty,
       "deleteWhere supports unpartitioned tables; partitioned layouts need " +
         "the partition-restoration join — attach descriptors via writeCommit(dvs=...)")
@@ -1497,7 +1518,7 @@ object DeltaInterop {
     val schema = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
     val files = st.active.toSeq
     val absToRel = files.map { case (rel, af) =>
-      root.resolve(diskRel(root, rel, af.rawPath)).toString -> rel }.toMap
+      root.resolve(diskRel(root, rel, af.path)).toString -> rel }.toMap
     val paths = absToRel.keys.toSeq.sorted
 
     import spark.implicits._
@@ -1529,7 +1550,7 @@ object DeltaInterop {
         val rel = absToRel.getOrElse(abs,
           throw new IllegalStateException(s"matched rows in unknown file $abs"))
         val fresh = DeletionVectors.deserializeBitmapArray(bytes)
-        val old = st.active(rel).dv
+        val old = st.active(rel).deletionVector
           .map(d => DeletionVectors.deletedRows(root, d)).getOrElse(Array.empty[Long])
         val union = (old ++ fresh).distinct.sorted
         (rel, union, union.length.toLong - old.length.toLong)
@@ -1571,13 +1592,11 @@ object DeltaInterop {
     import org.apache.spark.sql.types.{DataType, StructType}
     import scala.jdk.CollectionConverters._
     val root = Paths.get(deltaDir)
-    val logDir = root.resolve("_delta_log")
-    require(Files.isDirectory(logDir), s"no _delta_log under $deltaDir")
-    val st = resolveState(spark, root, logDir, deltaDir)
+    val st = resolveState(spark, deltaDir)
     require(st.partCols.isEmpty,
       "purgeDeletionVectors supports unpartitioned tables (the deleteWhere scope)")
     val schema = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
-    val dvd = st.active.toSeq.collect { case (rel, af) if af.dv.isDefined => (rel, af) }
+    val dvd = st.active.toSeq.collect { case (rel, af) if af.deletionVector.isDefined => (rel, af) }
     if (dvd.isEmpty) {
       writeCommit(deltaDir, version, adds = Nil)
       return 0
@@ -1588,13 +1607,13 @@ object DeltaInterop {
     // each rewritten file wholly in one task, rows in their original
     // row_index order
     val absFiles = dvd.map { case (rel, af) =>
-      (root.resolve(diskRel(root, rel, af.rawPath)), af) }
+      (root.resolve(diskRel(root, rel, af.path)), af) }
     val scan = spark.read.schema(schema)
       .parquet(absFiles.map(_._1.toString): _*)
     val masked = applyDeletionVectors(spark, root, scan, absFiles)
     val idxRows = dvd.zipWithIndex.map { case ((rel, af), i) =>
       org.apache.spark.sql.Row(
-        root.resolve(diskRel(root, rel, af.rawPath)).toString, i) }
+        root.resolve(diskRel(root, rel, af.path)).toString, i) }
     val idxSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("__graft_dv_path",
         org.apache.spark.sql.types.StringType, nullable = false),
@@ -1718,9 +1737,7 @@ object DeltaInterop {
     import scala.jdk.CollectionConverters._
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val root = Paths.get(deltaDir)
-    val logDir = root.resolve("_delta_log")
-    require(Files.isDirectory(logDir), s"no _delta_log under $deltaDir")
-    val st = resolveState(spark, root, logDir, deltaDir)
+    val st = resolveState(spark, deltaDir)
     require(st.cmMode.isEmpty,
       "merge on a column-mapped table is out of scope: keys name logical " +
         "columns but the rewrite scans physical files")
@@ -1730,7 +1747,7 @@ object DeltaInterop {
         "disable delta.enableChangeDataFeed or keep the layout unpartitioned")
     // a stale version fails here, before its files could replace the
     // same-named files of the commit that took the version
-    requireNext(deltaDir, logDir, version)
+    requireNext(deltaDir, root.resolve("_delta_log"), version)
     val schema = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
     val dataSchema = StructType(schema.filterNot(f => st.partCols.contains(f.name)))
     keyCols.foreach(k => require(schema.fieldNames.contains(k),
@@ -1798,12 +1815,12 @@ object DeltaInterop {
             envelope, colType)
       }
       val located = (rels: Seq[String]) => rels.map(rel =>
-        (root.resolve(diskRel(root, rel, st.active(rel).rawPath)), st.active(rel)))
+        (root.resolve(diskRel(root, rel, st.active(rel).path)), st.active(rel)))
 
       // masked scan of a file set, partition columns restored from the
       // log's partitionValues (data files don't store them — the
       // import's restoration shape, keyed by full path)
-      def mergeScan(files: Seq[(Path, ActiveFile)]): DataFrame = {
+      def mergeScan(files: Seq[(Path, AddFile)]): DataFrame = {
         val base = spark.read.schema(dataSchema)
           .parquet(files.map(_._1.toString): _*)
           .withColumn("__graft_mg_path",
@@ -1813,7 +1830,7 @@ object DeltaInterop {
           if (st.partCols.isEmpty) base
           else {
             val mapRows = files.map { case (p, af) =>
-              Row.fromSeq(p.toString +: st.partCols.map(c => af.pv.get(c).flatten.orNull))
+              Row.fromSeq(p.toString +: st.partCols.map(c => af.partitionValues.get(c).flatten.orNull))
             }
             val mapSchema = StructType(StructField("__graft_mg_path", StringType,
               nullable = false) +: st.partCols.map(c => StructField("__graft_pv_" + c, StringType)))
@@ -1954,9 +1971,9 @@ object DeltaInterop {
   private def applyDeletionVectorsKeyed(
       spark: SparkSession, root: Path,
       df: org.apache.spark.sql.DataFrame,
-      files: Seq[(Path, ActiveFile)]): org.apache.spark.sql.DataFrame = {
+      files: Seq[(Path, AddFile)]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val dvd = files.collect { case (p, af) if af.dv.isDefined => (p.toString, af.dv.get) }
+    val dvd = files.collect { case (p, af) if af.deletionVector.isDefined => (p.toString, af.deletionVector.get) }
     if (dvd.isEmpty) return df
     import spark.implicits._
     val rootStr = root.toString
@@ -1993,101 +2010,43 @@ object DeltaInterop {
   def writeCheckpoint(
       spark: SparkSession, deltaDir: String, version: Long,
       parts: Int = 1): Unit = {
-    import org.apache.spark.sql.{Row => SRow}
-    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
     require(parts >= 1, s"parts must be >= 1, got $parts")
-    val root = Paths.get(deltaDir)
-    val logDir = root.resolve("_delta_log")
-    val commits = listCommits(logDir)
-      .filter(_.getFileName.toString.dropRight(5).toLong <= version)
-    val versions = commits.map(_.getFileName.toString.dropRight(5).toLong)
+    val logDir = Paths.get(deltaDir).resolve("_delta_log")
+    val commits = listCommits(logDir).filter(versionOf(_) <= version)
+    val versions = commits.map(versionOf)
     require(versions.nonEmpty && versions.head == 0L &&
       versions == (0L to versions.last) && versions.last == version,
       s"cannot checkpoint version $version: commits on disk are ${versions.mkString(",")}")
     val st = new LogState
-    replayCommits(commits, st)
-    require(st.schemaJson != null, s"log at $deltaDir carries no metaData action")
+    commits.foreach(c => replay(readCommit(c), st))
+    require(st.metaData != null, s"log at $deltaDir carries no metaData action")
 
-    val pvType = MapType(StringType, StringType)
-    val dvType = StructType(Seq(
-      StructField("storageType", StringType),
-      StructField("pathOrInlineDv", StringType),
-      StructField("offset", IntegerType),
-      StructField("sizeInBytes", IntegerType),
-      StructField("cardinality", LongType)))
-    val cpSchema = StructType(Seq(
-      StructField("protocol", StructType(Seq(
-        StructField("minReaderVersion", IntegerType),
-        StructField("minWriterVersion", IntegerType),
-        StructField("readerFeatures", ArrayType(StringType)),
-        StructField("writerFeatures", ArrayType(StringType))))),
-      StructField("metaData", StructType(Seq(
-        StructField("id", StringType),
-        StructField("format", StructType(Seq(StructField("provider", StringType)))),
-        StructField("schemaString", StringType),
-        StructField("partitionColumns", ArrayType(StringType)),
-        // configuration MUST survive the checkpoint: dropping
-        // delta.columnMapping.mode would make the next import read the
-        // logical names against physical files — all-NULL silent loss
-        StructField("configuration", pvType),
-        StructField("createdTime", LongType)))),
-      StructField("add", StructType(Seq(
-        StructField("path", StringType),
-        StructField("partitionValues", pvType),
-        StructField("size", LongType),
-        StructField("modificationTime", LongType),
-        StructField("dataChange", BooleanType),
-        // deletionVector rides IN the checkpoint add rows (PROTOCOL.md
-        // checkpoint schema) — dropping it here would resurrect every
-        // checkpointed delete on the next import
-        StructField("deletionVector", dvType),
-        // per-file stats ride as the same JSON string the commit carried
-        // (PROTOCOL.md checkpoint schema `add.stats`) — losing them here
-        // would silently disable data skipping past the checkpoint
-        StructField("stats", StringType))))))
-    val now = System.currentTimeMillis()
-    val features =
-      if (st.readerFeatures.isEmpty) null else st.readerFeatures.toSeq.sorted
-    val protoRow = SRow(SRow(st.minReader, st.minWriter, features, features), null, null)
-    val mdRow = SRow(null, SRow(java.util.UUID.randomUUID().toString,
-      SRow("parquet"), st.schemaJson, st.partCols, st.configuration, now), null)
-    val addRows = st.active.toSeq.map { case (_, af) =>
-      val dvRow = af.dv.map(d =>
-        SRow(d.storageType, d.pathOrInlineDv,
-          d.offset.map(Integer.valueOf).orNull, d.sizeInBytes,
-          d.cardinality)).orNull
-      // checkpoints re-emit each add path VERBATIM as the log carried it
-      // (encoded for spec writers, raw for off-spec ones) — the parse-side
-      // decode is what canonicalizes, so round-tripping the raw string is
-      // the only lossless choice
-      SRow(null, null, SRow(af.rawPath, af.pv.map { case (k, v) => k -> v.orNull },
-        af.size, now, true, dvRow, af.stats.orNull))
-    }
-    // metaData/protocol ride in part 1; adds split round-robin across parts
-    val partRows: Seq[Seq[SRow]] =
-      if (parts == 1) Seq(Seq(protoRow, mdRow) ++ addRows)
+    // the replayed protocol and metaData ride as they are in part 1 (table
+    // id, writer features and configuration included); adds, each with
+    // its verbatim log path, split round-robin across parts
+    val head = Seq(toRow(st.protocol), toRow(st.metaData))
+    val addRows = st.active.valuesIterator.map(toRow).toSeq
+    val partRows: Seq[Seq[Row]] =
+      if (parts == 1) Seq(head ++ addRows)
       else (0 until parts).map { i =>
         val mine = addRows.zipWithIndex.collect { case (r, j) if j % parts == i => r }
-        if (i == 0) Seq(protoRow, mdRow) ++ mine else mine
+        if (i == 0) head ++ mine else mine
       }
-    val names =
-      if (parts == 1) Seq(f"$version%020d.checkpoint.parquet")
-      else (1 to parts).map(i => f"$version%020d.checkpoint.$i%010d.$parts%010d.parquet")
-    partRows.zip(names).foreach { case (rows, name) =>
-      // a checkpoint part is a single parquet FILE: write a 1-part dir,
-      // then move the part file onto the spec-mandated name
-      import scala.jdk.CollectionConverters._
-      VersionedTable.withStagingDir("graft_delta_cp_") { tmp =>
-        spark.createDataFrame(rows.asJava, cpSchema).coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val part = listParquet(tmp) match {
-          case Seq(one) => one
-          case other => throw new IllegalStateException(
-            s"expected exactly one checkpoint part file, got ${other.size}")
+    partRows.zip(checkpointFiles(logDir, version, Option.when(parts > 1)(parts))).foreach {
+      case (rows, dst) =>
+        // a checkpoint part is a single parquet FILE: write a 1-part dir,
+        // then move the part file onto the spec-mandated name
+        VersionedTable.withStagingDir("graft_delta_cp_") { tmp =>
+          spark.createDataFrame(rows.asJava, CheckpointSchema).coalesce(1)
+            .write.mode("overwrite").parquet(tmp.toString)
+          val part = listParquet(tmp) match {
+            case Seq(one) => one
+            case other => throw new IllegalStateException(
+              s"expected exactly one checkpoint part file, got ${other.size}")
+          }
+          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
         }
-        Files.move(part, logDir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-      }
-      ()
     }
     val ptr = mapper.createObjectNode()
     ptr.put("version", version)

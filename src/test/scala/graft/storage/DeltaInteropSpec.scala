@@ -1280,4 +1280,195 @@ class DeltaInteropSpec extends SparkSpec {
     assert(DeltaInterop.importSnapshot(spark, out).select("id").as[Long].collect().toSet ==
       (1L to 20L).filter(_ % 3 != 0).toSet)
   }
+
+  /** The checkpoint at `version` of the table at `out`, read back raw. */
+  private def checkpointRows(out: String, version: Long) =
+    spark.read.parquet(Paths.get(out, "_delta_log", f"$version%020d.checkpoint.parquet").toString)
+
+  test("a checkpoint keeps the log's protocol: writer-only features survive") {
+    val out = tmp("delta_cp_proto_")
+    val df = (1L to 4L).map(i => (i, s"v$i")).toDF("id", "v")
+    onePartFile(df, Paths.get(out, "a.parquet"))
+    DeltaInterop.writeCommit(out, 0L, adds = Seq("a.parquet"), schemaJson = Some(df.schema.json))
+    // a protocol whose writerFeatures strictly contain its readerFeatures
+    val planted = """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
+      """"readerFeatures":["deletionVectors"],""" +
+      """"writerFeatures":["appendOnly","changeDataFeed","deletionVectors"]}}"""
+    Files.write(Paths.get(out, "_delta_log", f"${1L}%020d.json"), (planted + "\n").getBytes("UTF-8"))
+    DeltaInterop.writeCheckpoint(spark, out, 1L)
+    val logged = mapper.readTree(planted).get("protocol")
+    def strings(n: com.fasterxml.jackson.databind.JsonNode) =
+      n.elements().asScala.map(_.asText()).toSeq
+    val row = checkpointRows(out, 1L).filter(col("protocol").isNotNull)
+      .select("protocol.*").collect().toSeq
+    assert(row.size == 1)
+    assert(row.head.getInt(0) == logged.get("minReaderVersion").asInt() &&
+      row.head.getInt(1) == logged.get("minWriterVersion").asInt() &&
+      row.head.getSeq[String](2) == strings(logged.get("readerFeatures")) &&
+      row.head.getSeq[String](3) == strings(logged.get("writerFeatures")),
+      s"checkpoint protocol $row differs from the log's $logged")
+    assert(DeltaInterop.importSnapshot(spark, out).count() == 4L)
+  }
+
+  test("the table id is minted at v0 and kept by configuration commits, restore " +
+    "and checkpoints") {
+    val table = tmp("delta_id_src_") + "/t"
+    VersionedTable.append(table)(dir =>
+      (1L to 6L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1).write.parquet(dir))
+    val out = tmp("delta_id_")
+    DeltaInterop.exportSnapshot(spark, table, out)
+    val schemaJson = DeltaInterop.liveState(spark, out).schemaJson
+    // the configuration commit that turns the change feed on
+    DeltaInterop.writeCommit(out, 1L, adds = Nil, schemaJson = Some(schemaJson),
+      configuration = Map("delta.enableChangeDataFeed" -> "true"))
+    // restoring v0 restores its (empty) configuration: a metaData commit
+    assert(DeltaInterop.restore(spark, out, 0L).metadataRestored)
+    DeltaInterop.writeCheckpoint(spark, out, 2L)
+    def logged(v: Long) = Files.readAllLines(Paths.get(out, "_delta_log", f"$v%020d.json"))
+      .asScala.filter(_.nonEmpty).map(mapper.readTree(_))
+      .flatMap(a => Option(a.get("metaData")))
+      .map(m => (m.get("id").asText(), m.get("createdTime").asLong())).toSeq
+    val ids = Seq(0L, 1L, 2L).flatMap(logged)
+    val cp = checkpointRows(out, 2L).filter(col("metaData").isNotNull)
+      .select("metaData.id", "metaData.createdTime").as[(String, Long)].collect().toSeq
+    assert(ids.size == 3 && (ids ++ cp).distinct.size == 1,
+      s"metaData (id, createdTime) by v0, v1, v2, checkpoint: $ids $cp")
+    // with the JSON history gone, a later metaData carries the
+    // checkpoint's identity
+    (0L to 2L).foreach(v => Files.delete(Paths.get(out, "_delta_log", f"$v%020d.json")))
+    DeltaInterop.writeCommit(out, 3L, adds = Nil, schemaJson = Some(schemaJson))
+    assert(logged(3L) == cp)
+  }
+
+  test("an external-shaped checkpoint (required columns only) imports to the rows of " +
+    "its JSON log") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val out = tmp("delta_cp_ext_")
+    onePartFile((1L to 3L).map(i => (i, s"a$i")).toDF("id", "v"), Paths.get(out, "a.parquet"))
+    onePartFile((4L to 5L).map(i => (i, s"b$i")).toDF("id", "v"), Paths.get(out, "b.parquet"))
+    onePartFile((6L to 8L).map(i => (i, s"c$i")).toDF("id", "v"), Paths.get(out, "c.parquet"))
+    onePartFile((9L to 9L).map(i => (i, s"d$i")).toDF("id", "v"), Paths.get(out, "d.parquet"))
+    val schema = Seq((1L, "x", "p")).toDF("id", "v", "part").schema
+    val pv = Map("a.parquet" -> Map("part" -> Some("x")), "b.parquet" -> Map("part" -> None),
+      "c.parquet" -> Map("part" -> Some("y")), "d.parquet" -> Map("part" -> Some("x")))
+    DeltaInterop.writeCommit(out, 0L, adds = Seq("a.parquet", "b.parquet"),
+      schemaJson = Some(schema.json), partitionColumns = Seq("part"),
+      partitionValues = pv.filter(p => Set("a.parquet", "b.parquet")(p._1)),
+      stats = DeltaInterop.computeAddStats(spark, out, Seq("a.parquet", "b.parquet")))
+    DeltaInterop.writeCommit(out, 1L, adds = Seq("c.parquet"), removes = Seq("a.parquet"),
+      partitionValues = pv.filter(_._1 == "c.parquet"))
+    DeltaInterop.writeCommit(out, 2L, adds = Seq("d.parquet"),
+      partitionValues = pv.filter(_._1 == "d.parquet"))
+    def rows() = DeltaInterop.importSnapshot(spark, out).collect()
+      .map(r => (r.getLong(0), r.getString(1), Option(r.getString(2)))).toSet
+    val want = rows()
+    assert(want.map(_._1) == Set(4L, 5L, 6L, 7L, 8L, 9L))
+    // the state at v1 as another writer's checkpoint spells it: no
+    // add.stats, add.deletionVector, metaData.configuration or
+    // protocol.readerFeatures columns, plus a remove tombstone row
+    val strMap = MapType(StringType, StringType)
+    val cpSchema = StructType(Seq(
+      StructField("protocol", StructType(Seq(
+        StructField("minReaderVersion", IntegerType), StructField("minWriterVersion", IntegerType)))),
+      StructField("metaData", StructType(Seq(
+        StructField("id", StringType),
+        StructField("format", StructType(Seq(
+          StructField("provider", StringType), StructField("options", strMap)))),
+        StructField("schemaString", StringType),
+        StructField("partitionColumns", ArrayType(StringType)),
+        StructField("createdTime", LongType)))),
+      StructField("add", StructType(Seq(
+        StructField("path", StringType), StructField("partitionValues", strMap),
+        StructField("size", LongType), StructField("modificationTime", LongType),
+        StructField("dataChange", BooleanType)))),
+      StructField("remove", StructType(Seq(
+        StructField("path", StringType), StructField("deletionTimestamp", LongType),
+        StructField("dataChange", BooleanType))))))
+    def add(rel: String) = Row(null, null, Row(rel,
+      pv(rel).map { case (k, v) => k -> v.orNull }, Files.size(Paths.get(out, rel)), 0L, false), null)
+    val cpRows = Seq(
+      Row(Row(1, 2), null, null, null),
+      Row(null, Row("ext-id", Row("parquet", Map.empty[String, String]), schema.json,
+        Seq("part"), 0L), null, null),
+      add("b.parquet"), add("c.parquet"),
+      Row(null, null, null, Row("a.parquet", 0L, false)))
+    val staged = tmp("delta_cp_ext_stage_")
+    spark.createDataFrame(cpRows.asJava, cpSchema).coalesce(1)
+      .write.mode("overwrite").parquet(staged)
+    val part = Files.list(Paths.get(staged)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).next()
+    val logDir = Paths.get(out, "_delta_log")
+    Files.copy(part, logDir.resolve(f"${1L}%020d.checkpoint.parquet"))
+    Files.write(logDir.resolve("_last_checkpoint"),
+      "{\"version\":1,\"size\":5}\n".getBytes("UTF-8"))
+    Files.delete(logDir.resolve(f"${0L}%020d.json"))
+    Files.delete(logDir.resolve(f"${1L}%020d.json"))
+    assert(rows() == want)
+  }
+
+  test("two exports racing into one directory: exactly one commits v0, the loser " +
+    "is refused, and v0 is whole (20 trials)") {
+    val plain = tmp("delta_xrace_src_") + "/t"
+    (0 until 2).foreach(k => VersionedTable.append(plain)(dir =>
+      (1L to 40L).map(i => (i + 100L * k, s"v$i")).toDF("id", "v").coalesce(1).write.parquet(dir)))
+    val keyed = tmp("delta_xrace_keyed_") + "/t"
+    VersionedTable.upsert(spark, keyed, Seq("id"),
+      compactWrite = (df, dir) => df.coalesce(1).write.parquet(dir))(dir =>
+      (1L to 40L).map(i => (i, s"k$i")).toDF("id", "v").coalesce(1).write.parquet(dir))
+    val pool = Executors.newFixedThreadPool(2)
+    try (1 to 20).foreach { trial =>
+      // odd trials copy verbatim, even ones materialize a keyed table
+      val table = if (trial % 2 == 1) plain else keyed
+      val out = tmp("delta_xrace_")
+      val start = new CountDownLatch(1)
+      val futures = (1 to 2).map { _ =>
+        pool.submit(new Callable[Either[Throwable, Seq[String]]] {
+          def call(): Either[Throwable, Seq[String]] = {
+            start.await()
+            try Right(DeltaInterop.exportSnapshot(spark, table, out))
+            catch { case e: Throwable => Left(e) }
+          }
+        })
+      }
+      start.countDown()
+      val outcomes = futures.map(_.get(120, TimeUnit.SECONDS))
+      val winners = outcomes.collect { case Right(rels) => rels }
+      assert(winners.size == 1, s"trial $trial: $outcomes")
+      outcomes.collect { case Left(e) => e }.foreach(e => assert(
+        e.isInstanceOf[VersionedTable.ConcurrentCommitException] ||
+          e.getMessage.contains("already holds a _delta_log"), s"trial $trial: loser got $e"))
+      val actions = logActions(out)
+      assert(actions.count(_.has("protocol")) == 1 && actions.count(_.has("metaData")) == 1,
+        s"trial $trial: $actions")
+      val adds = actions.flatMap(a => Option(a.get("add")))
+      assert(adds.map(_.get("path").asText()).toSet == winners.head.toSet)
+      adds.foreach(a => assert(
+        Files.size(Paths.get(out, a.get("path").asText())) == a.get("size").asLong(),
+        s"trial $trial: $a"))
+      // nothing beside the winner's files: no staged copy, no loser's part
+      val onDisk = tree(out).map(_._1).filterNot(_.startsWith("_delta_log"))
+      assert(onDisk.toSet == winners.head.toSet, s"trial $trial: $onDisk")
+      assert(DeltaInterop.importSnapshot(spark, out).collect().toSet ==
+        VersionedTable.read(spark, table).collect().toSet)
+      VersionedTable.deleteRecursively(Paths.get(out))
+    } finally pool.shutdown()
+  }
+
+  test("opening a table: one Spark job for a checkpointed log (one scan of all " +
+    "parts), none for a JSON-only log") {
+    Seq(1, 3).foreach { parts =>
+      val out = checkpointedTable(parts)
+      val (df, jobs) = jobsDuring(DeltaInterop.importSnapshot(spark, out))
+      assert(jobs == 1, s"$parts-part checkpoint: $jobs jobs")
+      assert(jobsDuring(DeltaInterop.liveState(spark, out))._2 == 1)
+      assert(df.collect().map(_.getLong(0)).toSet == Set(4L, 5L))
+    }
+    val table = tmp("delta_jobs_src_") + "/t"
+    VersionedTable.append(table)(dir =>
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1).write.parquet(dir))
+    val out = tmp("delta_jobs_")
+    DeltaInterop.exportSnapshot(spark, table, out)
+    assert(jobsDuring(DeltaInterop.importSnapshot(spark, out))._2 == 0)
+  }
 }
