@@ -186,7 +186,7 @@ object SketchFunctions {
     }
     val cw: (DataFrame, String) => Unit = (df, d) => df.write.parquet(d)
     graft.storage.VersionedTable.upsert(spark, path, Seq("bucket"),
-      compactEvery = 8, compactWrite = cw)(d => merged.write.parquet(d))
+      compactWrite = cw)(d => merged.write.parquet(d))
     ()
   }
 

@@ -4097,9 +4097,9 @@ object PipelineQueries {
       val path = scratchDir("cdfapply").toString + "/t"
       val cw: (DataFrame, String) => Unit = (df, d) => df.write.parquet(d)
       graft.storage.VersionedTable.upsert(s, path, Seq("user_id"),
-        compactEvery = 100, compactWrite = cw)(d => base.write.parquet(d))
+        compactWrite = cw)(d => base.write.parquet(d))
       graft.storage.VersionedTable.upsert(s, path, Seq("user_id"),
-        compactEvery = 100, compactWrite = cw)(d => wave.write.parquet(d))
+        compactWrite = cw)(d => wave.write.parquet(d))
       val v1 = graft.storage.VersionedTable.read(s, path, asOfVersion = Some(1L))
       val changes = graft.storage.VersionedTable.readChanges(
         s, path, Seq("user_id"), 1L, 2L)
@@ -4276,9 +4276,9 @@ object PipelineQueries {
       val path = scratchDir("cdf").toString + "/t"
       val cw: (DataFrame, String) => Unit = (df, d) => df.write.parquet(d)
       graft.storage.VersionedTable.upsert(s, path, Seq("user_id"),
-        compactEvery = 100, compactWrite = cw)(d => base.write.parquet(d))
+        compactWrite = cw)(d => base.write.parquet(d))
       graft.storage.VersionedTable.upsert(s, path, Seq("user_id"),
-        compactEvery = 100, compactWrite = cw)(d => wave.write.parquet(d))
+        compactWrite = cw)(d => wave.write.parquet(d))
       graft.storage.VersionedTable.readChanges(s, path, Seq("user_id"), 1L, 2L)
     }),
 

@@ -456,7 +456,7 @@ final class RefreshManager(fs: FeatureStore) {
   }
 
   /** Opportunistic auto-compaction for append-mode sinks — the upsert sink
-    * compacts every `compactEvery` commits; append sinks otherwise
+    * compacts every `VersionedTable.CompactEvery` commits; append sinks otherwise
     * accumulate one segment per micro-batch forever (the read-amplification
     * cliff `OPTPROBE_r10.json` measures: a 64-segment table scans ~20×
     * slower than its compacted form). After each append commit, if the

@@ -1380,18 +1380,37 @@ object DeltaInterop {
       s"non-contiguous commit: want version $expected, got $version")
   }
 
-  /** The table's current metaData action without replaying the live
-    * state: the last one in the newest commit JSON that carries one, else
-    * the checkpoint's.
+  /** The table's current action of one last-wins kind (metaData,
+    * protocol) without replaying the live state: the last one in the
+    * newest commit JSON that carries one, else the checkpoint's.
     */
-  private def latestMetaData(logDir: Path): Option[MetaData] =
+  private def latest[A <: Action](logDir: Path)(pick: PartialFunction[Action, A]): Option[A] =
     listCommits(logDir).reverseIterator
-      .flatMap(c => readCommit(c).reverseIterator.collectFirst { case m: MetaData => m })
+      .flatMap(c => readCommit(c).reverseIterator.collectFirst(pick))
       .nextOption()
       .orElse(lastCheckpoint(logDir).flatMap { case (v, parts) =>
-        readCheckpoint(SparkSession.active, logDir, v, parts)
-          .collectFirst { case m: MetaData => m }
+        readCheckpoint(SparkSession.active, logDir, v, parts).collectFirst(pick)
       })
+
+  /** Legacy protocol versions and the table features each one implies
+    * (PROTOCOL.md "Table Features": a legacy `(minReader, minWriter)`
+    * table supports every feature of every version up to its own).
+    */
+  private val LegacyReaderFeatures = Seq(2 -> "columnMapping")
+  private val LegacyWriterFeatures = Seq(2 -> "appendOnly", 2 -> "invariants",
+    3 -> "checkConstraints", 4 -> "changeDataFeed", 4 -> "generatedColumns",
+    5 -> "columnMapping", 6 -> "identityColumns")
+
+  /** `p` upgraded to table features (reader 3 / writer 7) with `feature`
+    * added as a reader+writer feature: the features `p` already lists, or
+    * those its legacy versions imply, all survive.
+    */
+  private def withFeature(p: Protocol, feature: String): Protocol = {
+    def implied(v: Int, legacy: Seq[(Int, String)]) = legacy.collect { case (min, f) if v >= min => f }
+    val reader = p.readerFeatures.getOrElse(implied(p.minReaderVersion, LegacyReaderFeatures))
+    val writer = p.writerFeatures.getOrElse(implied(p.minWriterVersion, LegacyWriterFeatures))
+    Protocol(3, 7, Some((reader :+ feature).distinct), Some((writer :+ feature).distinct))
+  }
 
   /** Append commit `version` to an existing (or fresh) `_delta_log`:
     * `removes` retire previously-added relative paths, `adds` activate
@@ -1444,16 +1463,18 @@ object DeltaInterop {
     // in the SAME commit (PROTOCOL.md: deletionVectors is a reader+writer
     // feature under minReaderVersion 3 / minWriterVersion 7), so any
     // feature-honest reader either applies the DVs or refuses — never
-    // silently serves deleted rows
+    // silently serves deleted rows. The protocol is last-wins, so the
+    // upgrade keeps every feature the table already declares.
+    val initial = Option.when(version == 0L) {
+      val (minR, minW) = protocolVersions.getOrElse((1, 2))
+      Protocol(minR, minW)
+    }
     val protocol =
-      if (dvs.nonEmpty)
-        Some(Protocol(3, 7, Some(Seq("deletionVectors")), Some(Seq("deletionVectors"))))
-      else Option.when(version == 0L) {
-        val (minR, minW) = protocolVersions.getOrElse((1, 2))
-        Protocol(minR, minW)
-      }
+      if (dvs.isEmpty) initial
+      else Some(withFeature(initial.orElse(latest(logDir) { case p: Protocol => p })
+        .getOrElse(Protocol(1, 2)), "deletionVectors"))
     val metaData = schemaJson.map { sj =>
-      val prior = if (version == 0L) None else latestMetaData(logDir)
+      val prior = if (version == 0L) None else latest(logDir) { case m: MetaData => m }
       MetaData(prior.fold(java.util.UUID.randomUUID().toString)(_.id), "parquet", sj,
         partitionColumns, configuration, prior.fold(Option(now))(_.createdTime))
     }

@@ -642,28 +642,19 @@ object IcebergInterop {
   // ---- commit ----
 
   /** Publish `meta` as `metadata/v<version>.metadata.json` — the commit
-    * point, put-if-absent ([[VersionedTable.publishIfAbsent]]): of two
-    * writers racing one version exactly one lands, the other gets a
-    * [[VersionedTable.ConcurrentCommitException]] before it has touched
-    * the table's metadata. Then `version-hint.text` is pointed at it
-    * through a uniquely named temp file and an atomic move. The hint is
-    * advisory ([[readTableMeta]] probes past it), so a failed or
-    * overtaken hint write never fails the published commit.
+    * point, put-if-absent: of two writers racing one version exactly one
+    * lands, the other gets a [[VersionedTable.ConcurrentCommitException]]
+    * before it has touched the table's metadata — then point the advisory
+    * `version-hint.text` at it ([[readTableMeta]] probes past the hint).
+    * [[VersionedTable.publishVersion]] commits the manifest table's
+    * versions the same way.
     */
-  private[storage] def publish(metaDir: Path, version: Long, meta: JsonNode): Unit = {
-    VersionedTable.publishIfAbsent(metaDir, s"v$version.metadata.json",
+  private[storage] def publish(metaDir: Path, version: Long, meta: JsonNode): Unit =
+    VersionedTable.publishVersion(metaDir, s"v$version.metadata.json",
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(meta),
+      "version-hint.text", version.toString.getBytes("UTF-8"),
       s"concurrent commit at ${metaDir.getParent}: another writer published " +
         s"metadata version $version")
-    try {
-      val tmp = Files.createTempFile(metaDir, ".version-hint.", ".tmp")
-      try {
-        Files.write(tmp, version.toString.getBytes("UTF-8"))
-        Files.move(tmp, metaDir.resolve("version-hint.text"),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      } finally Files.deleteIfExists(tmp)
-    } catch { case _: java.io.IOException => () }
-  }
 
   /** The one metadata commit of every writer on an existing table:
     * version `v + 1` is a deep copy of version `v`'s `meta` with `edit`

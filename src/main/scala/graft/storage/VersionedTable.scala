@@ -13,42 +13,60 @@ import org.apache.spark.sql.types.StructType
 /** Transactional table layout for managed feature views — the minimal
   * Delta-shaped commit protocol the reference gets from Snowflake's dynamic
   * tables (SURVEY §1.1 "metadata Delta/parquet table"): a table directory
-  * holds immutable parquet *segments* plus one `_MANIFEST.json` whose
-  * compare-and-swap flip is the single commit point.
+  * holds immutable parquet *segments*, one versioned manifest snapshot per
+  * commit — whose put-if-absent publish is the single commit point — and
+  * an advisory `_MANIFEST.json` pointer holding a copy of the newest one.
   *
   *   path/
   *     seg-00000001-3fa9c1d2/ ...parquet (possibly date-partitioned)
   *     seg-00000002-b01e77aa/ ...
-  *     _MANIFEST.json   {"version":2,"kind":"upsert","keys":["user_id"],
-  *                       "segments":["seg-...","seg-..."]}
+  *     _MANIFEST-v00000001.json
+  *     _MANIFEST-v00000002.json {"version":2,"kind":"upsert","keys":["user_id"],
+  *                               "segments":["seg-...","seg-..."]}
+  *     _MANIFEST.json           (pointer: the same content as v2)
   *
   * Readers resolve the manifest once and only ever see a fully-written
   * committed segment set — there is no delete→rename window where the table
   * is missing, and a crashed writer leaves only an unreferenced segment dir
   * behind (cleaned by [[vacuum]]), never a broken table.
   *
-  * '''Commit protocol (optimistic, object-store-mappable).''' A writer
-  *  1. reads the manifest (base version v) — no lock held;
+  * '''Commit protocol (optimistic, object-store-mappable, no lock).''' A
+  * writer
+  *  1. resolves the manifest (base version v);
   *  2. writes its segment to a ''uniquely named'' dir (version + random
-  *     suffix, so racing writers never collide on data files) — no lock held,
-  *     data writes can take minutes;
-  *  3. flips the manifest inside a short critical section that re-checks the
-  *     base version: if another commit landed since step 1 the flip throws
-  *     [[ConcurrentCommitException]] — ''one loser errors, no commit is ever
-  *     silently lost''. The critical section is guarded by an exclusive
-  *     `_LOCK` file create (≙ object-store conditional PUT `If-None-Match`)
-  *     and the version re-check (≙ conditional PUT `If-Match` on the
-  *     manifest's etag/generation) — both primitives exist on S3/GCS/ABFS,
-  *     so the protocol ports without a rename-is-atomic assumption. Locally
-  *     the flip itself is additionally tmp-write + ATOMIC_MOVE. The lock is
-  *     held for milliseconds (one read + one small write); a lock file older
-  *     than [[LockTtlMs]] is a crashed writer and is taken over. Because
-  *     stale-lock takeover is check-then-delete (not atomic on a shared
-  *     path), the flip is additionally guarded by an atomic per-version
-  *     ''claim'' — `createFile` of the versioned snapshot, exactly one
-  *     winner per version — so even a double takeover costs one loser a
-  *     clean [[ConcurrentCommitException]], never a silently lost commit
-  *     (see [[claimVersion]]).
+  *     suffix, so racing writers never collide on data files) — data
+  *     writes can take minutes;
+  *  3. re-resolves the current version and loses with
+  *     [[ConcurrentCommitException]] if it is no longer v;
+  *  4. publishes `_MANIFEST-v<v+1>.json` put-if-absent ([[publishIfAbsent]]:
+  *     a hard link of a fully written temp file, ≙ object-store conditional
+  *     PUT `If-None-Match`) — of two writers on one base exactly one link
+  *     lands and the other gets [[ConcurrentCommitException]]: ''one loser
+  *     errors, no commit is ever silently lost''. Every commit targets
+  *     `base + 1`, so the link is a compare-and-swap on the base version;
+  *  5. rewrites the `_MANIFEST.json` pointer through a uniquely named temp
+  *     file and an atomic move ([[publishVersion]]); a failed rewrite is
+  *     ignored — the Iceberg bridge commits through the same helper.
+  * [[readManifest]] starts at the pointer and probes `_MANIFEST-v<n+1>`
+  * upward, so a commit whose pointer rewrite was lost (a crash between
+  * steps 4 and 5) is served, and a pointer a stalled writer rewrites after
+  * newer commits is overtaken by the probe. When the pointer's own snapshot
+  * is gone (a late pointer past [[vacuum]]'s horizon) resolution starts at
+  * the newest listed snapshot instead; vacuum never deletes the newest.
+  *
+  * Remaining window, stated plainly: steps 3 and 4 are two operations. A
+  * writer that stalls between them while more than `keepGenerations`
+  * commits land and a vacuum expires snapshot v+1 links that expired
+  * version number: its commit reports success but is not on the table's
+  * line. If its pointer rewrite then lands, resolution through the pointer
+  * starts at that old version (its successors are expired too), so readers
+  * serve it and the next commits build on it — until their version
+  * numbers reach the oldest retained snapshot, where the probe rejoins the
+  * newer line and they drop out of view as well. The lock this protocol
+  * replaced had the same class of gap behind its stale-lock takeover, and
+  * a plain filesystem offers no compare-and-swap on the pointer that would
+  * close it; every writer here holds steps 3–4 for milliseconds, and
+  * vacuum keeps 8 generations by default.
   *
   * Commit kinds:
   *  - [[overwrite]]: manifest := [newSegment] — FULL refresh.
@@ -57,7 +75,7 @@ import org.apache.spark.sql.types.StructType
   *  - [[upsert]]: like append, but the manifest carries the key columns and
   *    readers merge-on-read with latest-segment-wins per key — update-mode
   *    streaming aggregations land O(changed keys) per tick. Every
-  *    `compactEvery` commits the merged view is rewritten into one segment
+  *    [[CompactEvery]] commits the merged view is rewritten into one segment
   *    (manifest := [compacted]) so read amplification stays bounded — the
   *    LSM/Delta compaction trade.
   *  - [[fold]]: an append or upsert segment (or a replacing one) committed
@@ -106,22 +124,18 @@ import org.apache.spark.sql.types.StructType
   */
 object VersionedTable {
   private val ManifestName = "_MANIFEST.json"
-  private val LockName = "_LOCK"
+  private val SnapshotPrefix = "_MANIFEST-v"
+  private val SnapshotName = (SnapshotPrefix + "(\\d+)\\.json").r
   private val SegPrefix = "seg-"
   private val mapper = new ObjectMapper()
 
-  /** How long a `_LOCK` file may exist before it is considered abandoned by
-    * a crashed writer. The lock spans one manifest read + one small write.
-    */
-  val LockTtlMs: Long = 30000L
-
   final class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
 
-  /** The put-if-absent publish the Delta and Iceberg bridges commit
-    * through: `bytes` are staged to a uniquely named temp file in `dir`,
-    * then hard-linked in as `name` — atomic, and a file already there is
-    * never replaced. Of two writers racing on one `name` exactly one lands;
-    * the other gets a [[ConcurrentCommitException]] carrying `lost`. The
+  /** The put-if-absent publish every commit protocol here goes through:
+    * `bytes` are staged to a uniquely named temp file in `dir`, then
+    * hard-linked in as `name` — atomic, and a file already there is never
+    * replaced. Of two writers racing on one `name` exactly one lands; the
+    * other gets a [[ConcurrentCommitException]] carrying `lost`. The
     * staged file is deleted either way.
     */
   private[storage] def publishIfAbsent(
@@ -135,6 +149,26 @@ object VersionedTable {
         throw new ConcurrentCommitException(lost)
     } finally Files.deleteIfExists(tmp)
     ()
+  }
+
+  /** Publish one metadata version: `bytes` as `name` through
+    * [[publishIfAbsent]] — the commit point — then the advisory `pointer`
+    * rewritten to `pointerBytes` through a uniquely named temp file and an
+    * atomic move. Readers probe past the pointer, so a failed or overtaken
+    * rewrite never fails the published commit. This table's
+    * `_MANIFEST.json` and Iceberg's `version-hint.text` are such pointers.
+    */
+  private[storage] def publishVersion(dir: Path, name: String, bytes: Array[Byte],
+      pointer: String, pointerBytes: Array[Byte], lost: => String): Unit = {
+    publishIfAbsent(dir, name, bytes, lost)
+    try {
+      val tmp = Files.createTempFile(dir, s".$pointer.", ".tmp")
+      try {
+        Files.write(tmp, pointerBytes)
+        Files.move(tmp, dir.resolve(pointer), StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      } finally Files.deleteIfExists(tmp)
+    } catch { case _: java.io.IOException => () }
   }
 
   /** Run `f` over a fresh temp directory named `prefix…` and delete the
@@ -206,6 +240,35 @@ object VersionedTable {
 
   private def manifestPath(path: String): Path = Paths.get(path, ManifestName)
 
+  private def snapshotPath(path: String, version: Long): Path =
+    Paths.get(path, f"$SnapshotPrefix$version%08d.json")
+
+  // ---- the manifest codec ----
+
+  private def manifestJson(m: Manifest): Array[Byte] = {
+    val n = mapper.createObjectNode()
+    n.put("version", m.version)
+    n.put("kind", m.kind)
+    n.put("batchId", m.batchId)
+    val ks = n.putArray("keys"); m.keys.foreach(ks.add)
+    val ss = n.putArray("segments"); m.segments.foreach(ss.add)
+    if (m.stats.nonEmpty) {
+      val st = n.putObject("stats")
+      m.stats.foreach { case (seg, s) =>
+        val o = st.putObject(seg)
+        o.put("col", s.col); o.put("min", s.min); o.put("max", s.max)
+      }
+    }
+    if (m.merge.nonEmpty) {
+      val mo = n.putObject("merge")
+      m.merge.toSeq.sorted.foreach { case (c, f) => mo.put(c, f) }
+    }
+    m.consumed.foreach { c =>
+      val ca = n.putArray("consumed"); c.toSeq.sorted.foreach(ca.add)
+    }
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(n)
+  }
+
   private def parseManifest(bytes: Array[Byte]): Manifest = {
     val n = mapper.readTree(bytes)
     val keys = n.get("keys").elements().asScala.map(_.asText()).toSeq
@@ -229,208 +292,86 @@ object VersionedTable {
       stats, merge, consumed)
   }
 
-  def readManifest(path: String): Option[Manifest] = {
-    val p = manifestPath(path)
-    if (!Files.exists(p)) None
-    else Some(parseManifest(Files.readAllBytes(p)))
+  /** Parse the manifest file `p`. A zero-byte snapshot is the version
+    * claim a crashed writer of the lock-based protocol left behind; it is
+    * no commit, and the version it blocks cannot be published, so it is
+    * refused by name rather than read or skipped.
+    */
+  private def loadManifest(p: Path): Manifest = {
+    val bytes = Files.readAllBytes(p)
+    if (bytes.isEmpty) throw new IllegalStateException(
+      s"$p is an empty version claim left by a crashed writer, not a commit: " +
+        "delete it to read and commit this table again")
+    parseManifest(bytes)
   }
 
-  private def snapshotPath(path: String, version: Long): Path =
-    Paths.get(path, f"_MANIFEST-v$version%08d.json")
+  /** Versions of the `_MANIFEST-v<n>.json` snapshots under `path`, ascending. */
+  private def snapshotVersions(path: String): Seq[Long] =
+    Option(new java.io.File(path).list()).toSeq.flatten
+      .collect { case SnapshotName(v) => v.toLong }.sorted
+
+  /** The committed manifest: the newest published `_MANIFEST-v<n>.json`.
+    * Resolution starts at the `_MANIFEST.json` pointer (a copy of some
+    * committed snapshot) and probes `_MANIFEST-v<n+1>` upward, so a
+    * commit whose pointer rewrite was lost is served and a late pointer
+    * rewrite is overtaken. A pointer whose own snapshot is gone — written
+    * late, past [[vacuum]]'s horizon — is not trusted as a start: the
+    * newest listed snapshot is (the pointer still wins over older listed
+    * ones, as on a table an earlier vacuum left without its newest
+    * snapshot).
+    */
+  def readManifest(path: String): Option[Manifest] = {
+    val ptr = Some(manifestPath(path)).filter(Files.exists(_)).map(loadManifest)
+    val start = ptr.filter(p => Files.exists(snapshotPath(path, p.version))).orElse(
+      (ptr ++ snapshotVersions(path).lastOption.map(v => loadManifest(snapshotPath(path, v))))
+        .maxByOption(_.version))
+    @scala.annotation.tailrec
+    def probe(m: Manifest): Manifest = {
+      val next = snapshotPath(path, m.version + 1)
+      if (Files.exists(next)) probe(loadManifest(next)) else m
+    }
+    start.map(probe)
+  }
 
   /** The manifest as of a past commit — Delta-style time travel. Every
-    * commit leaves a versioned snapshot behind; reading one whose segments
+    * commit publishes a versioned snapshot; reading one whose segments
     * have since been [[vacuum]]ed fails at scan time, exactly Delta's
     * post-VACUUM contract.
     */
   def readManifestAt(path: String, version: Long): Option[Manifest] = {
     val p = snapshotPath(path, version)
-    // a zero-byte snapshot is a claimed-but-unfilled version marker from an
-    // in-flight (or crashed) commit, not a committed manifest
-    if (Files.exists(p) && Files.size(p) > 0) Some(parseManifest(Files.readAllBytes(p)))
+    if (Files.exists(p)) Some(loadManifest(p))
     else readManifest(path).filter(_.version == version)
   }
 
-  /** The CAS flip: verify the on-disk manifest is still at `expectedVersion`
-    * (None = no manifest yet) inside the lock's critical section, claim the
-    * version with an ATOMIC create of the versioned-snapshot file, then
-    * publish `m`. Throws [[ConcurrentCommitException]] when another commit
-    * has landed since the caller read its base — the caller's segment stays
-    * behind as an unreferenced dir for [[vacuum]].
-    *
-    * '''Why the claim step exists.''' The `_LOCK` file's stale-TTL takeover
-    * is inherently a check-then-delete on a shared path: two writers can
-    * both judge the lock stale, and the slower one's delete can remove the
-    * FRESH lock the faster one just created — both then run this critical
-    * section concurrently and both pass the version re-check, which without
-    * a second defense would silently lose one commit (both flip to the same
-    * version, last rename wins). `Files.createFile` on the per-version
-    * snapshot path is O_CREAT|O_EXCL — genuinely atomic, exactly one winner
-    * per version number — so the racer that loses the claim throws instead
-    * of clobbering (≙ object-store conditional PUT `If-None-Match` on a
-    * per-version key, so the defense ports off the local FS too). The lock
-    * remains the throughput device; the claim is the correctness arbiter.
-    *
-    * Crash recovery: a writer that dies between claiming and flipping
-    * leaves a version marker with no manifest flip. A later committer that
-    * finds the marker, sees the current manifest still BELOW the marker's
-    * version, and measures the marker older than [[LockTtlMs]] rolls the
-    * orphan back (delete + re-claim, where re-claim's createFile again
-    * arbitrates concurrent recoverers). A fresh marker is a live racer and
-    * stays a [[ConcurrentCommitException]].
+  /** The commit: `m` (always `expectedVersion + 1`, None = no manifest
+    * yet) is published as its versioned snapshot put-if-absent, then the
+    * pointer is rewritten (see the object scaladoc). The current version
+    * is re-resolved first, so a writer whose base has been overtaken
+    * loses before it links — which also refuses a base so old that
+    * vacuum has expired the snapshot it would link. Throws
+    * [[ConcurrentCommitException]] on a lost race; the caller's segment
+    * stays behind as an unreferenced dir for [[vacuum]].
     */
-  private def commitManifest(path: String, expectedVersion: Option[Long], m: Manifest): Unit =
-    withCommitLock(path) {
-      val cur = readManifest(path).map(_.version)
-      if (cur != expectedVersion)
-        throw new ConcurrentCommitException(
-          s"concurrent commit at $path: expected base version $expectedVersion, found $cur")
-      val n = mapper.createObjectNode()
-      n.put("version", m.version)
-      n.put("kind", m.kind)
-      n.put("batchId", m.batchId)
-      val ks = n.putArray("keys"); m.keys.foreach(ks.add)
-      val ss = n.putArray("segments"); m.segments.foreach(ss.add)
-      if (m.stats.nonEmpty) {
-        val st = n.putObject("stats")
-        m.stats.foreach { case (seg, s) =>
-          val o = st.putObject(seg)
-          o.put("col", s.col); o.put("min", s.min); o.put("max", s.max)
-        }
-      }
-      if (m.merge.nonEmpty) {
-        val mo = n.putObject("merge")
-        m.merge.toSeq.sorted.foreach { case (c, f) => mo.put(c, f) }
-      }
-      m.consumed.foreach { c =>
-        val ca = n.putArray("consumed"); c.toSeq.sorted.foreach(ca.add)
-      }
-      val bytes = mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(n)
-      claimVersion(path, m.version)
-      // fill the claimed marker with the snapshot content atomically (time
-      // travel readers must never parse a half-written snapshot)
-      val snap = snapshotPath(path, m.version)
-      val snapTmp = Paths.get(path, snap.getFileName.toString + ".tmp")
-      Files.write(snapTmp, bytes)
-      Files.move(snapTmp, snap, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-      // the commit point: flip the current manifest
-      val tmp = Paths.get(path, ManifestName + ".tmp")
-      Files.write(tmp, bytes)
-      Files.move(tmp, manifestPath(path), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-
-  /** Atomically claim `version`: exactly one `createFile` on the snapshot
-    * path succeeds per version number. Rolls back a crashed predecessor's
-    * orphaned claim (marker older than [[LockTtlMs]] with the manifest
-    * still below `version`); any other existing marker is a lost race.
-    */
-  private def claimVersion(path: String, version: Long): Unit = {
-    val snap = snapshotPath(path, version)
-    def lost() = new ConcurrentCommitException(
-      s"concurrent commit at $path: version $version already claimed by another writer")
-    try Files.createFile(snap)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        val orphaned =
-          try {
-            readManifest(path).forall(_.version < version) &&
-            System.currentTimeMillis() - Files.getLastModifiedTime(snap).toMillis > LockTtlMs
-          } catch { case _: java.io.IOException => false }
-        if (!orphaned) throw lost()
-        // Roll back ATOMICALLY: deleteIfExists+createFile would recreate the
-        // exact check-then-act window this claim exists to close (two
-        // recoverers both judge the marker stale; the slower delete removes
-        // the faster one's FRESH claim and both flip the same version).
-        // ATOMIC_MOVE to a unique graveyard name has exactly one winner —
-        // the loser's move throws NoSuchFileException and is a lost race.
-        val graveyard = Paths.get(path,
-          snap.getFileName.toString + s".orphan.${ProcessHandle.current().pid()}.${System.nanoTime()}")
-        try Files.move(snap, graveyard, StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.NoSuchFileException => throw lost() }
-        // Re-validate on the MOVED file: its mtime travels with the move.
-        // The pre-move staleness check judged whatever was at `snap` THEN;
-        // between check and move another recoverer may have rolled back and
-        // re-claimed, so the move can grab a FRESH claim. A fresh mtime
-        // here means exactly that — restore it and lose the race. The
-        // restore is `createLink` (atomic no-replace: link creation fails
-        // if `snap` exists again), NOT a rename, because a rename REPLACES
-        // the target: a third writer whose `createFile(snap)` landed during
-        // the absence window would have its fresh claim silently clobbered.
-        // If the link fails, that third writer owns the claim and the
-        // graveyard copy is left for the stale-orphan sweep below. Residual
-        // honesty: the absence window itself (moved-out live claim until
-        // restore) can still let one writer claim while the original
-        // believes it holds — reachable only when the commit LOCK was
-        // TTL-stolen twice concurrently during a live commit, i.e. when the
-        // LockTtlMs liveness assumption is already violated; a plain
-        // filesystem offers no compare-and-swap to close that last gap.
-        val stoleLive =
-          try System.currentTimeMillis() - Files.getLastModifiedTime(graveyard).toMillis <= LockTtlMs
-          catch { case _: java.io.IOException => false }
-        if (stoleLive) {
-          // hard links may be unsupported (FAT/NFS/FUSE mounts) — that
-          // surfaces as UnsupportedOperationException, not IOException;
-          // either way the restore is best-effort and we lose the race
-          try {
-            Files.createLink(snap, graveyard)
-            Files.deleteIfExists(graveyard)
-          } catch {
-            case _: java.io.IOException | _: UnsupportedOperationException => ()
-          }
-          throw lost()
-        }
-        Files.deleteIfExists(graveyard)
-        // a crash between the move and the delete above leaks the uniquely
-        // named graveyard file — sweep stale `.orphan.` siblings of this
-        // version eagerly instead of relying on vacuum's `_MANIFEST-v`
-        // prefix filter to catch them past the retention horizon
-        try {
-          val ls = Files.list(Paths.get(path))
-          try {
-            val prefix = snap.getFileName.toString + ".orphan."
-            val it = ls.iterator()
-            while (it.hasNext) {
-              val p = it.next()
-              val stale = p.getFileName.toString.startsWith(prefix) &&
-                (try System.currentTimeMillis() - Files.getLastModifiedTime(p).toMillis > LockTtlMs
-                 catch { case _: java.io.IOException => false })
-              if (stale) { try Files.deleteIfExists(p) catch { case _: java.io.IOException => () } }
-            }
-          } finally ls.close()
-        } catch { case _: java.io.IOException => () }
-        try Files.createFile(snap)
-        catch { case _: java.nio.file.FileAlreadyExistsException => throw lost() }
-    }
-  }
-
-  private def withCommitLock[T](path: String)(body: => T): T = {
-    Files.createDirectories(Paths.get(path))
-    val lock = Paths.get(path, LockName)
-    val deadline = System.nanoTime() + 10_000_000_000L
-    var acquired = false
-    while (!acquired) {
-      try { Files.createFile(lock); acquired = true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val stale =
-            try System.currentTimeMillis() - Files.getLastModifiedTime(lock).toMillis > LockTtlMs
-            catch { case _: java.io.IOException => false } // holder just released
-          if (stale) Files.deleteIfExists(lock)
-          else if (System.nanoTime() > deadline)
-            throw new ConcurrentCommitException(s"timed out acquiring commit lock at $path")
-          else Thread.sleep(5)
-      }
-    }
-    try body finally Files.deleteIfExists(lock)
+  private def commitManifest(path: String, expectedVersion: Option[Long], m: Manifest): Unit = {
+    require(m.version == expectedVersion.getOrElse(0L) + 1,
+      s"commit of version ${m.version} on base $expectedVersion")
+    val dir = Files.createDirectories(Paths.get(path))
+    val cur = readManifest(path).map(_.version)
+    if (cur != expectedVersion)
+      throw new ConcurrentCommitException(
+        s"concurrent commit at $path: expected base version $expectedVersion, found $cur")
+    val bytes = manifestJson(m)
+    publishVersion(dir, snapshotPath(path, m.version).getFileName.toString, bytes,
+      ManifestName, bytes,
+      s"concurrent commit at $path: another writer published version ${m.version}")
   }
 
   /** The table exists once a manifest is committed; pre-manifest layouts
     * (plain parquet dirs from older stores) are honored for reads.
     */
   def exists(path: String): Boolean =
-    Files.exists(manifestPath(path)) || legacyExists(path)
+    Files.exists(manifestPath(path)) || snapshotVersions(path).nonEmpty || legacyExists(path)
 
   private def legacyExists(path: String): Boolean =
     legacyFiles(path).nonEmpty
@@ -518,24 +459,28 @@ object VersionedTable {
         throw new NoSuchElementException(s"no committed version $v at $path")))
       case None => readManifest(path)
     }) match {
-    case None =>
-      // legacy plain-parquet table: mutable, so its schema is never memoized
-      spark.read.parquet(path)
-    case Some(m) =>
-      require(m.segments.nonEmpty, s"empty manifest at $path")
-      val SegCol = "__graft_seg"
-      // allowMissingColumns: an all-empty segment is written unpartitioned
-      // (no _graft_date column) while data segments are partitioned
-      def union(dfs: Seq[DataFrame]): DataFrame =
-        dfs.reduce(_.unionByName(_, allowMissingColumns = true))
-      if (m.keys.isEmpty || m.segments.size == 1) {
-        union(m.segments.map(s => readSegment(spark, path, s)))
-      } else {
-        val tagged = m.segments.zipWithIndex.map { case (s, i) =>
-          readSegment(spark, path, s).withColumn(SegCol, lit(i))
-        }
-        mergeByKey(union(tagged), m.keys, m.merge, Some(SegCol))
+      case None =>
+        // legacy plain-parquet table: mutable, so its schema is never memoized
+        spark.read.parquet(path)
+      case Some(m) => readAt(spark, path, m)
+    }
+
+  /** The merged view of the already-resolved manifest `m` (see [[read]]). */
+  private def readAt(spark: SparkSession, path: String, m: Manifest): DataFrame = {
+    require(m.segments.nonEmpty, s"empty manifest at $path")
+    val SegCol = "__graft_seg"
+    // allowMissingColumns: an all-empty segment is written unpartitioned
+    // (no _graft_date column) while data segments are partitioned
+    def union(dfs: Seq[DataFrame]): DataFrame =
+      dfs.reduce(_.unionByName(_, allowMissingColumns = true))
+    if (m.keys.isEmpty || m.segments.size == 1) {
+      union(m.segments.map(s => readSegment(spark, path, s)))
+    } else {
+      val tagged = m.segments.zipWithIndex.map { case (s, i) =>
+        readSegment(spark, path, s).withColumn(SegCol, lit(i))
       }
+      mergeByKey(union(tagged), m.keys, m.merge, Some(SegCol))
+    }
   }
 
   /** One row per `keys` tuple of `u`: each column `merge` names is folded
@@ -668,16 +613,17 @@ object VersionedTable {
     */
   def segmentsInRange(path: String, statsCol: String,
       loMicros: Long, hiMicros: Long): (Seq[String], Seq[String]) =
-    readManifest(path) match {
-      case None => (Seq.empty, Seq.empty)
-      case Some(m) =>
-        m.segments.partition { s =>
-          m.stats.get(s) match {
-            case Some(st) if st.col.equalsIgnoreCase(statsCol) =>
-              st.max >= loMicros && st.min <= hiMicros
-            case _ => true // no stats (or different column) → must read
-          }
-        }
+    readManifest(path).fold((Seq.empty[String], Seq.empty[String]))(
+      segmentsInRange(_, statsCol, loMicros, hiMicros))
+
+  private def segmentsInRange(m: Manifest, statsCol: String,
+      loMicros: Long, hiMicros: Long): (Seq[String], Seq[String]) =
+    m.segments.partition { s =>
+      m.stats.get(s) match {
+        case Some(st) if st.col.equalsIgnoreCase(statsCol) =>
+          st.max >= loMicros && st.min <= hiMicros
+        case _ => true // no stats (or different column) → must read
+      }
     }
 
   /** OPTIMIZE — rewrite the committed table into ONE fresh segment of (at
@@ -721,7 +667,7 @@ object VersionedTable {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     val m = readManifest(path).getOrElse(throw new IllegalArgumentException(
       s"no manifest at $path — nothing to optimize"))
-    val df = read(spark, path)
+    val df = readAt(spark, path, m)
     val laidOut =
       if (zorderBy.isEmpty) df.repartition(numFiles)
       else {
@@ -792,7 +738,7 @@ object VersionedTable {
     if (m.keys.nonEmpty) {
       // upsert table: merge first (latest-wins), then filter — O(table),
       // but correct under superseded keys; keys/kind preserved
-      val merged = read(spark, path).filter(keep)
+      val merged = readAt(spark, path, m).filter(keep)
       val seg = newSegName(v)
       merged.write.parquet(segDir(path, seg))
       val st = SegStats.of(readSegment(spark, path, seg), statsCol)
@@ -856,9 +802,9 @@ object VersionedTable {
     require(m.keys.isEmpty,
       s"readRange on keyed upsert table at $path: segment pruning would break " +
         "latest-wins merge (a pruned segment may hold the superseding row)")
-    val (kept, _) = segmentsInRange(path, statsCol, loMicros, hiMicros)
+    val (kept, _) = segmentsInRange(m, statsCol, loMicros, hiMicros)
     val base =
-      if (kept.isEmpty) read(spark, path).limit(0) // all segments disjoint
+      if (kept.isEmpty) readAt(spark, path, m).limit(0) // all segments disjoint
       else kept.map(s => readSegment(spark, path, s))
         .reduce(_.unionByName(_, allowMissingColumns = true))
     base.filter(unix_micros(col(statsCol)).between(loMicros, hiMicros))
@@ -916,14 +862,13 @@ object VersionedTable {
     * refused — merge-on-read would collapse legitimate duplicate-key rows
     * inside its segments — and so is a multi-segment table with merge
     * functions, whose segments hold partial aggregates, not rows. Rewrites
-    * the merged view into a single segment every `compactEvery` commits via
-    * `compactWrite`.
+    * the merged view into a single segment every [[CompactEvery]] commits
+    * via `compactWrite`.
     */
   def upsert(
       spark: SparkSession,
       path: String,
       keys: Seq[String],
-      compactEvery: Int = CompactEvery,
       compactWrite: (DataFrame, String) => Unit,
       batchId: Option[Long] = None,
       stats: Option[SegStats] = None)(writeSeg: String => Unit): Unit = {
@@ -938,7 +883,7 @@ object VersionedTable {
     }
     val appended = commitSegment(path, m, replace = false, "upsert", keys,
       batchId.getOrElse(-1L), stats, Map.empty, None)(writeSeg)
-    maybeCompact(spark, path, appended, compactEvery, compactWrite)
+    maybeCompact(spark, path, appended, compactWrite)
   }
 
   /** Fold publish — the commit of one batch refresh that folded the source
@@ -978,7 +923,7 @@ object VersionedTable {
     val kind = if (keys.nonEmpty) "upsert" else if (replace) "full" else "append"
     val m = commitSegment(path, base, replace, kind, keys, -1L, stats, merge,
       Some(consumed))(writeSeg)
-    if (keys.isEmpty) m else maybeCompact(spark, path, m, CompactEvery, compactWrite)
+    if (keys.isEmpty) m else maybeCompact(spark, path, m, compactWrite)
   }
 
   /** True when a fold with `keys` and `merge` may add a segment on top of
@@ -1011,12 +956,12 @@ object VersionedTable {
   }
 
   /** Rewrite a keyed table's merged view into one segment once it has
-    * `compactEvery` segments; returns the manifest left committed.
+    * [[CompactEvery]] segments; returns the manifest left committed.
     */
   private def maybeCompact(spark: SparkSession, path: String, appended: Manifest,
-      compactEvery: Int, compactWrite: (DataFrame, String) => Unit): Manifest = {
-    if (appended.segments.size < compactEvery) return appended
-    val merged = read(spark, path) // resolves the manifest just committed
+      compactWrite: (DataFrame, String) => Unit): Manifest = {
+    if (appended.segments.size < CompactEvery) return appended
+    val merged = readAt(spark, path, appended)
     val cseg = newSegName(appended.version + 1)
     compactWrite(merged, segDir(path, cseg))
     // the compacted segment's stats are the union envelope of its inputs'
@@ -1062,14 +1007,16 @@ object VersionedTable {
         val gone = victims.map(f => absDir(path, f.getName)).toSet
         schemaMemo.keySet.removeIf(k => gone.contains(k._1))
         // expire snapshot manifests past the same horizon — their segments
-        // are (or may be) gone, so time travel to them is over anyway
-        Option(dir.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.startsWith("_MANIFEST-v"))
-          .filter { f =>
-            val digits = f.getName.stripPrefix("_MANIFEST-v").takeWhile(_.isDigit)
-            scala.util.Try(digits.toLong).getOrElse(Long.MaxValue) <= horizon
-          }
-          .foreach(f => Files.deleteIfExists(f.toPath))
+        // are (or may be) gone, so time travel to them is over anyway — but
+        // never the newest: it is the commit readers resolve to and the
+        // version number the next commit's link is checked against
+        // (the prefix match also sweeps temp and claim files an older
+        // lock-based writer left behind)
+        val lastExpired = math.min(horizon, m.version - 1)
+        Option(dir.list()).toSeq.flatten.filter(_.startsWith(SnapshotPrefix))
+          .filter(n => n.stripPrefix(SnapshotPrefix).takeWhile(_.isDigit).toLongOption
+            .exists(_ <= lastExpired))
+          .foreach(n => Files.deleteIfExists(Paths.get(path, n)))
         victims.length
     }
   }

@@ -177,7 +177,7 @@ object EventAnalyticsStream {
         when(col("t1_us").isNull, col(s"e$i"))
           .otherwise(filter(col(s"e$i"), x => x <= bound)).as(s"c$i")): _*)
     VersionedTable.upsert(spark, statePath, Seq("user_id"),
-      compactEvery = 8, compactWrite = cw, batchId = batchId)(d =>
+      compactWrite = cw, batchId = batchId)(d =>
       state.write.parquet(d))
     ()
   }
@@ -201,7 +201,7 @@ object EventAnalyticsStream {
     val weeks = batch.select(col("user_id"),
       to_date(date_trunc("week", col("ts"))).as("week")).distinct()
     VersionedTable.upsert(spark, statePath, Seq("user_id", "week"),
-      compactEvery = 8, compactWrite = cw, batchId = batchId)(d =>
+      compactWrite = cw, batchId = batchId)(d =>
       weeks.write.parquet(d))
     ()
   }
@@ -254,7 +254,7 @@ object EventAnalyticsStream {
             max(col("max_eid")).as("max_eid"))
       }
     VersionedTable.upsert(spark, statePath, Seq("user_id", "day"),
-      compactEvery = 8, compactWrite = cw, batchId = batchId)(d =>
+      compactWrite = cw, batchId = batchId)(d =>
       merged.write.parquet(d))
     ()
   }

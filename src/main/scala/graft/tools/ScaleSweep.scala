@@ -790,11 +790,11 @@ object ScaleSweep {
       val cdfCw: (DataFrame, String) => Unit = (df, d) => df.write.parquet(d)
       val cdfBase = events.groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
       graft.storage.VersionedTable.upsert(spark, cdfDir, Seq("user_id"),
-        compactEvery = 100, compactWrite = cdfCw)(d => cdfBase.write.parquet(d))
+        compactWrite = cdfCw)(d => cdfBase.write.parquet(d))
       val cdfWave = cdfBase.filter(col("user_id") < 200)
         .withColumn("cnt", col("cnt") + 1)
       graft.storage.VersionedTable.upsert(spark, cdfDir, Seq("user_id"),
-        compactEvery = 100, compactWrite = cdfCw)(d => cdfWave.write.parquet(d))
+        compactWrite = cdfCw)(d => cdfWave.write.parquet(d))
       measure("table_cdf", scale) {
         runAll(graft.storage.VersionedTable.readChanges(
           spark, cdfDir, Seq("user_id"), 1L, 2L))

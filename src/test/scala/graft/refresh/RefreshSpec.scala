@@ -510,7 +510,7 @@ class RefreshSpec extends SparkSpec {
       df.write.parquet(d)
     (1 to 9).foreach { i =>
       graft.storage.VersionedTable.upsert(spark, dir, Seq("k"),
-        compactEvery = 4, compactWrite = writeSeg)(
+        compactWrite = writeSeg)(
         d => writeSeg(Seq((i % 3, i)).toDF("k", "v"), d))
     }
     val m = graft.storage.VersionedTable.readManifest(dir).get

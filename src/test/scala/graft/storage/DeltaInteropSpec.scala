@@ -332,6 +332,42 @@ class DeltaInteropSpec extends SparkSpec {
     assert(e.getMessage.contains("column-mapped"), e.getMessage)
   }
 
+  test("writeCommit(dvs = …) on a name-mapped (2, 5) table keeps columnMapping in the " +
+      "upgraded protocol and still imports through physical names") {
+    import org.apache.spark.sql.types._
+    val out = tmp("delta_cmdv_")
+    val schema = StructType(Seq(
+      mappedField("doc_id", LongType, 1, "col-p1"),
+      mappedField("lang", StringType, 2, "col-p2")))
+    onePartFile(Seq((1L, "en"), (2L, "de"), (3L, "fr")).toDF("col-p1", "col-p2"),
+      Paths.get(out, "a.parquet"))
+    DeltaInterop.writeCommit(out, 0L, adds = Seq("a.parquet"),
+      schemaJson = Some(schema.json),
+      configuration = Map("delta.columnMapping.mode" -> "name",
+        "delta.columnMapping.maxColumnId" -> "2"),
+      protocolVersions = Some((2, 5)))
+    // delete row 1 (doc_id 2) with a DV: retire + re-add the file
+    val payload = DeletionVectors.serializeBitmapArray(Seq(1L))
+    val (pathOrInline, placements) = DeletionVectors.writeDvFile(Paths.get(out), Seq(payload))
+    DeltaInterop.writeCommit(out, 1L, adds = Seq("a.parquet"), removes = Seq("a.parquet"),
+      dvs = Map("a.parquet" -> DeletionVectors.DvDescriptor(
+        "u", pathOrInline, Some(placements.head.offset), payload.length, 1L)))
+    val protocol = Files.readAllLines(
+        Paths.get(out, "_delta_log", "00000000000000000001.json"))
+      .asScala.filter(_.nonEmpty).map(mapper.readTree(_))
+      .flatMap(a => Option(a.get("protocol"))).head
+    def features(k: String) = protocol.get(k).elements().asScala.map(_.asText()).toSet
+    assert(protocol.get("minReaderVersion").asInt() == 3)
+    assert(features("readerFeatures") == Set("columnMapping", "deletionVectors"))
+    // (2, 5) implies every legacy writer feature up to writer version 5
+    assert(features("writerFeatures") == Set("appendOnly", "invariants", "checkConstraints",
+      "changeDataFeed", "generatedColumns", "columnMapping", "deletionVectors"))
+    val got = DeltaInterop.importSnapshot(spark, out)
+    assert(got.schema.fieldNames.toSeq == Seq("doc_id", "lang"))
+    assert(got.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
+      Set((1L, "en"), (3L, "fr")))
+  }
+
   test("importSnapshot restores typed partition columns from add.partitionValues") {
     val out = tmp("delta_pv_")
     def onePart(df: org.apache.spark.sql.DataFrame, dst: java.nio.file.Path): Unit = {

@@ -165,9 +165,9 @@ class VersionedTableSpec extends SparkSpec {
     val dir = tmp()
     val cw: (org.apache.spark.sql.DataFrame, String) => Unit =
       (df, d) => df.write.parquet(d)
-    VersionedTable.upsert(spark, dir, Seq("k"), compactEvery = 100,
+    VersionedTable.upsert(spark, dir, Seq("k"),
       compactWrite = cw)(writeSeg(Seq((1, 10), (2, 20), (3, 30))))          // v1
-    VersionedTable.upsert(spark, dir, Seq("k"), compactEvery = 100,
+    VersionedTable.upsert(spark, dir, Seq("k"),
       compactWrite = cw)(writeSeg(Seq((2, 21), (3, 30), (4, 40))))          // v2
     def cdf(from: Long, to: Long): Set[(Int, Int, String)] =
       VersionedTable.readChanges(spark, dir, Seq("k"), from, to)
@@ -215,50 +215,98 @@ class VersionedTableSpec extends SparkSpec {
       Set((9, 9), (3, 3)))
   }
 
-  test("a live racer's fresh version claim refuses the commit — no silently lost commit") {
-    // simulates the double-takeover hazard: another writer has atomically
-    // claimed version 2 (fresh snapshot marker) but not yet flipped — a
-    // committer that somehow also reached the critical section must lose at
-    // the claim, not clobber the winner's flip
+  private def snapshot(dir: String, v: Long) = Paths.get(dir, f"_MANIFEST-v$v%08d.json")
+  private def pointer(dir: String) = Paths.get(dir, "_MANIFEST.json")
+
+  test("a version published without its pointer rewrite is served, and commits CAS on it") {
+    // a crash between the put-if-absent link and the pointer rewrite: the
+    // snapshot is the commit, the pointer still names the version before it
     val dir = tmp()
-    VersionedTable.append(dir)(writeSeg(Seq((1, 1))))
-    val marker = Paths.get(dir, f"_MANIFEST-v${2L}%08d.json")
-    Files.createFile(marker) // fresh, zero-byte: a claim in flight
-    val e = intercept[ConcurrentCommitException] {
-      VersionedTable.append(dir)(writeSeg(Seq((2, 2))))
+    VersionedTable.append(dir)(writeSeg(Seq((1, 1))))                   // v1
+    val m1 = VersionedTable.readManifest(dir).get
+    val ptr1 = Files.readAllBytes(pointer(dir))
+    VersionedTable.append(dir)(writeSeg(Seq((2, 2))))                   // v2
+    Files.write(pointer(dir), ptr1)                                     // v2's rewrite lost
+    assert(VersionedTable.exists(dir))
+    assert(VersionedTable.readManifest(dir).get.version == 2)
+    assert(VersionedTable.read(spark, dir).as[(Int, Int)].collect().toSet == Set((1, 1), (2, 2)))
+    // a writer on base v1 loses; a writer on base v2 commits v3
+    intercept[ConcurrentCommitException] {
+      VersionedTable.fold(spark, dir, Some(m1), Set("f"))(writeSeg(Seq((9, 9))))
     }
-    assert(e.getMessage.contains("already claimed"), e.getMessage)
-    assert(VersionedTable.readManifest(dir).get.version == 1, "flip must not have happened")
-    // a zero-byte claim marker is not a committed manifest for time travel
-    assert(VersionedTable.readManifestAt(dir, 2).isEmpty)
+    VersionedTable.append(dir)(writeSeg(Seq((3, 3))))
+    assert(VersionedTable.readManifest(dir).get.version == 3)
+    assert(VersionedTable.read(spark, dir).as[(Int, Int)].collect().toSet ==
+      Set((1, 1), (2, 2), (3, 3)))
+
+    // a fresh table whose first commit never wrote the pointer: only v1
+    val fresh = tmp()
+    VersionedTable.append(fresh)(writeSeg(Seq((1, 1))))
+    Files.delete(pointer(fresh))
+    assert(Files.exists(snapshot(fresh, 1)))
+    assert(VersionedTable.exists(fresh))
+    assert(VersionedTable.readManifest(fresh).map(_.version).contains(1L))
+    assert(VersionedTable.read(spark, fresh).as[(Int, Int)].collect().toSet == Set((1, 1)))
+    // a writer on the empty base loses; a writer on base v1 commits v2
+    intercept[ConcurrentCommitException] {
+      VersionedTable.fold(spark, fresh, None, Set("f"), replace = true)(writeSeg(Seq((9, 9))))
+    }
+    VersionedTable.append(fresh)(writeSeg(Seq((2, 2))))
+    assert(VersionedTable.readManifest(fresh).get.version == 2)
+    assert(VersionedTable.read(spark, fresh).as[(Int, Int)].collect().toSet == Set((1, 1), (2, 2)))
   }
 
-  test("an orphaned version claim (crashed winner) is rolled back after the TTL") {
+  test("a stale pointer rewritten after vacuum still resolves the newest version") {
     val dir = tmp()
-    VersionedTable.append(dir)(writeSeg(Seq((1, 1))))
-    val marker = Paths.get(dir, f"_MANIFEST-v${2L}%08d.json")
-    Files.createFile(marker)
-    Files.setLastModifiedTime(marker,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - VersionedTable.LockTtlMs - 1000))
-    VersionedTable.append(dir)(writeSeg(Seq((2, 2)))) // must take over the claim
-    assert(VersionedTable.readManifest(dir).get.version == 2)
-    // the recovered version's snapshot is the real manifest, time-travelable
-    assert(VersionedTable.readManifestAt(dir, 2).get.segments.size == 2)
-    assert(VersionedTable.read(spark, dir).count() == 2)
+    (1 to 4).foreach(i => VersionedTable.append(dir)(writeSeg(Seq((i, i)))))
+    val ptr1 = Files.readAllBytes(snapshot(dir, 1))
+    // a late rewrite within the retention horizon: the probe overtakes it
+    Files.write(pointer(dir), Files.readAllBytes(snapshot(dir, 2)))
+    assert(VersionedTable.readManifest(dir).get.version == 4)
+    VersionedTable.vacuum(dir, keepGenerations = 1)
+    assert(!Files.exists(snapshot(dir, 1)) && Files.exists(snapshot(dir, 4)))
+    // a stalled writer's v1 pointer lands after the vacuum expired v1
+    Files.write(pointer(dir), ptr1)
+    assert(VersionedTable.readManifest(dir).get.version == 4)
+    assert(VersionedTable.read(spark, dir).count() == 4)
+    VersionedTable.append(dir)(writeSeg(Seq((5, 5))))
+    assert(VersionedTable.readManifest(dir).get.version == 5)
+    assert(VersionedTable.read(spark, dir).count() == 5)
+  }
+
+  test("a fold on a base that later commits and a vacuum overtook loses, table unchanged") {
+    val dir = tmp()
+    val v1 = VersionedTable.fold(spark, dir, None, Set("a"), replace = true)(
+      writeSeg(Seq((1, 1))))
+    (2 to 10).foreach(i => VersionedTable.append(dir)(writeSeg(Seq((i, i)))))
+    VersionedTable.vacuum(dir)
+    val before = VersionedTable.readManifest(dir).get
+    assert(before.version == 10)
+    intercept[ConcurrentCommitException] {
+      VersionedTable.fold(spark, dir, Some(v1), Set("a", "b"))(writeSeg(Seq((99, 99))))
+    }
+    assert(VersionedTable.readManifest(dir).get == before)
+    assert(VersionedTable.read(spark, dir).as[(Int, Int)].collect().toSet ==
+      (1 to 10).map(i => (i, i)).toSet)
+  }
+
+  test("vacuum(keepGenerations = 0) keeps the newest version time-travelable") {
+    val dir = tmp()
+    (1 to 3).foreach(i => VersionedTable.overwrite(dir)(writeSeg(Seq((i, i)))))
+    VersionedTable.vacuum(dir, keepGenerations = 0)
+    assert(Files.exists(snapshot(dir, 3)), "vacuum deleted the newest snapshot")
+    assert(!Files.exists(snapshot(dir, 2)))
+    assert(VersionedTable.readManifestAt(dir, 3).isDefined)
+    assert(VersionedTable.read(spark, dir, Some(3L)).as[(Int, Int)].collect().toSet == Set((3, 3)))
+    intercept[NoSuchElementException](VersionedTable.read(spark, dir, Some(2L)))
   }
 
   test("two writers racing a STALE lock takeover: every reported success is a real commit") {
-    // both writers find an abandoned lock and race the takeover itself —
-    // the check-then-delete window can put both in the critical section;
-    // the per-version claim must still guarantee one commit per version
+    // there is no lock to take over: both writers race one base version
+    // through the re-check and the put-if-absent link, which must still
+    // guarantee one commit per version in any interleaving
     val dir = tmp()
     VersionedTable.append(dir)(writeSeg(Seq((0, 0))))
-    val lock = Paths.get(dir, "_LOCK")
-    Files.createFile(lock)
-    Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - VersionedTable.LockTtlMs - 1000))
     val pool = Executors.newFixedThreadPool(2)
     val start = new CountDownLatch(1)
     val results = (1 to 2).map { i =>
@@ -324,18 +372,6 @@ class VersionedTableSpec extends SparkSpec {
       assert(VersionedTable.readManifestAt(dir, v).exists(_.segments.size == v),
         s"version $v snapshot missing or wrong")
     }
-  }
-
-  test("crashed-writer lock file is taken over after the TTL") {
-    val dir = tmp()
-    Files.createDirectories(Paths.get(dir))
-    val lock = Paths.get(dir, "_LOCK")
-    Files.createFile(lock)
-    Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - VersionedTable.LockTtlMs - 1000))
-    VersionedTable.append(dir)(writeSeg(Seq((1, 1)))) // must not dead-wait
-    assert(VersionedTable.read(spark, dir).count() == 1)
   }
 
   private def writeTsSeg(rows: Seq[(Int, String)])(dir: String): Unit =
@@ -636,14 +672,14 @@ class VersionedTableSpec extends SparkSpec {
     val cw: (org.apache.spark.sql.DataFrame, String) => Unit =
       (df, d) => df.write.parquet(d)
     val v1 = (0L until 200L).map(i => (i, i * 3, s"a$i")).toDF("k", "n", "s")
-    VersionedTable.upsert(spark, dir, Seq("k"), compactEvery = 100,
+    VersionedTable.upsert(spark, dir, Seq("k"),
       compactWrite = cw)(d => v1.write.parquet(d))
     // wave: update every %5 key, insert 20 new keys (upsert has no
     // delete arm — updates + inserts exercise all three change types the
     // feed can emit here)
     val wave = (0L until 200L by 5).map(i => (i, i * 7, s"b$i")) ++
       (1000L until 1020L).map(i => (i, i, s"c$i"))
-    VersionedTable.upsert(spark, dir, Seq("k"), compactEvery = 100,
+    VersionedTable.upsert(spark, dir, Seq("k"),
       compactWrite = cw)(d => wave.toDF("k", "n", "s").write.parquet(d))
 
     val base = VersionedTable.read(spark, dir, asOfVersion = Some(1L))
